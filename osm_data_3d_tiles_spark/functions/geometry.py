@@ -10,6 +10,7 @@ vectorized numpy, never per-row Python on Spark rows.
 from __future__ import annotations
 
 import math
+from collections.abc import Iterable, Sequence
 
 import numpy as np
 
@@ -129,6 +130,83 @@ def points_in_polygon(points: np.ndarray, rings: list[np.ndarray]) -> np.ndarray
     for ring in rings:
         inside ^= points_in_ring(pts, ring)
     return inside
+
+
+def ring_edge_table(
+    buildings: Iterable[tuple[int, Sequence]],
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """CSR edge table of (osm_id, rings) pairs → (ids, offsets, edges).
+
+    `ids` are the sorted unique osm_ids (a repeated id keeps its last rings),
+    building k's edges are `edges[offsets[k]:offsets[k + 1]]`, and each edge
+    row is (xi, yi, xj, yj): vertex i of a ring paired with vertex i-1, the
+    orientation `points_in_ring` gets from `np.roll`. All rings of a building
+    share one run of edges, since the XOR of per-ring parities is the parity
+    of the summed crossings."""
+    by_id = dict(buildings)
+    ids = np.array(sorted(by_id), dtype=np.int64)
+    parts, counts = [], []
+    for osm_id in ids:
+        n = 0
+        for ring in by_id[osm_id]:
+            r = np.array([[p[0], p[1]] for p in ring], dtype=np.float64).reshape(-1, 2)
+            parts.append(np.column_stack([r, np.roll(r, 1, axis=0)]))
+            n += len(r)
+        counts.append(n)
+    offsets = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    edges = np.concatenate(parts) if parts else np.empty((0, 4), dtype=np.float64)
+    return ids, offsets, edges
+
+
+# (point, edge) pairs one pass of points_in_edge_table materializes at most
+# (about 200 MB of temporaries), whatever the batch's buildings hold
+EDGE_PAIRS_PER_PASS = 1 << 22
+
+
+def points_in_edge_table(
+    px: np.ndarray,
+    py: np.ndarray,
+    ids: np.ndarray,
+    table: tuple[np.ndarray, np.ndarray, np.ndarray],
+) -> np.ndarray:
+    """Point k inside building ids[k]? Even-odd ray cast over a `ring_edge_table`.
+
+    Bit-identical to `points_in_polygon(point k, rings of ids[k])`: the same
+    per-edge crossing arithmetic in the same order, then the parity of the
+    crossing count. An id the table lacks is outside. Rows are taken in runs
+    of at most EDGE_PAIRS_PER_PASS (point, edge) pairs."""
+    tids, offsets, edges = table
+    ids = np.asarray(ids, dtype=np.int64)
+    keep = np.zeros(len(ids), dtype=bool)
+    if len(ids) == 0 or len(tids) == 0:
+        return keep
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    pos = np.minimum(np.searchsorted(tids, ids), len(tids) - 1)
+    start = offsets[pos]
+    n = np.where(tids[pos] == ids, offsets[pos + 1] - start, 0)
+    ends = np.cumsum(n)
+    lo = 0
+    while lo < len(ids):
+        limit = ends[lo] - n[lo] + EDGE_PAIRS_PER_PASS
+        hi = max(int(np.searchsorted(ends, limit, "right")), lo + 1)
+        keep[lo:hi] = _crossing_parity(px[lo:hi], py[lo:hi], start[lo:hi], n[lo:hi], edges)
+        lo = hi
+    return keep
+
+
+def _crossing_parity(px, py, start, n, edges) -> np.ndarray:
+    """Odd crossing count of point k over edges[start[k]:start[k] + n[k]]."""
+    row = np.repeat(np.arange(len(n)), n)
+    e = np.arange(row.size) + np.repeat(start - (np.cumsum(n) - n), n)
+    xi, yi, xj, yj = edges[e].T
+    x, y = px[row], py[row]
+    straddle = (yi > y) != (yj > y)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        x_at_y = (xj - xi) * (y - yi) / (yj - yi) + xi
+    crossing = straddle & (x < x_at_y)
+    return np.bincount(row[crossing], minlength=len(n)) % 2 == 1
 
 
 # ---------------------------------------------------------------------------

@@ -17,9 +17,15 @@ import zlib
 import numpy as np
 import pandas as pd
 
-GEO_META_RE = re.compile(
-    r'<meta\s+name="geo\.position"\s+content="(-?\d+(?:\.\d+)?);(-?\d+(?:\.\d+)?)"'
-)
+# The geotag contract, shared by the Python reference below and the JVM parse
+# in plans/pipeline.py: ASCII character classes (`\s` is [ \t\n\x0b\f\r], `\d`
+# is [0-9]), as in Java's default regex flags, so NBSP or non-ASCII digits
+# never form a tag on either side.
+_GEO_NUM = r"-?\d+(?:\.\d+)?"
+_GEO_PREFIX = r'<meta\s+name="geo\.position"\s+content="'
+GEO_META_RE = re.compile(_GEO_PREFIX + rf'({_GEO_NUM});({_GEO_NUM})"', re.ASCII)
+# the same match with one group, "{lat};{lon}": one regex pass in the JVM
+GEO_META_JVM = _GEO_PREFIX + rf'({_GEO_NUM};{_GEO_NUM})"'
 P_TAG_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 TAG_RE = re.compile(r"<[^>]+>")
 
@@ -35,9 +41,9 @@ STOPWORDS = {
 LANGS = ("en", "fr", "de", "es")
 
 
-def decode_html(html: pd.Series) -> pd.Series:
-    """bytes → str (utf-8, strict: fixture html is always valid utf-8)."""
-    return html.map(lambda b: b.decode("utf-8"))
+def decode_html(html: pd.Series, errors: str = "strict") -> pd.Series:
+    """bytes → str (utf-8, strict by default: fixture html is always valid utf-8)."""
+    return html.map(lambda b: b.decode("utf-8", errors))
 
 
 def extract_text(html: pd.Series) -> pd.Series:
@@ -56,14 +62,15 @@ def extract_text(html: pd.Series) -> pd.Series:
 
 def extract_geotag(html: pd.Series) -> pd.DataFrame:
     """Parse <meta name="geo.position" content="{lat};{lon}"> → (lat, lon) doubles,
-    NaN when absent. Vectorized via pandas str.extract."""
-    decoded = decode_html(html)
-    ex = decoded.str.extract(GEO_META_RE, expand=True)
+    NaN when absent; the first tag wins. Vectorized via pandas str.extract.
+
+    Invalid UTF-8 decodes to U+FFFD, as Spark's binary→string cast does, so a
+    page with a bad byte elsewhere still yields its tag. Numbers parse with
+    `float` (correctly rounded, keeps -0.0), as Java's `Double.parseDouble`
+    does; `pd.to_numeric` rounds long mantissas differently."""
+    ex = decode_html(html, "replace").str.extract(GEO_META_RE, expand=True)
     return pd.DataFrame(
-        {
-            "lat": pd.to_numeric(ex[0], errors="coerce"),
-            "lon": pd.to_numeric(ex[1], errors="coerce"),
-        }
+        {"lat": ex[0].astype(np.float64), "lon": ex[1].astype(np.float64)}
     )
 
 

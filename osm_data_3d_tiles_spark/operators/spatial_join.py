@@ -10,8 +10,14 @@ buildings (dimension) without ever shuffling the fact table —
 3. equi-join on cell = the coarse prefilter (exactly the role MVT tile membership
    plays in the reference, b3dmGenerator.ts:109-113);
 4. exact refinement: vectorized even-odd ray-cast PIP (src/math/utils.ts:29-46
-   semantics) in one Arrow `mapInPandas` stage — inside each batch, candidates are
-   grouped per building and each group is tested as one (N,2)×(M,2) numpy broadcast.
+   semantics) in one Arrow `mapInPandas` stage over a CSR edge table of the
+   buildings (`geometry.ring_edge_table`: sorted osm_ids, edge offsets, flat
+   edges), broadcast once. Each batch is one numpy pass
+   (`geometry.points_in_edge_table`): look up each candidate's edges, apply
+   `points_in_ring`'s crossing arithmetic to every (point, edge) pair, count
+   crossing parity per candidate. The keep mask is bit-identical to
+   `points_in_polygon`. The cogroup refine builds the same table from its
+   one-building group and calls the same kernel.
 
 Skew: dense cities produce hot cells. The broadcast join itself has no shuffle to
 skew; downstream aggregations over cell/tile keys use `salted_count` (two-phase
@@ -44,27 +50,23 @@ def pages_with_cell(pages_pts: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
 
 
 def _pip_refine_factory(
-    point_cols: tuple[str, str], out_fields: list[T.StructField], geom_bc
+    point_cols: tuple[str, str], out_fields: list[T.StructField], table_bc
 ):
     schema = T.StructType(out_fields)
     names = [f.name for f in out_fields]
     px_col, py_col = point_cols
 
     def _refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        geoms = geom_bc.value  # {osm_id: [rings ndarray, ...]} — once per worker
+        table = table_bc.value  # CSR edge table, once per worker
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            pts = np.column_stack(
-                [pdf[px_col].to_numpy(dtype=np.float64), pdf[py_col].to_numpy(dtype=np.float64)]
+            keep = g.points_in_edge_table(
+                pdf[px_col].to_numpy(dtype=np.float64),
+                pdf[py_col].to_numpy(dtype=np.float64),
+                pdf["osm_id"].to_numpy(dtype=np.int64),
+                table,
             )
-            # group candidate rows by building: one vectorized PIP per building
-            for osm_id, idx in pdf.groupby("osm_id", sort=False).indices.items():
-                rings = geoms.get(osm_id)
-                if rings is None:
-                    continue
-                keep[idx] = g.points_in_polygon(pts[idx], rings)
             yield pdf.loc[keep, names]
 
     return _refine, schema
@@ -103,7 +105,7 @@ def spatial_join(
     JVM heap exactly where candidates are densest (hot cells). Two exact-refine
     strategies deliver the rings instead (`refine=`):
 
-    - ``"broadcast"`` — ring dict as a Spark broadcast variable; zero shuffle
+    - ``"broadcast"`` — CSR edge table as a Spark broadcast variable; zero shuffle
       anywhere (the fact table never exchanges). Requires materializing the
       dimension on the driver, so it is bounded by
       `BROADCAST_GEOM_MAX_BUILDINGS`.
@@ -149,17 +151,16 @@ def spatial_join(
         def _refine_cogrouped(cand_pdf: pd.DataFrame, geom_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(cand_pdf) == 0 or len(geom_pdf) == 0:
                 return pd.DataFrame({n: [] for n in names})
-            rings = [
-                np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
-                for ring in geom_pdf["geometry"].iloc[0]
-            ]
-            pts = np.column_stack(
-                [
-                    cand_pdf["x"].to_numpy(dtype=np.float64),
-                    cand_pdf["y"].to_numpy(dtype=np.float64),
-                ]
+            table = g.ring_edge_table(
+                [(geom_pdf["osm_id"].iloc[0], geom_pdf["geometry"].iloc[0])]
             )
-            return cand_pdf.loc[g.points_in_polygon(pts, rings), names]
+            keep = g.points_in_edge_table(
+                cand_pdf["x"].to_numpy(dtype=np.float64),
+                cand_pdf["y"].to_numpy(dtype=np.float64),
+                cand_pdf["osm_id"].to_numpy(dtype=np.int64),
+                table,
+            )
+            return cand_pdf.loc[keep, names]
 
         geom = buildings.select("osm_id", "geometry")
         return (
@@ -169,17 +170,12 @@ def spatial_join(
             .applyInPandas(lambda _k, c, b: _refine_cogrouped(c, b), schema=schema)
         )
 
-    # broadcast refine: ring dict once per worker via a Spark broadcast variable
+    # broadcast refine: the CSR edge table once per worker via a Spark
+    # broadcast variable
     geom_rows = buildings.select("osm_id", "geometry").collect()
-    geoms = {
-        row["osm_id"]: [
-            np.asarray([[float(p[0]), float(p[1])] for p in ring], dtype=np.float64)
-            for ring in row["geometry"]
-        ]
-        for row in geom_rows
-    }
-    geom_bc = spark.sparkContext.broadcast(geoms)
-    refine_fn, schema = _pip_refine_factory(("x", "y"), out_fields, geom_bc)
+    table = g.ring_edge_table((row["osm_id"], row["geometry"]) for row in geom_rows)
+    table_bc = spark.sparkContext.broadcast(table)
+    refine_fn, schema = _pip_refine_factory(("x", "y"), out_fields, table_bc)
     return cand.select(*needed).mapInPandas(refine_fn, schema=schema)
 
 

@@ -6,18 +6,23 @@ This is the Spark lifecycle mapping of the reference's serve/seed path (SURVEY.m
 MVT fetch/parse → parquet scan; per-tile worker → shuffle-by-tile stages; SQLite
 claim → ownership window; B3DM batch table → groupBy(tile) pivot.
 
-Scale shape (the part the judge grades):
-- pages never shuffle until the final per-tile aggregation: extraction + cell encode
-  are narrow Arrow stages, the join side is broadcast;
-- only the needed page columns enter the Python stage (column pruning survives
-  because the UDF stage selects explicitly);
+Scale shape:
+- pages never shuffle until the final per-tile aggregation: the geotag parse is
+  JVM regex, cell encode is Column math, the join side is broadcast;
+- Python sees two doubles per geotagged page (the numpy EPSG:3857 projection,
+  bit-exact) and the join candidates (the CSR-table PIP refine), never the html;
+  the flagship does not run `extract_text` (`extract_pages` keeps it for the
+  text invariant);
 - checkpoints are parquet snapshot tables with a _SUCCESS-gated manifest, so a
-  resumed job skips any completed stage (Iceberg-snapshot semantics in sandbox form).
+  resumed job skips any completed stage (Iceberg-snapshot semantics in sandbox
+  form); their lineage is read from the snapshots' parquet footers by the
+  calling process, with no Spark job.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -76,8 +81,49 @@ def extract_pages(pages: DataFrame) -> DataFrame:
     return narrow.mapInPandas(_extract, schema=EXTRACT_SCHEMA)
 
 
+# a StructType, not a DDL string: parsing DDL needs a session at import
+@F.pandas_udf(T.StructType([T.StructField(c, T.DoubleType()) for c in ("x", "y")]))
+def _to_3857(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
+    """(lat, lon) → EPSG:3857 (x, y) with numpy `lonlat_to_3857`, so the points
+    are bit-identical to `extract_pages`' (the JVM's log/tan differ in the last
+    bits)."""
+    x, y = m.lonlat_to_3857(lon.to_numpy(), lat.to_numpy())
+    return pd.DataFrame({"x": x, "y": y})
+
+
+# Marked nondeterministic only so the optimizer keeps filters on x/y above it:
+# a composed plan's join infers isnotnull(cell(x, y)), and pushing that below
+# the UDF would evaluate the UDF a second time, before the fan-out exchange.
+_to_3857 = _to_3857.asNondeterministic()
+
+
 def geotagged_points(pages: DataFrame) -> DataFrame:
-    return extract_pages(pages).filter(F.col("lat").isNotNull())
+    """Geotagged pages → (url, lat, lon, x, y), the flagship's extract.
+
+    The geotag is parsed in the JVM: one `tx.GEO_META_JVM` regex pass over
+    `cast(html as string)`, first tag wins, pages without a tag drop out. Only
+    then does `with_min_parallelism` fan the rows out, so its round-robin
+    exchange carries `url` and the tag, not the html. Python sees two doubles
+    per page, for the projection.
+
+    Same rows and bits as `extract_pages` + `lat` not null, under the contract
+    in `functions/text.py` (ASCII `\\s`/`\\d`, correctly rounded parse). One
+    difference: invalid UTF-8 decodes to U+FFFD, so such a page keeps its tag
+    where `extract_pages` (strict decode) fails the task."""
+    from ..session import with_min_parallelism
+
+    tags = F.regexp_extract_all(F.col("html").cast("string"), F.lit(tx.GEO_META_JVM), F.lit(1))
+    # explode of the first match: one regex pass, and tagless pages leave here
+    # (a Filter on the tag would be pushed below and run the regex twice)
+    tagged = pages.select("url", F.explode(F.slice(tags, 1, 1)).alias("tag"))
+    points = with_min_parallelism(tagged).select(
+        "url",
+        F.substring_index("tag", ";", 1).cast("double").alias("lat"),
+        F.substring_index("tag", ";", -1).cast("double").alias("lon"),
+    )
+    return points.withColumn("xy", _to_3857("lat", "lon")).select(
+        "url", "lat", "lon", "xy.x", "xy.y"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -86,14 +132,42 @@ def geotagged_points(pages: DataFrame) -> DataFrame:
 
 
 def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """(stage, partition_id, rows) — per-partition row counts for lineage tables.
-    One narrow pass; written next to each checkpoint snapshot."""
+    """(stage, partition_id, rows) — per-partition row counts of any DataFrame.
+    One narrow pass. `checkpoint` writes the same table from the snapshot's
+    parquet footers instead, without a job."""
     return (
         df.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
         .agg(F.count("*").alias("rows"))
         .select(F.lit(stage).alias("stage"), F.col("_pid").alias("partition_id"), "rows")
     )
+
+
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+
+
+def _write_footer_lineage(path: str, stage: str, lineage_dir: str) -> None:
+    """Append (stage, partition_id, rows) for a written snapshot, read from its
+    own parquet footers in this process: rows per written part file, keyed by
+    the writing task's partition id. No Spark job."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows: dict[int, int] = {}
+    for name in sorted(os.listdir(path)):
+        part = _PART_FILE.match(name)
+        if part:
+            pid = int(part.group(1))
+            rows[pid] = rows.get(pid, 0) + pq.read_metadata(os.path.join(path, name)).num_rows
+    table = pa.table({
+        "stage": pa.array([stage] * len(rows), pa.string()),
+        "partition_id": pa.array(list(rows), pa.int32()),
+        "rows": pa.array(list(rows.values()), pa.int64()),
+    })
+    os.makedirs(lineage_dir, exist_ok=True)
+    pq.write_table(table, os.path.join(lineage_dir, f"part-{stage}-{uuid.uuid4().hex}.parquet"))
 
 
 # ---------------------------------------------------------------------------
@@ -135,9 +209,7 @@ def checkpoint(
         df = df_fn()
         df.write.mode("overwrite").parquet(path)
         if metrics_dir:
-            partition_lineage(spark.read.parquet(path), stage).write.mode("append").parquet(
-                os.path.join(metrics_dir, "lineage")
-            )
+            _write_footer_lineage(path, stage, os.path.join(metrics_dir, "lineage"))
     return spark.read.parquet(path)
 
 
@@ -234,8 +306,10 @@ def run_with_checkpoints(
     owners = checkpoint(
         lambda: owner_tiles(cells), spark, os.path.join(workdir, "owners"), "owners", mdir
     )
+    # refine pinned to 'broadcast' as in flagship(): 'auto' would spend a
+    # limit+count decision job on the bounded buildings dimension every run
     join_rows = checkpoint(
-        lambda: spatial_join(points, blds, precomputed_cells=join_cells),
+        lambda: spatial_join(points, blds, precomputed_cells=join_cells, refine="broadcast"),
         spark, os.path.join(workdir, "join_rows"), "join", mdir,
     )
     counts = checkpoint(

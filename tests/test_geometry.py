@@ -98,6 +98,78 @@ class TestPointInPolygon:
         assert g.points_in_ring(p, ring)[0] == g.points_in_ring(p, rolled)[0]
 
 
+class TestEdgeTable:
+    """The CSR edge-table kernel the PIP refine runs must give exactly the
+    keep mask of `points_in_polygon`, building by building."""
+
+    HOLE = np.array([[1.0, 1.0], [3.0, 1.0], [3.0, 3.0], [1.0, 3.0], [1.0, 1.0]])
+    BUILDINGS = {
+        11: [SQUARE, HOLE],  # outer ring + hole
+        7: [TRIANGLE + 10.0, L_SHAPE + 20.0],  # multipolygon: two outer rings
+        3: [L_SHAPE],  # concave, horizontal edges at y = 0, 1, 3
+        5: [np.array([[0.0, 0.0], [2.0, 2.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0]])],  # open ring
+    }
+
+    @classmethod
+    def _reference(cls, pts, ids):
+        return np.array([
+            bool(g.points_in_polygon(pts[k : k + 1], cls.BUILDINGS[i])[0]) if i in cls.BUILDINGS
+            else False
+            for k, i in enumerate(ids)
+        ], dtype=bool)
+
+    def _check(self, pts, ids):
+        table = g.ring_edge_table(self.BUILDINGS.items())
+        got = g.points_in_edge_table(pts[:, 0], pts[:, 1], ids, table)
+        assert got.dtype == bool
+        np.testing.assert_array_equal(got, self._reference(pts, ids))
+        return got
+
+    def test_table_layout(self):
+        ids, offsets, edges = g.ring_edge_table(self.BUILDINGS.items())
+        assert list(ids) == [3, 5, 7, 11]
+        assert list(np.diff(offsets)) == [6, 5, 3 + 6, 5 + 5]
+        # vertex i paired with vertex i-1, as points_in_ring's np.roll does
+        k = offsets[list(ids).index(3)]
+        np.testing.assert_array_equal(edges[k], [*L_SHAPE[0], *L_SHAPE[-1]])
+        np.testing.assert_array_equal(edges[k + 1], [*L_SHAPE[1], *L_SHAPE[0]])
+
+    def test_holes_and_multipolygons(self):
+        pts = np.array([[0.5, 0.5], [2.0, 2.0], [3.5, 3.5], [10.5, 10.5], [20.5, 22.0],
+                        [22.0, 22.0], [15.0, 15.0]])
+        got = self._check(pts, np.array([11, 11, 11, 7, 7, 7, 7]))
+        assert list(got) == [True, False, True, True, True, False, False]
+
+    def test_point_at_vertex_y_and_on_horizontal_edges(self):
+        ys = [0.0, 1.0, 2.0, 3.0, 4.0]  # every vertex y of every building
+        xs = [-0.5, 0.0, 0.5, 1.0, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5]
+        pts = np.array([[x, y] for x in xs for y in ys])
+        for osm_id in (3, 5, 11):
+            self._check(pts, np.full(len(pts), osm_id))
+
+    def test_unknown_osm_id_is_outside(self):
+        pts = np.array([[2.0, 0.5], [0.5, 0.5], [0.5, 0.5]])
+        got = self._check(pts, np.array([1, 99, 11]))
+        assert list(got) == [False, False, True]
+
+    def test_empty_batch_and_empty_table(self):
+        table = g.ring_edge_table(self.BUILDINGS.items())
+        empty = np.empty(0)
+        assert g.points_in_edge_table(empty, empty, empty.astype(np.int64), table).shape == (0,)
+        none = g.ring_edge_table([])
+        assert not g.points_in_edge_table(np.ones(2), np.ones(2), np.array([3, 11]), none).any()
+
+    def test_random_batches_any_pass_size(self, monkeypatch):
+        rng = np.random.default_rng(7)
+        pts = rng.uniform(-1.0, 25.0, (4000, 2))
+        pts[::5] = np.round(pts[::5])  # land on vertex and edge coordinates too
+        ids = rng.choice([3, 5, 7, 11, 42], len(pts))
+        whole = self._check(pts, ids)
+        for pass_pairs in (1, 7, 1000):  # a pass ends mid-building
+            monkeypatch.setattr(g, "EDGE_PAIRS_PER_PASS", pass_pairs)
+            np.testing.assert_array_equal(self._check(pts, ids), whole)
+
+
 class TestHullOMBB:
     def test_hull_square_with_interior(self):
         pts = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [2, 2], [1, 1]], dtype=float)

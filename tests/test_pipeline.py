@@ -74,6 +74,89 @@ class TestExtract:
         expected = tx.extract_geotag(pages_pdf["html"])["lat"].notna().sum()
         assert n_geo == expected
 
+    def test_projection_evaluated_once_in_composed_plan(self, pages, buildings):
+        """The join's inferred isnotnull(cell(x, y)) filter stays above the
+        projection UDF instead of evaluating it a second time below."""
+        plan = flagship(pages, buildings)["join_rows"]._jdf.queryExecution().executedPlan()
+        assert plan.toString().count("ArrowEvalPython") == 1
+
+
+def _meta(content: str, sep: str = " ") -> str:
+    return f'<meta{sep}name="geo.position"{sep}content="{content}">'
+
+
+# url → html bytes, for the geotag contract (functions/text.py)
+GEOTAG_CASES = {
+    "plain": f"<html><head>{_meta('45.764043;4.835659')}</head><p>x</p></html>".encode(),
+    "no_tag": b"<html><head><title>t</title></head><p>no tag</p></html>",
+    "other_meta": b'<meta name="description" content="45.1;4.8">',
+    "malformed_letter": _meta("45.7x;4.8").encode(),
+    "malformed_trailing_dot": _meta("45.;4.8").encode(),
+    "malformed_plus": _meta("+45.7;4.8").encode(),
+    "malformed_comma": _meta("45.7,4.8").encode(),
+    "malformed_exponent": _meta("4.5e1;4.8").encode(),
+    "two_tags": (_meta("45.1;4.1") + _meta("46.2;5.2")).encode(),
+    "bad_then_good": (_meta("45.x;4.1") + _meta("46.2;5.2")).encode(),
+    "tab_newline": _meta("45.5;4.5", "\t\n \r\x0b\x0c").encode(),
+    "nbsp": _meta("45.5;4.5", "\u00a0").encode(),
+    "em_space": _meta("45.5;4.5", "\u2003").encode(),
+    "file_separator": _meta("45.5;4.5", "\x1c").encode(),
+    "arabic_digits": _meta("\u0664\u0665.\u0665;\u0664.\u0665").encode(),
+    "fullwidth_digits": _meta("\uff14\uff15.5;4.5").encode(),
+    "negative_zero": _meta("-0;-0.0").encode(),
+    "negative": _meta("-33.8688;-151.2093").encode(),
+    "long_mantissa": _meta(
+        "45.12345678901234567890123456789;4.1000000000000000055511151231257827"
+    ).encode(),
+    "long_integer_part": _meta("000000000000000000000045.5;4.5").encode(),
+    "invalid_utf8": b"\xff\xfe<p>\xc3</p>" + _meta("45.25;4.75").encode() + b"\xed\xa0\x80",
+}
+
+
+class TestGeotagContract:
+    """The JVM parse + numpy projection of `geotagged_points` against the
+    Python reference `tx.extract_geotag` + `lonlat_to_3857`, bit for bit, on
+    the cases where Python `re` and Java regex, or pandas and Spark number
+    parsing, can disagree. The contract: ASCII `\\s`/`\\d`, first tag wins,
+    correctly rounded numbers (-0 stays -0.0), invalid UTF-8 decodes to U+FFFD."""
+
+    @pytest.fixture(scope="class")
+    def both(self, spark):
+        pdf = pd.DataFrame({"url": list(GEOTAG_CASES), "html": list(GEOTAG_CASES.values())})
+        got = (
+            geotagged_points(spark.createDataFrame(pdf, "url string, html binary"))
+            .toPandas().set_index("url")
+        )
+        geo = tx.extract_geotag(pdf["html"])
+        x, y = m.lonlat_to_3857(geo["lon"].to_numpy(), geo["lat"].to_numpy())
+        ref = pd.DataFrame({"lat": geo["lat"], "lon": geo["lon"], "x": x, "y": y})
+        ref.index = pdf["url"]
+        return got, ref[ref["lat"].notna()]
+
+    def test_bit_identical_to_python_reference(self, both):
+        got, ref = both
+        assert sorted(got.index) == sorted(ref.index)
+        for col in ("lat", "lon", "x", "y"):
+            a = got.loc[ref.index, col].to_numpy(dtype=np.float64)
+            b = ref[col].to_numpy(dtype=np.float64)
+            np.testing.assert_array_equal(a.view(np.int64), b.view(np.int64), err_msg=col)
+
+    def test_contract(self, both):
+        got, _ = both
+        assert sorted(got.index) == sorted([
+            "plain", "two_tags", "bad_then_good", "tab_newline", "negative_zero",
+            "negative", "long_mantissa", "long_integer_part", "invalid_utf8",
+        ])
+        assert tuple(got.loc["two_tags", ["lat", "lon"]]) == (45.1, 4.1)
+        assert tuple(got.loc["bad_then_good", ["lat", "lon"]]) == (46.2, 5.2)
+        assert tuple(got.loc["invalid_utf8", ["lat", "lon"]]) == (45.25, 4.75)
+        assert got.loc["long_mantissa", "lat"] == float("45.12345678901234567890123456789")
+        assert np.signbit(got.loc["negative_zero", ["lat", "lon", "x"]].to_numpy(float)).all()
+
+    def test_text_extract_stays_strict(self):
+        with pytest.raises(UnicodeDecodeError):
+            tx.extract_text(pd.Series([GEOTAG_CASES["invalid_utf8"]]))
+
 
 class TestSpatialJoin:
     def test_join_rows_match_oracle(self, spark, pages, buildings, pages_pdf, buildings_pdf):
@@ -96,14 +179,23 @@ class TestSpatialJoin:
         assert len(a) > 0
 
     def test_join_partitioning_invariance(self, spark, pages, buildings):
-        """Same result at different parallelism — required for the N vs 4N scaling
-        criterion to be meaningful."""
+        """Same result at different parallelism and Arrow batch size — required
+        for the N vs 4N scaling criterion to be meaningful. Batches of 7 rows end
+        mid-building in the refine."""
         from osm_data_3d_tiles_spark.plans.pipeline import flagship_join
 
         a = flagship_join(pages.repartition(2), buildings).toPandas()
         b = flagship_join(pages.repartition(13), buildings.repartition(7)).toPandas()
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, "7")
+        try:
+            c = flagship_join(pages, buildings).toPandas()
+        finally:
+            spark.conf.set(conf, prev)
         key = lambda df: sorted(zip(df["url"], df["osm_id"]))
-        assert key(a) == key(b)
+        assert key(a) == key(b) == key(c)
+        assert len(a) > 0
 
 
 class TestOwnership:

@@ -127,3 +127,19 @@ class TestCheckpointResume:
         lineage = spark.read.parquet(os.path.join(wd, "metrics", "lineage"))
         stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
         assert {"extract", "cells", "owners", "join"} <= stages
+
+    def test_footer_lineage_sums_to_snapshot_rows(self, spark, tmp_path):
+        """Lineage comes from the snapshots' parquet footers: per stage, its
+        rows sum to the snapshot's row count, one row per written partition."""
+        pages = fx.load_fixture(spark, "pages", 0.001)
+        buildings = fx.load_fixture(spark, "buildings", 0.001)
+        wd = str(tmp_path / "wd")
+        run_with_checkpoints(spark, pages, buildings, wd)
+        lineage = spark.read.parquet(os.path.join(wd, "metrics", "lineage")).toPandas()
+        snapshots = {"extract": "points", "cells": "cells_multi", "owners": "owners",
+                     "join": "join_rows", "counts": "tile_doc_counts"}
+        assert set(lineage["stage"]) == set(snapshots)
+        for stage, snap in snapshots.items():
+            rows = lineage[lineage["stage"] == stage]
+            assert rows["partition_id"].is_unique
+            assert rows["rows"].sum() == spark.read.parquet(os.path.join(wd, snap)).count() > 0
