@@ -49,7 +49,8 @@ def cmd_generate_tileset(args) -> int:
 
 def cmd_seed(args) -> int:
     """Materialize every owned tile as B3DM + tileset JSONs (seed-b3dm.ts, but
-    distributed: ownership window → per-tile build → foreachPartition write)."""
+    distributed: ownership window → building params, derived once → per-tile
+    build and batch tables → Arrow b3dm write on the executors)."""
     from pyspark.sql import functions as F
 
     from .functions.params import with_building_params
@@ -64,8 +65,8 @@ def cmd_seed(args) -> int:
     spark = _spark(args)
     blds = fx.load_fixture(spark, "buildings", args.sf).filter(F.col("layer") == "buildings")
     owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
-    assigned = blds.join(owners, "osm_id")
-    tiles = build_tiles_3d(with_building_params(assigned))
+    assigned = with_building_params(blds.join(owners, "osm_id"))
+    tiles = build_tiles_3d(assigned)
     batch = batch_tables(assigned)
     n = seed_tiles(tiles, batch, args.out)
     write_tileset(args.out, fx.FIXTURE_EXTENT, mode=args.mode)

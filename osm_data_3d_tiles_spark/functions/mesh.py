@@ -18,8 +18,6 @@ numpy). Parity sources (/root/reference/):
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 
 # ---------------------------------------------------------------------------
@@ -71,71 +69,111 @@ def clip_range(
     return np.vstack(out)
 
 
-def _earcut_2d(flat_xy: np.ndarray) -> list[int]:
-    """Index triangulation of a small convex-ish cell polygon (fan with ear checks
-    handled upstream; clip cells of a triangle are always convex, so a fan is
-    exact — the same result earcut produces for convex input)."""
-    n = len(flat_xy) // 2
-    tris: list[int] = []
-    for i in range(1, n - 1):
-        tris.extend((0, i, i + 1))
-    return tris
+# (triangle, cell) pairs clipped per pass of uv_cell_subdivide: bounds its
+# padded polygon arrays (8 float64 per vertex, 7 vertices after four clips)
+CLIP_PAIRS_PER_PASS = 1 << 15
+
+
+def _clip_padded(
+    poly: np.ndarray, n: np.ndarray, ax: int, edge: np.ndarray, keep_greater: bool, strict: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """clip_range over a stack of padded polygons: poly (P, W, 8) whose first
+    n[p] rows are polygon p, one threshold edge[p] each → (poly, n). Polygon
+    edge i (A = vertex i, B = vertex i + 1 mod n) emits what clip_range appends
+    for it: nothing, B, the crossing, or the crossing then B; a cumsum of the
+    per-edge counts places the emitted vertices."""
+    w = poly.shape[1]
+    i = np.arange(w)
+    valid = i < n[:, None]
+    nxt = np.take_along_axis(poly, np.where(i + 1 < n[:, None], i + 1, 0)[:, :, None], axis=1)
+    a, b, e = poly[:, :, ax], nxt[:, :, ax], edge[:, None]
+    if keep_greater:
+        inside_a, inside_b = (a > e, b > e) if strict else (a >= e, b >= e)
+    else:
+        inside_a, inside_b = (a < e, b < e) if strict else (a <= e, b <= e)
+    cross = valid & (inside_a != inside_b)
+    keep_b = valid & inside_b
+    count = cross.astype(np.int64) + keep_b
+    start = np.cumsum(count, axis=1) - count
+    n_out = count.sum(axis=1)
+    out = np.zeros((len(poly), int(n_out.max(initial=0)), 8))
+    p, k = np.nonzero(cross)
+    A, B = poly[p, k], nxt[p, k]
+    t = (edge[p] - A[:, ax]) / (B[:, ax] - A[:, ax])
+    out[p, start[p, k]] = A + t[:, None] * (B - A)
+    p, k = np.nonzero(keep_b)
+    out[p, start[p, k] + cross[p, k]] = nxt[p, k]
+    return out, n_out
 
 
 def uv_cell_subdivide(
-    tri: np.ndarray,
+    tris: np.ndarray,
     atlas: tuple[float, float, float, float],
     clamp_uv: bool = True,
     reverse: bool = False,
 ) -> np.ndarray:
-    """Split one Vert triangle along integer UV-cell boundaries, re-triangulate each
-    cell and map local UVs through the atlas transform. Returns Vert rows whose
-    (u, v) are final atlas UVs. This is the shared loop of flat-roof-builders.ts:
-    123-176, skillion-roof-builder.ts:130-175, hipped-roof-builder.ts (triangulate
-    Polygon tail) and curved-roof-builder.ts subdivideAndPush.
+    """Split a stack of Vert triangles (T, 3, 8) along integer UV-cell
+    boundaries, fan-triangulate each clipped cell and map local UVs through the
+    atlas transform. Returns Vert rows whose (u, v) are final atlas UVs, in
+    (triangle, iu, iv, fan) order. This is the shared loop of
+    flat-roof-builders.ts:123-176, skillion-roof-builder.ts:130-175,
+    hipped-roof-builder.ts (triangulatePolygon tail) and curved-roof-builder.ts
+    subdivideAndPush.
+
+    Every (triangle, cell) pair is clipped at once by the four half-planes of
+    its cell; the arithmetic is clip_range's, element for element, so the rows
+    equal the per-triangle, per-cell clip_range loop bit for bit. Clip cells of
+    a triangle are convex, so the fan (0, k, k + 1) is what earcut yields.
 
     reverse=True replicates the `.reverse()` the flat builder applies to the earcut
     output (flat-roof-builders.ts:150 uses reversed indices); cell fans of convex
     polygons are winding-symmetric, so reversing the fan order flips winding.
     """
     off_x, off_y, sc_x, sc_y = atlas
-    u_min = tri[:, U].min()
-    u_max = tri[:, U].max()
-    v_min = tri[:, V].min()
-    v_max = tri[:, V].max()
-    cu0, cu1 = math.floor(u_min), math.ceil(u_max)
-    cv0, cv1 = math.floor(v_min), math.ceil(v_max)
+    tris = np.asarray(tris, dtype=np.float64).reshape(-1, 3, 8)
+    lo = tris[:, :, [U, V]].min(axis=1)
+    hi = tris[:, :, [U, V]].max(axis=1)
+    if not (np.isfinite(lo).all() and np.isfinite(hi).all()):
+        raise ValueError("uv_cell_subdivide: non-finite UV")
+    c0 = np.floor(lo)
+    n_cells = (np.ceil(hi) - c0).astype(np.int64)
+    per_tri = n_cells[:, 0] * n_cells[:, 1]
+    tri = np.repeat(np.arange(len(tris)), per_tri)
+    k = np.arange(len(tri)) - np.repeat(np.cumsum(per_tri) - per_tri, per_tri)
+    nv = n_cells[tri, 1]
+    iu = c0[tri, 0] + k // nv
+    iv = c0[tri, 1] + k % nv
 
-    out_rows = []
-    for iu in range(cu0, cu1):
-        for iv in range(cv0, cv1):
-            cell = tri
-            cell = clip_range(cell, "x", iu, True, False)
-            cell = clip_range(cell, "x", iu + 1, False, True)
-            cell = clip_range(cell, "y", iv, True, False)
-            cell = clip_range(cell, "y", iv + 1, False, True)
-            if len(cell) < 3:
-                continue
-            local = cell.copy()
-            local[:, U] -= iu
-            local[:, V] -= iv
-            idx = _earcut_2d(local[:, [U, V]].ravel())
-            if reverse:
-                idx = idx[::-1]
-            if not idx:
-                continue
-            emitted = local[idx].copy()
-            lu = emitted[:, U]
-            lv = emitted[:, V]
-            if clamp_uv:
-                lu = np.clip(lu, 0.0, 1.0)
-                lv = np.clip(lv, 0.0, 1.0)
-            emitted[:, U] = off_x + lu * sc_x
-            emitted[:, V] = off_y + lv * sc_y
-            out_rows.append(emitted)
-    if not out_rows:
+    out = []
+    for s in range(0, len(tri), CLIP_PAIRS_PER_PASS):
+        cut = slice(s, s + CLIP_PAIRS_PER_PASS)
+        cu, cv = iu[cut], iv[cut]
+        poly, n = tris[tri[cut]], np.full(len(cu), 3)
+        poly, n = _clip_padded(poly, n, U, cu, True, False)
+        poly, n = _clip_padded(poly, n, U, cu + 1, False, True)
+        poly, n = _clip_padded(poly, n, V, cv, True, False)
+        poly, n = _clip_padded(poly, n, V, cv + 1, False, True)
+        # fan triangles (0, j, j + 1), j = 1 .. n - 2, of every cell with n >= 3
+        fans = np.maximum(n - 2, 0)
+        cell = np.repeat(np.arange(len(n)), fans)
+        j = 1 + np.arange(len(cell)) - np.repeat(np.cumsum(fans) - fans, fans)
+        if reverse:
+            j = fans[cell] + 1 - j
+            corners = np.column_stack([j + 1, j, np.zeros_like(j)])
+        else:
+            corners = np.column_stack([np.zeros_like(j), j, j + 1])
+        rows = poly[cell[:, None], corners].reshape(-1, 8)
+        lu = rows[:, U] - np.repeat(cu[cell], 3)
+        lv = rows[:, V] - np.repeat(cv[cell], 3)
+        if clamp_uv:
+            lu = np.clip(lu, 0.0, 1.0)
+            lv = np.clip(lv, 0.0, 1.0)
+        rows[:, U] = off_x + lu * sc_x
+        rows[:, V] = off_y + lv * sc_y
+        out.append(rows)
+    if not out:
         return np.empty((0, 8), dtype=np.float64)
-    return np.vstack(out_rows)
+    return np.concatenate(out)
 
 
 def verts_to_buffers(verts: np.ndarray) -> dict[str, np.ndarray]:

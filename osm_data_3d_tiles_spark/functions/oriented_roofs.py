@@ -125,7 +125,7 @@ def oriented_roof(params: dict, splits: np.ndarray, is_smooth: bool,
     atlas = atlas_transform_for_texture(params["texture_id"])
     angle = angle_clockwise(np.array([0.0, 1.0]), rot1)
 
-    rows_out = []
+    tris = []
     for outer in outers:
         o = g._strip_closing(outer)
         hole_list = [g._strip_closing(h) for h in inners]
@@ -167,21 +167,19 @@ def oriented_roof(params: dict, splits: np.ndarray, is_smooth: bool,
                         tri = top
 
                 if slice_verts and length:
-                    rows = _emit_slice(
+                    tris.extend(_slice_triangles(
                         slice_verts, split_line, prev[1], split[1], length,
                         uv_y, uv_next, flip_uv, nf, nt, is_smooth,
                         min_height, height, vertical_line,
-                        params["scale_x"], params["scale_y"], atlas,
-                    )
-                    if len(rows):
-                        rows_out.append(rows)
+                        params["scale_x"], params["scale_y"],
+                    ))
                 uv_y = uv_next
                 if i == len(splits) - 1 or tri is None:
                     break
 
-    if not rows_out:
+    rows = uv_cell_subdivide(np.array(tris).reshape(-1, 3, 8), atlas, clamp_uv=True, reverse=False)
+    if not len(rows):
         return None
-    rows = np.vstack(rows_out)
     buf = verts_to_buffers(rows)
     if not is_smooth:
         buf["normal"] = calculate_roof_normals(buf["position"])
@@ -191,12 +189,13 @@ def oriented_roof(params: dict, splits: np.ndarray, is_smooth: bool,
             "can_extend_outside_footprint": True}
 
 
-def _emit_slice(slice_verts, line, h_from, h_to, length, uv_y_from, uv_y_to,
-                flip_uv, n_from, n_to, is_smooth, min_height, height,
-                vertical_line, scale_x, scale_y, atlas):
+def _slice_triangles(slice_verts, line, h_from, h_to, length, uv_y_from, uv_y_to,
+                     flip_uv, n_from, n_to, is_smooth, min_height, height,
+                     vertical_line, scale_x, scale_y):
+    """The Vert triangles (a fan over slice_verts) of one profile slice."""
     base = min_height + height * h_from
     slice_h = height * (h_to - h_from)
-    rows = []
+    tris = []
     n = len(slice_verts)
     for j in range(2, n):
         uvr, posr, normr = [], [], []
@@ -217,13 +216,8 @@ def _emit_slice(slice_verts, line, h_from, h_to, length, uv_y_from, uv_y_to,
             uvr.append((u_w, v_w))
             posr.append((x, y, z))
             normr.append(nn)
-        tri = make_verts(np.array(uvr), np.array(posr), np.array(normr))
-        emitted = uv_cell_subdivide(tri, atlas, clamp_uv=True, reverse=False)
-        if len(emitted):
-            rows.append(emitted)
-    if not rows:
-        return np.empty((0, 8))
-    return np.vstack(rows)
+        tris.append(make_verts(np.array(uvr), np.array(posr), np.array(normr)))
+    return tris
 
 
 def _point_height(point, origin, rot0, rot1, splits):

@@ -101,6 +101,11 @@ def _map_lookup(col: Column, mapping: dict[str, str], fallback: Column) -> Colum
     return expr
 
 
+def has_building_params(df: DataFrame) -> bool:
+    """True when df already carries the with_building_params columns."""
+    return "building_height" in df.columns
+
+
 def with_building_params(df: DataFrame) -> DataFrame:
     """Append the derived building-parameter columns to a buildings DataFrame.
 
@@ -111,8 +116,18 @@ def with_building_params(df: DataFrame) -> DataFrame:
     building_roof_type, building_roof_orientation, building_roof_direction,
     building_facade_material, building_facade_color, building_roof_material,
     building_roof_color, building_windows, building_foundation.
+
+    Plan shape: one projection per dependency level. Every intermediate that
+    later expressions use (roof type, roof height, levels, height, …) is a
+    helper column of its own level, referenced by name, so no CASE tree is
+    copied into the trees that depend on it; the helpers are dropped at the
+    end.
     """
     cols = df.columns
+
+    def h(name: str) -> Column:
+        """A helper column of an earlier level."""
+        return F.col(f"__bp_{name}")
 
     is_roof = F.coalesce(F.col("building_type") == F.lit("roof"), F.lit(False))
     has_foundation = (
@@ -130,26 +145,23 @@ def with_building_params(df: DataFrame) -> DataFrame:
     default_roof_tag = _col_or_null(cols, "defaultRoof")
     building_type_camel = _col_or_null(cols, "buildingType")
 
-    roof_type = _map_lookup(roof_type_tag, ROOF_TYPE_LOOKUP, F.lit("flat"))
     supports_default_roof = F.when(
         default_roof_tag.isNotNull(), default_roof_tag.cast("boolean")
     ).otherwise(~F.coalesce(building_type_camel.isin(DEFAULT_ROOF_EXCEPTIONS), F.lit(False)))
-    no_default = (~supports_default_roof) | (roof_type != F.lit("flat"))
+    no_default = (~supports_default_roof) | (h("roof_type") != F.lit("flat"))
 
-    roof_material0 = _map_lookup(roof_material_tag, ROOF_MATERIAL_LOOKUP, F.lit("default"))
-    roof_color0 = roof_color_tag.cast("long")
     roof_material = F.when(
-        (roof_color0.isNotNull() | no_default) & (roof_material0 == F.lit("default")),
+        (h("roof_color0").isNotNull() | no_default) & (h("roof_material0") == F.lit("default")),
         F.lit("concrete"),
-    ).otherwise(roof_material0)
-    roof_color = F.when(roof_color0.isNotNull(), roof_color0).otherwise(
-        F.when(roof_material == F.lit("concrete"), F.lit(0xBBBBBB))
+    ).otherwise(h("roof_material0"))
+    roof_color = F.when(h("roof_color0").isNotNull(), h("roof_color0")).otherwise(
+        F.when(h("roof_material") == F.lit("concrete"), F.lit(0xBBBBBB))
         .when(
-            roof_material == F.lit("metal"),
+            h("roof_material") == F.lit("metal"),
             F.when(roof_material_tag == F.lit("copper"), F.lit(0xA3CABD)).otherwise(F.lit(0xC3D2DD)),
         )
         .when(
-            roof_material == F.lit("tiles"),
+            h("roof_material") == F.lit("tiles"),
             F.when(roof_material_tag == F.lit("slate"), F.lit(0x8C8C97)).otherwise(F.lit(0xCB7D64)),
         )
         .otherwise(F.lit(0xFFFFFF))
@@ -164,7 +176,7 @@ def with_building_params(df: DataFrame) -> DataFrame:
     roof_levels = F.when(F.col("roof_levels") <= 0, F.lit(0.6)).otherwise(
         F.coalesce(
             F.col("roof_levels").cast("double"),
-            F.when(roof_type == F.lit("flat"), F.lit(0.0)).otherwise(F.lit(1.0)),
+            F.when(h("roof_type") == F.lit("flat"), F.lit(0.0)).otherwise(F.lit(1.0)),
         )
     )
     roof_height0 = F.coalesce(F.col("roof_height").cast("double"), roof_levels * F.lit(LEVEL_HEIGHT))
@@ -175,8 +187,8 @@ def with_building_params(df: DataFrame) -> DataFrame:
 
     roof_height = F.when(
         height_in.isNotNull(),
-        F.least(roof_height0, height_in - F.coalesce(min_height_in, F.lit(0.0))),
-    ).otherwise(roof_height0)
+        F.least(h("roof_height0"), height_in - F.coalesce(min_height_in, F.lit(0.0))),
+    ).otherwise(h("roof_height0"))
 
     # levels/height resolution branches (building-params.ts:94-101)
     levels = F.when(
@@ -186,23 +198,25 @@ def with_building_params(df: DataFrame) -> DataFrame:
         height_in.isNull(), levels_in
     ).when(
         levels_in.isNull(),
-        F.greatest(F.lit(1.0), js_round((height_in - roof_height) / F.lit(LEVEL_HEIGHT)).cast("double")),
+        F.greatest(F.lit(1.0), js_round((height_in - h("roof_height")) / F.lit(LEVEL_HEIGHT)).cast("double")),
     ).otherwise(levels_in)
 
-    height = F.when(height_in.isNull(), levels * F.lit(LEVEL_HEIGHT) + roof_height).otherwise(height_in)
+    height = F.when(
+        height_in.isNull(), h("levels") * F.lit(LEVEL_HEIGHT) + h("roof_height")
+    ).otherwise(height_in)
 
     # minLevel (building-params.ts:103-109)
     min_level = F.when(
         min_level_in.isNull(),
         F.when(
             min_height_in.isNotNull(),
-            F.least(levels - F.lit(1.0), js_round(min_height_in / F.lit(LEVEL_HEIGHT)).cast("double")),
+            F.least(h("levels") - F.lit(1.0), js_round(min_height_in / F.lit(LEVEL_HEIGHT)).cast("double")),
         ).otherwise(F.lit(0.0)),
     ).otherwise(min_level_in)
 
     # minHeight (building-params.ts:111-113)
     min_height = F.when(
-        min_height_in.isNull(), F.least(min_level * F.lit(LEVEL_HEIGHT), height)
+        min_height_in.isNull(), F.least(h("min_level") * F.lit(LEVEL_HEIGHT), h("height"))
     ).otherwise(min_height_in)
 
     # --- facade params (facade-params.ts) -------------------------------------------
@@ -222,26 +236,39 @@ def with_building_params(df: DataFrame) -> DataFrame:
     windows0 = F.when(windows_tag.isNotNull(), windows_tag.cast("boolean")).otherwise(
         ~F.coalesce(F.col("building_type").isin(BUILDINGS_WITHOUT_WINDOWS), F.lit(False))
     )
-    windows = F.when(height - min_height - roof_height < F.lit(2.0), F.lit(False)).otherwise(windows0)
+    windows = F.when(
+        h("height") - h("min_height") - h("roof_height") < F.lit(2.0), F.lit(False)
+    ).otherwise(windows0)
 
-    return (
-        df.withColumn("label", _col_or_null(cols, "name"))
-        .withColumn("building_levels", levels - min_level)
-        .withColumn("building_height", height)
-        .withColumn(
-            "building_min_height", F.when(is_roof, height - roof_height).otherwise(min_height)
-        )
-        .withColumn("building_roof_height", roof_height)
-        .withColumn("building_roof_type", roof_type)
-        .withColumn("building_roof_orientation", roof_orientation)
-        .withColumn("building_roof_direction", _col_or_null(cols, "roof_direction").cast("double"))
-        .withColumn("building_facade_material", facade_material)
-        .withColumn("building_facade_color", facade_color)
-        .withColumn("building_roof_material", roof_material)
-        .withColumn("building_roof_color", roof_color)
-        .withColumn("building_windows", windows)
-        .withColumn("building_foundation", has_foundation)
-    )
+    levels_of_helpers = [
+        {"roof_type": _map_lookup(roof_type_tag, ROOF_TYPE_LOOKUP, F.lit("flat")),
+         "roof_material0": _map_lookup(roof_material_tag, ROOF_MATERIAL_LOOKUP, F.lit("default")),
+         "roof_color0": roof_color_tag.cast("long")},
+        {"roof_material": roof_material, "roof_height0": roof_height0},
+        {"roof_color": roof_color, "roof_height": roof_height},
+        {"levels": levels},
+        {"height": height, "min_level": min_level},
+        {"min_height": min_height},
+    ]
+    for level in levels_of_helpers:
+        df = df.withColumns({f"__bp_{k}": v for k, v in level.items()})
+    return df.withColumns({
+        "label": _col_or_null(cols, "name"),
+        "building_levels": h("levels") - h("min_level"),
+        "building_height": h("height"),
+        "building_min_height": F.when(is_roof, h("height") - h("roof_height")).otherwise(
+            h("min_height")),
+        "building_roof_height": h("roof_height"),
+        "building_roof_type": h("roof_type"),
+        "building_roof_orientation": roof_orientation,
+        "building_roof_direction": _col_or_null(cols, "roof_direction").cast("double"),
+        "building_facade_material": facade_material,
+        "building_facade_color": facade_color,
+        "building_roof_material": h("roof_material"),
+        "building_roof_color": h("roof_color"),
+        "building_windows": windows,
+        "building_foundation": has_foundation,
+    }).drop(*(f"__bp_{k}" for level in levels_of_helpers for k in level))
 
 
 def osm_url_col(osm_id: Column, osm_type: Column) -> Column:

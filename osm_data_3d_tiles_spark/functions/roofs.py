@@ -253,19 +253,17 @@ def flat_roof(params: dict) -> dict | None:
     # the projected UV is carried through clipping in the pos.xy slots, then the
     # OMBB transform is inverted afterward — same math as the reference's
     # per-vertex inversion (flat-roof-builders.ts:154-173)
-    final_rows = []
-    for (a, b, c) in tri_idx:
-        idx = [c, b, a]  # reversed winding, as the reference reverses earcut output
-        tri_uv = uvs_proj[idx]
-        carrier = make_verts(tri_uv, np.hstack([tri_uv, np.zeros((3, 1))]),
-                             np.tile([0.0, 0.0, 1.0], (3, 1)))
-        emitted = uv_cell_subdivide(carrier, atlas, clamp_uv=False, reverse=True)
-        if len(emitted):
-            final_rows.append(emitted)
-    if not final_rows:
+    # reversed winding, as the reference reverses earcut output
+    tri_uv = uvs_proj[np.asarray(tri_idx, dtype=np.int64).reshape(-1, 3)[:, ::-1]]
+    n_tris = len(tri_uv)
+    carriers = make_verts(
+        tri_uv, np.concatenate([tri_uv, np.zeros((n_tris, 3, 1))], axis=2),
+        np.tile([0.0, 0.0, 1.0], (3 * n_tris, 1)),
+    )
+    rows = uv_cell_subdivide(carriers, atlas, clamp_uv=False, reverse=True)
+    if not len(rows):
         return {"position": np.empty(0), "uv": np.empty(0), "normal": np.empty(0),
                 "add_skirt": False, "skirt": None, "facade_height_override": None}
-    rows = np.vstack(final_rows)
     proj_uv = rows[:, [PX, PY]]  # projected uv carried through clipping
     scaled = proj_uv * scale
     world = rotate2_many(scaled, -angle) + origin
@@ -346,16 +344,11 @@ def skillion_roof(params: dict) -> dict | None:
     slope_normal = calculate_normal(p3d[a], p3d[b], p3d[c])
 
     atlas = atlas_transform_for_texture(params["texture_id"])
-    rows_out = []
-    for (a, b, c) in tri_idx:
-        idx = [a, b, c]  # skillion does NOT reverse earcut output
-        tri = make_verts(uv[idx], p3d[idx], np.tile(slope_normal, (3, 1)))
-        emitted = uv_cell_subdivide(tri, atlas, clamp_uv=True, reverse=False)
-        if len(emitted):
-            rows_out.append(emitted)
-    if not rows_out:
+    idx = np.asarray(tri_idx, dtype=np.int64).ravel()  # skillion does NOT reverse earcut output
+    tris = make_verts(uv[idx], p3d[idx], np.tile(slope_normal, (len(idx), 1)))
+    rows = uv_cell_subdivide(tris, atlas, clamp_uv=True, reverse=False)
+    if not len(rows):
         return None
-    rows = np.vstack(rows_out)
     buf = verts_to_buffers(rows)
 
     # skirt: every ring, heights from the same ramp, windows on
@@ -473,7 +466,7 @@ def curved_roof(params: dict, splits: np.ndarray, is_edgy: bool) -> dict | None:
     splits_normals = calculate_splits_normals(splits)
 
     atlas = atlas_transform_for_texture(params["texture_id"])
-    rows_out = []
+    tris = []
 
     for polyline in polylines:
         is_closed = np.array_equal(polyline[0], polyline[-1])
@@ -526,16 +519,13 @@ def curved_roof(params: dict, splits: np.ndarray, is_edgy: bool) -> dict | None:
                         uvr.append((u_w, v_w))
                         posr.append(pp)
                         normr.append(nn)
-                    tri = make_verts(np.array(uvr), np.array(posr), np.array(normr))
-                    emitted = uv_cell_subdivide(tri, atlas, clamp_uv=True, reverse=False)
-                    if len(emitted):
-                        rows_out.append(emitted)
+                    tris.append(make_verts(np.array(uvr), np.array(posr), np.array(normr)))
                 uv_prog_y += quad_y
             uv_prog_x += seg_len
 
-    if not rows_out:
+    rows = uv_cell_subdivide(np.array(tris).reshape(-1, 3, 8), atlas, clamp_uv=True, reverse=False)
+    if not len(rows):
         return None
-    rows = np.vstack(rows_out)
     buf = verts_to_buffers(rows)
     return {**buf, "add_skirt": False, "skirt": None, "facade_height_override": None,
             "can_extend_outside_footprint": True}

@@ -122,14 +122,14 @@ def _triangulate_face(
     edge_line,
     uv_scale_x: float,
     uv_scale_y: float,
-    atlas,
     dst_modifier=None,
-):
-    """HippedRoofBuilder.triangulatePolygon: per-vertex height from signed edge
-    distance, world UVs, earcut reversed, UV-cell clip (no clamp)."""
+) -> np.ndarray:
+    """HippedRoofBuilder.triangulatePolygon up to its UV-cell clip: per-vertex
+    height from signed edge distance, world UVs, earcut reversed → Vert
+    triangles (T, 3, 8)."""
     pts = np.asarray(flat_vertices, dtype=np.float64).reshape(-1, 2)
     if len(pts) < 3:
-        return np.empty((0, 8))
+        return np.empty((0, 3, 8))
     a = np.asarray(edge_line[0], dtype=np.float64)
     b = np.asarray(edge_line[1], dtype=np.float64)
     dst = _signed_dst(pts, a, b)
@@ -146,21 +146,13 @@ def _triangulate_face(
     sin_term = math.sin(math.atan(ratio)) if math.isfinite(ratio) else 1.0
     uv_y = (dst / sin_term) / uv_scale_y if sin_term != 0 else dst / uv_scale_y
 
-    tri_idx = g.triangulate(pts)
-    rows = []
-    for (i, j, k) in tri_idx:
-        idx = [k, j, i]  # reference reverses the earcut output
-        tri = make_verts(
-            np.column_stack([uv_x[idx], uv_y[idx]]),
-            np.column_stack([pts[idx], z[idx]]),
-            np.tile([0.0, 0.0, 1.0], (3, 1)),
-        )
-        emitted = uv_cell_subdivide(tri, atlas, clamp_uv=False, reverse=False)
-        if len(emitted):
-            rows.append(emitted)
-    if not rows:
-        return np.empty((0, 8))
-    return np.vstack(rows)
+    # reference reverses the earcut output
+    idx = np.asarray(g.triangulate(pts), dtype=np.int64).reshape(-1, 3)[:, ::-1].ravel()
+    return make_verts(
+        np.column_stack([uv_x[idx], uv_y[idx]]),
+        np.column_stack([pts[idx], z[idx]]),
+        np.tile([0.0, 0.0, 1.0], (len(idx), 1)),
+    ).reshape(-1, 3, 8)
 
 
 def _faces_for(params: dict):
@@ -339,7 +331,7 @@ def skeleton_roof(params: dict, rtype: str) -> dict | None:
         "quadrupleSaltbox": (0.5, 0.0),
     }.get(rtype)
 
-    rows_all = []
+    tris = []
     for face in faces:
         if not face:
             continue
@@ -348,21 +340,19 @@ def skeleton_roof(params: dict, rtype: str) -> dict | None:
         edge_line = (edge_start, edge_end)
         flat_xy = [(v[0], v[1]) for v in face]
         if split_cfg is None or rtype == "hipped" or rtype == "gabled":
-            rows = _triangulate_face(
+            tris.append(_triangulate_face(
                 [c for p in flat_xy for c in p], min_height, height, max_h,
-                edge_line, sx, sy, atlas,
-            )
-            if len(rows):
-                rows_all.append(rows)
+                edge_line, sx, sy,
+            ))
         else:
             split_progress, bump = split_cfg
             bottom, top = split_skeleton_polygon(flat_xy, edge_start, edge_end,
                                                  max_h * split_progress)
             if rtype == "quadrupleSaltbox":
                 rb = _triangulate_face(bottom, min_height, height * 2, max_h,
-                                       edge_line, sx, sy, atlas)
+                                       edge_line, sx, sy)
                 rt = _triangulate_face(top, min_height + height, 0.0, max_h,
-                                       edge_line, sx, sy, atlas)
+                                       edge_line, sx, sy)
             else:
                 def mod_bottom(p, sp=split_progress, bf=bump):
                     return p + (p / sp) * bf
@@ -371,16 +361,15 @@ def skeleton_roof(params: dict, rtype: str) -> dict | None:
                     return p + ((1 - p) / (1 - sp)) * bf
 
                 rb = _triangulate_face(bottom, min_height, height, max_h,
-                                       edge_line, sx, sy, atlas, mod_bottom)
+                                       edge_line, sx, sy, mod_bottom)
                 rt = _triangulate_face(top, min_height, height, max_h,
-                                       edge_line, sx, sy, atlas, mod_top)
-            for r in (rb, rt):
-                if len(r):
-                    rows_all.append(r)
+                                       edge_line, sx, sy, mod_top)
+            tris += [rb, rt]
 
-    if not rows_all:
+    rows = uv_cell_subdivide(np.concatenate(tris) if tris else np.empty((0, 3, 8)),
+                             atlas, clamp_uv=False, reverse=False)
+    if not len(rows):
         return None
-    rows = np.vstack(rows_all)
     buf = verts_to_buffers(rows)
     # per-face flat normals (hipped-roof-builder.ts calculateNormals, flip=False)
     buf["normal"] = calculate_roof_normals(buf["position"], flip=False)

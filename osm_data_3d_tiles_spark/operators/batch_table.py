@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 
 from ..functions import geometry as g
 from ..functions import mercator as m
-from ..functions.params import osm_url_col, with_building_params
+from ..functions.params import has_building_params, osm_url_col, with_building_params
 
 BATCH_COLUMNS = [
     "label",
@@ -86,8 +86,17 @@ def _pivot(col: str) -> F.Column:
 
 def batch_tables(buildings_with_tile: DataFrame) -> DataFrame:
     """buildings (with params inputs + tile_key) → one row per tile:
-    (tile_key, batch_length, <pivoted batch columns>, box_center)."""
-    enriched = with_box_center(with_building_params(buildings_with_tile)).withColumn(
+    (tile_key, batch_length, <pivoted batch columns>, box_center).
+
+    The derived params are taken as they are when the input already carries
+    them (the seed command derives them once for both the 3D build and this
+    pivot), and derived here otherwise. Only the columns the pivot needs go
+    through the box-center Arrow stage."""
+    src = (buildings_with_tile if has_building_params(buildings_with_tile)
+           else with_building_params(buildings_with_tile))
+    keep = ["tile_key", "osm_id", "osm_type", "geometry"]
+    keep += [c for c in BATCH_COLUMNS if c in src.columns]
+    enriched = with_box_center(src.select(*keep)).withColumn(
         "osm_url", osm_url_col(F.col("osm_id"), F.col("osm_type"))
     )
     aggs = [F.count("*").alias("batch_length")]

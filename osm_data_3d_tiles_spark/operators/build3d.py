@@ -47,6 +47,7 @@ from ..functions.atlas import (
 )
 from ..functions.colors import SeededRandom, parse_color
 from ..functions.mesh import GeometryAccumulator, compute_vertex_normals, flip_triangle_winding
+from ..functions.params import PROPERTY_INPUT_COLS, has_building_params, with_building_params
 from ..functions.roofs import build_roof, flat_roof
 from ..functions.walls import build_walls
 
@@ -347,10 +348,7 @@ def build_tiles_3d(buildings_with_tile: DataFrame) -> DataFrame:
             "columns (functions.params.with_building_params) or the raw "
             "property columns they derive from (sources/fixtures.py schema)."
         )
-    cols = [c for c in _NEEDED_COLS if c in buildings_with_tile.columns]
-    if "building_height" not in cols:
-        from ..functions.params import PROPERTY_INPUT_COLS, with_building_params
-
+    if not has_building_params(buildings_with_tile):
         raw_missing = [c for c in PROPERTY_INPUT_COLS if c not in buildings_with_tile.columns]
         if raw_missing:
             raise ValueError(
@@ -359,7 +357,7 @@ def build_tiles_3d(buildings_with_tile: DataFrame) -> DataFrame:
                 "sources/fixtures.py::make_buildings for the expected schema."
             )
         buildings_with_tile = with_building_params(buildings_with_tile)
-        cols = [c for c in _NEEDED_COLS if c in buildings_with_tile.columns]
+    cols = [c for c in _NEEDED_COLS if c in buildings_with_tile.columns]
     narrow = buildings_with_tile.select(*cols)
     return narrow.groupBy("tile_key").applyInPandas(
         lambda pdf: _build_tile_group(pdf), schema=BUILD3D_SCHEMA

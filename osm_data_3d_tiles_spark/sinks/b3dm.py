@@ -29,9 +29,12 @@ here by structural decode (`unpack_glb`) plus pinned byte goldens
 reference inject the real codec through `compress=`.
 
 The seed path (`seed_tiles`) is the Spark mapping of seed-b3dm.ts:14-65 — one
-batch job materializing every tile, executed with foreachPartition so tile bytes
-never collect on the driver. In the sandbox the sink writes a local directory; on
-a cluster the same code targets a mounted object store path.
+batch job materializing every tile. Its writer is a `mapInArrow` stage, so tile
+bytes never collect on the driver and no tile is turned into a Python `Row`: the
+geometry buffers are numpy slices of each Arrow batch's flat list values, the
+batch-table columns are read with one `to_pylist()` each. Run locally, the
+sink writes a local directory; on a cluster the same code targets a mounted
+object store path.
 """
 
 from __future__ import annotations
@@ -526,23 +529,45 @@ def b3dm_for_tile(
     return pack_b3dm(glb, feature_table, batch_table)
 
 
-def seed_tiles(tiles_df, batch_df, out_dir: str) -> int:
-    """Materialize every tile as {out_dir}/b3dm/{z}_{x}_{y}.b3dm — the batch seed
-    path (seed-b3dm.ts), distributed: the join stays on tile_key partitioning and
-    each partition writes its own files (no driver collect of tile bytes).
-    Returns the number of tiles written."""
-    os.makedirs(os.path.join(out_dir, "b3dm"), exist_ok=True)
-    joined = tiles_df.join(batch_df.drop("batch_length"), "tile_key", "left")
+# build_tiles_3d columns a tile's glb is packed from
+_GEOMETRY_COLUMNS = ("position", "normal", "uv", "batch_id")
 
-    def _write(rows):
-        for row in rows:
-            d = row.asDict(recursive=True)
-            data = b3dm_for_tile(d, d)
-            path = os.path.join(out_dir, "b3dm", f"{d['tile_key']}.b3dm")
+
+def _write_tiles(batches, out_dir: str):
+    """mapInArrow body of seed_tiles: writes every tile of every batch and
+    yields one row per batch with its tile count."""
+    import pyarrow as pa
+
+    for rb in batches:
+        geometry = {}
+        for name in _GEOMETRY_COLUMNS:
+            col = rb.column(name)
+            geometry[name] = (col.offsets.to_numpy(), col.values.to_numpy(zero_copy_only=False))
+        # schema order, so the batch-table JSON keeps the join's column order
+        attrs = {name: rb.column(name).to_pylist()
+                 for name in rb.schema.names if name not in _GEOMETRY_COLUMNS}
+        for i in range(rb.num_rows):
+            row = {name: values[i] for name, values in attrs.items()}
+            geo_row = {"batch_length": row["batch_length"]}
+            for name, (offsets, values) in geometry.items():
+                geo_row[name] = values[offsets[i]:offsets[i + 1]]
+            data = b3dm_for_tile(geo_row, row)
+            path = os.path.join(out_dir, "b3dm", f"{row['tile_key']}.b3dm")
             tmp = path + ".tmp"
             with open(tmp, "wb") as f:
                 f.write(data)
             os.replace(tmp, path)
+        yield pa.RecordBatch.from_pydict({"tiles": pa.array([rb.num_rows], pa.int64())})
 
-    joined.foreachPartition(_write)
-    return len([f for f in os.listdir(os.path.join(out_dir, "b3dm")) if f.endswith(".b3dm")])
+
+def seed_tiles(tiles_df, batch_df, out_dir: str) -> int:
+    """Materialize every tile as {out_dir}/b3dm/{z}_{x}_{y}.b3dm — the batch seed
+    path (seed-b3dm.ts), distributed: the join stays on tile_key partitioning and
+    a mapInArrow stage writes each batch's tiles on the executors (no driver
+    collect of tile bytes, no per-tile Row). Returns the number of tiles this
+    call wrote; files already in the directory are not counted."""
+    os.makedirs(os.path.join(out_dir, "b3dm"), exist_ok=True)
+    joined = tiles_df.select("tile_key", "batch_length", *_GEOMETRY_COLUMNS).join(
+        batch_df.drop("batch_length"), "tile_key", "left")
+    counts = joined.mapInArrow(lambda batches: _write_tiles(batches, out_dir), "tiles long")
+    return sum(r.tiles for r in counts.collect())

@@ -172,21 +172,40 @@ class TestGlbPacking:
         assert 0 <= blen - gltf["buffers"][0]["byteLength"] <= 3
 
 
+def _seed_frames(blds):
+    """(tiles, batch tables) composed as `cli seed` composes them: the
+    building params are derived once and feed both."""
+    owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
+    assigned = with_building_params(blds.join(owners, "osm_id"))
+    return build_tiles_3d(assigned), batch_tables(assigned)
+
+
+def _fixture_buildings(spark):
+    return fx.load_fixture(spark, "buildings", 0.001).filter(F.col("layer") == "buildings")
+
+
 @pytest.fixture(scope="module")
 def seeded_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("export"))
-    blds = fx.load_fixture(spark, "buildings", 0.001).filter(F.col("layer") == "buildings")
-    owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
-    assigned = blds.join(owners, "osm_id")
-    tiles = build_tiles_3d(with_building_params(assigned))
-    batch = batch_tables(assigned)
-    n = seed_tiles(tiles, batch, out)
-    assert n > 0
+    n = seed_tiles(*_seed_frames(_fixture_buildings(spark)), out)
+    assert n > 0 and n == len(os.listdir(os.path.join(out, "b3dm")))
     write_tileset(out, fx.FIXTURE_EXTENT, mode="mercator")
     return out
 
 
 class TestSeedPath:
+    def test_tiles_written_counts_this_call_only(self, spark, tmp_path):
+        """A reused output directory keeps the tiles of an earlier, larger
+        seed; the count is what this call wrote, not what the directory holds."""
+        out = str(tmp_path)
+        blds = _fixture_buildings(spark)
+        first = seed_tiles(*_seed_frames(blds), out)
+        tiles, batch = _seed_frames(blds.filter(F.col("osm_id") % 4 == 0))
+        expected = tiles.count()
+        assert 0 < expected < first
+        assert seed_tiles(tiles, batch, out) == expected
+        assert len(os.listdir(os.path.join(out, "b3dm"))) >= first
+
     def test_tiles_parse_and_match_batch_length(self, seeded_dir):
         files = sorted(os.listdir(os.path.join(seeded_dir, "b3dm")))
         assert files

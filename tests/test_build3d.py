@@ -480,6 +480,101 @@ class TestClipRange:
         assert len(out) == 0
 
 
+def _subdivide_per_triangle(tris, atlas, clamp_uv, reverse):
+    """The per-triangle, per-cell clip_range loop uv_cell_subdivide batches:
+    four half-plane clips per integer UV cell, a fan over each cell with at
+    least 3 vertices (reversed as a flat index list when asked), local UVs
+    clamped or not, then the atlas transform."""
+    from osm_data_3d_tiles_spark.functions.mesh import U, V, clip_range
+
+    off_x, off_y, sc_x, sc_y = atlas
+    out = []
+    for tri in tris:
+        for iu in range(math.floor(tri[:, U].min()), math.ceil(tri[:, U].max())):
+            for iv in range(math.floor(tri[:, V].min()), math.ceil(tri[:, V].max())):
+                cell = clip_range(tri, "x", iu, True, False)
+                cell = clip_range(cell, "x", iu + 1, False, True)
+                cell = clip_range(cell, "y", iv, True, False)
+                cell = clip_range(cell, "y", iv + 1, False, True)
+                if len(cell) < 3:
+                    continue
+                local = cell.copy()
+                local[:, U] -= iu
+                local[:, V] -= iv
+                idx = [c for k in range(1, len(cell) - 1) for c in (0, k, k + 1)]
+                if reverse:
+                    idx = idx[::-1]
+                emitted = local[idx].copy()
+                lu, lv = emitted[:, U], emitted[:, V]
+                if clamp_uv:
+                    lu, lv = np.clip(lu, 0.0, 1.0), np.clip(lv, 0.0, 1.0)
+                emitted[:, U] = off_x + lu * sc_x
+                emitted[:, V] = off_y + lv * sc_y
+                out.append(emitted)
+    return np.vstack(out) if out else np.empty((0, 8))
+
+
+class TestBatchedUvCellSubdivide:
+    """uv_cell_subdivide clips a whole stack of triangles at once; its rows
+    must equal the per-triangle clip_range loop bit for bit, in the same
+    order, for every clamp_uv/reverse combination."""
+
+    ATLAS = (0.125, 0.375, 0.0625, 0.1875)
+
+    def _assert_same(self, tris):
+        from osm_data_3d_tiles_spark.functions.mesh import uv_cell_subdivide
+
+        for clamp_uv in (True, False):
+            for reverse in (True, False):
+                want = _subdivide_per_triangle(tris, self.ATLAS, clamp_uv, reverse)
+                got = uv_cell_subdivide(tris, self.ATLAS, clamp_uv=clamp_uv, reverse=reverse)
+                assert got.shape == want.shape
+                assert np.array_equal(got.view(np.uint64), want.view(np.uint64))
+
+    def _tris(self, uv, seed=0):
+        """Vert triangles with the given (T, 3, 2) UVs and random pos/normal."""
+        uv = np.asarray(uv, dtype=np.float64).reshape(-1, 3, 2)
+        rest = np.random.RandomState(seed).randn(len(uv), 3, 6) * 10
+        return np.concatenate([uv, rest], axis=2)
+
+    def test_random_triangles(self):
+        rng = np.random.RandomState(1)
+        self._assert_same(self._tris(rng.rand(40, 3, 2) * 6 - 1, seed=1))
+
+    def test_vertices_on_grid_lines(self):
+        # integer u and v hit the non-strict lower and the strict upper edges
+        rng = np.random.RandomState(2)
+        uv = rng.randint(-2, 4, size=(40, 3, 2)).astype(float)
+        uv[::2, 0, 0] += 0.5  # half on the lines, half mixed
+        self._assert_same(self._tris(uv, seed=2))
+
+    def test_zero_area_triangles(self):
+        uv = [[[0.5, 0.5], [0.5, 0.5], [0.5, 0.5]],   # a point
+              [[0.2, 0.3], [1.7, 2.9], [0.2, 0.3]],   # a repeated vertex
+              [[0.0, 0.0], [1.0, 1.0], [2.0, 2.0]],   # collinear through corners
+              [[1.0, 0.0], [1.0, 3.0], [1.0, 1.5]]]   # on a vertical grid line
+        self._assert_same(self._tris(uv, seed=3))
+
+    def test_negative_uvs(self):
+        rng = np.random.RandomState(4)
+        self._assert_same(self._tris(-rng.rand(30, 3, 2) * 5, seed=4))
+
+    def test_triangles_spanning_many_cells(self):
+        uv = [[[-7.3, -4.1], [9.6, -3.2], [0.4, 11.8]],
+              [[0.0, 0.0], [25.0, 0.0], [0.0, 25.0]]]
+        self._assert_same(self._tris(uv, seed=5))
+
+    def test_single_triangle_and_empty_stack(self):
+        from osm_data_3d_tiles_spark.functions.mesh import uv_cell_subdivide
+
+        one = self._tris([[[0.2, 0.1], [2.4, 0.3], [1.1, 1.9]]], seed=6)
+        self._assert_same(one)
+        assert np.array_equal(uv_cell_subdivide(one[0], self.ATLAS),
+                              uv_cell_subdivide(one, self.ATLAS))
+        self._assert_same(np.empty((0, 3, 8)))
+        assert uv_cell_subdivide(np.empty((0, 3, 8)), self.ATLAS).shape == (0, 8)
+
+
 class TestSplitPolygon:
     """Goldens for the crossback polygon splitter (roof/utils.ts:112-218)."""
 

@@ -111,3 +111,29 @@ def test_sql_command(spark, capsys):
 def test_sql_command_requires_exactly_one_source(capsys):
     assert main(["sql", "--sf-dir", "/root/testdata/sf0.001"]) == 2
     assert "exactly one of" in capsys.readouterr().err
+
+
+SEED_DIGESTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "golden", "seed_sf0.001_sha256.json"
+)
+
+
+def test_seed_command_output_bytes_golden(spark, tmp_path, capsys):
+    """`seed --sf 0.001` writes exactly the pinned bytes: the sha256 of every
+    b3dm tile, of tileset.json and of every subtile JSON. A change to the 3D
+    build, the batch tables or the sink that moves one byte fails here."""
+    import hashlib
+
+    out = str(tmp_path / "export")
+    assert main(["seed", "--out", out, "--sf", "0.001"]) == 0
+    printed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    got = {}
+    for root, _, names in os.walk(out):
+        for name in names:
+            path = os.path.join(root, name)
+            with open(path, "rb") as f:
+                got[os.path.relpath(path, out)] = hashlib.sha256(f.read()).hexdigest()
+    with open(SEED_DIGESTS) as f:
+        want = json.load(f)
+    assert got == want
+    assert printed["tiles_written"] == sum(p.startswith("b3dm/") for p in want)

@@ -208,3 +208,62 @@ def test_facade_params(spark):
     assert out.loc[2, "building_facade_color"] == 0x123456
     assert out.loc[3, "building_facade_material"] == "plaster"
     assert out.loc[3, "building_facade_color"] == 0xFFFFFF
+
+
+# with_building_params' derived columns, as (name, type, nullable), in order
+DERIVED_SCHEMA = [
+    ("label", "string", True),
+    ("building_levels", "double", True),
+    ("building_height", "double", True),
+    ("building_min_height", "double", True),
+    ("building_roof_height", "double", False),
+    ("building_roof_type", "string", False),
+    ("building_roof_orientation", "string", True),
+    ("building_roof_direction", "double", True),
+    ("building_facade_material", "string", False),
+    ("building_facade_color", "bigint", False),
+    ("building_roof_material", "string", False),
+    ("building_roof_color", "bigint", True),
+    ("building_windows", "boolean", True),
+    ("building_foundation", "boolean", False),
+]
+
+
+def _fields(schema):
+    return [(f.name, f.dataType.simpleString(), f.nullable) for f in schema]
+
+
+def _fixture_buildings(spark):
+    from pyspark.sql import functions as F
+
+    from osm_data_3d_tiles_spark.sources import fixtures as fx
+
+    return fx.load_fixture(spark, "buildings", 0.001).filter(F.col("layer") == "buildings")
+
+
+def test_output_schema_pinned(spark):
+    """The input columns, unchanged, then the derived ones: names, order,
+    types and nullability; the per-level helper columns do not leak."""
+    blds = _fixture_buildings(spark)
+    assert _fields(with_building_params(blds).schema) == _fields(blds.schema) + DERIVED_SCHEMA
+
+
+def test_batch_tables_take_derived_params_as_they_are(spark):
+    """batch_tables derives the params itself from raw input, or takes them
+    from a frame that already has them: the two tables are equal."""
+    from osm_data_3d_tiles_spark.operators.batch_table import batch_tables
+    from osm_data_3d_tiles_spark.operators.cells import building_cells
+    from osm_data_3d_tiles_spark.operators.ownership import owner_tiles
+
+    blds = _fixture_buildings(spark)
+    owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
+    assigned = blds.join(owners, "osm_id")
+    raw = batch_tables(assigned)
+    derived = batch_tables(with_building_params(assigned))
+    assert raw.schema == derived.schema
+
+    def rows(df):
+        return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda d: d["tile_key"])
+
+    want = rows(raw)
+    assert want and rows(derived) == want
