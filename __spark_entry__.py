@@ -46,7 +46,7 @@ def entry(spark: SparkSession) -> DataFrame:
     out = flagship(pages, buildings)
     return (
         out["join_rows"]
-        .join(out["tile_assignment"], "osm_id")
+        .join(out["owners"].select("osm_id", "tile_key"), "osm_id")
         .select("url", "osm_id", "tile_key")
     )
 

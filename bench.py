@@ -159,9 +159,10 @@ def run_flagship(
 
     t0 = time.perf_counter()
     out = flagship(pages, buildings, refine=refine)
-    joined = out["join_rows"].join(F.broadcast(out["tile_assignment"]), "osm_id")
-    n_rows = joined.count()
+    assignment = F.broadcast(out["owners"].select("osm_id", "tile_key"))
+    n_rows = out["join_rows"].join(assignment, "osm_id").count()
     secs = time.perf_counter() - t0
+    out["cells_multi"].unpersist()
     return secs, n_docs, n_rows
 
 

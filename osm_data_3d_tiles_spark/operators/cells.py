@@ -44,38 +44,6 @@ def covered_cells_for_building(rings, ring_types, z: int = m.Z_LEAF) -> set[tupl
     return g.covered_cells(grid_rings, list(ring_types), 1.0)
 
 
-CELLS_SCHEMA = T.StructType(
-    [
-        T.StructField("osm_id", T.LongType()),
-        T.StructField("tile_x", T.LongType()),
-        T.StructField("tile_y", T.LongType()),
-    ]
-)
-
-
-def building_cells(buildings: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
-    """buildings(osm_id, geometry, ring_types, …) → (osm_id, tile_x, tile_y) —
-    one row per covering z-level cell."""
-
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            xs: list[int] = []
-            ys: list[int] = []
-            for osm_id, rings, rtypes in zip(pdf["osm_id"], pdf["geometry"], pdf["ring_types"]):
-                for cx, cy in sorted(covered_cells_for_building(rings, rtypes, z)):
-                    ids.append(osm_id)
-                    xs.append(cx)
-                    ys.append(cy)
-            yield pd.DataFrame({"osm_id": ids, "tile_x": xs, "tile_y": ys})
-
-    from ..session import with_min_parallelism
-
-    return with_min_parallelism(buildings.select("osm_id", "geometry", "ring_types")).mapInPandas(
-        _explode, schema=CELLS_SCHEMA
-    )
-
-
 MULTI_CELLS_SCHEMA = T.StructType(
     [
         T.StructField("osm_id", T.LongType()),
@@ -87,10 +55,13 @@ MULTI_CELLS_SCHEMA = T.StructType(
 
 
 def building_cells_multi(buildings: DataFrame, zs: tuple[int, ...]) -> DataFrame:
-    """Covering cells at SEVERAL zoom levels in one Python pass over the
-    geometry — one job instead of one per level (the flagship needs z16 for
-    tile ownership and z20 for the join prefilter; scanning + triangulating the
-    footprints once halves the dimension-build latency)."""
+    """buildings(osm_id, geometry, ring_types, …) → (osm_id, z, tile_x, tile_y),
+    per building its covering cells level by level, each level sorted.
+
+    SEVERAL zoom levels in one Python pass over the geometry — one job instead
+    of one per level (the flagship needs z16 for tile ownership and z20 for the
+    join prefilter; scanning + triangulating the footprints once halves the
+    dimension-build latency)."""
 
     def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -112,6 +83,12 @@ def building_cells_multi(buildings: DataFrame, zs: tuple[int, ...]) -> DataFrame
     return with_min_parallelism(
         buildings.select("osm_id", "geometry", "ring_types")
     ).mapInPandas(_explode, schema=MULTI_CELLS_SCHEMA)
+
+
+def building_cells(buildings: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
+    """buildings(osm_id, geometry, ring_types, …) → (osm_id, tile_x, tile_y) —
+    one row per covering z-level cell, sorted per building."""
+    return building_cells_multi(buildings, (z,)).select("osm_id", "tile_x", "tile_y")
 
 
 def with_cell_id(df: DataFrame, z: int = m.Z_LEAF) -> DataFrame:

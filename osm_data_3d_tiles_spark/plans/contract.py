@@ -3443,9 +3443,8 @@ def build_rows_only_queries() -> dict:
         pages = fx.load_fixture(spark, "pages", sf)
         buildings = fx.load_fixture(spark, "buildings", sf)
         out = flagship(pages, buildings)
-        return out["join_rows"].join(out["tile_assignment"], "osm_id").select(
-            "url", "osm_id", "tile_key"
-        )
+        assignment = out["owners"].select("osm_id", "tile_key")
+        return out["join_rows"].join(assignment, "osm_id").select("url", "osm_id", "tile_key")
 
     q["flagship_pages_pipeline"] = flagship_pages
 

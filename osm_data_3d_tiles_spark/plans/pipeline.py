@@ -1,18 +1,23 @@
 """The flagship end-to-end plan: pages → extract → cell-encode → broadcast PIP join
-→ tile ownership → per-tile batch tables, with per-partition lineage metrics and
+→ tile ownership → per-tile doc counts, with per-partition lineage metrics and
 snapshot checkpoints.
 
 This is the Spark lifecycle mapping of the reference's serve/seed path (SURVEY.md §3):
 MVT fetch/parse → parquet scan; per-tile worker → shuffle-by-tile stages; SQLite
-claim → ownership window; B3DM batch table → groupBy(tile) pivot.
+claim → ownership window. (The B3DM batch tables are the seed path's, `cli seed`.)
+
+The flagship is declared once, as the ordered stage table of `flagship_stages`:
+each stage has its output name (also its snapshot directory), its lineage stage
+name and a builder over the earlier stages' outputs. Two runners walk it:
+`flagship()` builds every stage in memory; `run_with_checkpoints()` sends each
+one through `checkpoint()`.
 
 Scale shape:
 - pages never shuffle until the final per-tile aggregation: the geotag parse is
   JVM regex, cell encode is Column math, the join side is broadcast;
 - Python sees two doubles per geotagged page (the numpy EPSG:3857 projection,
   bit-exact) and the join candidates (the CSR-table PIP refine), never the html;
-  the flagship does not run `extract_text` (`extract_pages` keeps it for the
-  text invariant);
+  the flagship does not run `extract_text`;
 - checkpoints are parquet snapshot tables with a _SUCCESS-gated manifest, so a
   resumed job skips any completed stage (Iceberg-snapshot semantics in sandbox
   form); their lineage is read from the snapshots' parquet footers by the
@@ -23,7 +28,9 @@ from __future__ import annotations
 
 import os
 import re
-from collections.abc import Iterator
+from collections.abc import Callable
+from functools import partial
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,61 +39,16 @@ from pyspark.sql import types as T
 
 from ..functions import mercator as m
 from ..functions import text as tx
-from ..operators.batch_table import batch_tables
-from ..operators.cells import building_cells
+from ..operators.cells import building_cells_multi
 from ..operators.ownership import owner_tiles
 from ..operators.spatial_join import spatial_join
-
-EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("text_extracted", T.StringType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("x", T.DoubleType()),
-        T.StructField("y", T.DoubleType()),
-    ]
-)
-
-
-def extract_pages(pages: DataFrame) -> DataFrame:
-    """html → (extracted text, geotag, EPSG:3857 point), one Arrow stage.
-
-    The text extraction is the input-hint invariant surface: extract_text(html)
-    must equal the `text` column byte-for-byte (asserted in tests, not here — the
-    hot path does not pay for the comparison)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            geo = tx.extract_geotag(pdf["html"])
-            x, y = m.lonlat_to_3857(geo["lon"].to_numpy(), geo["lat"].to_numpy())
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "text_extracted": tx.extract_text(pdf["html"]),
-                    "lat": geo["lat"],
-                    "lon": geo["lon"],
-                    "x": x,
-                    "y": y,
-                }
-            )
-
-    from ..session import with_min_parallelism
-
-    narrow = with_min_parallelism(pages.select("url", "warc_ts", "lang", "html"))
-    return narrow.mapInPandas(_extract, schema=EXTRACT_SCHEMA)
-
 
 # a StructType, not a DDL string: parsing DDL needs a session at import
 @F.pandas_udf(T.StructType([T.StructField(c, T.DoubleType()) for c in ("x", "y")]))
 def _to_3857(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
     """(lat, lon) → EPSG:3857 (x, y) with numpy `lonlat_to_3857`, so the points
-    are bit-identical to `extract_pages`' (the JVM's log/tan differ in the last
-    bits)."""
+    are bit-identical to the Python reference `tx.extract_geotag` +
+    `lonlat_to_3857` (the JVM's log/tan differ in the last bits)."""
     x, y = m.lonlat_to_3857(lon.to_numpy(), lat.to_numpy())
     return pd.DataFrame({"x": x, "y": y})
 
@@ -106,10 +68,10 @@ def geotagged_points(pages: DataFrame) -> DataFrame:
     exchange carries `url` and the tag, not the html. Python sees two doubles
     per page, for the projection.
 
-    Same rows and bits as `extract_pages` + `lat` not null, under the contract
-    in `functions/text.py` (ASCII `\\s`/`\\d`, correctly rounded parse). One
-    difference: invalid UTF-8 decodes to U+FFFD, so such a page keeps its tag
-    where `extract_pages` (strict decode) fails the task."""
+    Same rows and bits as `tx.extract_geotag` + `lonlat_to_3857` with `lat`
+    not null, under the contract in `functions/text.py` (ASCII `\\s`/`\\d`,
+    correctly rounded parse, invalid UTF-8 decoded to U+FFFD, so such a page
+    keeps its tag; `tx.extract_text` stays strict)."""
     from ..session import with_min_parallelism
 
     tags = F.regexp_extract_all(F.col("html").cast("string"), F.lit(tx.GEO_META_JVM), F.lit(1))
@@ -147,11 +109,11 @@ _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 def _write_footer_lineage(path: str, stage: str, lineage_dir: str) -> None:
-    """Append (stage, partition_id, rows) for a written snapshot, read from its
+    """Write (stage, partition_id, rows) for a written snapshot, read from its
     own parquet footers in this process: rows per written part file, keyed by
-    the writing task's partition id. No Spark job."""
-    import uuid
-
+    the writing task's partition id. No Spark job. One file per stage, replaced
+    whole (temporary file, then `os.replace`), so a rebuilt stage leaves no
+    lineage of the snapshot it replaced."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -167,7 +129,11 @@ def _write_footer_lineage(path: str, stage: str, lineage_dir: str) -> None:
         "rows": pa.array(list(rows.values()), pa.int64()),
     })
     os.makedirs(lineage_dir, exist_ok=True)
-    pq.write_table(table, os.path.join(lineage_dir, f"part-{stage}-{uuid.uuid4().hex}.parquet"))
+    final = os.path.join(lineage_dir, f"part-{stage}.parquet")
+    # a dot-prefixed name: parquet readers skip it until it is renamed
+    tmp = os.path.join(lineage_dir, f".part-{stage}.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)
 
 
 # ---------------------------------------------------------------------------
@@ -213,65 +179,78 @@ def checkpoint(
     return spark.read.parquet(path)
 
 
+
+
 # ---------------------------------------------------------------------------
-# flagship pipeline
+# the flagship: one stage table, two runners
 # ---------------------------------------------------------------------------
 
 
-def flagship_join(pages: DataFrame, buildings: DataFrame) -> DataFrame:
-    """(url, osm_id) exact join rows — pages inside building footprints."""
-    pts = geotagged_points(pages).select("url", "x", "y")
+class Stage(NamedTuple):
+    name: str  # output key and snapshot directory
+    lineage: str  # stage name in the lineage table
+    build: Callable[[dict[str, DataFrame]], DataFrame]  # earlier outputs → output
+    required_cols: tuple[str, ...] = ()  # resume guard, see `checkpoint`
+    cache: bool = False  # persisted by the in-memory runner
+
+
+def _cells_at(out: dict[str, DataFrame], z: int) -> DataFrame:
+    return out["cells_multi"].filter(F.col("z") == z).select("osm_id", "tile_x", "tile_y")
+
+
+def _doc_counts(out: dict[str, DataFrame]) -> DataFrame:
+    # the owners side is one row per building (a bounded dimension), broadcast
+    # so the page-scale join_rows side never shuffles
+    assignment = F.broadcast(out["owners"].select("osm_id", "tile_key"))
+    return (
+        out["join_rows"].join(assignment, "osm_id")
+        .groupBy("tile_key")
+        .agg(F.count("*").alias("docs"))
+    )
+
+
+def flagship_stages(
+    pages: DataFrame, buildings: DataFrame, refine: str = "broadcast"
+) -> tuple[Stage, ...]:
+    """The flagship's ordered stage table over `pages` and the `buildings`
+    layer of `buildings`:
+
+    - points(url, x, y): the geotag extract;
+    - cells_multi(osm_id, z, tile_x, tile_y): one geometry pass covers both
+      cell levels, z16 for ownership and z20 for the join prefilter; it feeds
+      two stages, so the in-memory runner caches it;
+    - owners(osm_id, tile_x, tile_y, tile_key): first-claimer ownership;
+    - join_rows(url, osm_id): the exact PIP join;
+    - tile_doc_counts(tile_key, docs).
+
+    `refine` forwards to `spatial_join`. 'broadcast' is the measured
+    zero-shuffle plan for a bounded per-extent dimension, and spends no
+    decision job as 'auto' would; 'cogroup' is the planet-scale path, benched
+    as flagship_cogroup_secs."""
     blds = buildings.filter(F.col("layer") == "buildings")
-    return spatial_join(pts, blds, page_cols=("url",), building_cols=("osm_id",))
+    return (
+        Stage("points", "extract", lambda out: geotagged_points(pages).select("url", "x", "y")),
+        # snapshot name 'cells_multi', not the single-level 'cells': an older
+        # workdir rebuilds, and required_cols rebuilds a stale same-named one
+        Stage("cells_multi", "cells", lambda out: building_cells_multi(blds, (m.Z_LEAF, 20)),
+              required_cols=("z", "osm_id", "tile_x", "tile_y"), cache=True),
+        Stage("owners", "owners", lambda out: owner_tiles(_cells_at(out, m.Z_LEAF))),
+        Stage("join_rows", "join", lambda out: spatial_join(
+            out["points"], blds, precomputed_cells=_cells_at(out, 20), refine=refine)),
+        Stage("tile_doc_counts", "counts", _doc_counts),
+    )
 
 
 def flagship(
     pages: DataFrame, buildings: DataFrame, refine: str = "broadcast"
 ) -> dict[str, DataFrame]:
-    """Full pipeline. Returns the named stage outputs:
-    join_rows(url, osm_id), tile_assignment(osm_id, tile_key),
-    tile_doc_counts(tile_key, docs), batch(batch tables per owner tile).
-
-    `refine` forwards to spatial_join: 'broadcast' (default — the measured
-    zero-shuffle plan for bounded per-extent dimensions) or 'cogroup' (the
-    planet-scale path for unbounded building dimensions; benched as
-    flagship_cogroup_secs so it has a recorded number, not just a parity
-    test)."""
-    from ..operators.cells import building_cells_multi
-
-    blds = buildings.filter(F.col("layer") == "buildings")
-    # one geometry pass covers both zoom levels: z16 drives tile ownership,
-    # z20 drives the join prefilter
-    multi = building_cells_multi(blds, (m.Z_LEAF, 20)).persist()
-    cells = multi.filter(F.col("z") == m.Z_LEAF).select("osm_id", "tile_x", "tile_y")
-    join_cells = multi.filter(F.col("z") == 20).select("osm_id", "tile_x", "tile_y")
-    owners = owner_tiles(cells)
-
-    pts = geotagged_points(pages).select("url", "x", "y")
-    # refine pinned to 'broadcast': the per-extent buildings dimension is
-    # bounded (BASELINE's measured plan is the zero-shuffle path) and 'auto'
-    # would spend an extra count() job on the dimension inside every timed run;
-    # planet-scale callers pass refine='cogroup' (or leave library-default
-    # 'auto') on their own dimensions
-    join_rows = spatial_join(
-        pts, blds, z=20, page_cols=("url",), building_cols=("osm_id",),
-        precomputed_cells=join_cells, refine=refine,
-    )
-    assignment = owners.select("osm_id", "tile_key")
-    # assignment is one row per building (bounded dimension) — broadcast so the
-    # page-scale join_rows side never shuffles
-    tile_doc_counts = (
-        join_rows.join(F.broadcast(assignment), "osm_id")
-        .groupBy("tile_key")
-        .agg(F.count("*").alias("docs"))
-    )
-    batch = batch_tables(blds.join(assignment, "osm_id"))
-    return {
-        "join_rows": join_rows,
-        "tile_assignment": assignment,
-        "tile_doc_counts": tile_doc_counts,
-        "batch": batch,
-    }
+    """The flagship in memory: every stage output by its stage name. The
+    cached `cells_multi` stays cached until the caller unpersists it."""
+    out: dict[str, DataFrame] = {}
+    for stage in flagship_stages(pages, buildings, refine):
+        df = stage.build(out)
+        out[stage.name] = df.persist() if stage.cache else df
+    return out
 
 
 def run_with_checkpoints(
@@ -280,48 +259,14 @@ def run_with_checkpoints(
     buildings: DataFrame,
     workdir: str,
 ) -> dict[str, DataFrame]:
-    """Checkpointed flagship run: each stage snapshots to parquet + lineage metrics;
-    a rerun resumes from the last complete snapshot."""
+    """The flagship checkpointed: each stage snapshots to `workdir/<stage>` with
+    its lineage under `workdir/metrics`; a rerun resumes from the completed
+    snapshots. Every stage output by its stage name, read from its snapshot."""
     mdir = os.path.join(workdir, "metrics")
-    blds = buildings.filter(F.col("layer") == "buildings")
-
-    from ..operators.cells import building_cells_multi
-
-    points = checkpoint(
-        lambda: geotagged_points(pages).select("url", "x", "y"),
-        spark, os.path.join(workdir, "points"), "extract", mdir,
-    )
-    # one triangulate+rasterize pass covers BOTH cell levels (same sharing as
-    # flagship()): z16 drives ownership, z20 is the PIP-join prefilter
-    # snapshot name 'cells_multi' (not the pre-multi-level 'cells'): a workdir
-    # checkpointed by the single-level version must rebuild, not resume; the
-    # required_cols guard rebuilds even a same-named stale snapshot
-    multi = checkpoint(
-        lambda: building_cells_multi(blds, (m.Z_LEAF, 20)),
-        spark, os.path.join(workdir, "cells_multi"), "cells", mdir,
-        required_cols=("z", "osm_id", "tile_x", "tile_y"),
-    )
-    cells = multi.filter(F.col("z") == m.Z_LEAF).select("osm_id", "tile_x", "tile_y")
-    join_cells = multi.filter(F.col("z") == 20).select("osm_id", "tile_x", "tile_y")
-    owners = checkpoint(
-        lambda: owner_tiles(cells), spark, os.path.join(workdir, "owners"), "owners", mdir
-    )
-    # refine pinned to 'broadcast' as in flagship(): 'auto' would spend a
-    # limit+count decision job on the bounded buildings dimension every run
-    join_rows = checkpoint(
-        lambda: spatial_join(points, blds, precomputed_cells=join_cells, refine="broadcast"),
-        spark, os.path.join(workdir, "join_rows"), "join", mdir,
-    )
-    counts = checkpoint(
-        lambda: join_rows.join(owners.select("osm_id", "tile_key"), "osm_id")
-        .groupBy("tile_key")
-        .agg(F.count("*").alias("docs")),
-        spark, os.path.join(workdir, "tile_doc_counts"), "counts", mdir,
-    )
-    return {
-        "points": points,
-        "cells": cells,
-        "owners": owners,
-        "join_rows": join_rows,
-        "tile_doc_counts": counts,
-    }
+    out: dict[str, DataFrame] = {}
+    for stage in flagship_stages(pages, buildings):
+        out[stage.name] = checkpoint(
+            partial(stage.build, out), spark, os.path.join(workdir, stage.name),
+            stage.lineage, mdir, required_cols=stage.required_cols,
+        )
+    return out

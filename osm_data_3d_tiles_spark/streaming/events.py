@@ -164,7 +164,7 @@ def enriched_tumbling_counts(
 
 def stream_pages_from_dir(spark, path: str, schema) -> DataFrame:
     """readStream over a directory of page parquet drops (the ingest pattern for a
-    continuously-crawled corpus); combine with plans.pipeline.extract_pages."""
+    continuously-crawled corpus); combine with plans.pipeline.geotagged_points."""
     return spark.readStream.schema(schema).parquet(path)
 
 

@@ -9,11 +9,17 @@ from pyspark.sql import functions as F
 from osm_data_3d_tiles_spark.functions import geometry as g
 from osm_data_3d_tiles_spark.functions import mercator as m
 from osm_data_3d_tiles_spark.functions import text as tx
+from osm_data_3d_tiles_spark.operators.batch_table import batch_tables
 from osm_data_3d_tiles_spark.operators.cells import building_cells, covered_cells_for_building
 from osm_data_3d_tiles_spark.operators.knn import building_centroids, knn_bruteforce, knn_kring
 from osm_data_3d_tiles_spark.operators.ownership import owner_tiles
 from osm_data_3d_tiles_spark.operators.zonal import zonal_stats
-from osm_data_3d_tiles_spark.plans.pipeline import extract_pages, flagship, geotagged_points
+from osm_data_3d_tiles_spark.plans.pipeline import (
+    flagship,
+    flagship_stages,
+    geotagged_points,
+    run_with_checkpoints,
+)
 from osm_data_3d_tiles_spark.sources import fixtures as fx
 
 SF = 0.001
@@ -61,13 +67,11 @@ def oracle_join(pages_pdf, buildings_pdf) -> set[tuple[str, int]]:
 
 
 class TestExtract:
-    def test_text_invariant(self, spark, pages, pages_pdf):
-        """Byte-identical extracted text per url (input-hint invariant)."""
-        ext = extract_pages(pages).select("url", "text_extracted").toPandas()
-        truth = pages_pdf.set_index("url")["text"]
-        joined = ext.set_index("url")["text_extracted"]
-        assert len(joined) == len(truth)
-        assert (joined.sort_index() == truth.sort_index()).all()
+    def test_text_invariant(self, pages_pdf):
+        """Byte-identical extracted text per page (input-hint invariant)."""
+        got = tx.extract_text(pages_pdf["html"])
+        assert len(got) == len(pages_pdf)
+        assert (got.to_numpy() == pages_pdf["text"].to_numpy()).all()
 
     def test_geotag_count(self, pages, pages_pdf):
         n_geo = geotagged_points(pages).count()
@@ -182,20 +186,85 @@ class TestSpatialJoin:
         """Same result at different parallelism and Arrow batch size — required
         for the N vs 4N scaling criterion to be meaningful. Batches of 7 rows end
         mid-building in the refine."""
-        from osm_data_3d_tiles_spark.plans.pipeline import flagship_join
+        def join_rows(p, b):
+            out = flagship(p, b)
+            rows = out["join_rows"].toPandas()
+            out["cells_multi"].unpersist()
+            return rows
 
-        a = flagship_join(pages.repartition(2), buildings).toPandas()
-        b = flagship_join(pages.repartition(13), buildings.repartition(7)).toPandas()
+        a = join_rows(pages.repartition(2), buildings)
+        b = join_rows(pages.repartition(13), buildings.repartition(7))
         conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
         prev = spark.conf.get(conf)
         spark.conf.set(conf, "7")
         try:
-            c = flagship_join(pages, buildings).toPandas()
+            c = join_rows(pages, buildings)
         finally:
             spark.conf.set(conf, prev)
         key = lambda df: sorted(zip(df["url"], df["osm_id"]))
         assert key(a) == key(b) == key(c)
         assert len(a) > 0
+
+
+def _table(df, cols) -> list[tuple]:
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _plans(df) -> tuple[str, str]:
+    """(final plan, whole plan) of an executed AQE query, as strings."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return plan.executedPlan().toString(), plan.toString()
+
+
+class TestOneFlagshipDefinition:
+    """`flagship()` and `run_with_checkpoints()` run the one stage table."""
+
+    @pytest.fixture(scope="class")
+    def runs(self, spark, pages, buildings, tmp_path_factory):
+        wd = str(tmp_path_factory.mktemp("flagship") / "wd")
+        return {
+            "in_memory": flagship(pages, buildings),
+            "fresh": run_with_checkpoints(spark, pages, buildings, wd),
+            "resumed": run_with_checkpoints(spark, pages, buildings, wd),
+        }
+
+    def test_runners_agree(self, runs):
+        for stage, cols in (("join_rows", ("url", "osm_id")),
+                            ("owners", ("osm_id", "tile_key")),
+                            ("tile_doc_counts", ("tile_key", "docs"))):
+            tables = {name: _table(out[stage], cols) for name, out in runs.items()}
+            assert tables["in_memory"] == tables["fresh"] == tables["resumed"], stage
+            assert tables["in_memory"], stage
+
+    def test_every_stage_returned(self, pages, buildings, runs):
+        names = [stage.name for stage in flagship_stages(pages, buildings)]
+        assert names == ["points", "cells_multi", "owners", "join_rows", "tile_doc_counts"]
+        for out in runs.values():
+            assert list(out) == names
+
+    def test_counts_join_is_broadcast(self, pages, buildings, runs):
+        counts = runs["in_memory"]["tile_doc_counts"]
+        counts.collect()
+        final, whole = _plans(counts)
+        # the z20 prefilter join and the counts join
+        assert final.count("BroadcastHashJoin") == 2
+        assert "SortMergeJoin" not in whole
+        # the checkpointed counts stage, built as checkpoint() builds it: over
+        # the join_rows and owners snapshots
+        counts = flagship_stages(pages, buildings)[-1].build(runs["resumed"])
+        counts.collect()
+        final, whole = _plans(counts)
+        assert final.count("BroadcastHashJoin") == 1
+        assert "SortMergeJoin" not in whole
+
+    def test_unpersisted_outputs_leave_no_cache(self, spark, pages, buildings):
+        spark.catalog.clearCache()
+        out = flagship(pages, buildings)
+        for df in out.values():
+            df.collect()
+        for df in out.values():
+            df.unpersist()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestOwnership:
@@ -222,22 +291,26 @@ class TestOwnership:
 
 
 class TestBatchTables:
-    def test_shapes_and_order(self, spark, pages, buildings):
-        out = flagship(pages, buildings)["batch"].toPandas()
-        assert (out["batch_length"] > 0).all()
-        for _, row in out.iterrows():
+    @pytest.fixture(scope="class")
+    def batch(self, pages, buildings):
+        blds = buildings.filter(F.col("layer") == "buildings")
+        assignment = flagship(pages, buildings)["owners"].select("osm_id", "tile_key")
+        return batch_tables(blds.join(assignment, "osm_id")).toPandas()
+
+    def test_shapes_and_order(self, buildings, batch):
+        assert (batch["batch_length"] > 0).all()
+        for _, row in batch.iterrows():
             assert len(row["osm_id"]) == row["batch_length"]
             assert list(row["osm_id"]) == sorted(row["osm_id"])
             for bc in row["box_center"]:
                 assert len(bc) == 3 and bc[2] == 10.0
                 assert 4.0 < bc[0] < 5.5 and 45.0 < bc[1] < 46.5
-        total = out["batch_length"].sum()
+        total = batch["batch_length"].sum()
         n_blds = buildings.filter(F.col("layer") == "buildings").count()
         assert total == n_blds  # each building in exactly its owner tile
 
-    def test_osm_url(self, spark, pages, buildings):
-        out = flagship(pages, buildings)["batch"].toPandas()
-        urls = [u for row in out["osm_url"] for u in row]
+    def test_osm_url(self, batch):
+        urls = [u for row in batch["osm_url"] for u in row]
         assert all(u.startswith("https://www.openstreetmap.org/") for u in urls)
 
 

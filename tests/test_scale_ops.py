@@ -99,11 +99,12 @@ class TestCheckpointResume:
         # a snapshot written by an older stage version (missing a now-required
         # column) must be rebuilt, not resumed into an AnalysisException
         path = str(tmp_path / "snap")
-        spark.range(10).select(F.col("id")).write.parquet(path)
+        mdir = str(tmp_path / "m")
+        checkpoint(lambda: spark.range(10).select(F.col("id")), spark, path, "stage1", mdir)
 
         out = checkpoint(
             lambda: spark.range(5).select(F.col("id"), F.lit(16).alias("z")),
-            spark, path, "stage1", required_cols=("z", "id"),
+            spark, path, "stage1", mdir, required_cols=("z", "id"),
         )
         assert out.count() == 5
         assert set(out.columns) == {"id", "z"}
@@ -111,8 +112,13 @@ class TestCheckpointResume:
         def poisoned():
             raise AssertionError("schema-valid snapshot must still resume")
 
-        out2 = checkpoint(poisoned, spark, path, "stage1", required_cols=("z", "id"))
+        out2 = checkpoint(poisoned, spark, path, "stage1", mdir, required_cols=("z", "id"))
         assert out2.count() == 5
+
+        # the rebuilt snapshot's lineage replaces the stale one's
+        lineage = spark.read.parquet(os.path.join(mdir, "lineage"))
+        stage_rows = lineage.filter(F.col("stage") == "stage1").agg(F.sum("rows"))
+        assert stage_rows.collect()[0][0] == 5
 
     def test_full_pipeline_resume_identical(self, spark, tmp_path):
         pages = fx.load_fixture(spark, "pages", 0.001)
