@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ._binary import u24le as _u24
 
 WEBP_RIFF = b"RIFF"
 WEBP_FOURCC = b"WEBP"
@@ -188,8 +187,7 @@ class _Huff:
 
 def decode_webp(data: bytes) -> np.ndarray:
     """WebP bytes → (h, w, 4) RGBA uint8. Lossless (VP8L) only; lossy VP8
-    raises ValueError. Animated files yield the first composited frame (the
-    same still-image contract as functions/gif.py::decode_gif)."""
+    raises ValueError. Animated files yield the first composited frame."""
     try:
         data = bytes(data)
         if webp_is_animated(data):
@@ -519,7 +517,7 @@ def _inv_color_transform(
     # fully vectorized: expand the per-tile transform elements to per-pixel
     # coefficient planes, then apply the spec formula over whole arrays —
     # the decode hot path must never loop per pixel (a 1-MP crawl image is
-    # ~1e6 iterations otherwise; same standard as the PNG/JPEG/BMP paths)
+    # ~1e6 iterations otherwise; same standard as the PNG/JPEG paths)
     p = pix.astype(np.uint32).reshape(h, w)
     ys = np.arange(h, dtype=np.int64) >> size_bits
     xs = np.arange(w, dtype=np.int64) >> size_bits
@@ -707,6 +705,10 @@ def _inv_predictor(
 # ---------------------------------------------------------------------------
 
 
+def _u24(b: bytes, o: int) -> int:
+    return b[o] | (b[o + 1] << 8) | (b[o + 2] << 16)
+
+
 def _iter_anmf(data: bytes):
     """Yield (x, y, w, h, duration_ms, blend, dispose, vp8l_payload) per ANMF
     chunk; raises ValueError for truncated chunks or non-VP8L frame data."""
@@ -760,27 +762,14 @@ def webp_is_animated(data: bytes) -> bool:
         return False
 
 
-def webp_frame_times(data: bytes) -> list[int]:
-    """Per-frame timestamps in ms (cumulative ANMF durations; 0 → the 100 ms
-    convention, matching functions/gif.py) from a header-only walk — no VP8L
-    decode."""
-    times: list[int] = []
-    ts = 0
-    try:
-        for _, _, _, _, dur, _, _, _ in _iter_anmf(bytes(data)):
-            times.append(ts)
-            ts += dur or 100
-    except (IndexError, KeyError) as exc:
-        raise ValueError(f"malformed WebP stream: {type(exc).__name__}: {exc}") from exc
-    return times
-
-
 def decode_webp_frames(data: bytes, max_frames: int | None = None) -> dict:
     """Animated WebP → {"width", "height", "n_frames", "frames": [(ts_ms,
     rgba)]} with full compositing: per-frame alpha blending (the spec's
     integer 'over' formula) or no-blend replacement, and dispose-to-
     background (transparent black). A non-animated file yields its single
-    image at ts 0. max_frames bounds the sequential decode for samplers."""
+    image at ts 0. Frame timestamps are cumulative ANMF durations, a 0 ms
+    duration counting as 100 ms. max_frames stops the sequential decode
+    early (decode_webp asks for the first frame only)."""
     try:
         data = bytes(data)
         if not webp_is_animated(data):
@@ -1017,7 +1006,7 @@ def encode_webp(
     rle: bool = False,
 ) -> bytes:
     """(h, w, 3|4) uint8 → lossless WebP (VP8L) bytes. Deterministic fixture
-    generator, same pattern as encode_png/encode_jpeg/encode_gif.
+    generator, same pattern as encode_png/encode_jpeg.
 
     Optional stream features (all decode-path exercisers): subtract-green
     transform, color cache (1-11 bits), palette (color-indexing transform,

@@ -48,7 +48,11 @@ END_OF_WORD = "</w>"
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Distinct whitespace-delimited words with corpus frequencies."""
+    """Distinct whitespace-delimited words with corpus frequencies.
+
+    Whitespace is ASCII only: Spark's split uses Java's `\\s`, which is
+    `[ \\t\\n\\x0B\\f\\r]`, so U+00A0, U+2003, U+3000 and other Unicode
+    spaces stay inside words (unlike Python's `str.split()`)."""
     return (
         docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("word"))
         .where(F.length("word") > 0)

@@ -53,6 +53,10 @@ def hashed_ngram_buckets(
     Grams are whitespace unigrams plus adjacent-word bigrams (the DSIR
     paper's featurization); bucket = md5(gram) taken as a hex integer mod
     n_buckets. Everything runs JVM-side in one HOF chain.
+
+    Whitespace is ASCII only: Java's `\\s` is `[ \\t\\n\\x0B\\f\\r]`, so
+    U+00A0, U+2003, U+3000 and other Unicode spaces stay inside words
+    (unlike Python's `str.split()`).
     """
     if not 1 <= n_buckets <= 65536:
         raise ValueError(f"n_buckets must be in [1, 65536], got {n_buckets}")

@@ -1,36 +1,21 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns with typed
+"""Multimodal column plumbing: media as opaque binary columns with typed
 metadata, processed by Arrow-batched `mapInPandas` stages.
 
 Decode status (no imaging libraries in this environment):
-- PNG payloads decode FOR REAL — `decode_image_real` runs the repo's
-  pure-numpy PNG reader (zlib inflate + scanline unfilter, functions/atlas.py),
-  and the resize stage dispatches on the PNG magic (`decode_pixels`).
-- JPEG payloads decode FOR REAL too (round 5) — baseline JFIF via the
-  from-scratch numpy codec in functions/jpeg.py (Huffman + dequant + IDCT +
-  4:2:0 upsampling, restart markers); dispatch is on the FFD8 magic.
-- GIF payloads decode FOR REAL (round 5) — 87a/89a first frame via the
-  from-scratch LZW decoder in functions/gif.py (variable-width codes,
-  interlace, transparency compositing onto the logical screen).
-- BMP payloads decode FOR REAL (round 5) — uncompressed BI_RGB DIBs
-  (8-bit palettized / 24 / 32 bpp, bottom-up or top-down) via the
-  pure-numpy reader in functions/bmp.py.
-- ICO favicons decode FOR REAL (round 5) — best directory entry, both
-  PNG-compressed and headerless-DIB entries (XOR pixels + AND transparency
-  mask, alpha composited onto black), functions/bmp.py::decode_ico.
-- WAV audio decodes FOR REAL (round 5) — RIFF/WAVE PCM 8/16/24/32-bit and
-  float32/64, G.711 mu-law/A-law telephony companding, and IMA/DVI ADPCM
-  4-bit delta coding via the from-scratch numpy reader in functions/wav.py,
-  feeding real per-clip features (duration/rms/peak/zero-cross) in
-  `audio_features`.
-- MJPEG-AVI video decodes FOR REAL (round 5) — RIFF container parse
-  (functions/avi.py) composed with the JPEG codec; `sample_video_frames`
-  decodes ONLY the sampled timestamps (cost ∝ samples, not clip length).
-- Other formats (WebP images; compressed audio MP3/AAC/Opus; inter-coded
-  video H.264/VP9/AV1) remain stubbed:
-  `decode_image_stub`/`decode_pixels_stub` produce deterministic fake
-  pixels/features so the Spark-side plumbing — schema, partition sizing, UDF
-  signatures, Arrow batch shape — stays real and tested; wiring a codec
-  library in is a one-function change.
+- PNG payloads decode for real via the pure-numpy reader in
+  functions/atlas.py (zlib inflate + scanline unfilter), the same reader the
+  texture atlas uses.
+- Baseline JFIF JPEG payloads decode for real via functions/jpeg.py
+  (Huffman + dequant + IDCT + 4:2:0 upsampling, restart markers).
+- Lossless WebP (VP8L) payloads decode for real via functions/webp.py;
+  an animated file yields its first composited frame.
+- Every other format (GIF, BMP, TIFF, lossy WebP, AVIF, audio, video, ...)
+  is unsupported: `decode_image_real` raises NotImplementedError and
+  `decode_pixels` falls back to the deterministic `decode_pixels_stub`.
+- `extract_features` hashes every payload through `decode_image_stub`.
+  The stubs keep the Spark-side plumbing — schema, partition sizing, UDF
+  signatures, Arrow batch shape — real and tested; wiring a codec library
+  in is a one-function change.
 """
 
 from __future__ import annotations
@@ -77,29 +62,19 @@ FEATURES_SCHEMA = T.StructType(
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
-GIF_MAGIC = b"GIF8"  # GIF87a / GIF89a
-BMP_MAGIC = b"BM"
-ICO_MAGIC = b"\x00\x00\x01\x00"
 
 
 def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
-    """Real decode: payload → HxWx3 uint8 array.
+    """Real decode: payload → HxWx3 uint8 array, dispatched on the magic.
 
-    PNG (RGBA8, filters 0-4) decodes for real via the repo's pure-numpy
-    reader (functions/atlas.py::decode_png — zlib + unfilter, no imaging
-    library), alpha dropped. JPEG (baseline sequential JFIF — the dominant
-    web-crawl format) decodes for real via functions/jpeg.py::decode_jpeg
-    (from-scratch Huffman + dequant + IDCT + chroma upsample, pure numpy;
-    round-5). GIF (87a/89a incl. interlace + transparency; first frame)
-    decodes via functions/gif.py::decode_gif (from-scratch LZW; round-5).
-    BMP (uncompressed BI_RGB, 8/24/32 bpp) decodes via
-    functions/bmp.py::decode_bmp; ICO favicons (PNG or DIB entries) via
-    decode_ico; lossless WebP (full VP8L: transforms, color cache, meta
-    prefix groups, LZ77; animated files yield the first composited frame)
-    via functions/webp.py::decode_webp (round-5); baseline TIFF (strips,
-    none/LZW/PackBits, predictor 2, gray/palette/RGB/RGBA, both endians) via
-    functions/tiff.py::decode_tiff (round-5). Remaining formats (lossy VP8,
-    AVIF, …) still raise — wire Pillow/libvips here on a real cluster."""
+    - PNG (RGBA8, filters 0-4): functions/atlas.py::decode_png, alpha dropped.
+    - Baseline sequential JPEG: functions/jpeg.py::decode_jpeg.
+    - Lossless WebP (VP8L; an animated file yields its first composited
+      frame): functions/webp.py::decode_webp, alpha dropped.
+
+    A recognised magic with a stream the reader refuses (progressive JPEG,
+    lossy VP8, corrupt data) raises ValueError. Any other format raises
+    NotImplementedError — wire Pillow/libvips here on a real cluster."""
     data = bytes(payload)
     if data[:8] == PNG_MAGIC:
         from ..functions.atlas import decode_png
@@ -109,30 +84,14 @@ def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
         from ..functions.jpeg import decode_jpeg
 
         return decode_jpeg(data)
-    if data[:4] == GIF_MAGIC:
-        from ..functions.gif import decode_gif
-
-        return decode_gif(data)
-    if data[:2] == BMP_MAGIC:
-        from ..functions.bmp import decode_bmp
-
-        return decode_bmp(data)
-    if data[:4] == ICO_MAGIC:
-        from ..functions.bmp import decode_ico
-
-        return decode_ico(data)
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
         from ..functions.webp import decode_webp
 
         return decode_webp(data)[..., :3]
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        from ..functions.tiff import decode_tiff
-
-        return decode_tiff(data)[..., :3]
     raise NotImplementedError(
-        "only PNG, baseline JPEG, GIF, BMP, ICO and lossless WebP decode "
-        "in-sandbox (pure-numpy readers); other formats need an imaging "
-        "library — use decode_image_stub for plumbing tests"
+        "only PNG, baseline JPEG and lossless WebP decode in-sandbox "
+        "(pure-numpy readers); other formats need an imaging library — use "
+        "decode_image_stub for plumbing tests"
     )
 
 
@@ -162,21 +121,6 @@ def extract_features(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         _extract, schema=FEATURES_SCHEMA
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per (media_id, frame_ts_ms) the decoder
-    would emit — derived natively from metadata (no decode), so the expensive stage
-    only ever sees the frames it must produce."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
     )
 
 
@@ -292,23 +236,19 @@ def decode_pixels_stub(payload: bytes, width: int, height: int) -> np.ndarray:
 
 
 def decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Codec dispatch: PNG, baseline-JPEG, GIF, BMP, ICO, lossless-WebP and
-    baseline-TIFF payloads decode for REAL (ignoring the declared metadata
-    dims in favor of the bitstream's); everything else falls back to the
-    deterministic stub so other-format plumbing tests keep working.
+    """Codec dispatch: PNG, baseline-JPEG and lossless-WebP payloads decode
+    for real through `decode_image_real` (the bitstream's dims win over the
+    declared metadata dims); every other format falls back to the
+    deterministic stub.
 
-    An unsupported variant (interlaced/non-RGBA8/16-bit PNG, progressive or
-    arithmetic JPEG, corrupt stream) also degrades to the stub — one odd
-    payload must never fail the whole Arrow stage (round-4 ADVICE)."""
+    A payload with a supported magic that the reader refuses (interlaced or
+    16-bit PNG, progressive JPEG, lossy VP8, corrupt stream) also degrades to
+    the stub — one odd payload must never fail the whole Arrow stage."""
     head = bytes(payload[:12])
     if (
         head[:8] == PNG_MAGIC
         or head[:3] == JPEG_MAGIC
-        or head[:4] == GIF_MAGIC
-        or head[:2] == BMP_MAGIC
-        or head[:4] == ICO_MAGIC
         or (head[:4] == b"RIFF" and head[8:12] == b"WEBP")
-        or head[:4] in (b"II*\x00", b"MM\x00*")
     ):
         try:
             return decode_image_real(payload)
@@ -332,9 +272,10 @@ def resize_nearest(img: np.ndarray, target_w: int, target_h: int) -> np.ndarray:
 
 
 def resize_images(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Image resize as one Arrow stage: decode (REAL for PNG payloads, stub
-    codec otherwise — see decode_pixels) → nearest-neighbor resample (real
-    kernel) → re-serialized payload with updated dimensions.
+    """Image resize as one Arrow stage: decode (real for PNG, JPEG and
+    lossless WebP, stub codec otherwise — see decode_pixels) →
+    nearest-neighbor resample (real kernel) → re-serialized payload with
+    updated dimensions.
 
     The 100 TB shape is what this pins: payloads stay opaque binary through
     the scan, only image rows reach the stage (`kind` filter pushed to the
@@ -368,280 +309,3 @@ def resize_images(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
         "media_id", "payload", F.col("meta.width").alias("width"), F.col("meta.height").alias("height")
     )
     return imgs.mapInPandas(_resize, schema=RESIZED_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Audio: WAV decodes for real (functions/wav.py — PCM, float, G.711,
-# IMA ADPCM); other compressed audio (MP3/AAC/Opus) keeps the stub
-# contract, mirroring the image side.
-# ---------------------------------------------------------------------------
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("peak", T.DoubleType()),
-        T.StructField("zero_cross_rate", T.DoubleType()),
-    ]
-)
-
-
-def decode_audio_real(payload: bytes):
-    """Real audio decode → (frames float64 (n, ch), sample_rate), dispatched
-    by container magic: RIFF/WAVE via functions/wav.py (PCM 8/16/24/32,
-    float32/64, G.711 mu-law/A-law, IMA ADPCM), RIFF/AVI via
-    functions/avi.py::read_avi_audio (the video's auds soundtrack, same codec
-    family). Other formats raise ValueError — wire a codec library here on a
-    real cluster."""
-    from ..functions.wav import decode_wav
-
-    if len(payload) >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        from ..functions.avi import read_avi_audio
-
-        return read_avi_audio(payload)
-    return decode_wav(payload)
-
-
-def audio_features(media: DataFrame, kinds: tuple = ("audio",)) -> DataFrame:
-    """Per-clip audio features as ONE Arrow stage: kind filter pushed to the
-    scan, WAV payloads decode for real (duration/rms/peak/zero-cross over the
-    actual frames) and AVI payloads yield their auds soundtrack (so
-    kinds=("audio", "video") scores video soundtracks too); other or corrupt
-    payloads degrade to a deterministic stub row (decoded=false) instead of
-    failing the stage — the same odd-payload contract as decode_pixels
-    (round-4 ADVICE)."""
-    from ..functions.wav import audio_feature_row
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = b"" if payload is None else payload
-                try:
-                    samples, rate = decode_audio_real(payload)
-                    row = audio_feature_row(samples, rate)
-                    row.update(media_id=mid, n_bytes=len(payload), decoded=True)
-                except Exception:
-                    # stub features keep the stage alive on compressed/corrupt
-                    # payloads; deterministic so plumbing tests can pin them
-                    digest = hashlib.sha256(bytes(payload)).digest()
-                    row = {
-                        "media_id": mid, "n_bytes": len(payload), "decoded": False,
-                        "n_frames": 0, "n_channels": 0, "sample_rate": 0,
-                        "duration_s": 0.0,
-                        "rms": (digest[0] % 100) / 100.0,
-                        "peak": (digest[1] % 100) / 100.0,
-                        "zero_cross_rate": (digest[2] % 100) / 100.0,
-                    }
-                rows.append(row)
-            yield pd.DataFrame(rows)[[f.name for f in AUDIO_FEATURES_SCHEMA.fields]]
-
-    clips = media.filter(F.col("kind").isin(list(kinds))).select("media_id", "payload")
-    return clips.mapInPandas(_extract, schema=AUDIO_FEATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Video: MJPEG-in-AVI decodes for real — the RIFF container parse
-# (functions/avi.py) composed with the from-scratch JPEG codec. Other video
-# formats keep the stub contract.
-# ---------------------------------------------------------------------------
-
-FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_index", T.IntegerType()),
-        T.StructField("frame_ts_ms", T.LongType()),
-        T.StructField("decoded", T.BooleanType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-    ]
-)
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL video frame sampling for MJPEG-AVI, animated-GIF and
-    animated-WebP payloads, one Arrow stage.
-
-    The scale property frame_sample_plan documents — "the expensive stage
-    only ever sees the frames it must produce" — holds here at the decode
-    level. AVI: the container parse locates every frame chunk, but ONLY the
-    sampled timestamps run the JPEG decode (cost ∝ sampled frames, not clip
-    length). GIF/WebP: animation compositing is inherently sequential, so
-    the decode is bounded to the PREFIX ending at the last sampled frame
-    (timestamps come from a metadata-only walk first). Other or corrupt
-    payloads degrade to one deterministic stub row (decoded=false) instead
-    of failing the stage."""
-    if every_ms < 1:
-        raise ValueError(f"every_ms must be >= 1, got {every_ms}")
-    from ..functions.avi import read_avi_mjpeg
-    from ..functions.gif import decode_gif_frames, gif_frame_times
-    from ..functions.jpeg import decode_jpeg
-    from ..functions.webp import decode_webp_frames, webp_frame_times, webp_is_animated
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                payload = b"" if payload is None else payload
-                try:
-                    head = bytes(payload[:12])
-                    anim = None  # (frame_times_fn, prefix_decode_fn)
-                    if head[:4] == GIF_MAGIC:
-                        anim = (gif_frame_times, decode_gif_frames)
-                    elif head[:4] == b"RIFF" and head[8:12] == b"WEBP":
-                        if not webp_is_animated(payload):
-                            raise ValueError("still WebP is not a video clip")
-                        anim = (webp_frame_times, decode_webp_frames)
-                    if anim is not None:
-                        # instants → nearest frame by the actual (variable)
-                        # per-frame timestamps from a metadata-only walk;
-                        # compositing decode is bounded to the needed prefix
-                        times_fn, frames_fn = anim
-                        times = times_fn(payload)
-                        if not times:
-                            raise ValueError("animation has no frames")
-                        picks = []
-                        for ts in range(0, times[-1] + 1, every_ms):
-                            fi = min(
-                                range(len(times)),
-                                key=lambda k: (abs(times[k] - ts), k),
-                            )
-                            picks.append((ts, fi))
-                        clip = frames_fn(
-                            payload, max_frames=max(fi for _, fi in picks) + 1
-                        )
-                        for ts, fi in picks:
-                            img = clip["frames"][fi][1]
-                            rows.append(
-                                {
-                                    "media_id": mid,
-                                    "frame_index": fi,
-                                    "frame_ts_ms": ts,
-                                    "decoded": True,
-                                    "width": img.shape[1],
-                                    "height": img.shape[0],
-                                    "mean_r": float(img[..., 0].mean()),
-                                    "mean_g": float(img[..., 1].mean()),
-                                    "mean_b": float(img[..., 2].mean()),
-                                }
-                            )
-                        continue
-                    clip = read_avi_mjpeg(payload)
-                    fps = clip["fps"] or 1.0
-                    n = len(clip["frames"])
-                    # sample the PLAN's instants (multiples of every_ms up to
-                    # the last frame time) and decode the nearest frame to
-                    # each — one decode per distinct frame, reused across
-                    # instants, so frame_ts_ms joins 1:1 with
-                    # frame_sample_plan's F.sequence output at any fps
-                    last_ms = int((n - 1) * 1000.0 / fps)
-                    decoded_cache: dict[int, np.ndarray] = {}
-                    for ts in range(0, last_ms + 1, every_ms):
-                        fi = min(n - 1, int(round(ts * fps / 1000.0)))
-                        img = decoded_cache.get(fi)
-                        if img is None:
-                            img = decode_jpeg(clip["frames"][fi])
-                            decoded_cache[fi] = img
-                        rows.append(
-                            {
-                                "media_id": mid,
-                                "frame_index": fi,
-                                "frame_ts_ms": ts,
-                                "decoded": True,
-                                "width": img.shape[1],
-                                "height": img.shape[0],
-                                "mean_r": float(img[..., 0].mean()),
-                                "mean_g": float(img[..., 1].mean()),
-                                "mean_b": float(img[..., 2].mean()),
-                            }
-                        )
-                except Exception:
-                    digest = hashlib.sha256(bytes(payload)).digest()
-                    rows.append(
-                        {
-                            "media_id": mid, "frame_index": 0, "frame_ts_ms": 0,
-                            "decoded": False, "width": 0, "height": 0,
-                            "mean_r": float(digest[0]), "mean_g": float(digest[1]),
-                            "mean_b": float(digest[2]),
-                        }
-                    )
-            yield pd.DataFrame(rows)[[f.name for f in FRAME_SAMPLE_SCHEMA.fields]]
-
-    clips = media.filter(F.col("kind") == "video").select("media_id", "payload")
-    return clips.mapInPandas(_sample, schema=FRAME_SAMPLE_SCHEMA)
-
-
-def make_avi_media_fixture(
-    spark, n: int = 6, frames_per_clip: int = 8, with_audio: bool = False
-) -> DataFrame:
-    """Media table whose video payloads are REAL MJPEG-AVI bitstreams
-    (deterministic moving-gradient frames, each encoded by the repo's own
-    JPEG writer, packed by the repo's own AVI writer). with_audio=True
-    interleaves a deterministic sine auds track per clip (codec rotates
-    through PCM16 / mu-law / ADPCM) for the soundtrack-extraction path."""
-    from ..functions.avi import encode_avi_mjpeg
-
-    rows = []
-    for i in range(n):
-        w, h = 32 + (i % 3) * 16, 24 + (i % 2) * 8
-        frames = []
-        for t in range(frames_per_clip):
-            yy, xx = np.mgrid[0:h, 0:w]
-            img = np.empty((h, w, 3), dtype=np.uint8)
-            img[..., 0] = ((xx + 4 * t) * 255) // max(w - 1, 1) % 256
-            img[..., 1] = ((yy + 2 * t) * 255) // max(h - 1, 1) % 256
-            img[..., 2] = ((xx + yy + t) * 3) % 256
-            frames.append(img)
-        fps = (5.0, 10.0, 25.0)[i % 3]
-        audio_kwargs = {}
-        if with_audio:
-            n_frames_a = int(8000 * frames_per_clip / fps)
-            ta = np.arange(n_frames_a, dtype=np.float64)
-            audio_kwargs = {
-                "audio": (0.4 * np.sin(2 * np.pi * 220.0 * (1 + i % 4) * ta / 8000.0))[
-                    :, None
-                ],
-                "audio_rate": 8000,
-                "audio_bits": (16, "ulaw", "adpcm")[i % 3],
-            }
-        payload = encode_avi_mjpeg(frames, fps=fps, quality=85, **audio_kwargs)
-        duration_ms = int(frames_per_clip * 1000 / fps)
-        rows.append((i, "video", bytearray(payload), (w, h, "video/x-msvideo", duration_ms)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def make_wav_media_fixture(spark, n: int = 12) -> DataFrame:
-    """Media table whose audio payloads are REAL WAV bitstreams (deterministic
-    integer-phase sine + square mixes, encoded by the repo's own writer) —
-    exercises the real decode path end to end across bit depths, channel
-    counts and sample rates."""
-    from ..functions.wav import encode_wav
-
-    rows = []
-    for i in range(n):
-        rate = (8000, 16000, 44100)[i % 3]
-        n_ch = 1 + (i % 2)
-        bits = (8, 16, 24, 32, -32)[i % 5]
-        n_frames = 256 + 64 * (i % 4)
-        t = np.arange(n_frames, dtype=np.float64)
-        freq = 110.0 * (1 + i % 7)
-        mono = 0.5 * np.sin(2 * np.pi * freq * t / rate) + 0.25 * np.sign(
-            np.sin(2 * np.pi * (freq / 2) * t / rate) + 1e-12
-        )
-        samples = np.stack([mono * (0.9 if c else 1.0) for c in range(n_ch)], axis=1)
-        payload = encode_wav(samples, rate, bits=bits)
-        rows.append((i, "audio", bytearray(payload), (None, None, "audio/wav", None)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

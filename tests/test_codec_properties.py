@@ -1,204 +1,12 @@
-"""Property-based round-trip gates for the from-scratch codecs (GIF, WAV,
-AVI/MJPEG, JPEG, PNG). Each property is the codec's strongest oracle
-available in-sandbox: encode→decode must reproduce the input exactly
-(lossless formats) or within the quantization bound (JPEG), for arbitrary
-generated inputs — not just the fixture shapes the unit tests pin."""
+"""Property-based round-trip gates for the from-scratch image codecs the
+multimodal stages decode (lossless WebP, baseline JPEG). Each property is the
+codec's strongest oracle available in-sandbox: encode→decode must reproduce
+the input exactly (lossless WebP) or within the quantization bound (JPEG), for
+arbitrary generated inputs — not just the fixture shapes the unit tests pin."""
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-
-@st.composite
-def paletted_images(draw):
-    h = draw(st.integers(1, 40))
-    w = draw(st.integers(1, 40))
-    n_colors = draw(st.integers(1, 64))
-    palette = draw(
-        st.lists(
-            st.tuples(*[st.integers(0, 255)] * 3), min_size=n_colors,
-            max_size=n_colors, unique=True,
-        )
-    )
-    idx = draw(
-        st.lists(st.integers(0, n_colors - 1), min_size=h * w, max_size=h * w)
-    )
-    pal = np.array(palette, dtype=np.uint8)
-    return pal[np.array(idx, dtype=np.intp)].reshape(h, w, 3)
-
-
-class TestGifProperties:
-    @settings(max_examples=40, deadline=None)
-    @given(paletted_images())
-    def test_round_trip_lossless(self, img):
-        from osm_data_3d_tiles_spark.functions.gif import decode_gif, encode_gif
-
-        assert (decode_gif(encode_gif(img)) == img).all()
-
-    @settings(max_examples=40, deadline=None)
-    @given(paletted_images(), st.integers(0, 10_000))
-    def test_mutations_never_escape_valueerror(self, img, seed):
-        from osm_data_3d_tiles_spark.functions.gif import decode_gif, encode_gif
-
-        data = bytearray(encode_gif(img))
-        rng = np.random.RandomState(seed)
-        for _ in range(3):
-            data[rng.randint(0, len(data))] = rng.randint(0, 256)
-        try:
-            decode_gif(bytes(data))
-        except ValueError:
-            pass  # the only allowed failure mode
-
-
-class TestBmpProperties:
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.integers(1, 40), st.integers(1, 40),
-        st.sampled_from([24, 32]), st.integers(0, 2**31),
-    )
-    def test_round_trip_lossless(self, h, w, bpp, seed):
-        from osm_data_3d_tiles_spark.functions.bmp import decode_bmp, encode_bmp
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert (decode_bmp(encode_bmp(img, bpp=bpp)) == img).all()
-
-    @settings(max_examples=40, deadline=None)
-    @given(st.integers(1, 20), st.integers(1, 20), st.integers(0, 10_000))
-    def test_mutations_never_escape_valueerror(self, h, w, seed):
-        from osm_data_3d_tiles_spark.functions.bmp import decode_bmp, encode_bmp
-
-        rng = np.random.RandomState(seed)
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        data = bytearray(encode_bmp(img))
-        for _ in range(3):
-            data[rng.randint(0, len(data))] = rng.randint(0, 256)
-        try:
-            decode_bmp(bytes(data))
-        except ValueError:
-            pass  # the only allowed failure mode
-
-
-class TestWavProperties:
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.integers(1, 2000),
-        st.integers(1, 4),
-        st.sampled_from([8, 16, 24, 32, -32]),
-        st.integers(0, 2**31),
-    )
-    def test_round_trip_within_quantizer(self, n, ch, bits, seed):
-        from osm_data_3d_tiles_spark.functions.wav import decode_wav, encode_wav
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        x = rng.uniform(-1, 1, size=(n, ch))
-        got, rate = decode_wav(encode_wav(x, 22050, bits=bits))
-        assert rate == 22050 and got.shape == x.shape
-        step = 2.0 ** -(abs(bits) - 1)
-        tol = step / 2 + np.abs(x).max() * step + 1e-7
-        assert np.abs(got - x).max() <= tol
-
-    @settings(max_examples=40, deadline=None)
-    @given(st.binary(min_size=0, max_size=400))
-    def test_garbage_never_escapes_valueerror(self, blob):
-        from osm_data_3d_tiles_spark.functions.wav import decode_wav
-
-        try:
-            decode_wav(b"RIFF" + blob)
-        except ValueError:
-            pass
-
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.sampled_from(["ulaw", "alaw"]),
-        st.integers(1, 800),
-        st.integers(1, 3),
-        st.integers(0, 2**31),
-    )
-    def test_g711_encode_is_optimal_quantizer(self, law, n, ch, seed):
-        # the nearest-codeword encoder must match an exhaustive argmin over
-        # all 256 expansions, for arbitrary samples
-        from osm_data_3d_tiles_spark.functions.wav import (
-            alaw_decode, alaw_encode, mulaw_decode, mulaw_encode)
-
-        dec = mulaw_decode if law == "ulaw" else alaw_decode
-        enc = mulaw_encode if law == "ulaw" else alaw_encode
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        x = rng.uniform(-1, 1, size=n * ch)
-        table = dec(np.arange(256, dtype=np.uint8))
-        best = np.abs(x[:, None] - table[None, :]).min(axis=1)
-        got = np.abs(dec(enc(x)) - x)
-        assert np.allclose(got, best)
-        assert got.max() <= 0.02  # half the top-segment gap + clip region
-
-    @settings(max_examples=30, deadline=None)
-    @given(st.integers(1, 1600), st.integers(1, 3), st.integers(0, 2**31))
-    def test_adpcm_shape_exact_and_smooth_error_bounded(self, n, ch, seed):
-        from osm_data_3d_tiles_spark.functions.wav import decode_wav, encode_wav
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        # smooth signal: per-sample delta well inside the step table's range
-        x = np.clip(
-            np.cumsum(rng.uniform(-0.01, 0.01, size=(n, ch)), axis=0), -0.95, 0.95
-        )
-        got, rate = decode_wav(encode_wav(x, 8000, bits="adpcm"))
-        assert rate == 8000 and got.shape == x.shape  # fact chunk exact
-        assert np.abs(got).max() <= 1.0
-        assert np.abs(got - x).max() < 0.05
-
-
-class TestAviProperties:
-    @settings(max_examples=15, deadline=None)
-    @given(st.integers(1, 5), st.integers(1, 3), st.integers(0, 2**31))
-    def test_container_preserves_frame_payloads(self, n_frames, scale, seed):
-        from osm_data_3d_tiles_spark.functions.avi import (
-            encode_avi_mjpeg,
-            read_avi_mjpeg,
-        )
-        from osm_data_3d_tiles_spark.functions.jpeg import decode_jpeg, encode_jpeg
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        h, w = 8 * scale, 8 * scale
-        frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8) for _ in range(n_frames)]
-        clip = read_avi_mjpeg(encode_avi_mjpeg(frames, fps=12.0))
-        assert len(clip["frames"]) == n_frames
-        # container must hand back EXACTLY the JPEG bytes it was given
-        for orig, payload in zip(frames, clip["frames"]):
-            assert payload == encode_jpeg(orig, quality=85, subsample="420")
-            decode_jpeg(payload)  # and they stay decodable
-
-    @settings(max_examples=20, deadline=None)
-    @given(
-        st.integers(1, 1200),
-        st.integers(1, 2),
-        st.sampled_from([16, "ulaw", "alaw", "adpcm"]),
-        st.integers(0, 2**31),
-    )
-    def test_audio_track_round_trips_like_bare_wav(self, n, ch, bits, seed):
-        """An auds stream must decode to EXACTLY what the same samples give
-        through the bare WAV codec — the container adds nothing and loses
-        nothing (incl. the dwLength trim of ADPCM block padding)."""
-        from osm_data_3d_tiles_spark.functions.avi import (
-            encode_avi_mjpeg,
-            read_avi_audio,
-        )
-        from osm_data_3d_tiles_spark.functions.wav import decode_wav, encode_wav
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        if bits == "adpcm":  # smooth signal inside the step table's range
-            x = np.clip(
-                np.cumsum(rng.uniform(-0.01, 0.01, size=(n, ch)), axis=0), -0.95, 0.95
-            )
-        else:
-            x = rng.uniform(-1, 1, size=(n, ch))
-        frame = np.zeros((8, 8, 3), dtype=np.uint8)
-        got, rate = read_avi_audio(
-            encode_avi_mjpeg([frame], fps=10.0, audio=x, audio_rate=8000, audio_bits=bits)
-        )
-        ref, _ = decode_wav(encode_wav(x, 8000, bits=bits))
-        assert rate == 8000 and got.shape == ref[: len(got)].shape == x.shape
-        assert np.array_equal(got, ref[: len(got)])
 
 
 class TestWebpProperties:
@@ -242,48 +50,6 @@ class TestWebpProperties:
         for data in (bytes(blob), b"RIFF" + bytes(blob), bytes(base)):
             try:
                 decode_webp(data)
-            except ValueError:
-                pass
-
-
-class TestTiffProperties:
-    @settings(max_examples=30, deadline=None)
-    @given(
-        st.integers(1, 40),
-        st.integers(1, 40),
-        st.sampled_from([1, 3, 4]),
-        st.sampled_from(["none", "lzw", "packbits"]),
-        st.booleans(),
-        st.integers(1, 16),
-        st.integers(0, 2**31),
-    )
-    def test_round_trip_lossless(self, h, w, ch, comp, big_endian, rps, seed):
-        from osm_data_3d_tiles_spark.functions.tiff import decode_tiff, encode_tiff
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        img = rng.randint(0, 256, (h, w) if ch == 1 else (h, w, ch)).astype(np.uint8)
-        data = encode_tiff(
-            img, compression=comp, big_endian=big_endian, rows_per_strip=rps,
-            predictor=(comp == "lzw" and seed % 2 == 0),
-        )
-        exp = img if img.ndim == 3 else np.repeat(img[..., None], 3, axis=-1)
-        assert np.array_equal(decode_tiff(data), exp)
-
-    @settings(max_examples=40, deadline=None)
-    @given(st.binary(min_size=0, max_size=300), st.integers(0, 2**31))
-    def test_mutations_never_escape_valueerror(self, blob, seed):
-        from osm_data_3d_tiles_spark.functions.tiff import decode_tiff, encode_tiff
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        base = bytearray(
-            encode_tiff(rng.randint(0, 256, (6, 7, 3)).astype(np.uint8),
-                        compression="lzw")
-        )
-        for _ in range(4):
-            base[rng.randint(0, len(base))] = rng.randint(0, 256)
-        for data in (bytes(blob), b"II*\x00" + bytes(blob), bytes(base)):
-            try:
-                decode_tiff(data)
             except ValueError:
                 pass
 

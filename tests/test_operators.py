@@ -20,7 +20,6 @@ from osm_data_3d_tiles_spark.operators.dedup import (
 )
 from osm_data_3d_tiles_spark.operators.multimodal import (
     extract_features,
-    frame_sample_plan,
     make_media_fixture,
 )
 from osm_data_3d_tiles_spark.operators.similarity import ann_bruteforce_topk, ann_ivf_topk
@@ -421,12 +420,6 @@ class TestMultimodal:
             feats.sort_values("media_id").reset_index(drop=True),
             again.sort_values("media_id").reset_index(drop=True),
         )
-
-    def test_frame_sample_plan(self, spark):
-        media = make_media_fixture(spark, 9)
-        plan = frame_sample_plan(media, every_ms=1000).toPandas()
-        # 3 videos × 6 frames (0..5000 step 1000)
-        assert len(plan) == 3 * 6
 
     def test_real_decoder_is_stubbed(self):
         from osm_data_3d_tiles_spark.operators.multimodal import decode_image_real
@@ -1818,11 +1811,51 @@ class TestRealPngDecode:
         assert np.array_equal(got, decode_pixels_stub(bad, 6, 4))
 
     def test_decode_image_real_unknown_format_raises(self):
-        from osm_data_3d_tiles_spark.operators.multimodal import decode_image_real
+        import struct
+
+        from osm_data_3d_tiles_spark.functions.atlas import encode_png
+        from osm_data_3d_tiles_spark.operators.multimodal import (
+            decode_image_real,
+            decode_pixels,
+            decode_pixels_stub,
+        )
 
         # a truly unknown format → NotImplementedError
         with pytest.raises(NotImplementedError, match="decode in-sandbox"):
             decode_image_real(b"????unknown-format-bytes")
+
+        # well-formed 1x1 GIF, BMP, ICO and TIFF files: formats outside the
+        # PNG/JPEG/WebP set are unsupported however valid the bitstream
+        def tiff(e, magic):
+            # 8-bit gray, one uncompressed strip at offset 8 + 2 + 9*12 + 4
+            tags = [(256, 3, 1), (257, 3, 1), (258, 3, 8), (259, 3, 1),
+                    (262, 3, 1), (273, 4, 122), (277, 3, 1), (278, 3, 1),
+                    (279, 4, 1)]
+            ifd = struct.pack(e + "H", len(tags))
+            for tag, typ, val in tags:
+                ifd += struct.pack(e + "HHI", tag, typ, 1) + (
+                    struct.pack(e + "HH", val, 0) if typ == 3 else struct.pack(e + "I", val)
+                )
+            return magic + struct.pack(e + "I", 8) + ifd + b"\x00" * 4 + b"\x80"
+
+        png = encode_png(np.full((1, 1, 4), 255, np.uint8))
+        legacy = {
+            "gif": b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\x00\x00\x00\x00\x00"
+            b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;",
+            "bmp": b"BM" + struct.pack("<IHHI", 58, 0, 0, 54)
+            + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 0, 0, 0, 0)
+            + b"\x00\x00\xff\x00",
+            "ico": b"\x00\x00\x01\x00\x01\x00"
+            + struct.pack("<BBBBHHII", 1, 1, 0, 0, 1, 32, len(png), 22) + png,
+            "tiff_le": tiff("<", b"II*\x00"),
+            "tiff_be": tiff(">", b"MM\x00*"),
+        }
+        for name, data in legacy.items():
+            with pytest.raises(NotImplementedError, match="lossless WebP decode"):
+                decode_image_real(data)
+            assert np.array_equal(
+                decode_pixels(data, 3, 2), decode_pixels_stub(data, 3, 2)
+            ), name
         # WebP now dispatches to the real VP8L decoder (round-5); a lossy
         # VP8 payload is refused with ValueError (decode_pixels → stub)
         with pytest.raises(ValueError, match="lossy VP8|VP8L"):
@@ -2144,9 +2177,11 @@ class TestLearnBpe:
 
     @staticmethod
     def _python_reference(texts, num_merges, min_pair_count=2):
+        import re
         from collections import Counter
 
-        words = Counter(w for t in texts for w in t.split() if w)
+        # ASCII whitespace only, like the engine's Java \s+ (see word_counts)
+        words = Counter(w for t in texts for w in re.split(r"[ \t\n\x0b\f\r]+", t) if w)
         vocab = {tuple(list(w) + ["</w>"]): c for w, c in words.items()}
         merges = []
         for rank in range(num_merges):
@@ -2181,6 +2216,8 @@ class TestLearnBpe:
             "low lower lowest low low",
             "newer newest new newer wider wide",
             "the widest river flows lower and lower",
+            # NBSP, EM SPACE and IDEOGRAPHIC SPACE are word characters
+            "low\u00a0er new\u2003est wide\u3000r lower\u00a0new",
         ]
         expected = self._python_reference(texts, 10)
         assert len(expected) == 10
@@ -2234,7 +2271,8 @@ class TestDsirSelect:
         from collections import Counter
 
         def buckets(text):
-            ws = [w for w in re.split(r"\s+", text) if w]
+            # ASCII whitespace only, like the engine's Java \s+
+            ws = [w for w in re.split(r"[ \t\n\x0b\f\r]+", text) if w]
             grams = ws + [f"{a} {b}" for a, b in zip(ws, ws[1:])]
             return Counter(
                 int(hashlib.md5(g.encode()).hexdigest()[:4], 16) % B for g in grams
@@ -2271,6 +2309,8 @@ class TestDsirSelect:
             mix = rng.integers(0, 2)
             v = tvocab if mix else rvocab
             rows.append((i, " ".join(rng.choice(v, int(rng.integers(8, 20))))))
+        # NBSP, EM SPACE and IDEOGRAPHIC SPACE are word characters
+        rows.append((60, "data\u00a0join spark\u2003plan plan shuffle\u3000join data"))
         expected = self._python_reference(rows, set(range(20)), k=15)
         df = spark.createDataFrame(rows, ["doc_id", "text"])
         got = [
