@@ -1,8 +1,8 @@
 """Shared little-endian byte helpers for the from-scratch codec modules.
 
-Every RIFF-family container (WAV, AVI, WebP) and the BMP/GIF/ICO image
-formats read and write the same 2/3/4-byte little-endian fields; keeping one
-definition means a bounds-check or overflow fix propagates to every codec.
+WebP (a RIFF container) and the BMP/GIF/ICO image formats read and write
+the same 2/3/4-byte little-endian fields; keeping one definition means a
+bounds-check or overflow fix propagates to every codec.
 (TIFF keeps its own closures — it is endianness-parameterized per file.)
 """
 

@@ -12,7 +12,7 @@ LZW-decoding to count frames cheaply.
 The encoder emits a deterministic single-frame GIF89a (true LZW with dynamic
 dictionary, 256-color palette built from the image) so test fixtures are
 generated by the repo's own writer — the same pattern as encode_png /
-encode_jpeg / encode_wav / encode_mvt.
+encode_jpeg / encode_mvt.
 
 Reference parity note: the reference repo decodes textures via image-library
 calls; in-sandbox the codecs are from scratch (see functions/jpeg.py).
@@ -197,8 +197,7 @@ def _iter_frames(data: bytes):
     it) and disposal method (1/0 = leave, 2 = restore the frame rect to the
     background color, 3 = restore the previous canvas). Decoding is
     inherently sequential — each frame composites onto the previous canvas —
-    so a caller sampling frame k pays for frames 0..k (contrast
-    functions/avi.py, where every MJPEG frame is independent)."""
+    so a caller wanting frame k pays for frames 0..k."""
     _check_header(data)
     pos, sw, sh, bg, gct_len = _screen(data)
     if sw < 1 or sh < 1:
@@ -288,8 +287,8 @@ def _iter_frames(data: bytes):
 def decode_gif_frames(data: bytes, max_frames: int | None = None) -> dict:
     """GIF bytes → {"width", "height", "n_frames", "frames": [(ts_ms, rgb)]}
     with full animation compositing (delays, disposal 2/3, transparency).
-    max_frames bounds the sequential decode for samplers that only need a
-    prefix of the clip."""
+    Frame timestamps are cumulative delays, a 0 delay counting as 100 ms.
+    max_frames stops the sequential decode early."""
     try:
         frames = []
         for ts, img in _iter_frames(bytes(data)):
@@ -300,48 +299,6 @@ def decode_gif_frames(data: bytes, max_frames: int | None = None) -> dict:
             raise ValueError("GIF stream has no image frame")
         h, w = frames[0][1].shape[:2]
         return {"width": w, "height": h, "n_frames": len(frames), "frames": frames}
-    except (IndexError, KeyError) as exc:
-        raise ValueError(f"malformed GIF stream: {type(exc).__name__}: {exc}") from exc
-
-
-def gif_frame_times(data: bytes) -> list[int]:
-    """Per-frame timestamps in ms (cumulative GCE delays, 0 → 100 ms
-    convention) from a metadata-only walk — no LZW decode, so samplers can
-    pick instants before paying for pixel decode."""
-    try:
-        data = bytes(data)
-        _check_header(data)
-        pos, _, _, _, gct_len = _screen(data)
-        pos += gct_len
-        times: list[int] = []
-        ts = 0
-        delay_cs = 0
-        while pos < len(data):
-            b = data[pos]
-            if b == 0x3B:
-                break
-            if b == 0x21:
-                label = data[pos + 1]
-                pos += 2
-                if label == 0xF9:
-                    block, pos = _collect_subblocks(data, pos)
-                    if len(block) >= 4:
-                        delay_cs = block[1] | (block[2] << 8)
-                else:
-                    pos = _skip_subblocks(data, pos)
-            elif b == 0x2C:
-                times.append(ts)
-                ts += (delay_cs or 10) * 10
-                delay_cs = 0
-                pos += 10
-                packed = data[pos - 1]
-                if packed & 0x80:
-                    pos += 3 * (2 << (packed & 0x07))
-                pos += 1
-                pos = _skip_subblocks(data, pos)
-            else:
-                raise ValueError(f"unknown GIF block 0x{b:02x}")
-        return times
     except (IndexError, KeyError) as exc:
         raise ValueError(f"malformed GIF stream: {type(exc).__name__}: {exc}") from exc
 

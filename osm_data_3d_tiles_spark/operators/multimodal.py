@@ -7,11 +7,15 @@ Decode status (no imaging libraries in this environment):
   texture atlas uses.
 - Baseline JFIF JPEG payloads decode for real via functions/jpeg.py
   (Huffman + dequant + IDCT + 4:2:0 upsampling, restart markers).
+- GIF (87a/89a first frame, LZW), BMP (uncompressed 8/24/32 bpp), ICO (PNG
+  or DIB entries) and baseline TIFF (strips; none/LZW/PackBits) payloads
+  decode for real via functions/gif.py, functions/bmp.py and
+  functions/tiff.py.
 - Lossless WebP (VP8L) payloads decode for real via functions/webp.py;
   an animated file yields its first composited frame.
-- Every other format (GIF, BMP, TIFF, lossy WebP, AVIF, audio, video, ...)
-  is unsupported: `decode_image_real` raises NotImplementedError and
-  `decode_pixels` falls back to the deterministic `decode_pixels_stub`.
+- Every other format (lossy WebP, AVIF, audio, video, ...) is unsupported:
+  `decode_image_real` raises NotImplementedError and `decode_pixels` falls
+  back to the deterministic `decode_pixels_stub`.
 - `extract_features` hashes every payload through `decode_image_stub`.
   The stubs keep the Spark-side plumbing — schema, partition sizing, UDF
   signatures, Arrow batch shape — real and tested; wiring a codec library
@@ -62,6 +66,10 @@ FEATURES_SCHEMA = T.StructType(
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
+GIF_MAGIC = b"GIF8"  # GIF87a / GIF89a
+BMP_MAGIC = b"BM"
+ICO_MAGIC = b"\x00\x00\x01\x00"
+TIFF_MAGICS = (b"II*\x00", b"MM\x00*")
 
 
 def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
@@ -69,12 +77,18 @@ def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
 
     - PNG (RGBA8, filters 0-4): functions/atlas.py::decode_png, alpha dropped.
     - Baseline sequential JPEG: functions/jpeg.py::decode_jpeg.
+    - GIF (87a/89a, first frame): functions/gif.py::decode_gif.
+    - BMP (uncompressed BI_RGB, 8/24/32 bpp) and ICO (PNG or DIB entries):
+      functions/bmp.py::decode_bmp / decode_ico.
     - Lossless WebP (VP8L; an animated file yields its first composited
       frame): functions/webp.py::decode_webp, alpha dropped.
+    - Baseline TIFF (strips, none/LZW/PackBits, both byte orders):
+      functions/tiff.py::decode_tiff, alpha dropped.
 
     A recognised magic with a stream the reader refuses (progressive JPEG,
-    lossy VP8, corrupt data) raises ValueError. Any other format raises
-    NotImplementedError — wire Pillow/libvips here on a real cluster."""
+    lossy VP8, RLE BMP, tiled TIFF, corrupt data) raises ValueError. Any
+    other format raises NotImplementedError — wire Pillow/libvips here on a
+    real cluster."""
     data = bytes(payload)
     if data[:8] == PNG_MAGIC:
         from ..functions.atlas import decode_png
@@ -84,14 +98,30 @@ def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
         from ..functions.jpeg import decode_jpeg
 
         return decode_jpeg(data)
+    if data[:4] == GIF_MAGIC:
+        from ..functions.gif import decode_gif
+
+        return decode_gif(data)
+    if data[:2] == BMP_MAGIC:
+        from ..functions.bmp import decode_bmp
+
+        return decode_bmp(data)
+    if data[:4] == ICO_MAGIC:
+        from ..functions.bmp import decode_ico
+
+        return decode_ico(data)
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
         from ..functions.webp import decode_webp
 
         return decode_webp(data)[..., :3]
+    if data[:4] in TIFF_MAGICS:
+        from ..functions.tiff import decode_tiff
+
+        return decode_tiff(data)[..., :3]
     raise NotImplementedError(
-        "only PNG, baseline JPEG and lossless WebP decode in-sandbox "
-        "(pure-numpy readers); other formats need an imaging library — use "
-        "decode_image_stub for plumbing tests"
+        "only PNG, baseline JPEG, GIF, BMP, ICO, lossless WebP and baseline "
+        "TIFF decode in-sandbox (pure-numpy readers); other formats need an "
+        "imaging library — use decode_image_stub for plumbing tests"
     )
 
 
@@ -236,19 +266,23 @@ def decode_pixels_stub(payload: bytes, width: int, height: int) -> np.ndarray:
 
 
 def decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Codec dispatch: PNG, baseline-JPEG and lossless-WebP payloads decode
-    for real through `decode_image_real` (the bitstream's dims win over the
-    declared metadata dims); every other format falls back to the
-    deterministic stub.
+    """Codec dispatch: PNG, baseline-JPEG, GIF, BMP, ICO, lossless-WebP and
+    baseline-TIFF payloads decode for real through `decode_image_real` (the
+    bitstream's dims win over the declared metadata dims); every other
+    format falls back to the deterministic stub.
 
     A payload with a supported magic that the reader refuses (interlaced or
-    16-bit PNG, progressive JPEG, lossy VP8, corrupt stream) also degrades to
-    the stub — one odd payload must never fail the whole Arrow stage."""
+    16-bit PNG, progressive JPEG, lossy VP8, RLE BMP, tiled TIFF, corrupt
+    stream) also degrades to the stub — one odd payload must never fail the whole Arrow stage."""
     head = bytes(payload[:12])
     if (
         head[:8] == PNG_MAGIC
         or head[:3] == JPEG_MAGIC
+        or head[:4] == GIF_MAGIC
+        or head[:2] == BMP_MAGIC
+        or head[:4] == ICO_MAGIC
         or (head[:4] == b"RIFF" and head[8:12] == b"WEBP")
+        or head[:4] in TIFF_MAGICS
     ):
         try:
             return decode_image_real(payload)
@@ -272,8 +306,8 @@ def resize_nearest(img: np.ndarray, target_w: int, target_h: int) -> np.ndarray:
 
 
 def resize_images(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Image resize as one Arrow stage: decode (real for PNG, JPEG and
-    lossless WebP, stub codec otherwise — see decode_pixels) →
+    """Image resize as one Arrow stage: decode (real for the formats
+    decode_pixels lists, stub codec otherwise) →
     nearest-neighbor resample (real kernel) → re-serialized payload with
     updated dimensions.
 

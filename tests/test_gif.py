@@ -129,8 +129,7 @@ class TestRefusals:
 
 
 class TestAnimation:
-    """Full animation semantics: delays, disposal 2/3, transparency,
-    prefix-bounded sampling."""
+    """Full animation semantics: delays, disposal 2/3, transparency."""
 
     def _frames(self, n=4, h=10, w=12):
         rng = np.random.RandomState(n)
@@ -141,7 +140,6 @@ class TestAnimation:
         from osm_data_3d_tiles_spark.functions.gif import (
             decode_gif_frames,
             encode_gif_animated,
-            gif_frame_times,
         )
 
         frames = self._frames(4)
@@ -153,13 +151,15 @@ class TestAnimation:
         ):
             assert ts == exp_ts
             assert np.array_equal(got, want)
-        assert gif_frame_times(encode_gif_animated(frames, delays)) == [0, 50, 150, 300]
 
     def test_zero_delay_uses_100ms_convention(self):
-        from osm_data_3d_tiles_spark.functions.gif import gif_frame_times, encode_gif_animated
+        from osm_data_3d_tiles_spark.functions.gif import (
+            decode_gif_frames,
+            encode_gif_animated,
+        )
 
-        frames = self._frames(3)
-        assert gif_frame_times(encode_gif_animated(frames, 0)) == [0, 100, 200]
+        clip = decode_gif_frames(encode_gif_animated(self._frames(3), 0))
+        assert [ts for ts, _ in clip["frames"]] == [0, 100, 200]
 
     def test_disposal_2_restores_background(self):
         """Frame 1 is a sub-rect with disposal 2: frame 2's canvas shows the
@@ -235,34 +235,6 @@ class TestAnimation:
             "osm_data_3d_tiles_spark.functions.gif", fromlist=["encode_gif_animated"]
         ).encode_gif_animated(frames, 100)
         assert np.array_equal(decode_gif(data_anim), frames[0])
-
-    def test_sample_video_frames_animated_gif(self, spark):
-        """Animated GIFs ride the video sampling stage: variable delays →
-        nearest-frame picks at every_ms instants."""
-        from osm_data_3d_tiles_spark.functions.gif import encode_gif_animated
-        from osm_data_3d_tiles_spark.operators.multimodal import (
-            MEDIA_SCHEMA,
-            sample_video_frames,
-        )
-
-        frames = self._frames(5, h=8, w=8)
-        rows = [
-            (0, "video", bytearray(encode_gif_animated(frames, 200)),
-             (8, 8, "image/gif", 1000)),
-            (1, "video", bytearray(encode_gif_animated(frames, [100, 50, 50, 100, 200])),
-             (8, 8, "image/gif", 500)),
-        ]
-        media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-        out = sample_video_frames(media, every_ms=200).toPandas()
-        assert out["decoded"].all()
-        c0 = out[out["media_id"] == 0]
-        # clip 0: frames at 0/200/400/600/800 → instants 0..800 step 200
-        assert sorted(c0["frame_ts_ms"]) == [0, 200, 400, 600, 800]
-        assert sorted(c0["frame_index"]) == [0, 1, 2, 3, 4]
-        c1 = out[out["media_id"] == 1]
-        # clip 1 timestamps: 0,100,150,200,300 → instants 0/200; nearest = 0,3
-        assert sorted(c1["frame_ts_ms"]) == [0, 200]
-        assert sorted(c1["frame_index"]) == [0, 3]
 
 
 class TestDispatch:

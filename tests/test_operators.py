@@ -1811,51 +1811,11 @@ class TestRealPngDecode:
         assert np.array_equal(got, decode_pixels_stub(bad, 6, 4))
 
     def test_decode_image_real_unknown_format_raises(self):
-        import struct
-
-        from osm_data_3d_tiles_spark.functions.atlas import encode_png
-        from osm_data_3d_tiles_spark.operators.multimodal import (
-            decode_image_real,
-            decode_pixels,
-            decode_pixels_stub,
-        )
+        from osm_data_3d_tiles_spark.operators.multimodal import decode_image_real
 
         # a truly unknown format → NotImplementedError
         with pytest.raises(NotImplementedError, match="decode in-sandbox"):
             decode_image_real(b"????unknown-format-bytes")
-
-        # well-formed 1x1 GIF, BMP, ICO and TIFF files: formats outside the
-        # PNG/JPEG/WebP set are unsupported however valid the bitstream
-        def tiff(e, magic):
-            # 8-bit gray, one uncompressed strip at offset 8 + 2 + 9*12 + 4
-            tags = [(256, 3, 1), (257, 3, 1), (258, 3, 8), (259, 3, 1),
-                    (262, 3, 1), (273, 4, 122), (277, 3, 1), (278, 3, 1),
-                    (279, 4, 1)]
-            ifd = struct.pack(e + "H", len(tags))
-            for tag, typ, val in tags:
-                ifd += struct.pack(e + "HHI", tag, typ, 1) + (
-                    struct.pack(e + "HH", val, 0) if typ == 3 else struct.pack(e + "I", val)
-                )
-            return magic + struct.pack(e + "I", 8) + ifd + b"\x00" * 4 + b"\x80"
-
-        png = encode_png(np.full((1, 1, 4), 255, np.uint8))
-        legacy = {
-            "gif": b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\x00\x00\x00\x00\x00"
-            b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;",
-            "bmp": b"BM" + struct.pack("<IHHI", 58, 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 0, 0, 0, 0)
-            + b"\x00\x00\xff\x00",
-            "ico": b"\x00\x00\x01\x00\x01\x00"
-            + struct.pack("<BBBBHHII", 1, 1, 0, 0, 1, 32, len(png), 22) + png,
-            "tiff_le": tiff("<", b"II*\x00"),
-            "tiff_be": tiff(">", b"MM\x00*"),
-        }
-        for name, data in legacy.items():
-            with pytest.raises(NotImplementedError, match="lossless WebP decode"):
-                decode_image_real(data)
-            assert np.array_equal(
-                decode_pixels(data, 3, 2), decode_pixels_stub(data, 3, 2)
-            ), name
         # WebP now dispatches to the real VP8L decoder (round-5); a lossy
         # VP8 payload is refused with ValueError (decode_pixels → stub)
         with pytest.raises(ValueError, match="lossy VP8|VP8L"):
