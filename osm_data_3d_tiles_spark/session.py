@@ -9,13 +9,43 @@ down for local[N] testing:
   via spark-submit conf),
 - broadcast threshold raised: the buildings-by-cell dimension table is the broadcast
   side of the flagship join.
+
+Python workers are started by `_worker_daemon` (`spark.python.daemon.module`)
+instead of `pyspark.daemon`. Spark puts `pyspark.zip`, the py4j zip and the
+spark-core jar on the workers' path, and every task calls
+`importlib.invalidate_caches()`, which makes each cached `zipimporter` re-read
+its archive: about 0.2 s of CPU per task before any work. The daemon module
+drops those archives when an installed pyspark of the same version and py4j
+resolve without them; otherwise it leaves the path as it was and workers run
+exactly as under `pyspark.daemon`.
+
+The conf is set only when the daemon can import the module at start-up: a
+local master, and the package loaded from a directory that is the cwd, on
+`PYTHONPATH` or a site-packages directory. Under
+`spark-submit --py-files osm_data_3d_tiles_spark.zip` the package reaches the
+workers only per task, so the conf stays unset there (a daemon naming it would
+die with `No module named 'osm_data_3d_tiles_spark'`).
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+
+def _daemon_conf(master: str) -> dict[str, str]:
+    """`spark.python.daemon.module` when a local daemon, started with this
+    process's cwd and `PYTHONPATH`, can import this package; else nothing."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not master.startswith("local") or not os.path.isdir(os.path.join(root, __package__)):
+        return {}
+    start_path = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+                  *site.getsitepackages()]
+    if any(p and os.path.realpath(p) == os.path.realpath(root) for p in start_path):
+        return {"spark.python.daemon.module": f"{__package__}._worker_daemon"}
+    return {}
 
 
 def get_spark(
@@ -43,7 +73,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -1,15 +1,19 @@
-"""CLI surface tests: argparse contract + the driver-side generate-tileset
-command (Spark commands are exercised by the spark-submit smoke in CI-as-docs;
-see scripts/submit_job.py)."""
+"""CLI surface tests: argparse contract, the CLI commands, and a
+spark-submit smoke of the `--py-files` archive (scripts/package.sh +
+scripts/submit_job.py) run from a foreign cwd with no PYTHONPATH."""
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 
 import pytest
+from test_entry_contract import SF_DIR
 
 from osm_data_3d_tiles_spark.cli import main
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_generate_tileset(tmp_path, capsys):
@@ -137,3 +141,23 @@ def test_seed_command_output_bytes_golden(spark, tmp_path, capsys):
         want = json.load(f)
     assert got == want
     assert printed["tiles_written"] == sum(p.startswith("b3dm/") for p in want)
+
+
+def test_spark_submit_py_files_smoke(tmp_path):
+    """The submitted app and its workers import the package from the archive
+    alone; the workers' daemon must then stay `pyspark.daemon`, since a daemon
+    module inside the archive cannot be imported at daemon start-up."""
+    archive = str(tmp_path / "osm_data_3d_tiles_spark.zip")
+    subprocess.run([os.path.join(ROOT, "scripts", "package.sh"), archive], check=True,
+                   capture_output=True)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    proc = subprocess.run(
+        ["spark-submit", "--master", "local[2]", "--py-files", archive,
+         os.path.join(ROOT, "scripts", "submit_job.py"), "sql",
+         "--sf-dir", SF_DIR,
+         "--query", "SELECT SUM(token_count(text)) AS toks FROM documents"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["rows"] == [{"toks": 27939}]
