@@ -79,7 +79,7 @@ def cmd_flagship(args) -> int:
     `--pages` points at the production input — an Iceberg catalog table
     (dotted name, optional time travel pin) or a parquet path — and falls
     back to the deterministic sf fixture when omitted."""
-    from .plans.pipeline import run_with_checkpoints
+    from .plans.pipeline import run_with_checkpoints, snapshot_rows
     from .sources import fixtures as fx
     from .sources.tables import read_pages
 
@@ -92,13 +92,12 @@ def cmd_flagship(args) -> int:
     else:
         pages = fx.load_fixture(spark, "pages", args.sf)
     buildings = fx.load_fixture(spark, "buildings", args.sf)
-    out = run_with_checkpoints(spark, pages, buildings, args.workdir)
-    print(json.dumps({
-        "join_rows": out["join_rows"].count(),
-        "owned_buildings": out["owners"].count(),
-        "tiles_with_docs": out["tile_doc_counts"].count(),
-        "workdir": args.workdir,
-    }))
+    run_with_checkpoints(spark, pages, buildings, args.workdir)
+    # row counts from the snapshots' parquet footers: no Spark job
+    counts = {key: snapshot_rows(os.path.join(args.workdir, stage)) for key, stage in (
+        ("join_rows", "join_rows"), ("owned_buildings", "owners"),
+        ("tiles_with_docs", "tile_doc_counts"))}
+    print(json.dumps({**counts, "workdir": args.workdir}))
     return 0
 
 

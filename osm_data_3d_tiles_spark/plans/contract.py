@@ -410,11 +410,11 @@ def build_queries() -> dict:
         """,
     )
 
-    # ---- flagship: broadcast cell-prefiltered ray-cast PIP join ---------------
+    # ---- flagship: cell-prefiltered ray-cast PIP join -------------------------
     def pip_join(spark, sf_dir):
         pts = doc_points(spark, sf_dir).withColumnRenamed("doc_id", "url")
         rects = rect_buildings(spark, sf_dir)
-        out = spatial_join(pts, rects, page_cols=("url",), building_cols=("osm_id",))
+        out = spatial_join(pts, rects, page_cols=("url",))
         return out.select(F.col("url").alias("doc_id"), "osm_id")
 
     q["pip_join_docs_rects"] = (
@@ -508,7 +508,7 @@ def build_queries() -> dict:
     def batch_pivot(spark, sf_dir):
         pts = doc_points(spark, sf_dir).withColumnRenamed("doc_id", "url")
         rects = rect_buildings(spark, sf_dir)
-        joined = spatial_join(pts, rects, page_cols=("url",), building_cols=("osm_id",))
+        joined = spatial_join(pts, rects, page_cols=("url",))
         owners = owner_tiles(building_cells(rects)).select("osm_id", "tile_key")
         return (
             joined.join(owners, "osm_id")

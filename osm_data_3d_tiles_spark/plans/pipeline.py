@@ -1,6 +1,6 @@
-"""The flagship end-to-end plan: pages → extract → cell-encode → broadcast PIP join
-→ tile ownership → per-tile doc counts, with per-partition lineage metrics and
-snapshot checkpoints.
+"""The flagship end-to-end plan: pages → geotag extract → cell-prefiltered PIP
+join → tile ownership → per-tile doc counts, with per-partition lineage
+metrics and snapshot checkpoints.
 
 This is the Spark lifecycle mapping of the reference's serve/seed path (SURVEY.md §3):
 MVT fetch/parse → parquet scan; per-tile worker → shuffle-by-tile stages; SQLite
@@ -14,14 +14,16 @@ one through `checkpoint()`.
 
 Scale shape:
 - pages never shuffle until the final per-tile aggregation: the geotag parse is
-  JVM regex, cell encode is Column math, the join side is broadcast;
-- Python sees two doubles per geotagged page (the numpy EPSG:3857 projection,
-  bit-exact) and the join candidates (the CSR-table PIP refine), never the html;
-  the flagship does not run `extract_text`;
+  JVM regex, and the join's building side is one broadcast value;
+- Python sees each geotagged page once, as (url, lat, lon) in the join's
+  `mapInArrow` pass (`spatial_join.geotag_join`: the numpy EPSG:3857
+  projection, bit-exact, the z20 cell probe and the CSR-table PIP refine),
+  and returns only the matches; it never sees the html, and the flagship does
+  not run `extract_text`;
 - checkpoints are parquet snapshot tables with a _SUCCESS-gated manifest, so a
   resumed job skips any completed stage (Iceberg-snapshot semantics in sandbox
-  form); their lineage is read from the snapshots' parquet footers by the
-  calling process, with no Spark job.
+  form); their lineage and row counts are read from the snapshots' parquet
+  footers by the calling process, with no Spark job.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from ..functions import mercator as m
 from ..functions import text as tx
 from ..operators.cells import building_cells_multi
 from ..operators.ownership import owner_tiles
-from ..operators.spatial_join import spatial_join
+from ..operators.spatial_join import geotag_join, spatial_join
 
 # a StructType, not a DDL string: parsing DDL needs a session at import
 @F.pandas_udf(T.StructType([T.StructField(c, T.DoubleType()) for c in ("x", "y")]))
@@ -54,38 +56,47 @@ def _to_3857(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
 
 
 # Marked nondeterministic only so the optimizer keeps filters on x/y above it:
-# a composed plan's join infers isnotnull(cell(x, y)), and pushing that below
-# the UDF would evaluate the UDF a second time, before the fan-out exchange.
+# the cogroup join infers isnotnull(cell(x, y)), and pushing that below the
+# UDF would evaluate the UDF a second time, before the fan-out exchange.
 _to_3857 = _to_3857.asNondeterministic()
 
 
-def geotagged_points(pages: DataFrame) -> DataFrame:
-    """Geotagged pages → (url, lat, lon, x, y), the flagship's extract.
+def geotags(pages: DataFrame) -> DataFrame:
+    """Geotagged pages → (url, lat, lon), in the JVM: one `tx.GEO_META_JVM`
+    regex pass over `cast(html as string)`, first tag wins, pages without a
+    tag drop out.
 
-    The geotag is parsed in the JVM: one `tx.GEO_META_JVM` regex pass over
-    `cast(html as string)`, first tag wins, pages without a tag drop out. Only
-    then does `with_min_parallelism` fan the rows out, so its round-robin
-    exchange carries `url` and the tag, not the html. Python sees two doubles
-    per page, for the projection.
-
-    Same rows and bits as `tx.extract_geotag` + `lonlat_to_3857` with `lat`
-    not null, under the contract in `functions/text.py` (ASCII `\\s`/`\\d`,
-    correctly rounded parse, invalid UTF-8 decoded to U+FFFD, so such a page
-    keeps its tag; `tx.extract_text` stays strict)."""
-    from ..session import with_min_parallelism
-
+    Same rows and bits as `tx.extract_geotag` with `lat` not null, under the
+    contract in `functions/text.py` (ASCII `\\s`/`\\d`, correctly rounded
+    parse, invalid UTF-8 decoded to U+FFFD, so such a page keeps its tag;
+    `tx.extract_text` stays strict)."""
     tags = F.regexp_extract_all(F.col("html").cast("string"), F.lit(tx.GEO_META_JVM), F.lit(1))
     # explode of the first match: one regex pass, and tagless pages leave here
     # (a Filter on the tag would be pushed below and run the regex twice)
     tagged = pages.select("url", F.explode(F.slice(tags, 1, 1)).alias("tag"))
-    points = with_min_parallelism(tagged).select(
+    return tagged.select(
         "url",
         F.substring_index("tag", ";", 1).cast("double").alias("lat"),
         F.substring_index("tag", ";", -1).cast("double").alias("lon"),
     )
+
+
+def _projected(points: DataFrame) -> DataFrame:
+    """(url, lat, lon) → (url, lat, lon, x, y) with the `_to_3857` UDF."""
     return points.withColumn("xy", _to_3857("lat", "lon")).select(
         "url", "lat", "lon", "xy.x", "xy.y"
     )
+
+
+def geotagged_points(pages: DataFrame) -> DataFrame:
+    """Geotagged pages → (url, lat, lon, x, y): `geotags`, fanned out by
+    `with_min_parallelism` (its round-robin exchange carries `url` and the
+    two doubles, not the html), then projected to EPSG:3857 in Python, bit
+    for bit as `tx.extract_geotag` + `lonlat_to_3857`. For callers that
+    need x/y as columns; the flagship projects inside its join instead."""
+    from ..session import with_min_parallelism
+
+    return _projected(with_min_parallelism(geotags(pages)))
 
 
 # ---------------------------------------------------------------------------
@@ -108,13 +119,9 @@ def partition_lineage(df: DataFrame, stage: str) -> DataFrame:
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
-def _write_footer_lineage(path: str, stage: str, lineage_dir: str) -> None:
-    """Write (stage, partition_id, rows) for a written snapshot, read from its
-    own parquet footers in this process: rows per written part file, keyed by
-    the writing task's partition id. No Spark job. One file per stage, replaced
-    whole (temporary file, then `os.replace`), so a rebuilt stage leaves no
-    lineage of the snapshot it replaced."""
-    import pyarrow as pa
+def _footer_rows(path: str) -> dict[int, int]:
+    """Rows per writing task's partition id of a written snapshot, read from
+    its parquet footers in this process. No Spark job."""
     import pyarrow.parquet as pq
 
     rows: dict[int, int] = {}
@@ -123,6 +130,23 @@ def _write_footer_lineage(path: str, stage: str, lineage_dir: str) -> None:
         if part:
             pid = int(part.group(1))
             rows[pid] = rows.get(pid, 0) + pq.read_metadata(os.path.join(path, name)).num_rows
+    return rows
+
+
+def snapshot_rows(path: str) -> int:
+    """Row count of a written snapshot, from its parquet footers."""
+    return sum(_footer_rows(path).values())
+
+
+def _write_footer_lineage(path: str, stage: str, lineage_dir: str) -> None:
+    """Write (stage, partition_id, rows) for a written snapshot, from
+    `_footer_rows`. One file per stage, replaced whole (temporary file, then
+    `os.replace`), so a rebuilt stage leaves no lineage of the snapshot it
+    replaced."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = _footer_rows(path)
     table = pa.table({
         "stage": pa.array([stage] * len(rows), pa.string()),
         "partition_id": pa.array(list(rows), pa.int32()),
@@ -209,13 +233,21 @@ def _doc_counts(out: dict[str, DataFrame]) -> DataFrame:
     )
 
 
+def _join_rows(out: dict[str, DataFrame], blds: DataFrame, refine: str) -> DataFrame:
+    cells = _cells_at(out, 20)
+    if refine == "cogroup":
+        return spatial_join(_projected(out["points"]), blds, precomputed_cells=cells,
+                            refine="cogroup")
+    return geotag_join(out["points"], blds, cells)
+
+
 def flagship_stages(
     pages: DataFrame, buildings: DataFrame, refine: str = "broadcast"
 ) -> tuple[Stage, ...]:
     """The flagship's ordered stage table over `pages` and the `buildings`
     layer of `buildings`:
 
-    - points(url, x, y): the geotag extract;
+    - points(url, lat, lon): the geotag extract, JVM only;
     - cells_multi(osm_id, z, tile_x, tile_y): one geometry pass covers both
       cell levels, z16 for ownership and z20 for the join prefilter; it feeds
       two stages, so the in-memory runner caches it;
@@ -223,20 +255,22 @@ def flagship_stages(
     - join_rows(url, osm_id): the exact PIP join;
     - tile_doc_counts(tile_key, docs).
 
-    `refine` forwards to `spatial_join`. 'broadcast' is the measured
-    zero-shuffle plan for a bounded per-extent dimension, and spends no
-    decision job as 'auto' would; 'cogroup' is the planet-scale path, benched
-    as flagship_cogroup_secs."""
+    `refine` picks the join. 'broadcast' is `geotag_join`: one `mapInArrow`
+    pass projects, probes the broadcast z20 cell index and refines, with no
+    shuffle and no decision job as `spatial_join`'s 'auto' would spend;
+    'cogroup' projects with `_to_3857` and runs `spatial_join`'s
+    planet-scale path, benched as flagship_cogroup_secs."""
     blds = buildings.filter(F.col("layer") == "buildings")
     return (
-        Stage("points", "extract", lambda out: geotagged_points(pages).select("url", "x", "y")),
+        # required_cols: an older workdir's (url, x, y) snapshot rebuilds
+        Stage("points", "extract", lambda out: geotags(pages),
+              required_cols=("url", "lat", "lon")),
         # snapshot name 'cells_multi', not the single-level 'cells': an older
         # workdir rebuilds, and required_cols rebuilds a stale same-named one
         Stage("cells_multi", "cells", lambda out: building_cells_multi(blds, (m.Z_LEAF, 20)),
               required_cols=("z", "osm_id", "tile_x", "tile_y"), cache=True),
         Stage("owners", "owners", lambda out: owner_tiles(_cells_at(out, m.Z_LEAF))),
-        Stage("join_rows", "join", lambda out: spatial_join(
-            out["points"], blds, precomputed_cells=_cells_at(out, 20), refine=refine)),
+        Stage("join_rows", "join", lambda out: _join_rows(out, blds, refine)),
         Stage("tile_doc_counts", "counts", _doc_counts),
     )
 

@@ -64,6 +64,18 @@ def test_ingest_mvt_command(spark, tmp_path, capsys):
     assert sorted(r.osm_id for r in got.select("osm_id").collect()) == [900001, 900002]
 
 
+def test_flagship_command_counts_equal_snapshots(spark, tmp_path, capsys):
+    """The printed counts are read from the snapshots' parquet footers; each
+    equals a Spark count of its snapshot."""
+    wd = str(tmp_path / "wd")
+    rc = main(["--shuffle-partitions", "8", "flagship", "--sf", "0.001", "--workdir", wd])
+    assert rc == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    for key, snapshot in (("join_rows", "join_rows"), ("owned_buildings", "owners"),
+                          ("tiles_with_docs", "tile_doc_counts")):
+        assert got[key] == spark.read.parquet(os.path.join(wd, snapshot)).count() > 0, key
+
+
 def test_missing_subcommand_errors():
     with pytest.raises(SystemExit):
         main([])

@@ -78,11 +78,17 @@ class TestExtract:
         expected = tx.extract_geotag(pages_pdf["html"])["lat"].notna().sum()
         assert n_geo == expected
 
-    def test_projection_evaluated_once_in_composed_plan(self, pages, buildings):
-        """The join's inferred isnotnull(cell(x, y)) filter stays above the
-        projection UDF instead of evaluating it a second time below."""
-        plan = flagship(pages, buildings)["join_rows"]._jdf.queryExecution().executedPlan()
-        assert plan.toString().count("ArrowEvalPython") == 1
+    def test_join_is_one_arrow_pass(self, pages, buildings):
+        """join_rows reads the pages once into Python: no projection UDF and
+        no JVM join on the page side, one MapInArrow (projection, cell probe
+        and refine), and one round-robin fan-out."""
+        out = flagship(pages, buildings)
+        plan = out["join_rows"]._jdf.queryExecution().executedPlan().toString()
+        out["cells_multi"].unpersist()
+        assert plan.count("ArrowEvalPython") == 0
+        assert plan.count("BroadcastHashJoin") == 0
+        assert plan.count("MapInArrow") == 1
+        assert plan.count("RoundRobinPartitioning") == 1
 
 
 def _meta(content: str, sep: str = " ") -> str:
@@ -206,6 +212,126 @@ class TestSpatialJoin:
         assert len(a) > 0
 
 
+def _lonlat(x: float, y: float) -> str:
+    """A geotag "lat;lon" for the EPSG:3857 point (x, y), in plain decimals."""
+    lon, lat = m.merc_to_lonlat(np.array([x]), np.array([y]))
+    return f"{lat[0]:.15f};{lon[0]:.15f}"
+
+
+def _square(x0, y0, x1, y1) -> list[list[float]]:
+    return [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+
+
+class TestGeotagJoinEdges:
+    """The flagship's fused join (`geotag_join`) at the edges of its cell
+    probe, against the brute-force `oracle_join` and the cogroup refine,
+    which keeps the JVM cell prefilter. Buildings sit at the EPSG:3857 origin,
+    where x = 0 (lon 0) is exactly a z20 cell edge."""
+
+    # url -> geotag; None: a page without one
+    TAGS = {
+        # lat 0, lon 0 projects to x = 0, y = -7e-10: the z20 cell corner
+        "corner": "0;0",
+        "x_edge": _lonlat(0.0, -20.0),
+        "x_edge_in_hole": _lonlat(0.0, 25.0),
+        "b1_far_corner": _lonlat(-45.0, 45.0),
+        "b1_other_cell": _lonlat(45.0, -45.0),
+        "b2": _lonlat(105.0, 10.0),
+        "b3": _lonlat(118.0, 10.0),
+        "between_b2_b3": _lonlat(111.0, 10.0),
+        "outside": _lonlat(500.0, 500.0),
+        "north_pole": "90;0",
+        "south_pole": "-90;0",
+        "past_north_pole": "90.5;0",
+        "past_south_pole": "-91;0",
+        "no_tag": None,
+        # 20 points in the one z20 cell (2^19, 2^19): batches of 7 end in it
+        **{f"cell_{i:02d}": _lonlat(1.0 + 1.8 * i, -1.0 - 1.7 * i) for i in range(20)},
+    }
+
+    @pytest.fixture(scope="class")
+    def frames(self, spark):
+        html = {url: (f"<html>{_meta(tag)}</html>" if tag else "<html></html>").encode()
+                for url, tag in self.TAGS.items()}
+        pages_pdf = pd.DataFrame({"url": list(html), "html": list(html.values())})
+        rows = [
+            # several z20 cells (4 x 4), with a hole
+            (1, [_square(-50.0, -50.0, 50.0, 50.0), _square(-10.0, 20.0, 10.0, 30.0)],
+             ["outer", "inner"]),
+            # two buildings that share the z20 cell (2^19 + 2, 2^19 - 1)
+            (2, [_square(100.0, 5.0, 110.0, 15.0)], ["outer"]),
+            (3, [_square(112.0, 5.0, 125.0, 15.0)], ["outer"]),
+        ]
+        buildings_pdf = pd.DataFrame({
+            "osm_id": [r[0] for r in rows], "layer": "buildings",
+            "geometry": [r[1] for r in rows], "ring_types": [r[2] for r in rows],
+        })
+        pages = spark.createDataFrame(pages_pdf, "url string, html binary")
+        buildings = spark.createDataFrame(
+            buildings_pdf,
+            "osm_id long, layer string, geometry array<array<array<double>>>, "
+            "ring_types array<string>",
+        )
+        return pages, buildings, oracle_join(pages_pdf, buildings_pdf)
+
+    @staticmethod
+    def _join(pages, buildings, refine="broadcast") -> set[tuple[str, int]]:
+        out = flagship(pages, buildings, refine=refine)
+        rows = out["join_rows"].collect()
+        out["cells_multi"].unpersist()
+        return {(r["url"], r["osm_id"]) for r in rows}
+
+    def test_equals_oracle_and_cogroup(self, frames):
+        pages, buildings, expected = frames
+        assert self._join(pages, buildings) == expected
+        assert self._join(pages, buildings, "cogroup") == expected
+        assert {("corner", 1), ("x_edge", 1), ("b1_far_corner", 1), ("b1_other_cell", 1),
+                ("b2", 2), ("b3", 3)} <= expected
+        assert {url for url, _ in expected} == {
+            "corner", "x_edge", "b1_far_corner", "b1_other_cell", "b2", "b3",
+            *(f"cell_{i:02d}" for i in range(20))}
+
+    def test_batches_end_mid_cell(self, spark, frames):
+        pages, buildings, expected = frames
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, "7")
+        try:
+            got = self._join(pages.repartition(1), buildings)
+        finally:
+            spark.conf.set(conf, prev)
+        assert got == expected
+
+    def test_poles_get_no_cell(self):
+        """lat 90 projects far off the grid, lat -90 to y = -inf, |lat| > 90
+        to NaN: none of them gets a cell id, so none gets a candidate."""
+        from osm_data_3d_tiles_spark.operators.spatial_join import _grid_cells
+
+        lat = np.array([90.0, -90.0, 90.5, -91.0])
+        with np.errstate(divide="ignore", invalid="ignore"):
+            x, y = m.lonlat_to_3857(np.zeros(4), lat)
+        tx, ty = (np.floor(v) for v in ((x + m.HALF_SIZE) / m.tile_span(20),
+                                        (m.HALF_SIZE - y) / m.tile_span(20)))
+        positions, cells = _grid_cells(tx, ty, 20)
+        assert len(positions) == len(cells) == 0
+
+    def test_empty_batch(self, frames):
+        """An empty Arrow batch yields an empty batch of the output columns."""
+        import pyarrow as pa
+
+        from osm_data_3d_tiles_spark.operators.spatial_join import _probe_batches, _probe_index
+
+        pages, buildings, _ = frames
+        index = _probe_index(building_cells(buildings, 20), buildings, 20)
+        empty = pa.RecordBatch.from_pydict(
+            {"url": pa.array([], pa.string()), "lat": pa.array([], pa.float64()),
+             "lon": pa.array([], pa.float64())})
+        bc = type("Broadcast", (), {"value": index})
+        out = list(_probe_batches([empty], bc, ["url"], ("lat", "lon"), lonlat=True))
+        assert [b.num_rows for b in out] == [0]
+        assert out[0].schema.names == ["url", "osm_id"]
+
+
 def _table(df, cols) -> list[tuple]:
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
@@ -246,8 +372,9 @@ class TestOneFlagshipDefinition:
         counts = runs["in_memory"]["tile_doc_counts"]
         counts.collect()
         final, whole = _plans(counts)
-        # the z20 prefilter join and the counts join
-        assert final.count("BroadcastHashJoin") == 2
+        # the counts join; the z20 prefilter is a cell probe inside the join's
+        # MapInArrow, not a join
+        assert final.count("BroadcastHashJoin") == 1
         assert "SortMergeJoin" not in whole
         # the checkpointed counts stage, built as checkpoint() builds it: over
         # the join_rows and owners snapshots

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from osm_data_3d_tiles_spark.operators.spatial_join import salted_count
 from osm_data_3d_tiles_spark.plans.pipeline import (
     checkpoint,
+    flagship,
+    geotags,
     partition_lineage,
     run_with_checkpoints,
 )
@@ -133,6 +135,22 @@ class TestCheckpointResume:
         lineage = spark.read.parquet(os.path.join(wd, "metrics", "lineage"))
         stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
         assert {"extract", "cells", "owners", "join"} <= stages
+
+    def test_old_points_snapshot_rebuilds(self, spark, tmp_path):
+        """A workdir written before the join took (url, lat, lon) holds a
+        points(url, x, y) snapshot: it is rebuilt, not resumed."""
+        pages = fx.load_fixture(spark, "pages", 0.001)
+        buildings = fx.load_fixture(spark, "buildings", 0.001)
+        wd = str(tmp_path / "wd")
+        spark.createDataFrame([("stale", 1.0, 2.0)], "url string, x double, y double") \
+            .write.parquet(os.path.join(wd, "points"))
+        out = run_with_checkpoints(spark, pages, buildings, wd)
+        assert out["points"].columns == ["url", "lat", "lon"]
+        key = lambda df: sorted(tuple(r) for r in df.collect())
+        assert key(out["points"]) == key(geotags(pages))
+        in_memory = flagship(pages, buildings)
+        assert key(out["join_rows"]) == key(in_memory["join_rows"])
+        in_memory["cells_multi"].unpersist()
 
     def test_footer_lineage_sums_to_snapshot_rows(self, spark, tmp_path):
         """Lineage comes from the snapshots' parquet footers: per stage, its
