@@ -60,10 +60,13 @@ def merc_to_lonlat(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray
 
 
 def tile_xy(x: np.ndarray, y: np.ndarray, z: int) -> tuple[np.ndarray, np.ndarray]:
-    """Point → XYZ tile coordinate at zoom z (top-left origin, y down)."""
+    """Point → XYZ tile coordinate at zoom z (top-left origin, y down), as
+    whole doubles: the IEEE operations of `tile_x_col`/`tile_y_col`, so the
+    tile the JVM computes. Not cast to int, so a NaN or infinite coordinate
+    stays one (an int cast of those is platform-defined)."""
     span = tile_span(z)
-    tx = np.floor((np.asarray(x, dtype=np.float64) + HALF_SIZE) / span).astype(np.int64)
-    ty = np.floor((HALF_SIZE - np.asarray(y, dtype=np.float64)) / span).astype(np.int64)
+    tx = np.floor((np.asarray(x, dtype=np.float64) + HALF_SIZE) / span)
+    ty = np.floor((HALF_SIZE - np.asarray(y, dtype=np.float64)) / span)
     return tx, ty
 
 

@@ -11,12 +11,13 @@ buildings (dimension) without ever shuffling the fact table —
    into a CSR edge table (`geometry.ring_edge_table`: sorted osm_ids, edge
    offsets, flat edges), and broadcasts the pair once. The points meet it in
    one Arrow `mapInArrow` stage with no JVM join: each batch is one numpy pass
-   (`_probe`) — the cell of each point by the IEEE floor formula of
-   `mercator.tile_x_col`/`tile_y_col`, two `searchsorted` calls for its run of
-   candidate buildings, then `geometry.points_in_edge_table`, whose keep mask
-   is bit-identical to `points_in_polygon` (src/math/utils.ts:29-46
-   semantics). Only the matches leave Python. The flagship's `geotag_join`
-   runs the same pass over (lat, lon), with the EPSG:3857 projection folded in;
+   (`_probe`) — the cell of each point by `mercator.tile_xy`, the IEEE floor
+   formula of `mercator.tile_x_col`/`tile_y_col`, two `searchsorted` calls
+   for its run of candidate buildings, then `geometry.points_in_edge_table`,
+   whose keep mask is bit-identical to `points_in_polygon`
+   (src/math/utils.ts:29-46 semantics). Only the matches leave Python. The
+   flagship's `geotag_join` runs the same pass over (lat, lon), with the
+   EPSG:3857 projection folded in;
 3. cogroup refine (planet scale): the points get their cell as native Column
    math, equi-join the broadcast (cell, osm_id) table in the JVM, and the
    candidates cogroup with the geometry on osm_id. The refine builds the same
@@ -40,6 +41,9 @@ from pyspark.sql import types as T
 from ..functions import geometry as g
 from ..functions import mercator as m
 from .cells import building_cells, with_cell_id
+
+# The prefilter's cell level (~38 m cells; see `spatial_join`).
+Z_JOIN = 20
 
 
 def pages_with_cell(pages_pts: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
@@ -93,16 +97,11 @@ def _probe_index(cells: DataFrame, buildings: DataFrame, z: int) -> _ProbeIndex:
 def _probe(x: np.ndarray, y: np.ndarray, index: _ProbeIndex) -> tuple[np.ndarray, np.ndarray]:
     """(row, osm_id) of every point (x[row], y[row]) inside building osm_id.
 
-    The point's cell is `floor((x + HALF) / span)`, `floor((HALF - y) / span)`:
-    the same IEEE operations as `mercator.tile_x_col`/`tile_y_col`, so it is
-    the cell the JVM computes. Its candidates are the index run of that cell,
-    found with two `searchsorted` calls; `points_in_edge_table` keeps the
-    candidates the point is inside of. Rows come out in point order, and per
-    point in osm_id order."""
-    span = m.tile_span(index.z)
-    tx = np.floor((x + m.HALF_SIZE) / span)
-    ty = np.floor((m.HALF_SIZE - y) / span)
-    row, cell = _grid_cells(tx, ty, index.z)
+    The point's cell is `mercator.tile_xy`, the cell the JVM computes. Its
+    candidates are the index run of that cell, found with two `searchsorted`
+    calls; `points_in_edge_table` keeps the candidates the point is inside
+    of. Rows come out in point order, and per point in osm_id order."""
+    row, cell = _grid_cells(*m.tile_xy(x, y, index.z), index.z)
     lo = np.searchsorted(index.cells, cell, "left")
     n = np.searchsorted(index.cells, cell, "right") - lo
     row = np.repeat(row, n)
@@ -151,14 +150,14 @@ def _broadcast_probe(
     )
 
 
-def geotag_join(points: DataFrame, buildings: DataFrame, cells: DataFrame, z: int = 20) -> DataFrame:
+def geotag_join(points: DataFrame, buildings: DataFrame, cells: DataFrame) -> DataFrame:
     """points(url, lat, lon) ⋈ buildings(osm_id, geometry) over their
-    covering z-level `cells(osm_id, tile_x, tile_y)` → (url, osm_id): the
+    covering `Z_JOIN` cells(osm_id, tile_x, tile_y) → (url, osm_id): the
     flagship's join. The broadcast probe of `spatial_join`, with the numpy
     EPSG:3857 projection in the same pass, so the points cross into Python
     once and only the matches come back. The projection is `lonlat_to_3857`,
     bit-identical to the Python reference."""
-    return _broadcast_probe(points, buildings, cells, z, ("url",), lonlat=True)
+    return _broadcast_probe(points, buildings, cells, Z_JOIN, ("url",), lonlat=True)
 
 
 # Above this many buildings the geometry dimension no longer belongs in a
@@ -170,7 +169,7 @@ BROADCAST_GEOM_MAX_BUILDINGS = 200_000
 def spatial_join(
     pages_pts: DataFrame,
     buildings: DataFrame,
-    z: int = 20,
+    z: int = Z_JOIN,
     page_cols: tuple[str, ...] = ("url",),
     precomputed_cells: DataFrame | None = None,
     refine: str = "auto",

@@ -43,7 +43,7 @@ from ..functions import mercator as m
 from ..functions import text as tx
 from ..operators.cells import building_cells_multi
 from ..operators.ownership import owner_tiles
-from ..operators.spatial_join import geotag_join, spatial_join
+from ..operators.spatial_join import Z_JOIN, geotag_join, spatial_join
 
 # a StructType, not a DDL string: parsing DDL needs a session at import
 @F.pandas_udf(T.StructType([T.StructField(c, T.DoubleType()) for c in ("x", "y")]))
@@ -57,7 +57,8 @@ def _to_3857(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
 
 # Marked nondeterministic only so the optimizer keeps filters on x/y above it:
 # the cogroup join infers isnotnull(cell(x, y)), and pushing that below the
-# UDF would evaluate the UDF a second time, before the fan-out exchange.
+# UDF would evaluate the UDF a second time, in a filter below the fan-out
+# exchange that `geotagged_points` and the cogroup flagship put under it.
 _to_3857 = _to_3857.asNondeterministic()
 
 
@@ -234,10 +235,13 @@ def _doc_counts(out: dict[str, DataFrame]) -> DataFrame:
 
 
 def _join_rows(out: dict[str, DataFrame], blds: DataFrame, refine: str) -> DataFrame:
-    cells = _cells_at(out, 20)
+    from ..session import with_min_parallelism
+
+    cells = _cells_at(out, Z_JOIN)
     if refine == "cogroup":
-        return spatial_join(_projected(out["points"]), blds, precomputed_cells=cells,
-                            refine="cogroup")
+        # fanned out before the projection UDF, as in `geotagged_points`
+        points = _projected(with_min_parallelism(out["points"]))
+        return spatial_join(points, blds, precomputed_cells=cells, refine="cogroup")
     return geotag_join(out["points"], blds, cells)
 
 
@@ -267,7 +271,7 @@ def flagship_stages(
               required_cols=("url", "lat", "lon")),
         # snapshot name 'cells_multi', not the single-level 'cells': an older
         # workdir rebuilds, and required_cols rebuilds a stale same-named one
-        Stage("cells_multi", "cells", lambda out: building_cells_multi(blds, (m.Z_LEAF, 20)),
+        Stage("cells_multi", "cells", lambda out: building_cells_multi(blds, (m.Z_LEAF, Z_JOIN)),
               required_cols=("z", "osm_id", "tile_x", "tile_y"), cache=True),
         Stage("owners", "owners", lambda out: owner_tiles(_cells_at(out, m.Z_LEAF))),
         Stage("join_rows", "join", lambda out: _join_rows(out, blds, refine)),

@@ -310,9 +310,7 @@ class TestGeotagJoinEdges:
         lat = np.array([90.0, -90.0, 90.5, -91.0])
         with np.errstate(divide="ignore", invalid="ignore"):
             x, y = m.lonlat_to_3857(np.zeros(4), lat)
-        tx, ty = (np.floor(v) for v in ((x + m.HALF_SIZE) / m.tile_span(20),
-                                        (m.HALF_SIZE - y) / m.tile_span(20)))
-        positions, cells = _grid_cells(tx, ty, 20)
+        positions, cells = _grid_cells(*m.tile_xy(x, y, 20), 20)
         assert len(positions) == len(cells) == 0
 
     def test_empty_batch(self, frames):
