@@ -122,24 +122,6 @@ def hex_distance(q1, r1, q2, r2):
     return (np.abs(dq) + np.abs(dr) + np.abs(dq + dr)) // 2
 
 
-def hex_q_col(x: Column, y: Column, size: float) -> Column:
-    @pandas_udf(LongType())
-    def _q(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        q, _ = hex_assign(xs.to_numpy(), ys.to_numpy(), size)
-        return pd.Series(q)
-
-    return _q(x, y)
-
-
-def hex_r_col(x: Column, y: Column, size: float) -> Column:
-    @pandas_udf(LongType())
-    def _r(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        _, r = hex_assign(xs.to_numpy(), ys.to_numpy(), size)
-        return pd.Series(r)
-
-    return _r(x, y)
-
-
 def hex_id_col(x: Column, y: Column, size: float) -> Column:
     @pandas_udf(LongType())
     def _id(xs: pd.Series, ys: pd.Series) -> pd.Series:

@@ -126,20 +126,6 @@ def tile_key_col(tx: Column, ty: Column, z: int = Z_LEAF) -> Column:
     return F.concat_ws("_", F.lit(str(z)), tx.cast("string"), ty.cast("string"))
 
 
-def tile_order_struct(tx: Column, ty: Column) -> Column:
-    """Deterministic ownership ordering key: seed order is z12 subtile enumeration
-    (x12 outer, y12 inner), then z16 enumeration inside each z12 tile — i.e.
-    lexicographic (x>>4, y>>4, x, y). Reference: seed-b3dm.ts:25-35 walking
-    generate-tileset.ts:39 (z12, forEachTileCoord x-outer) then tileset.ts:17 (z16).
-    """
-    return F.struct(
-        F.floor(tx / F.lit(16)).alias("x12"),
-        F.floor(ty / F.lit(16)).alias("y12"),
-        tx.alias("x16"),
-        ty.alias("y16"),
-    )
-
-
 def lon_col_from_merc(x: Column) -> Column:
     return F.lit(180.0) * x / F.lit(HALF_SIZE)
 

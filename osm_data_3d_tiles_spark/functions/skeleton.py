@@ -110,16 +110,6 @@ def _bisector_for(point, e_prev_dir, e_next_dir):
     return b, reflex
 
 
-def _vertex_speed(v: _Vertex, edges) -> float:
-    """|bisector| per unit offset: 1/sin(theta/2) factor — computed as
-    1 / distance the bisector gains from the supporting edge per unit length."""
-    a, b = edges[v.edge_next]
-    d = _norm((b[0] - a[0], b[1] - a[1]))
-    n = (-d[1], d[0])
-    s = _dot(v.bisector, n)
-    return s  # offset gained per unit along bisector
-
-
 def _ring_self_intersects(pts: np.ndarray) -> bool:
     """True if any two non-adjacent edges of the closed ring properly cross.
     O(n²) segment test — building footprints are small; run on failure paths."""

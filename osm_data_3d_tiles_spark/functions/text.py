@@ -74,10 +74,6 @@ def extract_geotag(html: pd.Series) -> pd.DataFrame:
     )
 
 
-def tokenize(text: pd.Series) -> pd.Series:
-    return text.map(lambda s: TOKEN_RE.findall(s))
-
-
 def token_count(text: pd.Series) -> pd.Series:
     return text.map(lambda s: len(TOKEN_RE.findall(s)))
 
@@ -225,10 +221,6 @@ def simhash(text: str, k: int = 3) -> int:
         if votes[i] > 0:
             out |= np.uint64(1) << np.uint64(i)
     return int(np.int64(out.view(np.int64)))
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
 def ngram_jaccard(a: str, b: str, k: int = 3) -> float:

@@ -31,8 +31,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ._binary import u24le as _u24
-
 WEBP_RIFF = b"RIFF"
 WEBP_FOURCC = b"WEBP"
 
@@ -188,8 +186,7 @@ class _Huff:
 
 def decode_webp(data: bytes) -> np.ndarray:
     """WebP bytes → (h, w, 4) RGBA uint8. Lossless (VP8L) only; lossy VP8
-    raises ValueError. Animated files yield the first composited frame (the
-    same still-image contract as functions/gif.py::decode_gif)."""
+    raises ValueError. Animated files yield the first composited frame."""
     try:
         data = bytes(data)
         if webp_is_animated(data):
@@ -504,10 +501,6 @@ def _inv_color_indexing(
     return out
 
 
-def _cti(v: int) -> int:
-    return v - 256 if v >= 128 else v
-
-
 def _cti_arr(v: np.ndarray) -> np.ndarray:
     v = v.astype(np.int32)
     return np.where(v >= 128, v - 256, v)
@@ -519,7 +512,7 @@ def _inv_color_transform(
     # fully vectorized: expand the per-tile transform elements to per-pixel
     # coefficient planes, then apply the spec formula over whole arrays —
     # the decode hot path must never loop per pixel (a 1-MP crawl image is
-    # ~1e6 iterations otherwise; same standard as the PNG/JPEG/BMP paths)
+    # ~1e6 iterations otherwise; same standard as the PNG/JPEG paths)
     p = pix.astype(np.uint32).reshape(h, w)
     ys = np.arange(h, dtype=np.int64) >> size_bits
     xs = np.arange(w, dtype=np.int64) >> size_bits
@@ -705,6 +698,10 @@ def _inv_predictor(
 # ---------------------------------------------------------------------------
 # animation (VP8X + ANIM + ANMF, frames carried as VP8L)
 # ---------------------------------------------------------------------------
+
+
+def _u24(b: bytes, o: int) -> int:
+    return b[o] | (b[o + 1] << 8) | (b[o + 2] << 16)
 
 
 def _iter_anmf(data: bytes):

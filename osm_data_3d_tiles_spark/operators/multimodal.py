@@ -7,15 +7,11 @@ Decode status (no imaging libraries in this environment):
   texture atlas uses.
 - Baseline JFIF JPEG payloads decode for real via functions/jpeg.py
   (Huffman + dequant + IDCT + 4:2:0 upsampling, restart markers).
-- GIF (87a/89a first frame, LZW), BMP (uncompressed 8/24/32 bpp), ICO (PNG
-  or DIB entries) and baseline TIFF (strips; none/LZW/PackBits) payloads
-  decode for real via functions/gif.py, functions/bmp.py and
-  functions/tiff.py.
 - Lossless WebP (VP8L) payloads decode for real via functions/webp.py;
   an animated file yields its first composited frame.
-- Every other format (lossy WebP, AVIF, audio, video, ...) is unsupported:
-  `decode_image_real` raises NotImplementedError and `decode_pixels` falls
-  back to the deterministic `decode_pixels_stub`.
+- Every other format (lossy WebP, GIF, BMP, TIFF, AVIF, audio, video, ...)
+  is unsupported: `decode_image_real` raises NotImplementedError and
+  `decode_pixels` falls back to the deterministic `decode_pixels_stub`.
 - `extract_features` hashes every payload through `decode_image_stub`.
   The stubs keep the Spark-side plumbing — schema, partition sizing, UDF
   signatures, Arrow batch shape — real and tested; wiring a codec library
@@ -66,10 +62,6 @@ FEATURES_SCHEMA = T.StructType(
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
-GIF_MAGIC = b"GIF8"  # GIF87a / GIF89a
-BMP_MAGIC = b"BM"
-ICO_MAGIC = b"\x00\x00\x01\x00"
-TIFF_MAGICS = (b"II*\x00", b"MM\x00*")
 
 
 def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
@@ -77,17 +69,12 @@ def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
 
     - PNG (RGBA8, filters 0-4): functions/atlas.py::decode_png, alpha dropped.
     - Baseline sequential JPEG: functions/jpeg.py::decode_jpeg.
-    - GIF (87a/89a, first frame): functions/gif.py::decode_gif.
-    - BMP (uncompressed BI_RGB, 8/24/32 bpp) and ICO (PNG or DIB entries):
-      functions/bmp.py::decode_bmp / decode_ico.
     - Lossless WebP (VP8L; an animated file yields its first composited
       frame): functions/webp.py::decode_webp, alpha dropped.
-    - Baseline TIFF (strips, none/LZW/PackBits, both byte orders):
-      functions/tiff.py::decode_tiff, alpha dropped.
 
     A recognised magic with a stream the reader refuses (progressive JPEG,
-    lossy VP8, RLE BMP, tiled TIFF, corrupt data) raises ValueError. Any
-    other format raises NotImplementedError — wire Pillow/libvips here on a
+    lossy VP8, corrupt data) raises ValueError. Any other format (GIF, BMP,
+    TIFF, ...) raises NotImplementedError — wire Pillow/libvips here on a
     real cluster."""
     data = bytes(payload)
     if data[:8] == PNG_MAGIC:
@@ -98,30 +85,14 @@ def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
         from ..functions.jpeg import decode_jpeg
 
         return decode_jpeg(data)
-    if data[:4] == GIF_MAGIC:
-        from ..functions.gif import decode_gif
-
-        return decode_gif(data)
-    if data[:2] == BMP_MAGIC:
-        from ..functions.bmp import decode_bmp
-
-        return decode_bmp(data)
-    if data[:4] == ICO_MAGIC:
-        from ..functions.bmp import decode_ico
-
-        return decode_ico(data)
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
         from ..functions.webp import decode_webp
 
         return decode_webp(data)[..., :3]
-    if data[:4] in TIFF_MAGICS:
-        from ..functions.tiff import decode_tiff
-
-        return decode_tiff(data)[..., :3]
     raise NotImplementedError(
-        "only PNG, baseline JPEG, GIF, BMP, ICO, lossless WebP and baseline "
-        "TIFF decode in-sandbox (pure-numpy readers); other formats need an "
-        "imaging library — use decode_image_stub for plumbing tests"
+        "only PNG, baseline JPEG and lossless WebP decode in-sandbox "
+        "(pure-numpy readers); other formats need an imaging library — use "
+        "decode_image_stub for plumbing tests"
     )
 
 
@@ -266,33 +237,23 @@ def decode_pixels_stub(payload: bytes, width: int, height: int) -> np.ndarray:
 
 
 def decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Codec dispatch: PNG, baseline-JPEG, GIF, BMP, ICO, lossless-WebP and
-    baseline-TIFF payloads decode for real through `decode_image_real` (the
-    bitstream's dims win over the declared metadata dims); every other
-    format falls back to the deterministic stub.
+    """Codec dispatch: PNG, baseline-JPEG and lossless-WebP payloads decode
+    for real through `decode_image_real` (the bitstream's dims win over the
+    declared metadata dims); every other format falls back to the
+    deterministic stub.
 
     A payload with a supported magic that the reader refuses (interlaced or
-    16-bit PNG, progressive JPEG, lossy VP8, RLE BMP, tiled TIFF, corrupt
-    stream) also degrades to the stub — one odd payload must never fail the whole Arrow stage."""
-    head = bytes(payload[:12])
-    if (
-        head[:8] == PNG_MAGIC
-        or head[:3] == JPEG_MAGIC
-        or head[:4] == GIF_MAGIC
-        or head[:2] == BMP_MAGIC
-        or head[:4] == ICO_MAGIC
-        or (head[:4] == b"RIFF" and head[8:12] == b"WEBP")
-        or head[:4] in TIFF_MAGICS
-    ):
-        try:
-            return decode_image_real(payload)
-        except Exception:
-            # deliberately broad: corrupt crawl payloads raise whatever the
-            # bitstream math trips over (ValueError, zlib.error, KeyError,
-            # struct.error, ZeroDivisionError, ...) and NONE of them may fail
-            # the whole Arrow stage — the stub fallback IS the error handling
-            return decode_pixels_stub(payload, width, height)
-    return decode_pixels_stub(payload, width, height)
+    16-bit PNG, progressive JPEG, lossy VP8, corrupt stream) also degrades
+    to the stub — one odd payload must never fail the whole Arrow stage."""
+    try:
+        return decode_image_real(payload)
+    except Exception:
+        # deliberately broad: an unknown format raises NotImplementedError,
+        # and corrupt crawl payloads raise whatever the bitstream math trips
+        # over (ValueError, zlib.error, KeyError, struct.error,
+        # ZeroDivisionError, ...); NONE of them may fail the whole Arrow
+        # stage — the stub fallback IS the error handling
+        return decode_pixels_stub(payload, width, height)
 
 
 def resize_nearest(img: np.ndarray, target_w: int, target_h: int) -> np.ndarray:

@@ -37,17 +37,3 @@ def owner_tiles(building_cells_df: DataFrame) -> DataFrame:
         .drop("_rn")
         .withColumn("tile_key", m.tile_key_col(F.col("tile_x"), F.col("tile_y")))
     )
-
-
-def foreign_claims(building_cells_df: DataFrame) -> DataFrame:
-    """Candidate (osm_id, tile) pairs NOT owned — what the reference's
-    claimBuildingsInTile returns as `foreign` ids for a tile (the rows the tile must
-    drop). Useful for the anti-join formulation."""
-    owners = owner_tiles(building_cells_df).select(
-        "osm_id", F.col("tile_x").alias("_ox"), F.col("tile_y").alias("_oy")
-    )
-    return (
-        building_cells_df.join(owners, "osm_id")
-        .filter((F.col("tile_x") != F.col("_ox")) | (F.col("tile_y") != F.col("_oy")))
-        .drop("_ox", "_oy")
-    )

@@ -1,0 +1,288 @@
+"""Reachability audit: which top-level package definitions no real entry point
+reaches.
+
+Roots, the program's real entry points:
+- `__spark_entry__.py`: `entry`, `queries` and `oracle_sql`, the driver
+  contract;
+- `osm_data_3d_tiles_spark/cli.py` run as a program: `main` and the commands
+  it dispatches;
+- `bench.py`, `perfbench/*.py` and `scripts/*.py`.
+
+From the roots the walk follows imports transitively, function-local (lazy)
+ones included, and the names that reached code refers to. A top-level `def`
+or `class` is reached when reached code names it: directly, through an import
+alias, or as an attribute of an imported module. A reached class counts as a
+whole, its methods included. Importing a module runs its top-level
+statements, so those are followed too, and so is a module named in a string
+(`session.py` names `_worker_daemon` for `spark.python.daemon.module`).
+
+The walk reads the source with `ast` and calls nothing. It is name-based and
+errs towards "reached": a local variable that shares a top-level name keeps
+that definition alive.
+
+Every top-level package `def`/`class` the roots do not reach is listed, with
+whether `tests/` reaches it. `scripts/reach_allowlist.txt` classifies each,
+one per line as `<module>.<name> | <class> | <reason>`:
+- `reference`: a test compares reached code against it;
+- `dead: queued`: a later deletion removes it.
+
+    python scripts/reach.py
+
+prints every listed definition and exits 1 when one is not on the allowlist
+or an allowlist entry is no longer listed (`tests/test_reach.py` asserts the
+same).
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+import sys
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "osm_data_3d_tiles_spark"
+ALLOWLIST = "scripts/reach_allowlist.txt"
+CLASSES = ("reference", "dead: queued")
+_DOTTED = re.compile(r"\.?[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
+
+
+def module_name(path: Path, root: Path = ROOT) -> tuple[str, bool]:
+    """(dotted module name, is a package) for a source file under `root`."""
+    parts = list(path.relative_to(root).with_suffix("").parts)
+    is_package = parts[-1] == "__init__"
+    if is_package:
+        parts.pop()
+    return ".".join(parts), is_package
+
+
+def import_target(module: str, is_package: bool, node: ast.ImportFrom) -> str:
+    """The absolute module that `from … import …` in `module` names."""
+    if not node.level:
+        return node.module or ""
+    base = module.split(".") if is_package else module.split(".")[:-1]
+    base = base[: len(base) - node.level + 1]
+    return ".".join(base + ([node.module] if node.module else []))
+
+
+class Module:
+    def __init__(self, name: str, is_package: bool, tree: ast.Module):
+        self.name, self.is_package, self.tree = name, is_package, tree
+        self.defs: dict[str, ast.AST] = {
+            s.name: s
+            for s in tree.body
+            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        # alias -> (module, name); name None when the alias is the module itself
+        self.aliases: dict[str, tuple[str, str | None]] = {}
+
+
+def _import_time(stmts):
+    """The nodes of a module body that run on import: everything but the
+    bodies of functions (their decorators and defaults do run)."""
+    for stmt in stmts:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from stmt.decorator_list
+            yield from stmt.args.defaults
+            yield from (d for d in stmt.args.kw_defaults if d is not None)
+        elif isinstance(stmt, ast.ClassDef):
+            yield from stmt.decorator_list
+            yield from stmt.bases
+            yield from stmt.keywords
+            yield from _import_time(stmt.body)
+        else:
+            yield stmt
+
+
+class Audit:
+    def __init__(self, root: Path = ROOT):
+        self.modules: dict[str, Module] = {}
+        files = (
+            sorted((root / PKG).rglob("*.py"))
+            + sorted((root / "tests").rglob("*.py"))
+            + sorted((root / "perfbench").glob("*.py"))
+            + sorted((root / "scripts").glob("*.py"))
+            + [root / "bench.py", root / "__spark_entry__.py"]
+        )
+        for path in files:
+            name, is_package = module_name(path, root)
+            self.modules[name] = Module(name, is_package, ast.parse(path.read_text(), str(path)))
+        for mod in self.modules.values():
+            for node in _import_time(mod.tree.body):
+                mod.aliases.update(self._bindings(mod, node))
+
+    def _bindings(self, mod: Module, node: ast.AST) -> dict:
+        """Names that the imports under `node` bind, and to what."""
+        out = {}
+        for imp in ast.walk(node):
+            if isinstance(imp, ast.Import):
+                for a in imp.names:
+                    if a.asname:
+                        out[a.asname] = (a.name, None)
+                    else:
+                        out[a.name.split(".")[0]] = (a.name.split(".")[0], None)
+            elif isinstance(imp, ast.ImportFrom):
+                target = import_target(mod.name, mod.is_package, imp)
+                for a in imp.names:
+                    if f"{target}.{a.name}" in self.modules:
+                        out[a.asname or a.name] = (f"{target}.{a.name}", None)
+                    else:
+                        out[a.asname or a.name] = (target, a.name)
+        return out
+
+    def _resolve(self, module: str, name: str, seen=None) -> tuple[str, str | None] | None:
+        """What `name` means in `module`: (module, def name), (module, None)
+        for a module, or None for anything outside the repo."""
+        mod = self.modules.get(module)
+        if mod is None:
+            return None
+        if name in mod.defs:
+            return module, name
+        if f"{module}.{name}" in self.modules:
+            return f"{module}.{name}", None
+        seen = seen or set()
+        if name in mod.aliases and (module, name) not in seen:
+            seen.add((module, name))
+            return self._target(mod.aliases[name], seen)
+        return None
+
+    def _target(self, alias: tuple[str, str | None], seen=None):
+        target, attr = alias
+        if attr is None:
+            return (target, None) if target in self.modules else None
+        return self._resolve(target, attr, seen)
+
+    def reach(self, roots) -> set[tuple[str, str]]:
+        """Top-level definitions reached from `roots`, a list of module names
+        (whole module: body and every definition) or (module, def) pairs."""
+        reached: set[tuple[str, str]] = set()
+        imported: set[str] = set()
+        todo: list[tuple[str, str | None]] = []
+        for r in roots:
+            if isinstance(r, str):
+                todo.append((r, None))
+                todo += [(r, d) for d in self.modules[r].defs]
+            else:
+                todo.append(r)
+        while todo:
+            module, name = todo.pop()
+            if name is None:
+                if module in imported:
+                    continue
+                # importing a.b.c runs a/__init__ and a/b/__init__ first
+                parts = module.split(".")
+                todo += [(".".join(parts[:i]), None) for i in range(1, len(parts))
+                         if ".".join(parts[:i]) in self.modules]
+                imported.add(module)
+                mod = self.modules[module]
+                for node in _import_time(mod.tree.body):
+                    todo += self._refs(mod, node, {})
+            elif (module, name) not in reached:
+                reached.add((module, name))
+                mod = self.modules[module]
+                node = mod.defs[name]
+                todo.append((module, None))
+                todo += self._refs(mod, node, self._bindings(mod, node))
+        return reached
+
+    def _refs(self, mod: Module, node: ast.AST, local: dict):
+        """(module, def-or-None) targets that the code under `node` refers to;
+        `local` holds the aliases its own function-local imports bind."""
+
+        def lookup(name):
+            return self._target(local[name]) if name in local else self._resolve(mod.name, name)
+
+        out = []
+        for n in ast.walk(node):
+            if isinstance(n, ast.Import):
+                out += [(a.name, None) for a in n.names if a.name in self.modules]
+            elif isinstance(n, ast.ImportFrom):
+                target = import_target(mod.name, mod.is_package, n)
+                if target in self.modules:
+                    out.append((target, None))
+                    for a in n.names:
+                        hit = self._resolve(target, a.name)
+                        if hit:
+                            out.append(hit)
+            elif isinstance(n, ast.Name):
+                hit = lookup(n.id)
+                if hit:
+                    out.append(hit)
+            elif isinstance(n, ast.Attribute):
+                chain = []
+                base = n
+                while isinstance(base, ast.Attribute):
+                    chain.append(base.attr)
+                    base = base.value
+                if not isinstance(base, ast.Name):
+                    continue
+                hit = lookup(base.id)
+                for attr in reversed(chain):
+                    if hit is None or hit[1] is not None:
+                        break
+                    hit = self._resolve(hit[0], attr)
+                    if hit:
+                        out.append(hit)
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                s = n.value
+                if _DOTTED.fullmatch(s):
+                    if s.startswith("."):
+                        pkg = mod.name if mod.is_package else mod.name.rpartition(".")[0]
+                        s = pkg + s
+                    if s in self.modules:
+                        out.append((s, None))
+        return out
+
+    def unreached(self) -> dict[str, bool]:
+        """`module.name` of every package definition the roots do not reach
+        -> whether tests/ reach it."""
+        prod = self.reach(
+            [(f"{PKG}.cli", "main"), "bench", "__spark_entry__"]
+            + [m for m in self.modules if m.startswith(("perfbench.", "scripts."))]
+        )
+        tests = self.reach([m for m in self.modules if m.startswith("tests.")])
+        package = {
+            (name, d)
+            for name, mod in self.modules.items()
+            if name == PKG or name.startswith(PKG + ".")
+            for d in mod.defs
+        }
+        return {f"{m}.{d}": (m, d) in tests for m, d in sorted(package - prod)}
+
+
+def read_allowlist(root: Path = ROOT) -> dict[str, tuple[str, str]]:
+    """`module.name` -> (class, reason)."""
+    out = {}
+    for lineno, line in enumerate((root / ALLOWLIST).read_text().splitlines(), 1):
+        if not line.strip() or line.startswith("#"):
+            continue
+        qualname, cls, reason = (p.strip() for p in line.split("|", 2))
+        if cls not in CLASSES or not reason:
+            raise ValueError(f"{ALLOWLIST}:{lineno}: want '<name> | {' or '.join(CLASSES)} | <reason>'")
+        out[qualname] = (cls, reason)
+    return out
+
+
+def check(root: Path = ROOT) -> tuple[dict[str, bool], list[str], list[str]]:
+    """(listed definitions, listed but not on the allowlist, allowlist
+    entries no longer listed)."""
+    listed = Audit(root).unreached()
+    allow = read_allowlist(root)
+    return listed, sorted(set(listed) - set(allow)), sorted(set(allow) - set(listed))
+
+
+def main() -> int:
+    listed, missing, stale = check()
+    allow = read_allowlist()
+    for name, by_tests in listed.items():
+        cls = allow.get(name, ("UNCLASSIFIED", ""))[0]
+        print(f"{cls:13} {'tests' if by_tests else 'nothing':8} {name}")
+    for name in missing:
+        print(f"not on {ALLOWLIST}: {name}", file=sys.stderr)
+    for name in stale:
+        print(f"stale entry in {ALLOWLIST} (reached or gone): {name}", file=sys.stderr)
+    return 1 if missing or stale else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

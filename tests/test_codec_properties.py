@@ -1,82 +1,12 @@
-"""Property-based round-trip gates for the from-scratch image codecs (GIF,
-BMP, WebP, TIFF, JPEG). Each property is the codec's strongest oracle
-available in-sandbox: encode→decode must reproduce the input exactly
-(lossless formats) or within the quantization bound (JPEG), for arbitrary
-generated inputs — not just the fixture shapes the unit tests pin."""
+"""Property-based round-trip gates for the from-scratch image codecs (WebP,
+JPEG). Each property is the codec's strongest oracle available in-sandbox:
+encode→decode must reproduce the input exactly (lossless WebP) or within the
+quantization bound (JPEG), for arbitrary generated inputs — not just the
+fixture shapes the unit tests pin."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
-
-
-@st.composite
-def paletted_images(draw):
-    h = draw(st.integers(1, 40))
-    w = draw(st.integers(1, 40))
-    n_colors = draw(st.integers(1, 64))
-    palette = draw(
-        st.lists(
-            st.tuples(*[st.integers(0, 255)] * 3), min_size=n_colors,
-            max_size=n_colors, unique=True,
-        )
-    )
-    idx = draw(
-        st.lists(st.integers(0, n_colors - 1), min_size=h * w, max_size=h * w)
-    )
-    pal = np.array(palette, dtype=np.uint8)
-    return pal[np.array(idx, dtype=np.intp)].reshape(h, w, 3)
-
-
-class TestGifProperties:
-    @settings(max_examples=40, deadline=None)
-    @given(paletted_images())
-    def test_round_trip_lossless(self, img):
-        from osm_data_3d_tiles_spark.functions.gif import decode_gif, encode_gif
-
-        assert (decode_gif(encode_gif(img)) == img).all()
-
-    @settings(max_examples=40, deadline=None)
-    @given(paletted_images(), st.integers(0, 10_000))
-    def test_mutations_never_escape_valueerror(self, img, seed):
-        from osm_data_3d_tiles_spark.functions.gif import decode_gif, encode_gif
-
-        data = bytearray(encode_gif(img))
-        rng = np.random.RandomState(seed)
-        for _ in range(3):
-            data[rng.randint(0, len(data))] = rng.randint(0, 256)
-        try:
-            decode_gif(bytes(data))
-        except ValueError:
-            pass  # the only allowed failure mode
-
-
-class TestBmpProperties:
-    @settings(max_examples=40, deadline=None)
-    @given(
-        st.integers(1, 40), st.integers(1, 40),
-        st.sampled_from([24, 32]), st.integers(0, 2**31),
-    )
-    def test_round_trip_lossless(self, h, w, bpp, seed):
-        from osm_data_3d_tiles_spark.functions.bmp import decode_bmp, encode_bmp
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert (decode_bmp(encode_bmp(img, bpp=bpp)) == img).all()
-
-    @settings(max_examples=40, deadline=None)
-    @given(st.integers(1, 20), st.integers(1, 20), st.integers(0, 10_000))
-    def test_mutations_never_escape_valueerror(self, h, w, seed):
-        from osm_data_3d_tiles_spark.functions.bmp import decode_bmp, encode_bmp
-
-        rng = np.random.RandomState(seed)
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        data = bytearray(encode_bmp(img))
-        for _ in range(3):
-            data[rng.randint(0, len(data))] = rng.randint(0, 256)
-        try:
-            decode_bmp(bytes(data))
-        except ValueError:
-            pass  # the only allowed failure mode
 
 
 class TestWebpProperties:
@@ -120,48 +50,6 @@ class TestWebpProperties:
         for data in (bytes(blob), b"RIFF" + bytes(blob), bytes(base)):
             try:
                 decode_webp(data)
-            except ValueError:
-                pass
-
-
-class TestTiffProperties:
-    @settings(max_examples=30, deadline=None)
-    @given(
-        st.integers(1, 40),
-        st.integers(1, 40),
-        st.sampled_from([1, 3, 4]),
-        st.sampled_from(["none", "lzw", "packbits"]),
-        st.booleans(),
-        st.integers(1, 16),
-        st.integers(0, 2**31),
-    )
-    def test_round_trip_lossless(self, h, w, ch, comp, big_endian, rps, seed):
-        from osm_data_3d_tiles_spark.functions.tiff import decode_tiff, encode_tiff
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        img = rng.randint(0, 256, (h, w) if ch == 1 else (h, w, ch)).astype(np.uint8)
-        data = encode_tiff(
-            img, compression=comp, big_endian=big_endian, rows_per_strip=rps,
-            predictor=(comp == "lzw" and seed % 2 == 0),
-        )
-        exp = img if img.ndim == 3 else np.repeat(img[..., None], 3, axis=-1)
-        assert np.array_equal(decode_tiff(data), exp)
-
-    @settings(max_examples=40, deadline=None)
-    @given(st.binary(min_size=0, max_size=300), st.integers(0, 2**31))
-    def test_mutations_never_escape_valueerror(self, blob, seed):
-        from osm_data_3d_tiles_spark.functions.tiff import decode_tiff, encode_tiff
-
-        rng = np.random.RandomState(seed % (2**32 - 1))
-        base = bytearray(
-            encode_tiff(rng.randint(0, 256, (6, 7, 3)).astype(np.uint8),
-                        compression="lzw")
-        )
-        for _ in range(4):
-            base[rng.randint(0, len(base))] = rng.randint(0, 256)
-        for data in (bytes(blob), b"II*\x00" + bytes(blob), bytes(base)):
-            try:
-                decode_tiff(data)
             except ValueError:
                 pass
 

@@ -10,23 +10,21 @@ import importlib
 import importlib.util
 from pathlib import Path
 
-PKG = "osm_data_3d_tiles_spark"
-PKG_DIR = Path(__file__).resolve().parent.parent / PKG
+ROOT = Path(__file__).resolve().parent.parent
+PKG_DIR = ROOT / "osm_data_3d_tiles_spark"
+_spec = importlib.util.spec_from_file_location("reach", ROOT / "scripts" / "reach.py")
+reach = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(reach)
 
 
 def _relative_imports():
     for path in sorted(PKG_DIR.rglob("*.py")):
-        parts = list(path.relative_to(PKG_DIR.parent).with_suffix("").parts)
-        if parts[-1] == "__init__":
-            parts.pop()
-        else:
-            parts[-1:] = []  # a module's own package is its import base
+        module, is_package = reach.module_name(path)
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if isinstance(node, ast.ImportFrom) and node.level:
-                base = parts[: len(parts) - node.level + 1]
-                target = ".".join(base + ([node.module] if node.module else []))
+                target = reach.import_target(module, is_package, node)
                 names = [a.name for a in node.names]
-                yield f"{path.relative_to(PKG_DIR.parent)}:{node.lineno}", target, names
+                yield f"{path.relative_to(ROOT)}:{node.lineno}", target, names
 
 
 def test_every_relative_import_resolves():

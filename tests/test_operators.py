@@ -2,6 +2,8 @@
 multimodal plumbing, streaming shapes — run on the driver-provided documents /
 embeddings / events tables at sf0.001 plus small synthetic frames."""
 
+import struct
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -1862,6 +1864,68 @@ class TestRealPngDecode:
         b = decode_pixels_stub(bytes(r.payload), r.meta.width, r.meta.height)
         import numpy as np
         assert np.array_equal(a, b)
+
+
+def _tiff_gray_1x1(big_endian: bool) -> bytes:
+    """Uncompressed 8-bit grayscale 1x1 baseline TIFF: one IFD, one strip."""
+    e = ">" if big_endian else "<"
+    tags = [  # (tag, SHORT=3 | LONG=4, value)
+        (256, 3, 1), (257, 3, 1), (258, 3, 8), (259, 3, 1), (262, 3, 1),
+        (273, 4, 0), (277, 3, 1), (278, 3, 1), (279, 4, 1),
+    ]
+    strip = 8 + 2 + 12 * len(tags) + 4
+    ifd = struct.pack(e + "H", len(tags))
+    for tag, typ, val in tags:
+        val = strip if tag == 273 else val
+        packed = struct.pack(e + "H2x", val) if typ == 3 else struct.pack(e + "I", val)
+        ifd += struct.pack(e + "HHI", tag, typ, 1) + packed
+    head = (b"MM\x00*" if big_endian else b"II*\x00") + struct.pack(e + "I", 8)
+    return head + ifd + b"\x00\x00\x00\x00" + b"\x80"
+
+
+def _bmp_24bit_1x1() -> bytes:
+    dib = struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 2835, 2835, 0, 0)
+    return b"BM" + struct.pack("<IHHI", 58, 0, 0, 54) + dib + b"\x10\x20\x30\x00"
+
+
+def _ico_png_entry_1x1() -> bytes:
+    from osm_data_3d_tiles_spark.functions.atlas import encode_png
+
+    png = encode_png(np.full((1, 1, 4), 200, dtype=np.uint8))
+    return (
+        b"\x00\x00\x01\x00" + struct.pack("<H", 1)
+        + struct.pack("<BBBBHHII", 1, 1, 0, 0, 1, 32, len(png), 22) + png
+    )
+
+
+class TestUnsupportedImageFormats:
+    """Well-formed GIF, BMP, ICO and TIFF files have no in-sandbox reader:
+    the real decoder refuses them as unknown formats and the resize path
+    gives them the same stub pixels as any other opaque payload."""
+
+    @pytest.mark.parametrize(
+        "payload",
+        [
+            # 1x1 GIF87a: 2-color table, LZW clear/0/end-of-information
+            b"GIF87a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
+            b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02\x44\x01\x00;",
+            _bmp_24bit_1x1(),
+            _ico_png_entry_1x1(),
+            _tiff_gray_1x1(big_endian=False),
+            _tiff_gray_1x1(big_endian=True),
+        ],
+        ids=["gif87a", "bmp", "ico", "tiff-le", "tiff-be"],
+    )
+    def test_real_decode_refuses_and_pixels_fall_back_to_stub(self, payload):
+        from osm_data_3d_tiles_spark.operators.multimodal import (
+            decode_image_real,
+            decode_pixels,
+            decode_pixels_stub,
+        )
+
+        with pytest.raises(NotImplementedError, match="decode in-sandbox"):
+            decode_image_real(payload)
+        assert np.array_equal(decode_pixels(payload, 5, 3), decode_pixels_stub(payload, 5, 3))
 
 
 class TestRound4ReviewFixes:
