@@ -15,12 +15,12 @@ XOR pixels + 1-bit AND transparency mask; transparency composites onto
 black).
 
 RLE-compressed and bitfield variants raise ValueError — mirroring the
-PNG/JPEG/GIF contract (common variants real, exotic ones refused; see
+PNG/JPEG contract (common variants real, exotic ones refused; see
 operators/multimodal.py).
 
 Reference parity note: the reference repo has no raster-image path; this
 module exists for the LLM-data-pipeline multimodal family alongside
-functions/atlas.py (PNG), jpeg.py and gif.py.
+functions/atlas.py (PNG), jpeg.py and webp.py.
 
 Everything is one `np.frombuffer` + slicing per image; no per-pixel Python.
 """
@@ -29,10 +29,22 @@ from __future__ import annotations
 
 import numpy as np
 
-from ._binary import p16le as _p16
-from ._binary import p32le as _p32
-from ._binary import u16le as _u16
-from ._binary import u32le as _u32
+
+def _u16(b: bytes, o: int = 0) -> int:
+    return b[o] | (b[o + 1] << 8)
+
+
+def _u32(b: bytes, o: int = 0) -> int:
+    return b[o] | (b[o + 1] << 8) | (b[o + 2] << 16) | (b[o + 3] << 24)
+
+
+def _p16(v: int) -> bytes:
+    return bytes((v & 0xFF, (v >> 8) & 0xFF))
+
+
+def _p32(v: int) -> bytes:
+    return bytes((v & 0xFF, (v >> 8) & 0xFF, (v >> 16) & 0xFF, (v >> 24) & 0xFF))
+
 
 BMP_MAGIC = b"BM"
 
@@ -248,7 +260,7 @@ def encode_ico(img: np.ndarray) -> bytes:
 
 def encode_bmp(img: np.ndarray, bpp: int = 24) -> bytes:
     """(H, W, 3) uint8 RGB → BMP bytes (bottom-up BI_RGB; 24 or 32 bpp).
-    Deterministic — builds fixtures the same way encode_png/encode_gif do."""
+    Deterministic — builds fixtures the same way encode_png does."""
     img = np.asarray(img)
     if img.ndim != 3 or img.shape[2] != 3 or img.dtype != np.uint8:
         raise ValueError("encode_bmp wants (H, W, 3) uint8")

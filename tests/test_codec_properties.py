@@ -1,12 +1,41 @@
-"""Property-based round-trip gates for the from-scratch image codecs (WebP,
-JPEG). Each property is the codec's strongest oracle available in-sandbox:
-encode→decode must reproduce the input exactly (lossless WebP) or within the
-quantization bound (JPEG), for arbitrary generated inputs — not just the
-fixture shapes the unit tests pin."""
+"""Property-based round-trip gates for the from-scratch image codecs (BMP,
+WebP, JPEG). Each property is the codec's strongest oracle available
+in-sandbox: encode→decode must reproduce the input exactly (lossless formats)
+or within the quantization bound (JPEG), for arbitrary generated inputs — not
+just the fixture shapes the unit tests pin."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+
+
+class TestBmpProperties:
+    @settings(max_examples=40, deadline=None)
+    @given(
+        st.integers(1, 40), st.integers(1, 40),
+        st.sampled_from([24, 32]), st.integers(0, 2**31),
+    )
+    def test_round_trip_lossless(self, h, w, bpp, seed):
+        from osm_data_3d_tiles_spark.functions.bmp import decode_bmp, encode_bmp
+
+        rng = np.random.RandomState(seed % (2**32 - 1))
+        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
+        assert (decode_bmp(encode_bmp(img, bpp=bpp)) == img).all()
+
+    @settings(max_examples=40, deadline=None)
+    @given(st.integers(1, 20), st.integers(1, 20), st.integers(0, 10_000))
+    def test_mutations_never_escape_valueerror(self, h, w, seed):
+        from osm_data_3d_tiles_spark.functions.bmp import decode_bmp, encode_bmp
+
+        rng = np.random.RandomState(seed)
+        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
+        data = bytearray(encode_bmp(img))
+        for _ in range(3):
+            data[rng.randint(0, len(data))] = rng.randint(0, 256)
+        try:
+            decode_bmp(bytes(data))
+        except ValueError:
+            pass  # the only allowed failure mode
 
 
 class TestWebpProperties:

@@ -1883,23 +1883,8 @@ def _tiff_gray_1x1(big_endian: bool) -> bytes:
     return head + ifd + b"\x00\x00\x00\x00" + b"\x80"
 
 
-def _bmp_24bit_1x1() -> bytes:
-    dib = struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 2835, 2835, 0, 0)
-    return b"BM" + struct.pack("<IHHI", 58, 0, 0, 54) + dib + b"\x10\x20\x30\x00"
-
-
-def _ico_png_entry_1x1() -> bytes:
-    from osm_data_3d_tiles_spark.functions.atlas import encode_png
-
-    png = encode_png(np.full((1, 1, 4), 200, dtype=np.uint8))
-    return (
-        b"\x00\x00\x01\x00" + struct.pack("<H", 1)
-        + struct.pack("<BBBBHHII", 1, 1, 0, 0, 1, 32, len(png), 22) + png
-    )
-
-
 class TestUnsupportedImageFormats:
-    """Well-formed GIF, BMP, ICO and TIFF files have no in-sandbox reader:
+    """Well-formed GIF and TIFF files have no in-sandbox reader:
     the real decoder refuses them as unknown formats and the resize path
     gives them the same stub pixels as any other opaque payload."""
 
@@ -1909,12 +1894,10 @@ class TestUnsupportedImageFormats:
             # 1x1 GIF87a: 2-color table, LZW clear/0/end-of-information
             b"GIF87a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
             b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02\x44\x01\x00;",
-            _bmp_24bit_1x1(),
-            _ico_png_entry_1x1(),
             _tiff_gray_1x1(big_endian=False),
             _tiff_gray_1x1(big_endian=True),
         ],
-        ids=["gif87a", "bmp", "ico", "tiff-le", "tiff-be"],
+        ids=["gif87a", "tiff-le", "tiff-be"],
     )
     def test_real_decode_refuses_and_pixels_fall_back_to_stub(self, payload):
         from osm_data_3d_tiles_spark.operators.multimodal import (
