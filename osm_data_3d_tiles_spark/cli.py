@@ -49,12 +49,11 @@ def cmd_generate_tileset(args) -> int:
 
 def cmd_seed(args) -> int:
     """Materialize every owned tile as B3DM + tileset JSONs (seed-b3dm.ts, but
-    distributed: ownership window → building params, derived once → per-tile
-    build and batch tables → Arrow b3dm write on the executors)."""
+    distributed: ownership window → building params → per-tile build, which
+    also emits the tile's batch table → Arrow b3dm write on the executors)."""
     from pyspark.sql import functions as F
 
     from .functions.params import with_building_params
-    from .operators.batch_table import batch_tables
     from .operators.build3d import build_tiles_3d
     from .operators.cells import building_cells
     from .operators.ownership import owner_tiles
@@ -66,9 +65,7 @@ def cmd_seed(args) -> int:
     blds = fx.load_fixture(spark, "buildings", args.sf).filter(F.col("layer") == "buildings")
     owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
     assigned = with_building_params(blds.join(owners, "osm_id"))
-    tiles = build_tiles_3d(assigned)
-    batch = batch_tables(assigned)
-    n = seed_tiles(tiles, batch, args.out)
+    n = seed_tiles(build_tiles_3d(assigned), None, args.out)
     write_tileset(args.out, fx.FIXTURE_EXTENT, mode=args.mode)
     print(json.dumps({"tiles_written": n, "out": args.out}))
     return 0

@@ -8,6 +8,10 @@ Plan shape (the part that must scale):
   stage itself is a single `applyInPandas` over `tile_key` groups, i.e. exactly
   one exchange on the natural output partitioning (one tile = one output row =
   one B3DM), no Python round-trips in between;
+- the same group also emits the tile's batch table
+  (`batch_table.tile_batch_table`: the pivoted batch columns, `box_center` and
+  `osm_id`, in the build's osm_id order), so a tile row carries everything its
+  B3DM is packed from and the seed sink needs no join;
 - all geometry kernels are numpy (functions.roofs / walls / skeleton / mesh);
   per-building loops run inside the Arrow batch, never as row UDFs;
 - buffers come back as array<float> columns (Arrow-packed), so downstream sinks
@@ -50,6 +54,7 @@ from ..functions.mesh import GeometryAccumulator, compute_vertex_normals, flip_t
 from ..functions.params import PROPERTY_INPUT_COLS, has_building_params, with_building_params
 from ..functions.roofs import build_roof, flat_roof
 from ..functions.walls import build_walls
+from .batch_table import batch_input, tile_batch_table
 
 TERRAIN_MAX_HEIGHT = 0.0  # builder.ts:18-19
 TERRAIN_MIN_HEIGHT = 0.0
@@ -213,6 +218,7 @@ def build_single_building(row: dict, rings, ring_types) -> GeometryAccumulator |
     return acc
 
 
+# the geometry columns of a build_tiles_3d row; its batch table follows them
 BUILD3D_SCHEMA = T.StructType([
     T.StructField("tile_key", T.StringType()),
     T.StructField("batch_length", T.IntegerType()),
@@ -236,7 +242,9 @@ _NEEDED_COLS = [
 ]
 
 
-def _build_tile_group(pdf: pd.DataFrame) -> pd.DataFrame:
+def _build_tile_group(pdf: pd.DataFrame, batch_fields: list[T.StructField]) -> pd.DataFrame:
+    """One tile's buildings → its row: merged geometry buffers, then its
+    batch table (`batch_fields`, from `batch_table.batch_input`)."""
     pdf = pdf.sort_values("osm_id", kind="mergesort")
     tile_key = pdf["tile_key"].iloc[0]
     z, tx, ty = (int(p) for p in tile_key.split("_"))
@@ -260,7 +268,7 @@ def _build_tile_group(pdf: pd.DataFrame) -> pd.DataFrame:
         batch_ids.append(np.full(n_verts, batch_idx, dtype=np.int32))
 
     if not osm_ids:
-        return pd.DataFrame(columns=[f.name for f in BUILD3D_SCHEMA.fields])
+        return pd.DataFrame(columns=BUILD3D_SCHEMA.fieldNames() + [f.name for f in batch_fields])
 
     pos = np.concatenate(positions)
     uv = np.concatenate(uvs)
@@ -283,6 +291,7 @@ def _build_tile_group(pdf: pd.DataFrame) -> pd.DataFrame:
         "color": [np.concatenate(colors).astype(np.uint8).tobytes()],
         "bbox": [bbox],
         "n_vertices": [len(p3)],
+        **{name: [values] for name, values in tile_batch_table(pdf, batch_fields).items()},
     })
 
 
@@ -333,7 +342,8 @@ def building_labels(buildings_with_params: DataFrame) -> DataFrame:
 
 def build_tiles_3d(buildings_with_tile: DataFrame) -> DataFrame:
     """buildings (geometry + derived params + owner tile_key/tile_x/tile_y) →
-    one row per tile with merged SoA geometry buffers.
+    one row per tile with merged SoA geometry buffers, followed by the tile's
+    batch table (the `batch_tables` columns after batch_length).
 
     Scale: groupBy(tile_key).applyInPandas — a single hash exchange on tile_key,
     then pure CPU-bound Arrow batches; AQE coalesces small tiles, salting is
@@ -357,8 +367,10 @@ def build_tiles_3d(buildings_with_tile: DataFrame) -> DataFrame:
                 "sources/fixtures.py::make_buildings for the expected schema."
             )
         buildings_with_tile = with_building_params(buildings_with_tile)
-    cols = [c for c in _NEEDED_COLS if c in buildings_with_tile.columns]
-    narrow = buildings_with_tile.select(*cols)
-    return narrow.groupBy("tile_key").applyInPandas(
-        lambda pdf: _build_tile_group(pdf), schema=BUILD3D_SCHEMA
+    src, batch_fields = batch_input(buildings_with_tile)
+    cols = [c for c in _NEEDED_COLS if c in src.columns]
+    cols += [f.name for f in batch_fields if f.name in src.columns and f.name not in cols]
+    schema = T.StructType(BUILD3D_SCHEMA.fields + batch_fields)
+    return src.select(*cols).groupBy("tile_key").applyInPandas(
+        lambda pdf: _build_tile_group(pdf, batch_fields), schema=schema
     )

@@ -68,7 +68,7 @@ BMP_MAGIC = b"BM"
 ICO_MAGIC = b"\x00\x00\x01\x00"
 
 
-def decode_image_real(payload: bytes, meta: dict | None = None) -> np.ndarray:
+def decode_image_real(payload: bytes) -> np.ndarray:
     """Real decode: payload → HxWx3 uint8 array, dispatched on the magic.
 
     - PNG (RGBA8, filters 0-4): functions/atlas.py::decode_png, alpha dropped.

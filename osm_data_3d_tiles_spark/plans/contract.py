@@ -3760,7 +3760,8 @@ def build_rows_only_queries() -> dict:
         blds = fx.load_fixture(spark, "buildings", sf).filter(F.col("layer") == "buildings")
         owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
         assigned = with_building_params(blds).join(owners, "osm_id")
-        tiles = build_tiles_3d(assigned)
+        tiles = build_tiles_3d(assigned).select(
+            "tile_key", "batch_length", "position", "normal", "uv", "batch_id")
 
         def _pack(batches):
             for pdf in batches:

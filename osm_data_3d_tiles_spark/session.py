@@ -95,6 +95,17 @@ def _parse_bytes(raw: str) -> int:
         return 128 * 1024 * 1024
 
 
+def _row_groups(path: str) -> int | None:
+    """Row groups of a parquet file, from its footer; None for a file that
+    is not parquet."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.ParquetFile(path).metadata.num_row_groups
+    except Exception:
+        return None
+
+
 def with_min_parallelism(df, factor: int = 1):
     """Ensure a scan-rooted DataFrame has at least defaultParallelism×factor
     partitions before a CPU-bound Arrow/Python stage.
@@ -104,11 +115,12 @@ def with_min_parallelism(df, factor: int = 1):
     local-bench bottleneck. The check must NOT execute the plan: calling
     `df.rdd.getNumPartitions()` here forces AQE to materialize every upstream
     query stage serially (measured as a 10× slowdown of the composed flagship
-    plan). Instead the guard looks at the leaf scan's file list — a pure
-    metadata call. Derived frames (no file scan underneath, or many files)
-    pass through untouched: their parallelism is whatever the upstream stage
-    established. On a real cluster reading thousands of files this is always a
-    no-op; locally it round-robins narrow columns once and unlocks all cores."""
+    plan). Instead the guard looks at the leaf scan's file list and the
+    parquet footers — metadata only, no Spark job. Derived frames (no file
+    scan underneath, or enough splits) pass through untouched: their
+    parallelism is whatever the upstream stage established. On a real cluster
+    reading thousands of files this is always a no-op; locally it
+    round-robins narrow columns once and unlocks all cores."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
     try:
@@ -117,23 +129,27 @@ def with_min_parallelism(df, factor: int = 1):
         return df
     if not files:
         return df
-    # estimate the scan's split count from file sizes: Spark splits parquet by
-    # byte ranges of maxPartitionBytes (row groups permitting), so a single
-    # 60 MB file at 4 MB splits already fans out to ~15 tasks — repartitioning
-    # it would shuffle the full payload (measured: a 449 MB html exchange that
-    # dominated the flagship) for nothing
-    import os as _os
-
-    raw = df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    mpb = _parse_bytes(raw)
-    total = 0
+    sizes = []
     for f in files:
         path = f[len("file:"):] if f.startswith("file:") else f
         try:
-            total += _os.path.getsize(path)
+            sizes.append((path, os.path.getsize(path)))
         except OSError:
             return df  # non-local store: trust the scan's own split planning
-    est_splits = max(len(files), total // max(mpb, 1))
+    # the split size Spark's FileSourceScanExec plans with:
+    # min(maxPartitionBytes, max(openCostInBytes, bytes-with-open-costs / parallelism))
+    conf = df.sparkSession.conf
+    max_bytes = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4194304"))
+    total = sum(size + open_cost for _, size in sizes)
+    split = max(min(max_bytes, max(open_cost, total // max(sc.defaultParallelism, 1))), 1)
+    # a parquet split reads the row groups whose midpoint falls in it, so a
+    # file yields no more busy tasks than it has row groups
+    est_splits = 0
+    for path, size in sizes:
+        n = max(-(-size // split), 1)
+        groups = _row_groups(path)
+        est_splits += n if groups is None else min(n, groups)
     if est_splits < min(target, 8):
         return df.repartition(target)
     return df

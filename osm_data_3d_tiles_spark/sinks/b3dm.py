@@ -32,7 +32,9 @@ The seed path (`seed_tiles`) is the Spark mapping of seed-b3dm.ts:14-65 — one
 batch job materializing every tile. Its writer is a `mapInArrow` stage, so tile
 bytes never collect on the driver and no tile is turned into a Python `Row`: the
 geometry buffers are numpy slices of each Arrow batch's flat list values, the
-batch-table columns are read with one `to_pylist()` each. Run locally, the
+batch-table columns are read with one `to_pylist()` each. `build_tiles_3d` rows
+carry their own batch table, so `cli seed` writes them with no join; a separate
+batch table (`batch_tables`) is joined on tile_key instead. Run locally, the
 sink writes a local directory; on a cluster the same code targets a mounted
 object store path.
 """
@@ -501,22 +503,28 @@ def _json_safe(v):
     return v
 
 
+# build_tiles_3d columns a tile's glb is packed from
+_GEOMETRY_COLUMNS = ("position", "normal", "uv", "batch_id")
+# build_tiles_3d columns that are neither packed nor batch-table attributes
+_TILE_ONLY_COLUMNS = ("osm_ids", "texture_id", "color", "bbox", "n_vertices")
+
+
 def b3dm_for_tile(
     geo_row: dict, batch_row: dict | None, compress=None, quantize: bool = False
 ) -> bytes:
-    """One build_tiles_3d output row (+ its batch_tables row) → b3dm bytes.
+    """One tile row → b3dm bytes: the geometry buffers of a build_tiles_3d row,
+    and the batch table of `batch_row` (the same row, or its batch_tables row).
 
     featureTable = {BATCH_LENGTH}; batchTable = the pivoted per-building columns
-    (b3dmGenerator.ts:242-247 shape). `compress` is the optional Draco codec
-    seam, forwarded to pack_glb (None → byte-identical uncompressed tiles);
-    `quantize` emits KHR_mesh_quantization tiles (the in-sandbox compressed
-    artifact — see pack_glb)."""
+    (b3dmGenerator.ts:242-247 shape), in `batch_row`'s order. `compress` is the
+    optional Draco codec seam, forwarded to pack_glb (None → byte-identical
+    uncompressed tiles); `quantize` emits KHR_mesh_quantization tiles (the
+    compressed artifact that needs no codec library — see pack_glb)."""
     feature_table = {"BATCH_LENGTH": int(geo_row["batch_length"])}
     batch_table = {}
     if batch_row:
         # geometry-buffer columns are payload, not batch-table attributes
-        skip = {"tile_key", "batch_length", "position", "normal", "uv", "batch_id",
-                "texture_id", "color", "bbox", "n_vertices", "osm_ids"}
+        skip = {"tile_key", "batch_length", *_GEOMETRY_COLUMNS, *_TILE_ONLY_COLUMNS}
         for k, v in batch_row.items():
             if k in skip or v is None:
                 continue
@@ -529,10 +537,6 @@ def b3dm_for_tile(
     return pack_b3dm(glb, feature_table, batch_table)
 
 
-# build_tiles_3d columns a tile's glb is packed from
-_GEOMETRY_COLUMNS = ("position", "normal", "uv", "batch_id")
-
-
 def _write_tiles(batches, out_dir: str):
     """mapInArrow body of seed_tiles: writes every tile of every batch and
     yields one row per batch with its tile count."""
@@ -543,7 +547,7 @@ def _write_tiles(batches, out_dir: str):
         for name in _GEOMETRY_COLUMNS:
             col = rb.column(name)
             geometry[name] = (col.offsets.to_numpy(), col.values.to_numpy(zero_copy_only=False))
-        # schema order, so the batch-table JSON keeps the join's column order
+        # schema order, so the batch-table JSON keeps the batch table's column order
         attrs = {name: rb.column(name).to_pylist()
                  for name in rb.schema.names if name not in _GEOMETRY_COLUMNS}
         for i in range(rb.num_rows):
@@ -560,14 +564,25 @@ def _write_tiles(batches, out_dir: str):
         yield pa.RecordBatch.from_pydict({"tiles": pa.array([rb.num_rows], pa.int64())})
 
 
+def tile_writer(tiles_df, batch_df, out_dir: str):
+    """The `seed_tiles` sink as a DataFrame of per-batch tile counts; running
+    it writes the tiles. With `batch_df` None, the tile rows carry their own
+    batch table (build_tiles_3d); otherwise the tile side is narrowed to its
+    geometry and `batch_df` is joined on tile_key."""
+    if batch_df is None:
+        rows = tiles_df.drop(*_TILE_ONLY_COLUMNS)
+    else:
+        rows = tiles_df.select("tile_key", "batch_length", *_GEOMETRY_COLUMNS).join(
+            batch_df.drop("batch_length"), "tile_key", "left")
+    return rows.mapInArrow(lambda batches: _write_tiles(batches, out_dir), "tiles long")
+
+
 def seed_tiles(tiles_df, batch_df, out_dir: str) -> int:
     """Materialize every tile as {out_dir}/b3dm/{z}_{x}_{y}.b3dm — the batch seed
-    path (seed-b3dm.ts), distributed: the join stays on tile_key partitioning and
-    a mapInArrow stage writes each batch's tiles on the executors (no driver
-    collect of tile bytes, no per-tile Row). Returns the number of tiles this
-    call wrote; files already in the directory are not counted."""
+    path (seed-b3dm.ts), distributed: a mapInArrow stage writes each batch's
+    tiles on the executors (tile bytes are never collected, no per-tile Row).
+    `batch_df` None takes each tile's batch table from its own row, as
+    `cli seed` does. Returns the number of tiles this call wrote; files
+    already in the directory are not counted."""
     os.makedirs(os.path.join(out_dir, "b3dm"), exist_ok=True)
-    joined = tiles_df.select("tile_key", "batch_length", *_GEOMETRY_COLUMNS).join(
-        batch_df.drop("batch_length"), "tile_key", "left")
-    counts = joined.mapInArrow(lambda batches: _write_tiles(batches, out_dir), "tiles long")
-    return sum(r.tiles for r in counts.collect())
+    return sum(r.tiles for r in tile_writer(tiles_df, batch_df, out_dir).collect())

@@ -5,9 +5,7 @@ the streaming shapes a Common-Crawl-scale ingest needs:
 
 - `tumbling_counts`: watermarked tumbling-window counts per key (late data dropped
   after the watermark horizon),
-- `sessionize`: gap-based session windows via `F.session_window`,
-- `stream_pages_from_dir`: file-source ingestion of page parquet drops with the
-  extraction stage applied incrementally.
+- `sessionize`: gap-based session windows via `F.session_window`.
 
 Batch-equivalent semantics of `tumbling_counts` are oracle-checked against DuckDB
 (time_bucket) through `__spark_entry__.queries()['events_tumbling_counts']`.
@@ -160,12 +158,6 @@ def enriched_tumbling_counts(
             "value_sum",
         )
     )
-
-
-def stream_pages_from_dir(spark, path: str, schema) -> DataFrame:
-    """readStream over a directory of page parquet drops (the ingest pattern for a
-    continuously-crawled corpus); combine with plans.pipeline.geotagged_points."""
-    return spark.readStream.schema(schema).parquet(path)
 
 
 # ---------------------------------------------------------------------------

@@ -7,6 +7,7 @@ from __future__ import annotations
 import http.client
 import json
 import os
+import re
 import struct
 
 import numpy as np
@@ -24,6 +25,7 @@ from osm_data_3d_tiles_spark.sinks.b3dm import (
     pack_glb,
     parse_b3dm,
     seed_tiles,
+    tile_writer,
 )
 from osm_data_3d_tiles_spark.sinks.serve_fixture import TileServerFixture
 from osm_data_3d_tiles_spark.sources import fixtures as fx
@@ -172,12 +174,17 @@ class TestGlbPacking:
         assert 0 <= blen - gltf["buffers"][0]["byteLength"] <= 3
 
 
-def _seed_frames(blds):
-    """(tiles, batch tables) composed as `cli seed` composes them: the
-    building params are derived once and feed both."""
+def _assigned(blds):
+    """Buildings with their owner tile_key and derived params, as `cli seed`
+    composes them."""
     owners = owner_tiles(building_cells(blds)).select("osm_id", "tile_key")
-    assigned = with_building_params(blds.join(owners, "osm_id"))
-    return build_tiles_3d(assigned), batch_tables(assigned)
+    return with_building_params(blds.join(owners, "osm_id"))
+
+
+def _seed_frames(blds):
+    """(tiles, batch) as `cli seed` hands them to `seed_tiles`: the tile rows
+    carry their own batch tables, so there is no batch frame."""
+    return build_tiles_3d(_assigned(blds)), None
 
 
 def _fixture_buildings(spark):
@@ -219,6 +226,57 @@ class TestSeedPath:
             assert "box_center" in bt and len(bt["box_center"]) == bl
             # boxCenter z pinned to 10 (b3dmGenerator.ts:244-246)
             assert all(c[2] == 10.0 for c in bt["box_center"])
+
+    def test_seed_plan_is_one_python_pass_and_one_tile_key_exchange(self, spark, tmp_path):
+        """The `cli seed` sink plan: the cells explode, the per-tile build
+        (geometry and batch table together) and the writer are the only
+        Python operators, and tile_key is shuffled once, with no aggregate
+        and no join on it."""
+        tiles, batch = _seed_frames(_fixture_buildings(spark))
+        sink = tile_writer(tiles, batch, str(tmp_path))
+        plan = sink._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1
+        assert plan.count("FlatMapGroupsInPandas") == 1
+        assert plan.count("MapInArrow") == 1
+        assert plan.count("hashpartitioning(tile_key") == 1
+        assert "ObjectHashAggregate" not in plan
+        assert not re.search(r"Join \[tile_key#", plan)
+
+    def test_batch_table_types(self, spark, tmp_path):
+        """A null bigint colour stays null next to integer colours, a null
+        double stays null, booleans are JSON booleans next to null, and each
+        tile's JSON batch table is its `batch_tables` row, in column order."""
+        blds = _fixture_buildings(spark)
+        sizes = _assigned(blds).groupBy("tile_key").count()
+        keys = [r.tile_key for r in sizes.orderBy(F.desc("count"), "tile_key").limit(3).collect()]
+        assigned = (
+            _assigned(blds).filter(F.col("tile_key").isin(keys))
+            .withColumn("building_roof_color", F.when(
+                F.col("osm_id") % 2 == 0, F.lit(None)).otherwise(F.lit(0xFF8800)).cast("bigint"))
+            .withColumn("station_id", F.when(
+                F.col("osm_id") % 3 == 0, F.lit(None)).otherwise(F.lit(1.5)).cast("double"))
+            .withColumn("is_part", F.when(F.col("osm_id") % 3 == 1, F.lit(None))
+                        .otherwise(F.col("osm_id") % 3 == 0).cast("boolean"))
+        )
+        out = str(tmp_path)
+        assert seed_tiles(build_tiles_3d(assigned), None, out) == len(keys)
+        want = {r["tile_key"]: r for r in (
+            row.asDict(recursive=True) for row in batch_tables(assigned).collect())}
+        colours, station, is_part = [], [], []
+        for key in keys:
+            with open(os.path.join(out, "b3dm", f"{key}.b3dm"), "rb") as f:
+                bt = parse_b3dm(f.read())["batch_table"]
+            row = want[key]
+            assert list(bt) == [c for c in row if c not in ("tile_key", "batch_length")]
+            assert bt == {c: row[c] for c in bt}
+            colours += bt["building_roof_color"]
+            station += bt["station_id"]
+            is_part += bt["is_part"]
+        assert None in colours and {type(v) for v in colours if v is not None} == {int}
+        assert 0xFF8800 in colours
+        assert None in station and 1.5 in station
+        assert None in is_part and True in is_part
+        assert {type(v) for v in is_part if v is not None} == {bool}
 
     def test_tileset_json_written(self, seeded_dir):
         with open(os.path.join(seeded_dir, "tileset.json")) as f:

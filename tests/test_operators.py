@@ -427,7 +427,7 @@ class TestMultimodal:
         from osm_data_3d_tiles_spark.operators.multimodal import decode_image_real
 
         with pytest.raises(NotImplementedError):
-            decode_image_real(b"x", {})
+            decode_image_real(b"x")
 
 
 class TestStreaming:

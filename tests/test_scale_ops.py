@@ -167,3 +167,50 @@ class TestCheckpointResume:
             rows = lineage[lineage["stage"] == stage]
             assert rows["partition_id"].is_unique
             assert rows["rows"].sum() == spark.read.parquet(os.path.join(wd, snap)).count() > 0
+
+
+class TestMinParallelism:
+    """`with_min_parallelism` fans a parquet scan out only when Spark would
+    plan it as fewer busy tasks than there are cores: splits sized as Spark
+    sizes them, at most one per row group."""
+
+    OPEN_COST = 64 * 1024
+
+    @pytest.fixture
+    def small_open_cost(self, spark):
+        key = "spark.sql.files.openCostInBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(self.OPEN_COST))
+        yield
+        spark.conf.set(key, old)
+
+    def _scan(self, spark, path, row_groups):
+        """A 1 KB-per-row parquet file of 2 × cores × openCostInBytes, which
+        Spark splits into one byte range per core."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        cores = spark.sparkContext.defaultParallelism
+        rows = 2 * cores * self.OPEN_COST // 1024
+        rng = np.random.default_rng(0)
+        table = pa.table({"id": pa.array(range(rows), pa.int64()),
+                          "payload": pa.array([rng.bytes(1024) for _ in range(rows)])})
+        pq.write_table(table, path, row_group_size=-(-rows // row_groups), compression="none")
+        assert pq.ParquetFile(path).metadata.num_row_groups == row_groups
+        assert os.path.getsize(path) > cores * self.OPEN_COST
+        return spark.read.parquet(path)
+
+    def test_one_row_group_file_fans_out(self, spark, tmp_path, small_open_cost):
+        from osm_data_3d_tiles_spark.session import with_min_parallelism
+
+        df = self._scan(spark, str(tmp_path / "one.parquet"), row_groups=1)
+        plan = with_min_parallelism(df)._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" in plan
+
+    def test_many_row_group_file_does_not_fan_out(self, spark, tmp_path, small_open_cost):
+        from osm_data_3d_tiles_spark.session import with_min_parallelism
+
+        cores = spark.sparkContext.defaultParallelism
+        df = self._scan(spark, str(tmp_path / "many.parquet"), row_groups=2 * cores)
+        assert with_min_parallelism(df) is df
