@@ -31,20 +31,6 @@ def signed_area(ring: np.ndarray) -> float:
     return float(np.sum((x2 - x1) * (y2 + y1)))
 
 
-def is_ring_clockwise(ring: np.ndarray) -> bool:
-    """sum((x2-x1)*(y2+y1)) < 0 → clockwise.
-
-    Semantics of isRingClockwise at reference src/ring/ring-helper.ts:3-13.
-    """
-    return signed_area(ring) < 0
-
-
-def validate_ring(ring: np.ndarray) -> bool:
-    """Closed ring check (first == last). Reference src/ring/ring-helper.ts:16-21."""
-    r = np.asarray(ring, dtype=np.float64)
-    return bool(r[0, 0] == r[-1, 0] and r[0, 1] == r[-1, 1])
-
-
 def ensure_clockwise(ring: np.ndarray) -> np.ndarray:
     """Reverse if signed_area > 0. Reference src/utils/geometry.ts:17-23."""
     r = np.asarray(ring, dtype=np.float64)
@@ -84,13 +70,6 @@ def polygon_centroid(ring: np.ndarray) -> tuple[float, float]:
     cy = float(np.sum((py + ys) * a))
     factor = 3.0 * twice_area
     return cx / factor + x0, cy / factor + y0
-
-
-def vertex_mean(ring: np.ndarray) -> tuple[float, float]:
-    """Naive vertex-average center (the reference keeps both definitions:
-    tile3d-multipolygon.ts:198-211)."""
-    r = np.asarray(ring, dtype=np.float64)
-    return float(np.mean(r[:, 0])), float(np.mean(r[:, 1]))
 
 
 # ---------------------------------------------------------------------------
@@ -707,30 +686,3 @@ def segment_intersection(
     if ua < 0 or ua > 1 or ub < 0 or ub > 1:
         return None
     return np.array([x1 + ua * (x2 - x1), y1 + ua * (y2 - y1)])
-
-
-def signed_dst_to_line(point: np.ndarray, line_a: np.ndarray, line_b: np.ndarray) -> float:
-    """Signed perpendicular distance of point to infinite line a→b.
-
-    Semantics of signedDstToLine, reference src/building/roof/utils.ts:27-34.
-    """
-    ax, ay = float(line_a[0]), float(line_a[1])
-    bx, by = float(line_b[0]), float(line_b[1])
-    px, py = float(point[0]), float(point[1])
-    dx, dy = bx - ax, by - ay
-    length = math.hypot(dx, dy)
-    return ((px - ax) * dy - (py - ay) * dx) / length
-
-
-def point_progress_along_segment(point: np.ndarray, a: np.ndarray, b: np.ndarray) -> float:
-    """Clamped [0,1] projection of point onto segment a→b.
-
-    Semantics of getPointProgressAlongLineSegment, reference
-    src/building/roof/utils.ts:98-110.
-    """
-    ab = np.asarray(b, dtype=np.float64) - np.asarray(a, dtype=np.float64)
-    ap = np.asarray(point, dtype=np.float64) - np.asarray(a, dtype=np.float64)
-    denom = float(np.dot(ab, ab))
-    if denom == 0:
-        return 0.0
-    return float(min(1.0, max(0.0, np.dot(ap, ab) / denom)))

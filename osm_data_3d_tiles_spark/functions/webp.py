@@ -19,7 +19,9 @@ https://developers.google.com/speed/webp/docs/webp_lossless_bitstream_specificat
   decoder's cache/LZ77/transform paths from the outside.
 
 Lossy VP8 ("VP8 " chunk) raises ValueError — that codec family needs a real
-library; same contract as functions/jpeg.py's progressive refusal.
+library; same contract as functions/jpeg.py's progressive refusal. An
+animated file carries its frames in ANMF chunks, not in a top-level VP8L
+chunk, so it raises ValueError too.
 
 Reference parity note: the reference repo (TypeScript) delegates all image
 decode to the browser/three.js loaders; this module exists for the graft's
@@ -185,13 +187,10 @@ class _Huff:
 
 
 def decode_webp(data: bytes) -> np.ndarray:
-    """WebP bytes → (h, w, 4) RGBA uint8. Lossless (VP8L) only; lossy VP8
-    raises ValueError. Animated files yield the first composited frame."""
+    """WebP bytes → (h, w, 4) RGBA uint8. Still lossless (VP8L) only; lossy
+    VP8 and animated files (frames inside ANMF chunks) raise ValueError."""
     try:
-        data = bytes(data)
-        if webp_is_animated(data):
-            return decode_webp_frames(data, max_frames=1)["frames"][0][1]
-        return _decode_container(data)
+        return _decode_container(bytes(data))
     except (IndexError, KeyError) as exc:
         raise ValueError(f"malformed WebP stream: {type(exc).__name__}: {exc}") from exc
 
@@ -696,187 +695,6 @@ def _inv_predictor(
 
 
 # ---------------------------------------------------------------------------
-# animation (VP8X + ANIM + ANMF, frames carried as VP8L)
-# ---------------------------------------------------------------------------
-
-
-def _u24(b: bytes, o: int) -> int:
-    return b[o] | (b[o + 1] << 8) | (b[o + 2] << 16)
-
-
-def _iter_anmf(data: bytes):
-    """Yield (x, y, w, h, duration_ms, blend, dispose, vp8l_payload) per ANMF
-    chunk; raises ValueError for truncated chunks or non-VP8L frame data."""
-    if len(data) < 12 or data[:4] != WEBP_RIFF or data[8:12] != WEBP_FOURCC:
-        raise ValueError("not a RIFF/WEBP stream")
-    pos = 12
-    while pos + 8 <= len(data):
-        cc = data[pos : pos + 4]
-        size = int.from_bytes(data[pos + 4 : pos + 8], "little")
-        body = data[pos + 8 : pos + 8 + size]
-        if len(body) < size:
-            raise ValueError(f"truncated WebP: chunk {cc!r} overruns the file")
-        if cc == b"ANMF":
-            if size < 16:
-                raise ValueError("ANMF header truncated")
-            x = _u24(body, 0) * 2
-            y = _u24(body, 3) * 2
-            fw = _u24(body, 6) + 1
-            fh = _u24(body, 9) + 1
-            dur = _u24(body, 12)
-            flags = body[15]
-            blend = not (flags & 0x02)  # bit set = do NOT blend
-            dispose = bool(flags & 0x01)  # bit set = dispose to background
-            # frame data: sub-chunks ([ALPH] VP8|VP8L); find the VP8L
-            sub = 16
-            payload = None
-            while sub + 8 <= size:
-                scc = body[sub : sub + 4]
-                ssz = int.from_bytes(body[sub + 4 : sub + 8], "little")
-                if scc == b"VP8L":
-                    payload = body[sub + 8 : sub + 8 + ssz]
-                    break
-                if scc == b"VP8 ":
-                    raise ValueError(
-                        "lossy VP8 animation frame needs a codec library"
-                    )
-                sub += 8 + ssz + (ssz & 1)
-            if payload is None or len(payload) < 1:
-                raise ValueError("ANMF frame without VP8L data")
-            yield x, y, fw, fh, dur, blend, dispose, payload
-        pos += 8 + size + (size & 1)
-
-
-def webp_is_animated(data: bytes) -> bool:
-    try:
-        data = bytes(data)
-        if len(data) < 30 or data[:4] != WEBP_RIFF or data[8:12] != WEBP_FOURCC:
-            return False
-        return data[12:16] == b"VP8X" and bool(data[20] & 0x02)
-    except Exception:
-        return False
-
-
-def decode_webp_frames(data: bytes, max_frames: int | None = None) -> dict:
-    """Animated WebP → {"width", "height", "n_frames", "frames": [(ts_ms,
-    rgba)]} with full compositing: per-frame alpha blending (the spec's
-    integer 'over' formula) or no-blend replacement, and dispose-to-
-    background (transparent black). A non-animated file yields its single
-    image at ts 0. Frame timestamps are cumulative ANMF durations, a 0 ms
-    duration counting as 100 ms. max_frames stops the sequential decode
-    early (decode_webp asks for the first frame only)."""
-    try:
-        data = bytes(data)
-        if not webp_is_animated(data):
-            img = _decode_container(data)
-            return {
-                "width": img.shape[1], "height": img.shape[0],
-                "n_frames": 1, "frames": [(0, img)],
-            }
-        vp8x = data[20:30]
-        cw = _u24(vp8x, 4) + 1
-        ch = _u24(vp8x, 7) + 1
-        canvas = np.zeros((ch, cw, 4), dtype=np.uint8)
-        frames = []
-        ts = 0
-        for x, y, fw, fh, dur, blend, dispose, payload in _iter_anmf(data):
-            img = _decode_vp8l(payload)
-            if img.shape[:2] != (fh, fw):
-                raise ValueError("ANMF rect does not match its VP8L dimensions")
-            if x + fw > cw or y + fh > ch:
-                raise ValueError("ANMF frame rect outside the canvas")
-            region = canvas[y : y + fh, x : x + fw]
-            if blend:
-                region[:] = _blend_over(img, region)
-            else:
-                region[:] = img
-            frames.append((ts, canvas.copy()))
-            ts += dur or 100
-            if dispose:
-                region[:] = 0  # transparent black
-            if max_frames is not None and len(frames) >= max_frames:
-                break
-        if not frames:
-            raise ValueError("animated WebP has no ANMF frames")
-        return {"width": cw, "height": ch, "n_frames": len(frames), "frames": frames}
-    except (IndexError, KeyError) as exc:
-        raise ValueError(f"malformed WebP stream: {type(exc).__name__}: {exc}") from exc
-
-
-def _blend_over(src: np.ndarray, dst: np.ndarray) -> np.ndarray:
-    """The animation spec's integer alpha-over: out.A = src.A + dst.A*(255 -
-    src.A)/255; out.rgb weighted by the alphas (0 where out.A == 0)."""
-    sa = src[..., 3].astype(np.int64)
-    da = dst[..., 3].astype(np.int64)
-    oa = sa + da * (255 - sa) // 255
-    out = np.zeros_like(src)
-    w_dst = da * (255 - sa) // 255
-    for c in range(3):
-        num = src[..., c].astype(np.int64) * sa + dst[..., c].astype(np.int64) * w_dst
-        out[..., c] = np.where(oa > 0, num // np.maximum(oa, 1), 0).astype(np.uint8)
-    out[..., 3] = oa.astype(np.uint8)
-    return out
-
-
-def encode_webp_animated(
-    frames: list[np.ndarray],
-    durations_ms: list[int] | int = 100,
-    offsets: list[tuple[int, int]] | None = None,
-    blends: list[bool] | None = None,
-    disposes: list[bool] | None = None,
-) -> bytes:
-    """List of (h_k, w_k, 4) RGBA uint8 frames → animated lossless WebP
-    (VP8X + ANIM + per-frame ANMF/VP8L). Frame 0 defines the canvas; later
-    frames may be smaller rects at `offsets[k]` (even coordinates — the ANMF
-    header stores x/2, y/2). blends[k]=False replaces the rect, True
-    alpha-blends; disposes[k]=True clears the rect to transparent black
-    after display. Deterministic fixture generator."""
-    if not frames:
-        raise ValueError("need at least one frame")
-    frames = [np.asarray(f) for f in frames]
-    for f in frames:
-        if f.dtype != np.uint8 or f.ndim != 3 or f.shape[2] != 4:
-            raise ValueError("encode_webp_animated wants (h, w, 4) uint8 frames")
-    n = len(frames)
-    ch, cw = frames[0].shape[:2]
-    if isinstance(durations_ms, int):
-        durations_ms = [durations_ms] * n
-    offsets = offsets or [(0, 0)] * n
-    blends = blends if blends is not None else [False] * n
-    disposes = disposes if disposes is not None else [False] * n
-    if not (len(durations_ms) == len(offsets) == len(blends) == len(disposes) == n):
-        raise ValueError("per-frame lists must match the frame count")
-
-    def u24(v: int) -> bytes:
-        return bytes((v & 0xFF, (v >> 8) & 0xFF, (v >> 16) & 0xFF))
-
-    def chunk(cc: bytes, body: bytes) -> bytes:
-        out = cc + len(body).to_bytes(4, "little") + body
-        return out + (b"\x00" if len(body) & 1 else b"")
-
-    parts = [
-        chunk(b"VP8X", bytes((0x12,)) + b"\x00\x00\x00" + u24(cw - 1) + u24(ch - 1)),
-        chunk(b"ANIM", b"\x00\x00\x00\x00\x00\x00"),  # bg transparent, loop ∞
-    ]
-    for f, dur, (x, y), blend, dispose in zip(
-        frames, durations_ms, offsets, blends, disposes
-    ):
-        fh, fw = f.shape[:2]
-        if x % 2 or y % 2:
-            raise ValueError("ANMF offsets must be even (stored as x/2, y/2)")
-        if x + fw > cw or y + fh > ch:
-            raise ValueError("frame rect outside the canvas")
-        flags = (0 if blend else 0x02) | (0x01 if dispose else 0)
-        header = (
-            u24(x // 2) + u24(y // 2) + u24(fw - 1) + u24(fh - 1)
-            + u24(dur) + bytes((flags,))
-        )
-        parts.append(chunk(b"ANMF", header + chunk(b"VP8L", _vp8l_payload(f))))
-    body = WEBP_FOURCC + b"".join(parts)
-    return WEBP_RIFF + len(body).to_bytes(4, "little") + body
-
-
-# ---------------------------------------------------------------------------
 # encoder
 # ---------------------------------------------------------------------------
 
@@ -1016,11 +834,7 @@ def encode_webp(
 
 
 def _vp8l_payload(
-    img: np.ndarray,
-    subtract_green: bool = False,
-    cache_bits: int = 0,
-    use_palette: bool = False,
-    rle: bool = False,
+    img: np.ndarray, subtract_green: bool, cache_bits: int, use_palette: bool, rle: bool
 ) -> bytes:
     img = np.asarray(img)
     if img.ndim != 3 or img.shape[2] not in (3, 4) or img.dtype != np.uint8:

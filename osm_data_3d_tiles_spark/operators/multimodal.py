@@ -7,12 +7,9 @@ Decode status (no imaging libraries in this environment):
   texture atlas uses.
 - Baseline JFIF JPEG payloads decode for real via functions/jpeg.py
   (Huffman + dequant + IDCT + 4:2:0 upsampling, restart markers).
-- BMP (uncompressed 8/24/32 bpp) and ICO (PNG or DIB entries) payloads
-  decode for real via functions/bmp.py.
-- Lossless WebP (VP8L) payloads decode for real via functions/webp.py;
-  an animated file yields its first composited frame.
-- Every other format (lossy WebP, GIF, TIFF, AVIF, audio, video, ...)
-  is unsupported: `decode_image_real` raises NotImplementedError and
+- Still lossless WebP (VP8L) payloads decode for real via functions/webp.py.
+- Every other format (lossy or animated WebP, BMP, ICO, GIF, TIFF, AVIF,
+  audio, video, ...) is unsupported: `decode_image_real` raises NotImplementedError and
   `decode_pixels` falls back to the deterministic `decode_pixels_stub`.
 - `extract_features` hashes every payload through `decode_image_stub`.
   The stubs keep the Spark-side plumbing — schema, partition sizing, UDF
@@ -64,8 +61,6 @@ FEATURES_SCHEMA = T.StructType(
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 JPEG_MAGIC = b"\xff\xd8\xff"
-BMP_MAGIC = b"BM"
-ICO_MAGIC = b"\x00\x00\x01\x00"
 
 
 def decode_image_real(payload: bytes) -> np.ndarray:
@@ -73,15 +68,13 @@ def decode_image_real(payload: bytes) -> np.ndarray:
 
     - PNG (RGBA8, filters 0-4): functions/atlas.py::decode_png, alpha dropped.
     - Baseline sequential JPEG: functions/jpeg.py::decode_jpeg.
-    - BMP (uncompressed BI_RGB, 8/24/32 bpp) and ICO (PNG or DIB entries):
-      functions/bmp.py::decode_bmp / decode_ico.
-    - Lossless WebP (VP8L; an animated file yields its first composited
-      frame): functions/webp.py::decode_webp, alpha dropped.
+    - Still lossless WebP (VP8L): functions/webp.py::decode_webp, alpha
+      dropped.
 
     A recognised magic with a stream the reader refuses (progressive JPEG,
-    lossy VP8, RLE BMP, corrupt data) raises ValueError. Any other format
-    (GIF, TIFF, ...) raises NotImplementedError — wire Pillow/libvips here on a
-    real cluster."""
+    lossy or animated WebP, corrupt data) raises ValueError. Any other format
+    (BMP, ICO, GIF, TIFF, ...) raises NotImplementedError — wire
+    Pillow/libvips here on a real cluster."""
     data = bytes(payload)
     if data[:8] == PNG_MAGIC:
         from ..functions.atlas import decode_png
@@ -91,22 +84,14 @@ def decode_image_real(payload: bytes) -> np.ndarray:
         from ..functions.jpeg import decode_jpeg
 
         return decode_jpeg(data)
-    if data[:2] == BMP_MAGIC:
-        from ..functions.bmp import decode_bmp
-
-        return decode_bmp(data)
-    if data[:4] == ICO_MAGIC:
-        from ..functions.bmp import decode_ico
-
-        return decode_ico(data)
     if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
         from ..functions.webp import decode_webp
 
         return decode_webp(data)[..., :3]
     raise NotImplementedError(
-        "only PNG, baseline JPEG, BMP, ICO and lossless WebP decode "
-        "in-sandbox (pure-numpy readers); other formats need an imaging "
-        "library — use decode_image_stub for plumbing tests"
+        "only PNG, baseline JPEG and lossless WebP decode in-sandbox "
+        "(pure-numpy readers); other formats need an imaging library — "
+        "use decode_image_stub for plumbing tests"
     )
 
 
@@ -251,13 +236,13 @@ def decode_pixels_stub(payload: bytes, width: int, height: int) -> np.ndarray:
 
 
 def decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Codec dispatch: PNG, baseline-JPEG, BMP, ICO and lossless-WebP
-    payloads decode for real through `decode_image_real` (the bitstream's
-    dims win over the declared metadata dims); every other format falls back
-    to the deterministic stub.
+    """Codec dispatch: PNG, baseline-JPEG and still lossless-WebP payloads
+    decode for real through `decode_image_real` (the bitstream's dims win
+    over the declared metadata dims); every other format falls back to the
+    deterministic stub.
 
     A payload with a supported magic that the reader refuses (interlaced or
-    16-bit PNG, progressive JPEG, lossy VP8, RLE BMP, corrupt stream) also
+    16-bit PNG, progressive JPEG, lossy or animated WebP, corrupt stream) also
     degrades to the stub — one odd payload must never fail the whole Arrow stage."""
     try:
         return decode_image_real(payload)

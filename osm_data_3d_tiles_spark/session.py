@@ -106,8 +106,8 @@ def _row_groups(path: str) -> int | None:
         return None
 
 
-def with_min_parallelism(df, factor: int = 1):
-    """Ensure a scan-rooted DataFrame has at least defaultParallelism×factor
+def with_min_parallelism(df):
+    """Ensure a scan-rooted DataFrame has at least defaultParallelism
     partitions before a CPU-bound Arrow/Python stage.
 
     Single parquet files below spark.sql.files.maxPartitionBytes arrive as ONE
@@ -122,7 +122,7 @@ def with_min_parallelism(df, factor: int = 1):
     reading thousands of files this is always a no-op; locally it
     round-robins narrow columns once and unlocks all cores."""
     sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
+    target = sc.defaultParallelism
     try:
         files = df.inputFiles()
     except Exception:
@@ -142,7 +142,7 @@ def with_min_parallelism(df, factor: int = 1):
     max_bytes = _parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
     open_cost = _parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4194304"))
     total = sum(size + open_cost for _, size in sizes)
-    split = max(min(max_bytes, max(open_cost, total // max(sc.defaultParallelism, 1))), 1)
+    split = max(min(max_bytes, max(open_cost, total // max(target, 1))), 1)
     # a parquet split reads the row groups whose midpoint falls in it, so a
     # file yields no more busy tasks than it has row groups
     est_splits = 0

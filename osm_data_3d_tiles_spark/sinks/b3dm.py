@@ -3,20 +3,17 @@ Model tiles (the public 3D Tiles 1.0 format: 28-byte header + featureTable JSON 
 batchTable JSON + binary glTF payload).
 
 Reference path (/root/reference/src/b3dmGenerator.ts:162-256): three.js GLTF
-export → weld → Draco compress → `createB3dmTileDataFromGlb`. Our payload is an
-uncompressed glTF 2.0 binary built by direct struct packing (no 3D runtime
+export → weld → Draco compress → `createB3dmTileDataFromGlb`. Our payload is a
+welded, indexed glTF 2.0 binary built by direct struct packing (no 3D runtime
 needed): one mesh primitive with POSITION / NORMAL / TEXCOORD_0 / _BATCHID
 accessors — the same attribute set the reference exports
-(build3dBuilding.ts:102-108). Draco compression ships as an injectable seam
-(`compress=` on pack_glb/b3dm_for_tile): no codec library exists in this
-sandbox, so the default emits uncompressed tiles — a byte-level codec applied
-at the very end of the reference sink that changes no verified semantics
-(SURVEY.md §2.1 "we verify the *table*, not Draco bytes"); a deployment with a
-Draco encoder plugs it in and gets KHR_draco_mesh_compression tiles.
+(build3dBuilding.ts:102-108). The seed writes it uncompressed; Draco is a
+byte-level codec applied at the very end of the reference sink that changes no
+verified semantics (SURVEY.md §2.1 "we verify the *table*, not Draco bytes").
 
-DECISION (round 5, closing the r4 VERDICT item): the Draco bitstream itself is
-permanently out of in-sandbox scope, and KHR_mesh_quantization
-(`pack_glb_quantized`) is this engine's compressed sink codec. Rationale: a
+DECISION (round 5, closing the r4 VERDICT item): Draco is out of in-sandbox
+scope and no seam for it is kept; KHR_mesh_quantization (`pack_glb(...,
+quantize=True)`) is this engine's compressed sink codec. Rationale: a
 from-scratch Draco encoder (rANS entropy coding + connectivity coder +
 prediction transforms) could only be tested against ITSELF here — no reference
 decoder exists in the sandbox, so a decode-reencode round-trip would prove
@@ -25,8 +22,7 @@ bytes that every real loader rejects. KHR_mesh_quantization achieves the same
 goal (quantized attribute storage, ~4x position/normal size reduction)
 as a core glTF 2.0 extension whose output is plain spec-valid glTF — verified
 here by structural decode (`unpack_glb`) plus pinned byte goldens
-(`quantized_tile_stats`). Deployments that need Draco parity with the
-reference inject the real codec through `compress=`.
+(`quantized_tile_stats`).
 
 The seed path (`seed_tiles`) is the Spark mapping of seed-b3dm.ts:14-65 — one
 batch job materializing every tile. Its writer is a `mapInArrow` stage, so tile
@@ -64,11 +60,10 @@ WELD_TOLERANCE = 1e-10  # reference: b3dmGenerator.ts:169-181 (mergeVertices tol
 
 
 def weld_vertices(
-    pos: np.ndarray, nrm: np.ndarray, tex: np.ndarray, bid: np.ndarray,
-    tolerance: float = WELD_TOLERANCE,
+    pos: np.ndarray, nrm: np.ndarray, tex: np.ndarray, bid: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Merge vertices whose FULL attribute tuple (position, normal, uv,
-    batch id) agrees within `tolerance` (quantized to the tolerance grid, the
+    batch id) agrees within WELD_TOLERANCE (quantized to its grid, the
     same rule as the reference's three.js mergeVertices at
     b3dmGenerator.ts:169-181) → (pos, nrm, tex, bid, indices). First occurrence
     wins; triangle winding is preserved because only indices are remapped."""
@@ -77,7 +72,7 @@ def weld_vertices(
     # int64; float32 attribute spacing ≫ tolerance, so this is an exact-match
     # merge on the stored float32 values (the reference's post-quantization
     # behavior), never a lossy snap
-    keys = np.round(attrs / tolerance).astype(np.int64)
+    keys = np.round(attrs / WELD_TOLERANCE).astype(np.int64)
     _, first_idx, inverse = np.unique(keys, axis=0, return_index=True, return_inverse=True)
     # np.unique sorts — remap so output vertices keep first-appearance order
     order = np.argsort(first_idx, kind="stable")
@@ -90,7 +85,7 @@ def weld_vertices(
 
 def _glb_bytes(gltf: dict, bin_bytes: bytes | None) -> bytes:
     """Assemble the GLB container (single place for the alignment rules all
-    four emitters share): JSON chunk space-padded to 4, BIN chunk zero-padded
+    three emitters share): JSON chunk space-padded to 4, BIN chunk zero-padded
     to 4, total length 8-aligned via extra JSON spaces — slack goes in the
     JSON chunk because padding BIN past buffer.byteLength by 4+ trips strict
     validators (BUFFER_GLB_CHUNK_TOO_BIG); inside a b3dm whose body starts
@@ -115,11 +110,14 @@ def pack_glb(
     normal: np.ndarray,
     uv: np.ndarray,
     batch_id: np.ndarray,
-    weld: bool = True,
-    compress=None,
     quantize: bool = False,
 ) -> bytes:
-    """Triangle mesh → glTF 2.0 binary (one buffer; indexed when welded).
+    """Triangle mesh → indexed glTF 2.0 binary (one buffer).
+
+    The mesh is always welded first: vertices shared by adjacent triangles
+    (flat-roof fans, wall strips share almost every vertex) are deduplicated
+    into an indexed mesh — the reference runs the same weld before export;
+    skipping it inflates every tile's vertex buffers with duplicates.
 
     `quantize=True` emits a self-contained KHR_mesh_quantization GLB (the
     documented in-sandbox alternative to the reference's Draco stage,
@@ -128,43 +126,21 @@ def pack_glb(
     world space — the same "scene" quantization volume Draco uses), NORMAL
     as normalized int8. No codec library needed, standard glTF extension,
     ~2.4x smaller vertex payload; decode-reencode round-trip pinned in
-    tests/test_b3dm_sink.py.
-
-    weld=True deduplicates vertices shared by adjacent triangles (flat-roof
-    fans, wall strips share almost every vertex) into an indexed mesh —
-    the reference runs the same weld before export; skipping it inflates every
-    tile's vertex buffers with duplicates.
-
-    `compress` is the optional Draco seam (reference parity:
-    /root/reference/src/b3dmGenerator.ts:182-195 — EDGEBREAKER, quantization
-    volume "scene"; no codec library exists in this sandbox, so the default
-    None emits the identical uncompressed GLB this sink always produced).
-    Signature: compress(pos, nrm, tex, bid, indices) -> bytes (the Draco
-    buffer). When supplied, the GLB carries one bufferView with the codec
-    bytes, KHR_draco_mesh_compression on the primitive (attribute ids in
-    POSITION/NORMAL/TEXCOORD_0/_BATCHID order), and accessors without
-    bufferView per the extension spec — a cluster deployment with draco
-    installed plugs its encoder here and gets reference-parity tiles."""
+    tests/test_b3dm_sink.py."""
     pos = np.asarray(position, dtype=np.float32).reshape(-1, 3)
     nrm = np.asarray(normal, dtype=np.float32).reshape(-1, 3)
     tex = np.asarray(uv, dtype=np.float32).reshape(-1, 2)
     bid = np.asarray(batch_id, dtype=np.float32).reshape(-1)
-    indices: np.ndarray | None = None
-    if (weld or compress is not None or quantize) and len(pos):
-        # draco needs the indexed mesh — always weld before compressing
-        pos, nrm, tex, bid, indices = weld_vertices(pos, nrm, tex, bid)
-    n = len(pos)
-
-    if n == 0:
+    if not len(pos):
         # glTF 2.0 forbids count-0 accessors / zero-length bufferViews and
         # buffers, so an empty mesh emits a MESHLESS (but valid) GLB — one
         # empty node, no accessors; the quantization extension is still
         # declared so format-branching callers stay consistent
         return _pack_glb_meshless(quantized=quantize)
-    if compress is not None and indices is not None:
-        return _pack_glb_draco(pos, nrm, tex, bid, indices, compress)
+    pos, nrm, tex, bid, indices = weld_vertices(pos, nrm, tex, bid)
     if quantize:
         return _pack_glb_quantized(pos, nrm, tex, bid, indices)
+    n = len(pos)
 
     views = []
     accessors = []
@@ -195,19 +171,16 @@ def pack_glb(
     add(tex, 5126, "VEC2", 2, False)
     add(bid, 5126, "SCALAR", 1, False)
 
-    index_accessor = None
-    if indices is not None:
-        raw = _pad(indices.astype(np.uint32).tobytes(), 4, b"\x00")
-        views.append({"buffer": 0, "byteOffset": offset, "byteLength": len(raw)})
-        accessors.append({
-            "bufferView": len(views) - 1,
-            "componentType": 5125,  # UNSIGNED_INT
-            "count": int(len(indices)),
-            "type": "SCALAR",
-        })
-        index_accessor = len(accessors) - 1
-        bin_parts.append(raw)
-        offset += len(raw)
+    raw = _pad(indices.astype(np.uint32).tobytes(), 4, b"\x00")
+    views.append({"buffer": 0, "byteOffset": offset, "byteLength": len(raw)})
+    accessors.append({
+        "bufferView": len(views) - 1,
+        "componentType": 5125,  # UNSIGNED_INT
+        "count": int(len(indices)),
+        "type": "SCALAR",
+    })
+    bin_parts.append(raw)
+    offset += len(raw)
 
     gltf = {
         "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
@@ -218,7 +191,7 @@ def pack_glb(
             "primitives": [{
                 "attributes": {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3},
                 "mode": 4,
-                **({"indices": index_accessor} if index_accessor is not None else {}),
+                "indices": 4,
             }]
         }],
         "buffers": [{"byteLength": offset}],
@@ -258,8 +231,8 @@ def _pack_glb_quantized(
     multiple of 4, so VEC3<u16> packs at stride 8 (2 pad bytes) and
     VEC3<i8> at stride 4 (1 pad byte)."""
     n = len(pos)
-    bbox_min = pos.min(axis=0) if n else np.zeros(3, np.float32)
-    bbox_max = pos.max(axis=0) if n else np.zeros(3, np.float32)
+    bbox_min = pos.min(axis=0)
+    bbox_max = pos.max(axis=0)
     extent = (bbox_max - bbox_min).astype(np.float64)
     scale = np.where(extent > 0, extent / 65535.0, 1.0)
     pos_q = np.clip(
@@ -289,8 +262,8 @@ def _pack_glb_quantized(
     v = add_view(pos_rows.tobytes(), stride=8)
     accessors.append({
         "bufferView": v, "componentType": 5123, "count": n, "type": "VEC3",
-        "min": [int(x) for x in (pos_q.min(axis=0) if n else [0, 0, 0])],
-        "max": [int(x) for x in (pos_q.max(axis=0) if n else [0, 0, 0])],
+        "min": [int(x) for x in pos_q.min(axis=0)],
+        "max": [int(x) for x in pos_q.max(axis=0)],
     })
     # NORMAL: (x, y, z, pad) int8 rows -> stride 4, normalized
     nrm_rows = np.zeros((n, 4), dtype=np.int8)
@@ -353,7 +326,7 @@ def unpack_glb(glb: bytes) -> dict:
             "position": empty3, "normal": empty3,
             "uv": np.empty((0, 2), dtype=np.float32),
             "batch_id": np.empty(0, dtype=np.float32),
-            "indices": None,  # no mesh => no index accessor (same as non-indexed)
+            "indices": None,  # no mesh => no index accessor
             "quantized": quantized,
         }
     blen, btype = struct.unpack("<II", glb[20 + jlen : 28 + jlen])
@@ -391,66 +364,9 @@ def unpack_glb(glb: bytes) -> dict:
         "normal": nrm.astype(np.float32),
         "uv": read_acc(attrs["TEXCOORD_0"]).astype(np.float32),
         "batch_id": read_acc(attrs["_BATCHID"]).reshape(-1).astype(np.float32),
-        "indices": read_acc(prim["indices"]).reshape(-1) if "indices" in prim else None,
+        "indices": read_acc(prim["indices"]).reshape(-1),
         "quantized": quantized,
     }
-
-
-def _pack_glb_draco(
-    pos: np.ndarray,
-    nrm: np.ndarray,
-    tex: np.ndarray,
-    bid: np.ndarray,
-    indices: np.ndarray,
-    compress,
-) -> bytes:
-    """GLB whose single primitive is Draco-compressed via the supplied codec.
-    Accessors keep count/type/min/max (they describe the DECOMPRESSED data and
-    deliberately omit bufferView, per KHR_draco_mesh_compression); the one
-    bufferView holds the codec bytes."""
-    blob = _pad(bytes(compress(pos, nrm, tex, bid, indices)), 4, b"\x00")
-    n = len(pos)
-
-    def acc(comp_type: int, acc_type: str, count: int, arr=None):
-        a = {"componentType": comp_type, "count": count, "type": acc_type}
-        if arr is not None:
-            a["min"] = [float(v) for v in arr.min(axis=0)]
-            a["max"] = [float(v) for v in arr.max(axis=0)]
-        return a
-
-    gltf = {
-        "asset": {"version": "2.0", "generator": "osm-data-3d-tiles-spark"},
-        "scene": 0,
-        "scenes": [{"nodes": [0]}],
-        "nodes": [{"mesh": 0}],
-        "meshes": [{
-            "primitives": [{
-                "attributes": {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3},
-                "mode": 4,
-                "indices": 4,
-                "extensions": {
-                    "KHR_draco_mesh_compression": {
-                        "bufferView": 0,
-                        "attributes": {
-                            "POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3
-                        },
-                    }
-                },
-            }]
-        }],
-        "buffers": [{"byteLength": len(blob)}],
-        "bufferViews": [{"buffer": 0, "byteOffset": 0, "byteLength": len(blob)}],
-        "accessors": [
-            acc(5126, "VEC3", n, pos.reshape(n, 3)),
-            acc(5126, "VEC3", n),
-            acc(5126, "VEC2", n),
-            acc(5126, "SCALAR", n),
-            acc(5125, "SCALAR", int(len(indices))),
-        ],
-        "extensionsUsed": ["KHR_draco_mesh_compression"],
-        "extensionsRequired": ["KHR_draco_mesh_compression"],
-    }
-    return _glb_bytes(gltf, blob)
 
 
 def _pad_from(data: bytes, start: int, boundary: int, pad_byte: bytes) -> bytes:
@@ -509,17 +425,13 @@ _GEOMETRY_COLUMNS = ("position", "normal", "uv", "batch_id")
 _TILE_ONLY_COLUMNS = ("osm_ids", "texture_id", "color", "bbox", "n_vertices")
 
 
-def b3dm_for_tile(
-    geo_row: dict, batch_row: dict | None, compress=None, quantize: bool = False
-) -> bytes:
+def b3dm_for_tile(geo_row: dict, batch_row: dict | None) -> bytes:
     """One tile row → b3dm bytes: the geometry buffers of a build_tiles_3d row,
-    and the batch table of `batch_row` (the same row, or its batch_tables row).
+    packed by pack_glb (welded, uncompressed), and the batch table of
+    `batch_row` (the same row, or its batch_tables row).
 
     featureTable = {BATCH_LENGTH}; batchTable = the pivoted per-building columns
-    (b3dmGenerator.ts:242-247 shape), in `batch_row`'s order. `compress` is the
-    optional Draco codec seam, forwarded to pack_glb (None → byte-identical
-    uncompressed tiles); `quantize` emits KHR_mesh_quantization tiles (the
-    compressed artifact that needs no codec library — see pack_glb)."""
+    (b3dmGenerator.ts:242-247 shape), in `batch_row`'s order."""
     feature_table = {"BATCH_LENGTH": int(geo_row["batch_length"])}
     batch_table = {}
     if batch_row:
@@ -532,7 +444,6 @@ def b3dm_for_tile(
     glb = pack_glb(
         np.asarray(geo_row["position"]), np.asarray(geo_row["normal"]),
         np.asarray(geo_row["uv"]), np.asarray(geo_row["batch_id"]),
-        compress=compress, quantize=quantize,
     )
     return pack_b3dm(glb, feature_table, batch_table)
 

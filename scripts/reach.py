@@ -18,7 +18,12 @@ statements, so those are followed too, and so is a module named in a string
 
 The walk reads the source with `ast` and calls nothing. It is name-based and
 errs towards "reached": a local variable that shares a top-level name keeps
-that definition alive.
+that definition alive. It cannot see inside a reached function either: a
+format or mode branch of a dispatcher that is reached (`decode_image_real`,
+`pack_glb`) always counts as reached. Such branches are judged by the
+payloads the contract fixtures feed; the image decode table is pinned by
+`tests/test_operators.py::TestUnsupportedImageFormats` and the three
+`*_decode_stats` contract queries.
 
 Every top-level package `def`/`class` the roots do not reach is listed, with
 whether `tests/` reaches it. `scripts/reach_allowlist.txt` classifies each,

@@ -83,68 +83,6 @@ class TestGlbPacking:
         idx = np.frombuffer(glb[bin_start + iview["byteOffset"]:][: 6 * 4], np.uint32)
         assert np.array_equal(pos[idx], quad)
 
-    def test_weld_off_keeps_soup(self):
-        tri = np.zeros(9, np.float32)
-        glb = pack_glb(tri, tri, np.zeros(6, np.float32), np.zeros(3, np.float32), weld=False)
-        jlen = struct.unpack("<II", glb[12:20])[0]
-        gltf = json.loads(glb[20: 20 + jlen])
-        prim = gltf["meshes"][0]["primitives"][0]
-        assert "indices" not in prim
-        assert gltf["accessors"][0]["count"] == 3
-
-    def test_draco_seam_noop_is_uncompressed(self):
-        # default path (no codec supplied) must carry zero extension plumbing
-        quad = np.array(
-            [[0, 0, 0], [1, 0, 0], [1, 1, 0], [0, 0, 0], [1, 1, 0], [0, 1, 0]],
-            dtype=np.float32,
-        )
-        nrm = np.tile([0, 0, 1], 6).astype(np.float32)
-        glb = pack_glb(quad.ravel(), nrm, np.zeros(12, np.float32), np.zeros(6, np.float32))
-        assert b"KHR_draco_mesh_compression" not in glb
-        assert glb == pack_glb(
-            quad.ravel(), nrm, np.zeros(12, np.float32), np.zeros(6, np.float32),
-            compress=None,
-        )
-
-    def test_draco_seam_wires_extension(self):
-        """A supplied codec gets the WELDED mesh, and the GLB declares
-        KHR_draco_mesh_compression with the codec bytes as the only bufferView
-        and accessors that omit bufferView (they describe decompressed data)."""
-        quad = np.array(
-            [[0, 0, 0], [1, 0, 0], [1, 1, 0], [0, 0, 0], [1, 1, 0], [0, 1, 0]],
-            dtype=np.float32,
-        )
-        nrm = np.tile([0, 0, 1], 6).astype(np.float32)
-        seen = {}
-
-        def fake_codec(pos, n, t, b, indices):
-            seen["n_verts"] = len(pos)
-            seen["n_idx"] = len(indices)
-            return b"DRACOBYTES"
-
-        glb = pack_glb(
-            quad.ravel(), nrm, np.zeros(12, np.float32), np.zeros(6, np.float32),
-            compress=fake_codec,
-        )
-        assert seen == {"n_verts": 4, "n_idx": 6}  # welded before compressing
-        jlen = struct.unpack("<II", glb[12:20])[0]
-        gltf = json.loads(glb[20: 20 + jlen])
-        assert gltf["extensionsRequired"] == ["KHR_draco_mesh_compression"]
-        prim = gltf["meshes"][0]["primitives"][0]
-        ext = prim["extensions"]["KHR_draco_mesh_compression"]
-        assert ext["bufferView"] == 0
-        assert ext["attributes"] == {"POSITION": 0, "NORMAL": 1, "TEXCOORD_0": 2, "_BATCHID": 3}
-        assert len(gltf["bufferViews"]) == 1
-        assert all("bufferView" not in a for a in gltf["accessors"])
-        assert gltf["accessors"][0]["count"] == 4  # decompressed vertex count
-        assert gltf["accessors"][4]["count"] == 6
-        boff = 20 + jlen
-        blen = struct.unpack("<II", glb[boff: boff + 8])[0]
-        assert glb[boff + 8: boff + 8 + blen].startswith(b"DRACOBYTES")
-        assert len(glb) % 8 == 0
-        magic, version, total = struct.unpack("<III", glb[:12])
-        assert magic == 0x46546C67 and total == len(glb)
-
     def test_b3dm_roundtrip(self):
         glb = pack_glb(
             np.zeros(9, np.float32), np.zeros(9, np.float32),
@@ -381,20 +319,6 @@ class TestQuantizedGlb:
             stride = gltf["bufferViews"][a["bufferView"]]["byteStride"]
             assert stride % 4 == 0
         assert len(quant) % 8 == 0  # b3dm embedding alignment
-
-    def test_b3dm_for_tile_quantized(self):
-        from osm_data_3d_tiles_spark.sinks.b3dm import b3dm_for_tile, parse_b3dm, unpack_glb
-
-        pos, nrm, uv, bid = self._mesh()
-        geo_row = {
-            "batch_length": 7, "position": pos.ravel(), "normal": nrm.ravel(),
-            "uv": uv.ravel(), "batch_id": bid,
-        }
-        data = b3dm_for_tile(geo_row, None, quantize=True)
-        out = parse_b3dm(data)
-        assert out["feature_table"]["BATCH_LENGTH"] == 7
-        decoded = unpack_glb(out["glb"])
-        assert decoded["quantized"] and len(decoded["position"]) > 0
 
     def test_unpack_glb_reads_uncompressed_too(self):
         from osm_data_3d_tiles_spark.sinks.b3dm import pack_glb, unpack_glb, weld_vertices

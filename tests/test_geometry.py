@@ -21,15 +21,6 @@ class TestWinding:
         assert g.signed_area(SQUARE) == -32.0
         assert g.signed_area(SQUARE_CW) == 32.0
 
-    def test_is_ring_clockwise(self):
-        # reference convention: sum < 0 → clockwise (ring-helper.ts:3-13)
-        assert g.is_ring_clockwise(SQUARE)  # CCW in math axes = "clockwise" per ref
-        assert not g.is_ring_clockwise(SQUARE_CW)
-
-    def test_validate_ring(self):
-        assert g.validate_ring(SQUARE)
-        assert not g.validate_ring(TRIANGLE)
-
     def test_ensure_clockwise_reverses_positive_area(self):
         out = g.ensure_clockwise(SQUARE_CW)
         assert g.signed_area(out) < 0
@@ -55,9 +46,6 @@ class TestAreaCentroid:
         big = SQUARE[:-1] + 1e7
         cx, cy = g.polygon_centroid(big)
         assert (cx, cy) == pytest.approx((1e7 + 2.0, 1e7 + 2.0), abs=1e-6)
-
-    def test_vertex_mean(self):
-        assert g.vertex_mean(TRIANGLE) == pytest.approx((2 / 3, 2 / 3))
 
 
 class TestPointInPolygon:
@@ -308,13 +296,3 @@ class TestSegments:
             np.array([0.0, 0.0]), np.array([1.0, 1.0]), np.array([3.0, 0.0]), np.array([4.0, 1.0])
         )
         assert p is None
-
-    def test_signed_dst(self):
-        d = g.signed_dst_to_line(np.array([0.0, 1.0]), np.array([0.0, 0.0]), np.array([1.0, 0.0]))
-        assert abs(d) == pytest.approx(1.0)
-
-    def test_progress(self):
-        t = g.point_progress_along_segment(
-            np.array([2.0, 5.0]), np.array([0.0, 0.0]), np.array([4.0, 0.0])
-        )
-        assert t == pytest.approx(0.5)

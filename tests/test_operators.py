@@ -1883,10 +1883,54 @@ def _tiff_gray_1x1(big_endian: bool) -> bytes:
     return head + ifd + b"\x00\x00\x00\x00" + b"\x80"
 
 
+def _dib_header_1x1(height: int) -> bytes:
+    """40-byte BITMAPINFOHEADER of a 1-pixel-wide 24-bpp uncompressed DIB."""
+    return struct.pack("<IiiHHIIiiII", 40, 1, height, 1, 24, 0, 0, 0, 0, 0, 0)
+
+
+def _bmp_24bpp_1x1() -> bytes:
+    """1x1 24-bpp BMP: file header, BITMAPINFOHEADER, one padded BGR row."""
+    pixels = b"\x10\x20\x30\x00"
+    return b"BM" + struct.pack("<IHHI", 54 + len(pixels), 0, 0, 54) + _dib_header_1x1(1) + pixels
+
+
+def _ico_one_entry() -> bytes:
+    """One-entry ICO: a 1x1 24-bpp DIB (height doubled for the AND mask)."""
+    dib = _dib_header_1x1(2) + b"\x10\x20\x30\x00" + b"\x00" * 4
+    entry = struct.pack("<BBBBHHII", 1, 1, 0, 0, 1, 24, len(dib), 6 + 16)
+    return b"\x00\x00\x01\x00" + struct.pack("<H", 1) + entry + dib
+
+
+def _riff_chunk(fourcc: bytes, body: bytes) -> bytes:
+    return fourcc + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
+
+
+def _u24(v: int) -> bytes:
+    return v.to_bytes(3, "little")
+
+
+def _webp_animated_one_frame() -> bytes:
+    """VP8X (animation flag) + ANIM + one ANMF around the VP8L chunk of an
+    `encode_webp` file: the file has no top-level VP8L chunk."""
+    from osm_data_3d_tiles_spark.functions.webp import encode_webp
+
+    vp8l_chunk = encode_webp(np.full((2, 2, 3), 90, np.uint8))[12:]
+    anmf = _u24(0) + _u24(0) + _u24(1) + _u24(1) + _u24(100) + b"\x00" + vp8l_chunk
+    body = (
+        b"WEBP"
+        + _riff_chunk(b"VP8X", b"\x02\x00\x00\x00" + _u24(1) + _u24(1))
+        + _riff_chunk(b"ANIM", b"\x00" * 6)
+        + _riff_chunk(b"ANMF", anmf)
+    )
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 class TestUnsupportedImageFormats:
-    """Well-formed GIF and TIFF files have no in-sandbox reader:
-    the real decoder refuses them as unknown formats and the resize path
-    gives them the same stub pixels as any other opaque payload."""
+    """Only PNG, baseline JPEG and still lossless WebP decode in-sandbox.
+    Well-formed BMP, ICO, GIF and TIFF files have no reader: the real decoder
+    refuses them as unknown formats. An animated WebP has a known magic but no
+    top-level VP8L chunk, so it is refused as a stream. Either way the resize
+    path gives them the same stub pixels as any other opaque payload."""
 
     @pytest.mark.parametrize(
         "payload",
@@ -1896,8 +1940,10 @@ class TestUnsupportedImageFormats:
             b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02\x44\x01\x00;",
             _tiff_gray_1x1(big_endian=False),
             _tiff_gray_1x1(big_endian=True),
+            _bmp_24bpp_1x1(),
+            _ico_one_entry(),
         ],
-        ids=["gif87a", "tiff-le", "tiff-be"],
+        ids=["gif87a", "tiff-le", "tiff-be", "bmp-24bpp", "ico-dib"],
     )
     def test_real_decode_refuses_and_pixels_fall_back_to_stub(self, payload):
         from osm_data_3d_tiles_spark.operators.multimodal import (
@@ -1907,6 +1953,18 @@ class TestUnsupportedImageFormats:
         )
 
         with pytest.raises(NotImplementedError, match="decode in-sandbox"):
+            decode_image_real(payload)
+        assert np.array_equal(decode_pixels(payload, 5, 3), decode_pixels_stub(payload, 5, 3))
+
+    def test_animated_webp_refused_and_pixels_fall_back_to_stub(self):
+        from osm_data_3d_tiles_spark.operators.multimodal import (
+            decode_image_real,
+            decode_pixels,
+            decode_pixels_stub,
+        )
+
+        payload = _webp_animated_one_frame()
+        with pytest.raises(ValueError, match="no VP8L chunk"):
             decode_image_real(payload)
         assert np.array_equal(decode_pixels(payload, 5, 3), decode_pixels_stub(payload, 5, 3))
 

@@ -310,110 +310,18 @@ class TestHandCraftedStreams:
             assert flat_red[i] == flat_red[src_of(i, w)], (dist_code, i)
 
 
-class TestAnimation:
-    """VP8X/ANIM/ANMF: compositing (blend + dispose) and frame timestamps."""
-
-    def _frames(self, n=4, h=10, w=12, seed=3):
-        rng = np.random.RandomState(seed)
-        return [rng.randint(0, 256, (h, w, 4)).astype(np.uint8) for _ in range(n)]
-
-    def test_full_frame_round_trip_and_times(self):
-        from osm_data_3d_tiles_spark.functions.webp import (
-            decode_webp_frames,
-            encode_webp_animated,
-            webp_is_animated,
-        )
-
-        frames = self._frames(4)
-        data = encode_webp_animated(frames, [50, 100, 150, 200])
-        assert webp_is_animated(data)
-        clip = decode_webp_frames(data)
-        assert clip["n_frames"] == 4
-        assert [ts for ts, _ in clip["frames"]] == [0, 50, 150, 300]
-        for (_, got), want in zip(clip["frames"], frames):
-            assert np.array_equal(got, want)
-
-    def test_zero_duration_uses_100ms_convention(self):
-        from osm_data_3d_tiles_spark.functions.webp import (
-            decode_webp_frames,
-            encode_webp_animated,
-        )
-
-        clip = decode_webp_frames(encode_webp_animated(self._frames(3), 0))
-        assert [ts for ts, _ in clip["frames"]] == [0, 100, 200]
-
-    def test_first_frame_contract(self):
-        from osm_data_3d_tiles_spark.functions.webp import encode_webp_animated
-
-        frames = self._frames(3)
-        assert np.array_equal(
-            decode_webp(encode_webp_animated(frames, 100)), frames[0]
-        )
-
-    def test_dispose_to_background(self):
-        from osm_data_3d_tiles_spark.functions.webp import (
-            decode_webp_frames,
-            encode_webp_animated,
-        )
-
-        base = np.full((8, 8, 4), 200, np.uint8)
-        patch = np.full((4, 4, 4), 50, np.uint8)
-        tail = np.full((2, 2, 4), 90, np.uint8)
-        clip = decode_webp_frames(
-            encode_webp_animated(
-                [base, patch, tail], 100,
-                offsets=[(0, 0), (2, 2), (6, 6)],
-                disposes=[False, True, False],
-            )
-        )
-        f1, f2 = clip["frames"][1][1], clip["frames"][2][1]
-        assert (f1[2:6, 2:6, :3] == 50).all() and f1[0, 0, 0] == 200
-        assert (f2[2:6, 2:6] == 0).all()  # transparent black, not left
-        assert (f2[6:8, 6:8, :3] == 90).all() and f2[0, 0, 0] == 200
-
-    def test_alpha_blend_matches_spec_integer_formula(self):
-        from osm_data_3d_tiles_spark.functions.webp import (
-            decode_webp_frames,
-            encode_webp_animated,
-        )
-
-        base = np.full((6, 6, 4), 200, np.uint8)
-        base[..., 3] = 255
-        overlay = np.zeros((6, 6, 4), np.uint8)
-        overlay[..., :3] = 100
-        overlay[..., 3] = 128
-        got = decode_webp_frames(
-            encode_webp_animated([base, overlay], 100, blends=[False, True])
-        )["frames"][1][1]
-        sa, da = 128, 255
-        oa = sa + da * (255 - sa) // 255
-        w_dst = da * (255 - sa) // 255
-        exp_rgb = (100 * sa + 200 * w_dst) // oa
-        assert (got[..., 3] == oa).all() and (got[..., :3] == exp_rgb).all()
-
-    def test_no_blend_replaces_including_alpha(self):
-        from osm_data_3d_tiles_spark.functions.webp import (
-            decode_webp_frames,
-            encode_webp_animated,
-        )
-
-        base = np.full((4, 4, 4), 200, np.uint8)
-        overlay = np.zeros((4, 4, 4), np.uint8)
-        overlay[..., :3] = 100
-        overlay[..., 3] = 128
-        got = decode_webp_frames(
-            encode_webp_animated([base, overlay], 100, blends=[False, False])
-        )["frames"][1][1]
-        assert (got[..., 3] == 128).all() and (got[..., :3] == 100).all()
-
-    def test_odd_offset_rejected(self):
-        from osm_data_3d_tiles_spark.functions.webp import encode_webp_animated
-
-        with pytest.raises(ValueError, match="even"):
-            encode_webp_animated(
-                [np.zeros((4, 4, 4), np.uint8), np.zeros((2, 2, 4), np.uint8)],
-                100, offsets=[(0, 0), (1, 0)],
-            )
+class TestExtendedContainer:
+    def test_still_vp8x_with_vp8l_chunk_decodes_like_plain_file(self):
+        """VP8X header (alpha flag, 7x5 canvas) in front of the VP8L chunk
+        of a plain file: the same pixels come out."""
+        img = np.random.RandomState(5).randint(0, 256, (5, 7, 4)).astype(np.uint8)
+        plain = encode_webp(img)
+        vp8x = b"VP8X" + (10).to_bytes(4, "little") + bytes((0x10, 0, 0, 0))
+        vp8x += (7 - 1).to_bytes(3, "little") + (5 - 1).to_bytes(3, "little")
+        body = b"WEBP" + vp8x + plain[12:]
+        extended = b"RIFF" + len(body).to_bytes(4, "little") + body
+        assert np.array_equal(decode_webp(extended), decode_webp(plain))
+        assert np.array_equal(decode_webp(extended), img)
 
 
 class TestSparkStage:
