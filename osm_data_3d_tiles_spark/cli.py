@@ -15,7 +15,7 @@ Usage (cluster):
 
 The serve loop itself is out of engine scope (SURVEY.md §2.1); `seed` is the
 batch materialization the reference recommends for performance (readme.md:190-191),
-and sinks.serve_fixture serves the output for tests.
+and any static file server can serve its output.
 """
 
 from __future__ import annotations

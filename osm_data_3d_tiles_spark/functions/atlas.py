@@ -342,15 +342,10 @@ def pack_building_textures(tile_size: int = 512):
     return maxrects_pack(items)
 
 
-def read_png(path: str):
-    """Minimal RGBA8 PNG reader (inverse of write_png; supports filters 0-4,
-    non-interlaced, bit depth 8, color type 6)."""
-    with open(path, "rb") as f:
-        return decode_png(f.read())
-
-
 def decode_png(data: bytes):
-    """RGBA8 PNG bytes → (h, w, 4) uint8 (see read_png)."""
+    """RGBA8 PNG bytes → (h, w, 4) uint8: the inverse of `encode_png`.
+    Non-interlaced, bit depth 8, color type 6; scanline filters 0-4 (our
+    encoder emits 0, foreign PNGs may use any)."""
     import struct
     import zlib
 
@@ -366,15 +361,15 @@ def decode_png(data: bytes):
         body = data[pos + 8 : pos + 8 + ln]
         if tag == b"IHDR":
             if len(body) < 13:
-                raise ValueError(f"read_png: truncated IHDR ({len(body)} bytes)")
+                raise ValueError(f"decode_png: truncated IHDR ({len(body)} bytes)")
             w, h, depth, ctype = struct.unpack(">IIBB", body[:10])
             interlace = body[12]
             if depth != 8 or ctype != 6:
-                raise ValueError(f"read_png: only RGBA8 supported, got {depth}/{ctype}")
+                raise ValueError(f"decode_png: only RGBA8 supported, got {depth}/{ctype}")
             if interlace != 0:
                 # Adam7 IDAT is 7 per-pass sub-images; the linear row loop
                 # below would silently decode garbage — refuse instead
-                raise ValueError("read_png: interlaced (Adam7) PNGs unsupported")
+                raise ValueError("decode_png: interlaced (Adam7) PNGs unsupported")
         elif tag == b"IDAT":
             idat += body
         elif tag == b"IEND":
@@ -424,46 +419,7 @@ def decode_png(data: bytes):
                     up_left = b_
             cur = cur_l.reshape(stride)
         else:
-            raise ValueError(f"read_png: invalid scanline filter type {ftype}")
+            raise ValueError(f"decode_png: invalid scanline filter type {ftype}")
         img[y] = cur.astype(np.uint8).reshape(w, 4)
         prev = cur
     return img
-
-
-def build_packed_atlas(src_dir: str, out_png: str | None = None, tile_size: int = 512):
-    """The reference's packImages() over the repo's checked-in deterministic
-    source tiles: read each source PNG from `src_dir` (flat layout,
-    path basename), nearest-neighbor upscale to tile_size (the multimodal
-    resize kernel's algorithm), MaxRects-pack, composite with 2px edge
-    extrusion (free-tex-packer `extrude: 2`), and return
-    (atlas_rgba, frames). Writes the atlas PNG when out_png is given."""
-    import os
-
-    import numpy as np
-
-    frames, aw, ah = pack_building_textures(tile_size)
-    img = np.zeros((ah, aw, 4), dtype=np.uint8)
-    for path, (x, y, w, h) in frames.items():
-        # flat checked-in layout: last two path segments joined with "__"
-        # (facades/ and roofs/ both ship a glass_diffuse.png)
-        base = "__".join(path.split("/")[-2:])
-        src_png = os.path.join(src_dir, base + ("" if base.endswith(".png") else ".png"))
-        src = read_png(src_png)
-        sy, sx = src.shape[:2]
-        # nearest-neighbor upscale (operators/multimodal.py resize kernel)
-        iy = (np.arange(h) * sy) // h
-        ix = (np.arange(w) * sx) // w
-        tile = src[iy][:, ix]
-        img[y : y + h, x : x + w] = tile
-        # 2px edge extrusion: replicate border pixels into the padding ring
-        img[y - 2 : y, x : x + w] = tile[0]
-        img[y + h : y + h + 2, x : x + w] = tile[-1]
-        img[y : y + h, x - 2 : x] = tile[:, :1]
-        img[y : y + h, x + w : x + w + 2] = tile[:, -1:]
-        img[y - 2 : y, x - 2 : x] = tile[0, 0]
-        img[y - 2 : y, x + w : x + w + 2] = tile[0, -1]
-        img[y + h : y + h + 2, x - 2 : x] = tile[-1, 0]
-        img[y + h : y + h + 2, x + w : x + w + 2] = tile[-1, -1]
-    if out_png:
-        write_png(out_png, img)
-    return img, frames

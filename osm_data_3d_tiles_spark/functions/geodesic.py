@@ -20,9 +20,6 @@ planar fixed-point paths instead.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 EARTH_RADIUS_M = 6371000.0
 
 
@@ -36,8 +33,3 @@ def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
         f"pow(sin((radians({lon2}) - radians({lon1})) / 2), 2))))"
     )
 
-
-def haversine_m(lon1: str, lat1: str, lon2: str, lat2: str) -> Column:
-    """Column: great-circle meters between two (lon, lat) degree column
-    pairs. Pure built-in trig — whole-stage codegen, no Python."""
-    return F.expr(haversine_sql(lon1, lat1, lon2, lat2))

@@ -581,41 +581,6 @@ def covered_cells(
     return cells
 
 
-def populate_with_points(
-    rings: list[np.ndarray],
-    ring_types: list[str],
-    resolution: int,
-    tile_size: float,
-    seed: int = 42,
-) -> np.ndarray:
-    """Jittered grid points inside a multipolygon (label/instance placement).
-
-    Semantics of populateWithPoints, reference tile3d-multipolygon.ts:357-388:
-    one candidate per covered grid cell at (x + 0.75 - rand·0.5)/res·tileSize,
-    kept iff inside every outer ring and outside every inner ring. The reference
-    draws `Math.random` (SURVEY.md §2.8 flags this as a graft must-seed site) —
-    here the jitter comes from the reference's own SeededRandom chain, drawn in
-    sorted-cell order, so output is deterministic and partition-independent.
-    """
-    from .colors import SeededRandom
-
-    cells = sorted(covered_cells(rings, ring_types, resolution / tile_size))
-    rng = SeededRandom(seed)
-    outers = [np.asarray(r, dtype=np.float64) for r, t in zip(rings, ring_types) if t == "outer"]
-    inners = [np.asarray(r, dtype=np.float64) for r, t in zip(rings, ring_types) if t == "inner"]
-    out = []
-    for (x, y) in cells:
-        px = (x + 0.75 - rng.generate() * 0.5) / resolution * tile_size
-        py = (y + 0.75 - rng.generate() * 0.5) / resolution * tile_size
-        p = np.array([[px, py]])
-        ok = all(points_in_ring(p, r)[0] for r in outers)
-        if ok and any(points_in_ring(p, r)[0] for r in inners):
-            ok = False
-        if ok:
-            out.append((px, py))
-    return np.array(out, dtype=np.float64).reshape(-1, 2)
-
-
 # ---------------------------------------------------------------------------
 # Interior point (OL getFlatMidpoint semantics for the batch-table boxCenter)
 # ---------------------------------------------------------------------------

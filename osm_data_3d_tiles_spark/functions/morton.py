@@ -1,29 +1,24 @@
 """Morton (z-order) key: 2-D bit interleave as a shared-SQL expression.
 
 The third space-filling curve in the engine next to the hex lattice
-(functions/hexgrid.py) and S2 Hilbert (functions/s2.py) — the one most
-table formats implement natively (Iceberg/Delta Z-ORDER clustering). A
-Morton key over quantized (x, y) feeds sinks/layout.py::write_clustered
-directly: range-scanning a z-ordered layout touches O(perimeter) extra
-cells vs Hilbert's tighter locality, in exchange for an encode that is
-pure shifts and masks — exact integers end to end, so the oracle is the
-IDENTICAL expression text (no float, no libm, nothing engine-specific).
+(functions/hexgrid.py) and S2 Hilbert (functions/s2.py) — the one most table
+formats implement natively (Iceberg/Delta Z-ORDER clustering). A Morton key
+over quantized (x, y) can serve as the cell column of
+sinks/layout.py::write_clustered: range-scanning a z-ordered layout touches
+O(perimeter) extra cells vs Hilbert's tighter locality, in exchange for an
+encode that is pure shifts and masks — exact integers end to end, so the
+oracle is the IDENTICAL expression text (no float, no libm, nothing
+engine-specific).
 
 Magic-number spreading (the classic "interleave by binary magic numbers"
 from the Stanford bit-twiddling hacks page): each of 5 rounds doubles the
 gap between payload bits. Inputs MUST be non-negative 31-bit ints so the
 interleaved result (62 bits) stays positive in a signed BIGINT in both
-engines — `morton_key` enforces that with a per-row raise_error guard;
-the raw `morton_sql` fragment does NOT (it must stay valid DuckDB), so
-oracle queries quantize inputs into range by construction.
+engines. `morton_sql` does not check that (it must stay valid DuckDB), so
+callers quantize inputs into range by construction.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-MAX_COORD = (1 << 31) - 1
 
 _MASKS = (
     (16, 281470681808895),     # 0x0000FFFF0000FFFF
@@ -47,25 +42,6 @@ def morton_sql(x: str, y: str) -> str:
     """SQL fragment: 62-bit Morton key of two non-negative <=31-bit ints
     (x on even bits, y on odd). Shared verbatim with the DuckDB oracle."""
     return f"({spread_sql(x)} | ({spread_sql(y)} << 1))"
-
-
-def morton_key(x: str, y: str) -> Column:
-    """Column: Morton key of two integer coordinate columns. Pure bitwise
-    ops — whole-stage codegen; feed the result to write_clustered as the
-    cell column for a Z-ORDER-clustered layout.
-
-    Out-of-range coordinates fail the job instead of silently corrupting
-    keys (bit 31 set would flip the sign; bits ≥32 would alias distinct
-    coordinates onto one key)."""
-    guard = (
-        f"{x} >= 0 AND {x} <= {MAX_COORD} AND {y} >= 0 AND {y} <= {MAX_COORD}"
-    )
-    return F.expr(
-        f"CASE WHEN {guard} THEN {morton_sql(x, y)} "
-        f"ELSE raise_error(concat('morton_key: coordinate out of [0, 2^31) "
-        f"range: x=', COALESCE(CAST({x} AS STRING), 'NULL'), "
-        f"' y=', COALESCE(CAST({y} AS STRING), 'NULL'))) END"
-    )
 
 
 def morton_decode(key: int) -> tuple[int, int]:

@@ -27,7 +27,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -169,9 +168,3 @@ def densify_ring(ring: np.ndarray, n_sub: int = 3, amp: float = 0.0) -> np.ndarr
             out.append(a + t * edge + amp * np.sin(2.399963 * k) * perp)
     out.append(r[-1])
     return np.asarray(out)
-
-
-def eps_for_zoom(z: int, z_leaf: int = 16, leaf_eps: float = 0.05) -> float:
-    """LOD schedule: tolerance doubles per zoom level above the leaf —
-    vertex budget tracks on-screen resolution."""
-    return leaf_eps * float(2 ** max(0, z_leaf - z))

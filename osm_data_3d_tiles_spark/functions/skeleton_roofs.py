@@ -272,31 +272,6 @@ def _gabled_skirt(skirt_segments, min_height, height, max_h, rtype, split_progre
     return skirt
 
 
-def find_central_edge(faces, rings: list[np.ndarray], ring_types: list[str]):
-    """The skeleton face whose edge midpoint is nearest the outer-ring vertex
-    centroid (tile3d-multipolygon.ts:213-241 findCentralEdge / ringsCentroid:
-    the centroid there is the arithmetic vertex mean of the first outer ring).
-    Returns (edge_start, edge_end, face) or None."""
-    outers = [np.asarray(r, dtype=np.float64) for r, t in zip(rings, ring_types) if t == "outer"]
-    if not outers or not faces:
-        return None
-    verts = outers[0]
-    centroid = verts.mean(axis=0)
-    best = None
-    best_d = math.inf
-    for face in faces:
-        if not face:
-            continue
-        edge_start = np.array(face[-1][:2])
-        edge_end = np.array(face[0][:2])
-        mid = (edge_start + edge_end) / 2.0
-        d = math.hypot(mid[0] - centroid[0], mid[1] - centroid[1])
-        if d < best_d:
-            best_d = d
-            best = (edge_start, edge_end, face)
-    return best
-
-
 def skeleton_roof(params: dict, rtype: str) -> dict | None:
     faces = _faces_for(params)
     if faces is None:

@@ -145,9 +145,6 @@ def rolling_fingerprint(text: pd.Series, window: int = 8) -> pd.Series:
 # Near-dup machinery: shingles → MinHash / SimHash
 # ---------------------------------------------------------------------------
 
-_MERSENNE = (1 << 61) - 1
-
-
 def _hash64(tokens: list[str]) -> np.ndarray:
     """Stable 64-bit hashes of strings (FNV-1a), vectorizable and platform-stable."""
     out = np.empty(len(tokens), dtype=np.uint64)
@@ -221,12 +218,3 @@ def simhash(text: str, k: int = 3) -> int:
         if votes[i] > 0:
             out |= np.uint64(1) << np.uint64(i)
     return int(np.int64(out.view(np.int64)))
-
-
-def ngram_jaccard(a: str, b: str, k: int = 3) -> float:
-    sa, sb = set(shingles(a, k)), set(shingles(b, k))
-    if not sa and not sb:
-        return 1.0
-    if not sa or not sb:
-        return 0.0
-    return len(sa & sb) / len(sa | sb)

@@ -56,8 +56,7 @@ from ..functions.roofs import build_roof, flat_roof
 from ..functions.walls import build_walls
 from .batch_table import batch_input, tile_batch_table
 
-TERRAIN_MAX_HEIGHT = 0.0  # builder.ts:18-19
-TERRAIN_MIN_HEIGHT = 0.0
+TERRAIN_MIN_HEIGHT = 0.0  # builder.ts:18-19
 
 
 def _normalize_rings(rings_raw, ring_types, offset_x: float, offset_y: float):

@@ -93,37 +93,3 @@ def building_cells(buildings: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
 
 def with_cell_id(df: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
     return df.withColumn("cell", m.cell_id_col(F.col("tile_x"), F.col("tile_y"), z))
-
-
-def extent_predicate(
-    extent: tuple[float, float, float, float],
-    z: int = m.Z_LEAF,
-    x_col: str = "x",
-    y_col: str = "y",
-) -> F.Column:
-    """Project-extent scan predicate (the reference's env-config scan grid,
-    config.ts:4-36 → SURVEY.md §2.1 'extent → cell-range partition pruning').
-
-    A pure min/max comparison on the point columns — Catalyst pushes it into the
-    parquet scan (`PushedFilters`), and on a cell-partitioned table the derived
-    cell range prunes partitions. Apply with `df.filter(extent_predicate(ext))`.
-    """
-    min_x, min_y, max_x, max_y = extent
-    # snap the extent to whole cells so the predicate is exactly the covered
-    # cell range (matches forEachTileCoord's inclusive grid, generate-tileset.ts)
-    min_tx, min_ty, max_tx, max_ty = m.tile_range_for_extent(extent, z)
-    span = m.tile_span(z)
-    cell_min_x = -m.HALF_SIZE + min_tx * span
-    cell_max_x = -m.HALF_SIZE + (max_tx + 1) * span
-    cell_max_y = m.HALF_SIZE - min_ty * span
-    cell_min_y = m.HALF_SIZE - (max_ty + 1) * span
-    # x rows are left-inclusive (floor((x + HALF)/span)), but the y-down mapping
-    # floor((HALF - y)/span) makes tile rows TOP-inclusive/bottom-exclusive, so
-    # the y bounds flip: a point exactly on the snapped top edge is in row
-    # min_ty (keep), one exactly on the bottom edge is in row max_ty+1 (drop)
-    return (
-        (F.col(x_col) >= cell_min_x)
-        & (F.col(x_col) < cell_max_x)
-        & (F.col(y_col) > cell_min_y)
-        & (F.col(y_col) <= cell_max_y)
-    )

@@ -2,9 +2,10 @@
 
 Near-dup pair emitters (`minhash_lsh_pairs`, `ngram_jaccard_exact`,
 `embedding_neardup_pairs`) produce an EDGE LIST; a real dedup pipeline must
-then pick one survivor per *transitive* duplicate cluster (A~B, B~C ⇒ A,B,C
+then group documents into *transitive* duplicate clusters (A~B, B~C ⇒ A,B,C
 are one group even when A≁C). That closure is connected components over the
-pair graph.
+pair graph; the `dedup_clusters` contract query returns each node's cluster
+id, the minimum id in its cluster.
 
 Scale shape (the 100 TB story):
 
@@ -182,25 +183,3 @@ def shared_ngram_pairs(
         .select("a", "b")
         .dropDuplicates(["a", "b"])
     )
-
-
-def cluster_survivors(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Keep exactly one document per transitive duplicate cluster (the min id —
-    deterministic under any partitioning), and every document in no cluster.
-
-    The losers (cluster members that are not the min) are a small fraction of
-    the corpus, so the final left_anti join broadcasts them under AQE; the
-    full documents table is never shuffled.
-    """
-    labels = connected_components(pairs, src=src, dst=dst, max_iter=max_iter)
-    losers = labels.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias(id_col)
-    )
-    return docs.join(losers, id_col, "left_anti")

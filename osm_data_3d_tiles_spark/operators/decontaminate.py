@@ -133,20 +133,3 @@ def contaminated_docs(
         .agg(F.count("*").alias("n_hits"))
         .select(F.col("id").alias(id_col), "n_hits")
     )
-
-
-def decontaminate(
-    docs: DataFrame,
-    reference: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ref_text_col: str = "text",
-    n: int = 3,
-    fpp: float = 0.001,
-    use_bloom: bool = True,
-) -> DataFrame:
-    """The clean training subset: docs minus every contaminated document."""
-    bad = contaminated_docs(
-        docs, reference, id_col, text_col, ref_text_col, n, fpp, use_bloom
-    ).select(id_col)
-    return docs.join(bad, id_col, "left_anti")

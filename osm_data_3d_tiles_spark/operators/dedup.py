@@ -67,12 +67,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def exact_dedup_keep(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """The deduplicated document set itself (rows whose id is the group minimum)."""
-    keep = exact_dedup(docs, id_col, text_col).select(F.col("keep_id").alias(id_col))
-    return docs.join(keep, id_col)
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -125,8 +119,7 @@ def minhash_lsh_pairs(
     pairing. A bucket that hot is mass-duplicated boilerplate (its pairs are
     O(n²)); run `exact_dedup` first so literal duplicates never reach LSH, then
     the cap only ever removes near-identical template floods. Default None (no
-    silent recall cap); opt in at the plan layer, and measure what a cap would
-    drop with `minhash_band_bucket_stats` — same banding, per-bucket sizes."""
+    silent recall cap); opt in at the plan layer."""
     # persisted (registered for `unpersist_all`): the signature stage (the
     # dominant Python CPU cost) feeds three plan branches — banding plus one
     # verify join per pair side — and would otherwise recompute per branch
@@ -190,31 +183,6 @@ def _banded_rows(sigs: DataFrame, bands: int, id_col: str) -> DataFrame:
             yield pd.DataFrame({id_col: ids, "band": bd, "band_hash": bh})
 
     return sigs.mapInPandas(_bands, schema=band_schema)
-
-
-def minhash_band_bucket_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Per-bucket sizes for the exact banding `minhash_lsh_pairs` uses:
-    (band, band_hash, n_members, would_drop). The no-silent-caps companion to
-    the `max_bucket` knob — run it (cheap: one agg over the band rows) to see
-    precisely which buckets a cap would discard and how many members they hold
-    before opting in at the plan layer."""
-    sigs = minhash_signatures(docs, id_col, text_col, num_perm)
-    stats = (
-        _banded_rows(sigs, bands, id_col)
-        .groupBy("band", "band_hash")
-        .agg(F.count("*").alias("n_members"))
-    )
-    dropped = (
-        F.lit(False) if max_bucket is None else (F.col("n_members") > F.lit(max_bucket))
-    )
-    return stats.withColumn("would_drop", dropped)
 
 
 # ---------------------------------------------------------------------------
@@ -332,50 +300,6 @@ def simhash_pairs(
 # ---------------------------------------------------------------------------
 # n-gram Jaccard (exact verify over LSH candidates)
 # ---------------------------------------------------------------------------
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    threshold: float = 0.7,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs: candidates from MinHash LSH (loose
-    threshold), verified with true Jaccard over shingle sets.
-
-    `max_bucket` forwards to the LSH candidate generator. Default None — no
-    silent recall cap — but a template-flood corpus makes an uncapped hot band
-    bucket O(n²) candidate pairs, each joined to its full text here; measure
-    with `minhash_band_bucket_stats` and set the cap at the plan layer for
-    planet-scale runs (run `exact_dedup` first so only near-identical floods
-    are ever affected)."""
-    cand = minhash_lsh_pairs(docs, id_col, text_col, threshold=0.5, max_bucket=max_bucket)
-    texts = docs.select(F.col(id_col), F.col(text_col))
-    pairs = (
-        cand.join(texts.withColumnsRenamed({id_col: "a", text_col: "text_a"}), "a")
-        .join(texts.withColumnsRenamed({id_col: "b", text_col: "text_b"}), "b")
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.LongType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-
-    def _verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            jac = [
-                tx.ngram_jaccard(ta, tb, shingle_k)
-                for ta, tb in zip(pdf["text_a"], pdf["text_b"])
-            ]
-            yield pd.DataFrame({"a": pdf["a"], "b": pdf["b"], "jaccard": jac})
-
-    out = pairs.select("a", "b", "text_a", "text_b").mapInPandas(_verify, schema=schema)
-    return out.filter(F.col("jaccard") >= threshold)
 
 
 def ngram_jaccard_exact(

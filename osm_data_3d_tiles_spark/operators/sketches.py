@@ -142,8 +142,8 @@ def mg_merge(counters: dict, value_counts, capacity: int) -> int:
     """Merge a batch's value_counts into a Misra–Gries counter dict IN
     PLACE, flushing (batched decrement) if the dict exceeds `capacity`.
     Returns the flush threshold t added to the summary's miss bound (0 if
-    no flush fired). Shared by the batch candidate stage below and the
-    streaming per-key state operator (streaming/events.py)."""
+    no flush fired). Shared by the candidate stage below and the per-group
+    pass of `heavy_hitters_by_group`."""
     for item, n in value_counts.items():
         counters[item] = counters.get(item, 0) + int(n)
     if len(counters) <= capacity:

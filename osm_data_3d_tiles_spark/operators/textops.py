@@ -55,12 +55,6 @@ def with_lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return with_min_parallelism(docs).withColumn("predicted_lang", lang_id_udf(F.col(text_col)))
 
 
-def with_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    from ..session import with_min_parallelism
-
-    return with_min_parallelism(docs).withColumn("n_tokens", token_count_udf(F.col(text_col)))
-
-
 def with_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     from ..session import with_min_parallelism
 
@@ -153,22 +147,6 @@ def with_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
         docs.withColumn("n_bigrams", total)
         .withColumn("n_distinct_bigrams", distinct)
         .withColumn("dup_bigram_ratio", ratio)
-    )
-
-
-def quality_filter(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_tokens: int = 5,
-    min_alpha_ratio: float = 0.5,
-    max_punct_ratio: float = 0.3,
-) -> DataFrame:
-    """Drop low-quality documents — the standard pre-training gate."""
-    q = with_quality(docs, text_col)
-    return q.filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("alpha_ratio") >= min_alpha_ratio)
-        & (F.col("punct_ratio") <= max_punct_ratio)
     )
 
 

@@ -1079,8 +1079,8 @@ def build_relational_queries() -> dict:
     )
 
     def sliding(spark, sf_dir):
-        # batch-equivalent of streaming/events.sliding_counts: window 10m,
-        # hop 5m → every event lands in exactly 2 windows
+        # sliding (hopping) windows: window 10m, hop 5m → every event lands
+        # in exactly 2 windows
         ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
             "ts", F.col("ts").cast("timestamp")
         )
@@ -3451,8 +3451,7 @@ def build_rows_only_queries() -> dict:
     def minhash(spark, sf_dir):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         # plan-layer opt-in to the hot-bucket cap (operator default is None so
-        # the cap is never silent); `minhash_band_bucket_stats` measures what
-        # a cap of this size would drop on a given corpus
+        # the cap is never silent)
         return minhash_lsh_pairs(docs, threshold=0.5, max_bucket=10_000)
 
     q["dedup_minhash_lsh"] = minhash

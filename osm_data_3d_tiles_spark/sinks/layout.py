@@ -1,60 +1,16 @@
-"""Bucketed table layout — shuffle-free co-located joins for repeated keys.
+"""Parquet layouts for scale: spatial clustering and small-file compaction.
 
-At 10^12 rows the flagship join itself never shuffles the fact table (the
-buildings-by-cell dimension is broadcast), but everything DOWNSTREAM of the
-join — ownership windows, per-tile construction, batch tables, zonal rollups —
-re-keys on the same tile/cell columns over and over. Persisting the hot tables
-bucketed by that key makes every later equi-join / groupBy on it exchange-free:
-Spark's bucketing contract (`DataFrameWriter.bucketBy` + saveAsTable) records
-the hash-partitioning in the catalog, and the planner drops the Exchange on
-both sides when bucket specs line up (same column, bucket counts equal or an
-integer multiple with `spark.sql.bucketing.coalesceBucketedTableScan.enabled`).
-
-This is the parquet/HMS-catalog equivalent of the Iceberg `bucket(N, col)`
-partition transform the north rule's ingest table would use.
-
-Local caveat baked into the tests: bucketed reads come from the session
-catalog (`spark.table`), not `spark.read.parquet` — a path read has no bucket
-metadata and silently reintroduces the shuffle.
+- `write_clustered` (`cli cluster-layout`) partitions a table by the high
+  bits of a space-filling-curve cell id and sorts each file by the full cell,
+  so a spatial range scan prunes directories and parquet row groups.
+- `compact_layout` (`cli compact`) rewrites a fragmented parquet directory
+  into files of about a target size.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int = 256,
-    sort_cols: list[str] | None = None,
-    path: str | None = None,
-) -> None:
-    """Persist `df` hash-bucketed by `bucket_cols` (optionally sorted within
-    buckets — sorted buckets additionally let sort-merge joins skip the Sort).
-
-    n_buckets sizes the write-side parallelism ceiling for later joins: pick
-    ≈ (table bytes / 256 MB) at the target scale; 256 here is a sandbox-sized
-    stand-in (the cluster value rides spark-submit conf, not code).
-    """
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: list[str]) -> DataFrame:
-    """Join two tables bucketed on `on` as a co-located sort-merge join — the
-    planner drops both shuffle Exchanges (and, with sorted buckets, both
-    Sorts) when the bucket specs match. The MERGE hint pins the SMJ path:
-    below the broadcast threshold the planner would otherwise pick a
-    BroadcastHashJoin and mark the scans `Bucketed: false (disabled by query
-    planner)` — correct, but not the layout being exercised here."""
-    return spark.table(left_table).hint("merge").join(spark.table(right_table), on)
 
 
 def write_clustered(
@@ -74,6 +30,9 @@ def write_clustered(
     parquet-path equivalent of Iceberg's `truncate(cell)` partition
     transform + a sort order on cell.
 
+    A reader must state the prefix bounds itself (`cell >> prefix_shift`):
+    Catalyst does not infer them from a predicate on `cell`.
+
     `prefix_shift` trades directory count against pruning granularity: keep
     distinct prefixes ~ O(10^3-10^4) at the target scale (small-files rule).
     The repartition on cell_prefix means one task owns each directory, so
@@ -87,38 +46,6 @@ def write_clustered(
         .write.mode("overwrite")
         .partitionBy("cell_prefix")
         .parquet(path)
-    )
-
-
-def read_cell_range(
-    spark: SparkSession,
-    path: str,
-    lo: int,
-    hi: int,
-    cell_col: str = "cell",
-    prefix_shift: int = 48,
-) -> DataFrame:
-    """Scan a write_clustered layout for lo <= cell <= hi.
-
-    States BOTH predicates explicitly: the derived prefix bounds (so the
-    partition-column pruning fires — Catalyst does not infer them from the
-    cell predicate) and the exact cell range (pushed to parquet row-group
-    stats). Returns the original schema (cell_prefix dropped).
-    """
-    if lo > hi:
-        raise ValueError(f"empty range: lo {lo} > hi {hi}")
-    if lo < 0 or hi < 0:
-        raise ValueError("cell ids are unsigned-interpreted; need lo, hi >= 0")
-    plo, phi = lo >> prefix_shift, hi >> prefix_shift
-    return (
-        spark.read.parquet(path)
-        .filter(
-            (F.col("cell_prefix") >= plo)
-            & (F.col("cell_prefix") <= phi)
-            & (F.col(cell_col) >= lo)
-            & (F.col(cell_col) <= hi)
-        )
-        .drop("cell_prefix")
     )
 
 

@@ -10,12 +10,13 @@ varint/length-delimited fields only — MVT uses no other wire types) plus a
 (z, x, y, payload:binary) into the engine's buildings schema, with geometry
 already projected to EPSG:3857 the way OpenLayers' `featureProjection` does.
 
-Scale shape: tile payloads are opaque binary rows — they arrive via
-`spark.read.format("binaryFile")` or any parquet/iceberg table of blobs, decode
-happens Arrow-batched on executors (one Python stage, no shuffle), and the
-output is immediately partitionable by the same cell keys as the fixture
-tables. An MVT encoder is included for round-trip tests and for emitting
-vector tiles as a sink.
+Scale shape: tile payloads are opaque binary rows. `read_pbf_dir` (`cli
+ingest-mvt`) reads them from a `{z}/{x}/{y}.pbf` directory tree with
+`spark.read.format("binaryFile")`; any parquet table of blobs serves as well.
+This engine fetches nothing over HTTP. Decode happens Arrow-batched on
+executors (one Python stage, no shuffle), and the output is immediately
+partitionable by the same cell keys as the fixture tables. An MVT encoder is
+included for round-trip tests and for emitting vector tiles as a sink.
 """
 
 from __future__ import annotations
@@ -98,7 +99,7 @@ def _zigzag_encode(v: int) -> int:
 # extent=5 version=15; Feature id=1 tags=2 type=3 geometry=4)
 # ---------------------------------------------------------------------------
 
-GEOM_POINT, GEOM_LINESTRING, GEOM_POLYGON = 1, 2, 3
+GEOM_POLYGON = 3  # MVT GeomType: 1 point, 2 linestring, 3 polygon
 
 
 def _decode_value(buf: bytes):
@@ -344,7 +345,7 @@ def mvt_tiles_to_buildings(tiles: DataFrame, layer: str = "buildings") -> DataFr
             for z, tx, ty, payload in zip(
                 pdf["tile_z"], pdf["tile_x"], pdf["tile_y"], pdf["payload"]
             ):
-                if payload is None:  # fetch_pbf_tiles(on_error="null") dead tile
+                if payload is None:  # a caller's table may hold null payloads
                     continue
                 for lyr in decode_mvt(bytes(payload)):
                     for feat in lyr["features"]:
@@ -383,91 +384,6 @@ def mvt_tiles_to_buildings(tiles: DataFrame, layer: str = "buildings") -> DataFr
 
     return tiles.select("tile_z", "tile_x", "tile_y", "payload").mapInPandas(
         _decode, schema=MVT_BUILDINGS_SCHEMA
-    )
-
-
-def _default_transport(url: str, timeout: float = 10.0) -> tuple[int, bytes]:
-    """(status, body) via stdlib urllib; 4xx/5xx surface as their status code."""
-    import urllib.error
-    import urllib.request
-
-    try:
-        with urllib.request.urlopen(url, timeout=timeout) as r:
-            return r.status, r.read()
-    except urllib.error.HTTPError as e:
-        return e.code, b""
-
-
-def fetch_pbf_tiles(
-    tile_coords: DataFrame,
-    base_url: str,
-    retries: int = 3,
-    delay: float = 2.0,
-    transport=None,
-    on_error: str = "fail",
-) -> DataFrame:
-    """tile_coords(tile_z, tile_x, tile_y) → (tile_z, tile_x, tile_y, payload)
-    fetched from `{base_url}/{z}/{x}/{y}.pbf` on the EXECUTORS — the live-server
-    counterpart of `read_pbf_dir`, feeding the same `mvt_tiles_to_buildings`.
-
-    Mirrors the reference's fetchWithRetry + URL template
-    (/root/reference/src/b3dmGenerator.ts:25-37,95): non-2xx → retry after a
-    constant `delay` seconds, `retries` times, then fail (`on_error="fail"`) or
-    degrade to a null payload for that tile (`on_error="null"` — one dead tile
-    doesn't kill a planet-scale ingest; downstream drops null payloads).
-
-    `transport(url) -> (status, bytes)` is injectable for tests and for cluster
-    deployments that need auth headers/sessions. Fetch concurrency = the
-    DataFrame's partition count — `repartition(n)` the coords to match what the
-    tile server can sustain; each partition fetches serially."""
-    if on_error not in ("fail", "null"):
-        raise ValueError(f"on_error must be 'fail' or 'null', got {on_error!r}")
-    tx = transport or _default_transport
-    base = base_url.rstrip("/")
-
-    schema = T.StructType(
-        [
-            T.StructField("tile_z", T.IntegerType()),
-            T.StructField("tile_x", T.LongType()),
-            T.StructField("tile_y", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-
-        for pdf in batches:
-            payloads = []
-            for z, x, y in zip(pdf["tile_z"], pdf["tile_x"], pdf["tile_y"]):
-                url = f"{base}/{int(z)}/{int(x)}/{int(y)}.pbf"
-                body = None
-                for attempt in range(retries + 1):
-                    try:
-                        status, data = tx(url)
-                        if 200 <= status < 300:
-                            body = bytes(data)
-                            break
-                        raise OSError(f"HTTP error {status}")
-                    except Exception:
-                        if attempt == retries:
-                            if on_error == "fail":
-                                raise
-                            body = None
-                        else:
-                            _time.sleep(delay)
-                payloads.append(body)
-            yield pd.DataFrame(
-                {
-                    "tile_z": pdf["tile_z"].astype("int32"),
-                    "tile_x": pdf["tile_x"].astype("int64"),
-                    "tile_y": pdf["tile_y"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    return tile_coords.select("tile_z", "tile_x", "tile_y").mapInPandas(
-        _fetch, schema=schema
     )
 
 

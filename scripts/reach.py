@@ -10,14 +10,17 @@ Roots, the program's real entry points:
 
 From the roots the walk follows imports transitively, function-local (lazy)
 ones included, and the names that reached code refers to. A top-level `def`
-or `class` is reached when reached code names it: directly, through an import
-alias, or as an attribute of an imported module. A reached class counts as a
-whole, its methods included. Importing a module runs its top-level
-statements, so those are followed too, and so is a module named in a string
-(`session.py` names `_worker_daemon` for `spark.python.daemon.module`).
+or `class`, or a module-level constant (a name a top-level assignment binds,
+dunders aside), is reached when reached code reads it: directly, through an
+import alias, or as an attribute of an imported module. A reached class
+counts as a whole, its methods included. Importing a module runs its
+top-level statements, so every name those statements read is followed too,
+and so is a module named in a string (`session.py` names `_worker_daemon`
+for `spark.python.daemon.module`). Binding a name is not reading it: an
+assignment alone reaches nothing.
 
 The walk reads the source with `ast` and calls nothing. It is name-based and
-errs towards "reached": a local variable that shares a top-level name keeps
+errs towards "reached": a local variable read under a top-level name keeps
 that definition alive. It cannot see inside a reached function either: a
 format or mode branch of a dispatcher that is reached (`decode_image_real`,
 `pack_glb`) always counts as reached. Such branches are judged by the
@@ -25,11 +28,12 @@ payloads the contract fixtures feed; the image decode table is pinned by
 `tests/test_operators.py::TestUnsupportedImageFormats` and the three
 `*_decode_stats` contract queries.
 
-Every top-level package `def`/`class` the roots do not reach is listed, with
-whether `tests/` reaches it. `scripts/reach_allowlist.txt` classifies each,
-one per line as `<module>.<name> | <class> | <reason>`:
-- `reference`: a test compares reached code against it;
-- `dead: queued`: a later deletion removes it.
+Every top-level package definition the roots do not reach is listed, with
+whether `tests/` reaches it. `scripts/reach_allowlist.txt` must name each,
+one per line as `<module>.<name> | reference | <reason>`: a test compares
+reached code against it, or it serves such reference code. There is no
+other class; code that nothing reaches and no test compares against is
+deleted, not queued.
 
     python scripts/reach.py
 
@@ -48,7 +52,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "osm_data_3d_tiles_spark"
 ALLOWLIST = "scripts/reach_allowlist.txt"
-CLASSES = ("reference", "dead: queued")
+CLASSES = ("reference",)
 _DOTTED = re.compile(r"\.?[A-Za-z_]\w*(\.[A-Za-z_]\w*)*")
 
 
@@ -73,11 +77,16 @@ def import_target(module: str, is_package: bool, node: ast.ImportFrom) -> str:
 class Module:
     def __init__(self, name: str, is_package: bool, tree: ast.Module):
         self.name, self.is_package, self.tree = name, is_package, tree
-        self.defs: dict[str, ast.AST] = {
-            s.name: s
-            for s in tree.body
-            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        }
+        self.defs: dict[str, ast.AST] = {}
+        for s in tree.body:
+            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                self.defs[s.name] = s
+            elif isinstance(s, (ast.Assign, ast.AnnAssign)):
+                targets = s.targets if isinstance(s, ast.Assign) else [s.target]
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                            self.defs[n.id] = s
         # alias -> (module, name); name None when the alias is the module itself
         self.aliases: dict[str, tuple[str, str | None]] = {}
 
@@ -209,7 +218,7 @@ class Audit:
                         hit = self._resolve(target, a.name)
                         if hit:
                             out.append(hit)
-            elif isinstance(n, ast.Name):
+            elif isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
                 hit = lookup(n.id)
                 if hit:
                     out.append(hit)

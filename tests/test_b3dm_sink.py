@@ -1,10 +1,8 @@
-"""B3DM sink + tile-server fixture tests (SURVEY.md §5.6): glb/b3dm byte layout,
-seed materialization over fixture buildings, and the reference server's
-400/404/200 routing semantics against the seeded directory."""
+"""B3DM sink tests (SURVEY.md §5.6): glb/b3dm byte layout, seed
+materialization over fixture buildings, and the quantized mesh path."""
 
 from __future__ import annotations
 
-import http.client
 import json
 import os
 import re
@@ -27,7 +25,6 @@ from osm_data_3d_tiles_spark.sinks.b3dm import (
     seed_tiles,
     tile_writer,
 )
-from osm_data_3d_tiles_spark.sinks.serve_fixture import TileServerFixture
 from osm_data_3d_tiles_spark.sources import fixtures as fx
 
 
@@ -221,35 +218,6 @@ class TestSeedPath:
             root = json.load(f)
         assert root["root"]["geometricError"] == 512
         assert root["root"]["refine"] == "ADD"
-
-
-class TestTileServerFixture:
-    def test_status_semantics(self, seeded_dir):
-        some_tile = sorted(os.listdir(os.path.join(seeded_dir, "b3dm")))[0]
-        with TileServerFixture(seeded_dir) as srv:
-            def get(path):
-                conn = http.client.HTTPConnection("127.0.0.1", srv.port, timeout=10)
-                conn.request("GET", path)
-                r = conn.getresponse()
-                body = r.read()
-                conn.close()
-                return r.status, body
-
-            # 400: wrong extension / wrong coord arity (serve.ts:37-66)
-            assert get("/hello.txt")[0] == 400
-            assert get("/1_2.b3dm")[0] == 400
-            assert get("/1_2_3_4.b3dm")[0] == 400
-            # 404: missing json + missing tile
-            st, body = get("/nope.json")
-            assert st == 404 and json.loads(body) == {"error": "File not found"}
-            assert get("/99_0_0.b3dm")[0] == 404
-            # 200: real tile bytes parse as b3dm; subtiles/ prefix stripped
-            st, body = get(f"/{some_tile}")
-            assert st == 200 and parse_b3dm(body)["feature_table"]["BATCH_LENGTH"] >= 1
-            assert get(f"/subtiles/{some_tile}")[0] == 200
-            # 200: tileset.json served as JSON
-            st, body = get("/tileset.json")
-            assert st == 200 and json.loads(body)["root"]["refine"] == "ADD"
 
 
 class TestQuantizedGlb:

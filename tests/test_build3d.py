@@ -398,19 +398,6 @@ class TestDirectionSnap:
         assert not np.array_equal(o0, o90)
 
 
-class TestFindCentralEdge:
-    def test_rect_central_edge_is_long_side(self):
-        from osm_data_3d_tiles_spark.functions.skeleton import straight_skeleton
-        from osm_data_3d_tiles_spark.functions.skeleton_roofs import find_central_edge
-
-        faces = straight_skeleton(RECT[:-1])
-        hit = find_central_edge(faces, [RECT], ["outer"])
-        assert hit is not None
-        a, b, _face = hit
-        # the centroid (10,5) is nearest to a long-side midpoint (10,0)/(10,10)
-        assert np.linalg.norm(b - a) == pytest.approx(20.0)
-
-
 class TestWalls:
     def test_quad_structure(self):
         w = walls.build_walls(SQUARE, 0.0, 12.0, 3.0, 6.0, 13, 13)
@@ -678,7 +665,7 @@ class TestBuildSingleBuilding:
 class TestMaxRectsPacker:
     """Round-4: the REAL bin-packing (MaxRects BestShortSideFit, the
     free-tex-packer-core heuristic the reference ran) over the building
-    texture set, plus the checked-in deterministic PNG source tiles."""
+    texture set, plus the PNG decoder's scanline filters."""
 
     REF_FRAMES = {
         # /root/reference/assets/textures/packed/diffuse.json (committed
@@ -741,39 +728,15 @@ class TestMaxRectsPacker:
             assert key not in seen, f"UV collision at {path}"
             seen.add(key)
 
-    def test_checked_in_sources_build_full_atlas(self, tmp_path):
-        import numpy as np
-
-        from osm_data_3d_tiles_spark.functions.atlas import (
-            build_packed_atlas,
-            read_png,
-        )
-
-        out = str(tmp_path / "diffuse.png")
-        img, frames = build_packed_atlas("assets/textures", out_png=out)
-        assert img.shape == (2580, 2580, 4) and len(frames) == 14
-        # decode-reencode round trip
-        assert np.array_equal(read_png(out), img)
-        # content: each frame is the nearest-neighbor upscale of its source
-        p = "assets/textures/buildings/roofs/tiles_diffuse.png"
-        x, y, w, h = frames[p]
-        src = read_png("assets/textures/roofs__tiles_diffuse.png")
-        iy = (np.arange(h) * src.shape[0]) // h
-        ix = (np.arange(w) * src.shape[1]) // w
-        assert np.array_equal(img[y : y + h, x : x + w], src[iy][:, ix])
-        # 2px edge extrusion ring (free-tex-packer extrude semantics)
-        assert np.array_equal(img[y - 1, x : x + w], img[y, x : x + w])
-        assert np.array_equal(img[y : y + h, x - 2], img[y : y + h, x])
-
-    def test_png_reader_handles_filtered_scanlines(self, tmp_path):
-        """read_png supports filters 0-4 (our encoder emits 0; foreign PNGs
+    def test_png_reader_handles_filtered_scanlines(self):
+        """decode_png supports filters 0-4 (our encoder emits 0; foreign PNGs
         may use any) — synthesize each filter type and decode."""
         import struct
         import zlib
 
         import numpy as np
 
-        from osm_data_3d_tiles_spark.functions.atlas import _png_chunk, read_png
+        from osm_data_3d_tiles_spark.functions.atlas import _png_chunk, decode_png
 
         rng = np.random.RandomState(7)
         img = rng.randint(0, 256, size=(6, 5, 4), dtype=np.uint8)
@@ -813,7 +776,4 @@ class TestMaxRectsPacker:
                 + _png_chunk(b"IEND", b"")
             )
 
-        p = str(tmp_path / "f.png")
-        with open(p, "wb") as f:
-            f.write(encode([0, 1, 2, 3, 4]))
-        assert np.array_equal(read_png(p), img)
+        assert np.array_equal(decode_png(encode([0, 1, 2, 3, 4])), img)

@@ -4,10 +4,12 @@ scripts/submit_job.py) run from a foreign cwd with no PYTHONPATH."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
 
+import pyarrow.parquet as pq
 import pytest
 from test_entry_contract import SF_DIR
 
@@ -102,16 +104,26 @@ def test_compact_command(spark, tmp_path, capsys):
 def test_cluster_layout_command(spark, tmp_path, capsys):
     src = str(tmp_path / "cells_src")
     out = str(tmp_path / "cells_clustered")
+    # the low bits are a permutation of the ids, so the input is not already
+    # in cell order inside a prefix and only the layout's own sort orders it
     spark.range(0, 4000).selectExpr(
-        "shiftleft(id % 8, 48) | id as cell", "id as doc_id"
+        "shiftleft(id % 8, 48) | (id * 7919 % 4000) as cell", "id as doc_id"
     ).write.parquet(src)
     rc = main(["cluster-layout", "--src", src, "--out", out,
                "--cell-col", "cell", "--prefix-shift", "48"])
     assert rc == 0
     got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert got["rows"] == 4000
-    import glob
     assert len(glob.glob(f"{out}/cell_prefix=*")) == 8
+    # a plain path read gives back exactly the input rows
+    rows = lambda df: {(r.cell, r.doc_id) for r in df.select("cell", "doc_id").collect()}
+    assert rows(spark.read.parquet(out)) == rows(spark.read.parquet(src))
+    # row-group pruning on `cell` needs each part file sorted by it
+    parts = glob.glob(f"{out}/cell_prefix=*/*.parquet")
+    assert parts
+    for part in parts:
+        cells = pq.read_table(part, columns=["cell"]).column("cell").to_pylist()
+        assert cells == sorted(cells), part
 
 
 def test_sql_command(spark, capsys):

@@ -4,7 +4,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from osm_data_3d_tiles_spark.operators.components import (
-    cluster_survivors,
     connected_components,
     shared_ngram_pairs,
 )
@@ -93,32 +92,6 @@ class TestSharedNgramPairs:
     def test_short_docs_produce_no_grams(self, spark):
         df = spark.createDataFrame([(0, "too short"), (1, "too short")], ["doc_id", "text"])
         assert shared_ngram_pairs(df, n=5).count() == 0
-
-
-class TestClusterSurvivors:
-    def test_keeps_min_per_cluster_and_isolates(self, spark):
-        docs = spark.range(10).select(F.col("id").alias("doc_id"), F.lit("t").alias("text"))
-        # clusters {1,2,3} (transitively: 1-2, 2-3) and {7,8}; rest isolated
-        pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["a", "b"])
-        kept = sorted(
-            cluster_survivors(docs, pairs).select("doc_id").toPandas()["doc_id"].tolist()
-        )
-        assert kept == [0, 1, 4, 5, 6, 7, 9]
-
-    def test_end_to_end_over_shared_grams(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (10, "alpha beta gamma delta epsilon zeta"),
-                (11, "alpha beta gamma delta epsilon eta"),  # shares 5-gram with 10
-                (12, "unrelated text goes right here now"),
-            ],
-            ["doc_id", "text"],
-        )
-        pairs = shared_ngram_pairs(docs, n=5)
-        kept = sorted(
-            cluster_survivors(docs, pairs).select("doc_id").toPandas()["doc_id"].tolist()
-        )
-        assert kept == [10, 12]
 
 
 class TestIterativeEdgePlans:

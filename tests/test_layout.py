@@ -1,117 +1,7 @@
-"""Bucketed-layout tests: the co-located join must be exchange-free and equal
-to the plain-join result; a path read (no bucket metadata) must NOT be."""
+"""Small-files compaction tests: `compact_layout` merges fragments into
+target-size files and keeps every row."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from osm_data_3d_tiles_spark.sinks.layout import bucketed_join, write_bucketed
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, tmp_path_factory):
-    wh = tmp_path_factory.mktemp("wh")
-    left = spark.range(0, 10_000).select(
-        F.col("id").alias("cell"), (F.col("id") % 97).alias("a_val")
-    )
-    right = spark.range(0, 10_000, 2).select(
-        F.col("id").alias("cell"), (F.col("id") % 89).alias("b_val")
-    )
-    write_bucketed(left, "t_left", ["cell"], n_buckets=8, sort_cols=["cell"],
-                   path=str(wh / "t_left"))
-    write_bucketed(right, "t_right", ["cell"], n_buckets=8, sort_cols=["cell"],
-                   path=str(wh / "t_right"))
-    return left, right
-
-
-class TestBucketedLayout:
-    def test_join_is_exchange_free_and_correct(self, spark, bucketed_tables):
-        left, right = bucketed_tables
-        joined = bucketed_join(spark, "t_left", "t_right", ["cell"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed join must not shuffle:\n{plan}"
-        assert "SortMergeJoin" in plan and "Bucketed: true" in plan
-        want = left.join(right, "cell").count()
-        assert joined.count() == want == 5_000
-
-    def test_groupby_on_bucket_key_is_exchange_free(self, spark, bucketed_tables):
-        agg = spark.table("t_left").groupBy("cell").agg(F.sum("a_val").alias("s"))
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        assert agg.count() == 10_000
-
-    def test_path_read_loses_bucketing(self, spark, bucketed_tables, tmp_path):
-        """Reading the same files by path has no bucket metadata — the join
-        plans an Exchange again. Pinned so nobody 'simplifies' the catalog
-        read away."""
-        loc = (
-            spark.sql("DESCRIBE TABLE EXTENDED t_left")
-            .filter(F.col("col_name") == "Location")
-            .first()["data_type"]
-        )
-        by_path = spark.read.parquet(loc)
-        joined = by_path.join(spark.table("t_right"), "cell")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan
-
-
-class TestClusteredLayout:
-    @pytest.fixture(scope="class")
-    def clustered(self, spark, tmp_path_factory):
-        from osm_data_3d_tiles_spark.sinks.layout import write_clustered
-
-        # 64-bit SFC-style ids: 40 distinct prefixes at shift 48, ids
-        # scattered within each prefix block
-        df = spark.range(0, 8_000).select(
-            F.expr(
-                "shiftleft(id % 40, 48) | ((id * 2654435761) % 1048576)"
-            ).alias("cell"),
-            F.col("id").alias("doc_id"),
-        )
-        path = str(tmp_path_factory.mktemp("clustered") / "cells")
-        write_clustered(df, path, "cell", prefix_shift=48)
-        return df, path
-
-    def test_range_scan_parity(self, spark, clustered):
-        from osm_data_3d_tiles_spark.sinks.layout import read_cell_range
-
-        df, path = clustered
-        lo, hi = 3 << 48, (6 << 48) - 1
-        got = read_cell_range(spark, path, lo, hi, "cell", prefix_shift=48)
-        want = df.filter((F.col("cell") >= lo) & (F.col("cell") <= hi))
-        assert sorted(got.columns) == sorted(df.columns)
-        assert {(r.cell, r.doc_id) for r in got.collect()} == {
-            (r.cell, r.doc_id) for r in want.collect()
-        }
-
-    def test_partition_and_rowgroup_pruning(self, spark, clustered):
-        from osm_data_3d_tiles_spark.sinks.layout import read_cell_range
-
-        _, path = clustered
-        lo, hi = 3 << 48, (6 << 48) - 1
-        scan = read_cell_range(spark, path, lo, hi, "cell", prefix_shift=48)
-        plan = scan._jdf.queryExecution().executedPlan().toString()
-        # directory pruning fired on the partition column...
-        assert "cell_prefix" in plan and "PartitionFilters" in plan
-        # ...and the exact range reached the parquet reader's stats filter
-        assert "PushedFilters" in plan and "GreaterThanOrEqual(cell" in plan
-        # only the 3 matching prefix directories are ever touched
-        files = {r[0] for r in scan.select(F.input_file_name()).distinct().collect()}
-        assert files and all(
-            f"cell_prefix={p}/" in f for f in files for p in (3, 4, 5) if f"cell_prefix={p}/" in f
-        )
-        touched_prefixes = {f.split("cell_prefix=")[1].split("/")[0] for f in files}
-        assert touched_prefixes <= {"3", "4", "5"}
-
-    def test_bad_range_raises(self, spark, clustered):
-        from osm_data_3d_tiles_spark.sinks.layout import read_cell_range
-
-        _, path = clustered
-        with pytest.raises(ValueError, match="empty range"):
-            read_cell_range(spark, path, 10, 5)
-        with pytest.raises(ValueError, match="unsigned"):
-            read_cell_range(spark, path, -1, 5)
 
 
 class TestCompaction:

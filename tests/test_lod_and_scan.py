@@ -1,15 +1,10 @@
-"""Tests for heat-map LOD thinning, populate_with_points, and the extent scan
-predicate (pushdown visible in the physical plan)."""
+"""Tests for heat-map LOD thinning: per-cell survivor counts and the z16
+tile-size constant."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from osm_data_3d_tiles_spark.functions import geometry as g
-from osm_data_3d_tiles_spark.functions import mercator as m
-from osm_data_3d_tiles_spark.operators.cells import extent_predicate
 from osm_data_3d_tiles_spark.operators.lod import TILE_SIZE, lod_thinning
 
 
@@ -29,77 +24,3 @@ class TestLodThinning:
 
     def test_tile_size_is_z16_span(self):
         assert TILE_SIZE == pytest.approx(611.4962158203125)  # the :535 constant
-
-
-class TestPopulateWithPoints:
-    SQUARE = np.array([[0, 0], [100, 0], [100, 100], [0, 100], [0, 0]], float)
-
-    def test_points_inside_and_deterministic(self):
-        pts1 = g.populate_with_points([self.SQUARE], ["outer"], 8, 100.0, seed=7)
-        pts2 = g.populate_with_points([self.SQUARE], ["outer"], 8, 100.0, seed=7)
-        assert len(pts1) > 0
-        assert np.array_equal(pts1, pts2)
-        assert g.points_in_ring(pts1, self.SQUARE).all()
-
-    def test_hole_excluded(self):
-        hole = np.array([[40, 40], [40, 60], [60, 60], [60, 40], [40, 40]], float)
-        pts = g.populate_with_points([self.SQUARE, hole], ["outer", "inner"], 8, 100.0)
-        assert len(pts) > 0
-        assert not g.points_in_ring(pts, hole).any()
-
-    def test_seed_changes_jitter(self):
-        a = g.populate_with_points([self.SQUARE], ["outer"], 8, 100.0, seed=1)
-        b = g.populate_with_points([self.SQUARE], ["outer"], 8, 100.0, seed=2)
-        assert not np.array_equal(a, b)
-
-
-class TestExtentPredicate:
-    def test_filters_rows(self, spark, tmp_path):
-        ext = m.tile_extent(12, 2103, 1461)
-        span = m.tile_span(16)
-        inside = ((ext[0] + ext[2]) / 2, (ext[1] + ext[3]) / 2)
-        outside = (ext[2] + 10 * span, ext[3] + 10 * span)
-        df = spark.createDataFrame(
-            [(1, *inside), (2, *outside)], ["id", "x", "y"]
-        )
-        kept = df.filter(extent_predicate(ext)).select("id").collect()
-        assert [r.id for r in kept] == [1]
-
-    def test_edge_inclusivity_matches_tile_mapping(self, spark):
-        """A point exactly on the snapped top edge belongs to tile row min_ty
-        (keep); one exactly on the bottom edge is in row max_ty+1 (drop) —
-        the predicate must agree with floor((HALF−y)/span) row assignment."""
-        ext = m.tile_extent(12, 2103, 1461)
-        min_tx, min_ty, max_tx, max_ty = m.tile_range_for_extent(ext, 16)
-        span = m.tile_span(16)
-        top_edge_y = m.HALF_SIZE - min_ty * span
-        bottom_edge_y = m.HALF_SIZE - (max_ty + 1) * span
-        left_edge_x = -m.HALF_SIZE + min_tx * span
-        right_edge_x = -m.HALF_SIZE + (max_tx + 1) * span
-        mid_x = (left_edge_x + right_edge_x) / 2
-        mid_y = (top_edge_y + bottom_edge_y) / 2
-        df = spark.createDataFrame(
-            [
-                (1, mid_x, top_edge_y),     # top edge → row min_ty → keep
-                (2, mid_x, bottom_edge_y),  # bottom edge → row max_ty+1 → drop
-                (3, left_edge_x, mid_y),    # left edge → col min_tx → keep
-                (4, right_edge_x, mid_y),   # right edge → col max_tx+1 → drop
-            ],
-            ["id", "x", "y"],
-        )
-        kept = sorted(r.id for r in df.filter(extent_predicate(ext)).select("id").collect())
-        assert kept == [1, 3]
-
-    def test_pushdown_reaches_scan(self, spark, tmp_path):
-        ext = m.tile_extent(12, 2103, 1461)
-        path = str(tmp_path / "pts.parquet")
-        spark.range(100).select(
-            F.col("id"),
-            (F.lit(ext[0]) + F.col("id") * 1000.0).alias("x"),
-            (F.lit(ext[1]) + F.col("id") * 1000.0).alias("y"),
-        ).write.parquet(path)
-        scan = spark.read.parquet(path).filter(extent_predicate(ext))
-        plan = scan._jdf.queryExecution().executedPlan().toString()
-        # the plan string elides long filter lists — presence of the pushed
-        # x-range bound proves the predicate reached the parquet scan
-        assert "PushedFilters: [IsNotNull(x), IsNotNull(y), GreaterThanOrEqual(x" in plan

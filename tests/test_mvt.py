@@ -5,20 +5,15 @@ and the flagship spatial join running end-to-end on MVT-ingested buildings."""
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
-from http.server import SimpleHTTPRequestHandler, ThreadingHTTPServer
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from osm_data_3d_tiles_spark.functions import mercator as m
 from osm_data_3d_tiles_spark.operators.spatial_join import spatial_join
 from osm_data_3d_tiles_spark.sources.mvt import (
     decode_mvt,
     encode_mvt,
-    fetch_pbf_tiles,
     mvt_tiles_to_buildings,
     read_pbf_dir,
 )
@@ -141,84 +136,3 @@ class TestFixtureTile:
         )
         got = spatial_join(pts, blds).toPandas()
         assert set(zip(got["url"], got["osm_id"])) == {("in-1", 900001)}
-
-
-class _FlakyPbfHandler(SimpleHTTPRequestHandler):
-    """Serves the fixture dir; fails each path its first `fail_first` times with
-    a 503 so the client's retry loop is exercised end-to-end."""
-
-    fail_first = 0
-    hits: dict = {}
-
-    def log_message(self, *args):
-        pass
-
-    def do_GET(self):
-        n = self.hits.get(self.path, 0)
-        self.hits[self.path] = n + 1
-        if n < self.fail_first:
-            self.send_response(503)
-            self.end_headers()
-            return
-        super().do_GET()
-
-
-@contextmanager
-def _pbf_server(fail_first: int = 0):
-    handler = type(
-        "H", (_FlakyPbfHandler,),
-        {"fail_first": fail_first, "hits": {},
-         "directory": FIXTURE_DIR},
-    )
-    # SimpleHTTPRequestHandler.directory is per-instance in 3.9+; bind via partial
-    import functools
-
-    srv = ThreadingHTTPServer(
-        ("127.0.0.1", 0), functools.partial(handler, directory=FIXTURE_DIR)
-    )
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    try:
-        yield f"http://127.0.0.1:{srv.server_address[1]}"
-    finally:
-        srv.shutdown()
-        srv.server_close()
-
-
-class TestHttpFetch:
-    def test_fetch_decodes_like_disk_read(self, spark):
-        """Live-server ingest parity: fetch_pbf_tiles over HTTP must yield the
-        same buildings as read_pbf_dir over the same fixture tree, and feed the
-        flagship join identically."""
-        coords = spark.createDataFrame([(16, 33650, 23378)], ["tile_z", "tile_x", "tile_y"])
-        with _pbf_server() as base:
-            fetched = fetch_pbf_tiles(coords, base, delay=0.05)
-            blds = mvt_tiles_to_buildings(fetched, layer="buildings").toPandas()
-        assert sorted(blds["osm_id"]) == [900001, 900002]
-        disk = mvt_tiles_to_buildings(
-            read_pbf_dir(spark, FIXTURE_DIR), layer="buildings"
-        ).toPandas()
-        key = lambda df: (
-            df.sort_values("osm_id")[["osm_id", "height", "levels"]]
-            .fillna(-1.0).values.tolist()
-        )
-        assert key(blds) == key(disk)
-
-    def test_fetch_retries_transient_errors(self, spark):
-        # server 503s each path twice; 3 retries (reference default) must recover
-        coords = spark.createDataFrame([(16, 33650, 23378)], ["tile_z", "tile_x", "tile_y"])
-        with _pbf_server(fail_first=2) as base:
-            out = fetch_pbf_tiles(coords, base, retries=3, delay=0.05).toPandas()
-        assert len(out) == 1 and out["payload"][0] is not None
-
-    def test_fetch_missing_tile_null_vs_fail(self, spark):
-        coords = spark.createDataFrame(
-            [(16, 33650, 23378), (16, 1, 1)], ["tile_z", "tile_x", "tile_y"]
-        )
-        with _pbf_server() as base:
-            out = fetch_pbf_tiles(coords, base, retries=0, delay=0.0, on_error="null").toPandas()
-            ok = out.set_index("tile_x")
-            assert ok.loc[33650, "payload"] is not None
-            assert ok.loc[1, "payload"] is None
-            with pytest.raises(Exception):
-                fetch_pbf_tiles(coords, base, retries=0, delay=0.0, on_error="fail").toPandas()

@@ -1,6 +1,6 @@
 """Webtext operator tests: dedup family, similarity search, text analysis,
-multimodal plumbing, streaming shapes — run on the driver-provided documents /
-embeddings / events tables at sf0.001 plus small synthetic frames."""
+multimodal plumbing — run on the driver-provided documents / embeddings
+tables at sf0.001 plus small synthetic frames."""
 
 import struct
 
@@ -13,10 +13,8 @@ from osm_data_3d_tiles_spark.functions import text as tx
 from osm_data_3d_tiles_spark.operators.dedup import (
     embedding_neardup_pairs,
     exact_dedup,
-    exact_dedup_keep,
     minhash_lsh_pairs,
     ngram_jaccard_exact,
-    ngram_jaccard_pairs,
     simhash_pairs,
     simhash_pairs_from_signatures,
 )
@@ -26,13 +24,10 @@ from osm_data_3d_tiles_spark.operators.multimodal import (
 )
 from osm_data_3d_tiles_spark.operators.similarity import ann_bruteforce_topk, ann_ivf_topk
 from osm_data_3d_tiles_spark.operators.textops import (
-    quality_filter,
     with_fingerprint,
     with_lang_id,
     with_quality,
-    with_token_count,
 )
-from osm_data_3d_tiles_spark.streaming.events import sessionize, tumbling_counts
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -45,11 +40,6 @@ def documents(spark):
 @pytest.fixture(scope="module")
 def embeddings(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-
-
-@pytest.fixture(scope="module")
-def events(spark):
-    return spark.read.parquet(f"{SF_DIR}/events.parquet")
 
 
 @pytest.fixture(scope="module")
@@ -71,16 +61,6 @@ class TestExactDedup:
         assert out["dup_count"].sum() == 5
         assert (out[out["dup_count"] == 2]["keep_id"] == 1001).all()
 
-    def test_keep_set(self, dup_docs):
-        kept = exact_dedup_keep(dup_docs).toPandas()
-        assert set(kept["doc_id"]) == {1001, 1003, 1004, 1005}
-
-    def test_on_real_documents(self, documents):
-        n = documents.count()
-        kept = exact_dedup_keep(documents).count()
-        assert 0 < kept <= n
-
-
 class TestNearDedup:
     def test_minhash_finds_planted_pair(self, dup_docs):
         pairs = minhash_lsh_pairs(dup_docs, threshold=0.6).toPandas()
@@ -96,18 +76,6 @@ class TestNearDedup:
         ham = pairs.set_index(["a", "b"])["hamming"]
         assert ham.loc[(1001, 1002)] == 0
 
-    def test_bucket_stats_report_what_a_cap_drops(self, dup_docs):
-        from osm_data_3d_tiles_spark.operators.dedup import minhash_band_bucket_stats
-
-        stats = minhash_band_bucket_stats(dup_docs, max_bucket=1).toPandas()
-        # the planted exact duplicates share every band bucket → n_members >= 2
-        # there, flagged as dropped under a cap of 1
-        assert (stats["n_members"] >= 1).all()
-        assert stats["would_drop"].eq(stats["n_members"] > 1).all()
-        assert stats["would_drop"].any()
-        uncapped = minhash_band_bucket_stats(dup_docs, max_bucket=None).toPandas()
-        assert not uncapped["would_drop"].any()
-
     def test_unpersist_all_releases_registered_caches(self, spark, dup_docs):
         from osm_data_3d_tiles_spark.operators import dedup as dd
 
@@ -116,20 +84,6 @@ class TestNearDedup:
         assert len(dd._PERSISTED) >= 1
         n = dd.unpersist_all()
         assert n >= 1 and not dd._PERSISTED
-
-    def test_ngram_jaccard(self, dup_docs):
-        pairs = ngram_jaccard_pairs(dup_docs, threshold=0.5).toPandas()
-        pairset = set(zip(pairs["a"], pairs["b"]))
-        assert (1001, 1002) in pairset
-        jac = pairs.set_index(["a", "b"])["jaccard"]
-        assert jac.loc[(1001, 1002)] == 1.0
-        assert (1001, 1004) not in pairset
-
-    def test_kernel_jaccard_matches_python(self):
-        a = "the quick brown fox jumps over the lazy dog"
-        b = "the quick brown fox leaps over the lazy dog"
-        j = tx.ngram_jaccard(a, b, 3)
-        assert 0 < j < 1
 
     def test_embedding_neardup(self, spark):
         rng = np.random.RandomState(7)
@@ -251,13 +205,6 @@ class TestDecontaminate:
         b = contaminated_docs(docs, ref, n=3, use_bloom=False).toPandas()
         key = lambda df: sorted(zip(df["doc_id"], df["n_hits"]))
         assert key(a) == key(b)
-
-    def test_decontaminate_returns_clean_complement(self, corpus):
-        from osm_data_3d_tiles_spark.operators.decontaminate import decontaminate
-
-        docs, ref = corpus
-        clean = decontaminate(docs, ref, n=3).toPandas()
-        assert sorted(clean["doc_id"]) == [2, 4]
 
     def test_empty_reference_flags_nothing(self, spark, corpus):
         from osm_data_3d_tiles_spark.operators.decontaminate import contaminated_docs
@@ -391,17 +338,9 @@ class TestTextOps:
         out = with_lang_id(df).toPandas().set_index("id")["predicted_lang"]
         assert list(out.loc[[1, 2, 3, 4]]) == ["en", "fr", "de", "es"]
 
-    def test_token_count(self, spark):
-        df = spark.createDataFrame([(1, "hello world, 42 times!")], ["id", "text"])
-        out = with_token_count(df).toPandas()
-        # hello, world, ',', 42, times, '!'
-        assert out["n_tokens"][0] == 6
-
     def test_quality_and_filter(self, documents):
         q = with_quality(documents).toPandas()
         assert ((q["alpha_ratio"] >= 0) & (q["alpha_ratio"] <= 1)).all()
-        kept = quality_filter(documents).count()
-        assert 0 < kept <= documents.count()
 
     def test_fingerprint_deterministic(self, spark):
         df = spark.createDataFrame([(1, "some document text here")], ["id", "text"])
@@ -428,36 +367,6 @@ class TestMultimodal:
 
         with pytest.raises(NotImplementedError):
             decode_image_real(b"x")
-
-
-class TestStreaming:
-    def test_tumbling_counts_batch_semantics(self, events):
-        out = tumbling_counts(events).toPandas()
-        assert out["n"].sum() == events.count()
-
-    def test_sessionize_batch_semantics(self, events):
-        out = sessionize(events).toPandas()
-        assert out["n_events"].sum() == events.count()
-        assert (out["session_end"] > out["session_start"]).all()
-
-    def test_streaming_plan_builds(self, spark, tmp_path, events):
-        """readStream → windowed agg → memory sink actually runs incrementally."""
-        src_dir = str(tmp_path / "stream_src")
-        ev = events.limit(200).withColumn("ts", F.col("ts").cast("timestamp"))
-        ev.write.parquet(src_dir)
-        stream = spark.readStream.schema(ev.schema).parquet(src_dir)
-        agg = tumbling_counts(stream)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("tumbling_test")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # append mode emits only watermark-closed windows; the plan executing
-        # end-to-end (no AnalysisException on the streaming agg) is the contract
-        assert not q.isActive
 
 
 class TestTextHygiene:
@@ -1124,36 +1033,36 @@ class TestSegmentZoneLength:
 
 class TestHaversine:
     def test_known_city_pair(self, spark):
-        from osm_data_3d_tiles_spark.functions.geodesic import haversine_m
+        from osm_data_3d_tiles_spark.functions.geodesic import haversine_sql
 
         df = spark.createDataFrame(
             [(2.3522, 48.8566, -0.1278, 51.5074)],  # Paris -> London
             "lon1 double, lat1 double, lon2 double, lat2 double",
-        ).select(haversine_m("lon1", "lat1", "lon2", "lat2").alias("d"))
+        ).select(F.expr(haversine_sql("lon1", "lat1", "lon2", "lat2")).alias("d"))
         d = df.first()["d"]
         assert abs(d - 343_556) < 500  # published haversine figure ~343.5 km
 
     def test_symmetry_and_zero(self, spark):
-        from osm_data_3d_tiles_spark.functions.geodesic import haversine_m
+        from osm_data_3d_tiles_spark.functions.geodesic import haversine_sql
 
         df = spark.createDataFrame(
             [(10.0, 20.0, -30.0, 45.0)],
             "lon1 double, lat1 double, lon2 double, lat2 double",
         )
-        fwd = df.select(haversine_m("lon1", "lat1", "lon2", "lat2").alias("d")).first()["d"]
-        rev = df.select(haversine_m("lon2", "lat2", "lon1", "lat1").alias("d")).first()["d"]
+        fwd = df.select(F.expr(haversine_sql("lon1", "lat1", "lon2", "lat2")).alias("d")).first()["d"]
+        rev = df.select(F.expr(haversine_sql("lon2", "lat2", "lon1", "lat1")).alias("d")).first()["d"]
         assert fwd == rev > 0
-        zero = df.select(haversine_m("lon1", "lat1", "lon1", "lat1").alias("d")).first()["d"]
+        zero = df.select(F.expr(haversine_sql("lon1", "lat1", "lon1", "lat1")).alias("d")).first()["d"]
         assert zero == 0.0
 
     def test_antipodal_clamped(self, spark):
-        from osm_data_3d_tiles_spark.functions.geodesic import EARTH_RADIUS_M, haversine_m
+        from osm_data_3d_tiles_spark.functions.geodesic import EARTH_RADIUS_M, haversine_sql
 
         import math
         df = spark.createDataFrame(
             [(0.0, 0.0, 180.0, 0.0)],
             "lon1 double, lat1 double, lon2 double, lat2 double",
-        ).select(haversine_m("lon1", "lat1", "lon2", "lat2").alias("d"))
+        ).select(F.expr(haversine_sql("lon1", "lat1", "lon2", "lat2")).alias("d"))
         assert abs(df.first()["d"] - math.pi * EARTH_RADIUS_M) < 1.0
 
 
@@ -1207,26 +1116,26 @@ class TestNewJoinPlanShapes:
 
 class TestMorton:
     def test_roundtrip_against_python(self, spark):
-        from osm_data_3d_tiles_spark.functions.morton import morton_decode, morton_key
+        from osm_data_3d_tiles_spark.functions.morton import morton_decode, morton_sql
 
         import numpy as np
         rng = np.random.RandomState(13)
         xs = rng.randint(0, 1 << 31, size=500).tolist()
         ys = rng.randint(0, 1 << 31, size=500).tolist()
         df = spark.createDataFrame(list(zip(xs, ys)), "x long, y long")
-        keys = [r.k for r in df.select(morton_key("x", "y").alias("k")).collect()]
+        keys = [r.k for r in df.select(F.expr(morton_sql("x", "y")).alias("k")).collect()]
         assert all(k >= 0 for k in keys)
         for x, y, k in zip(xs, ys, keys):
             assert morton_decode(k) == (x, y)
 
     def test_locality_order_matches_unit_squares(self, spark):
-        from osm_data_3d_tiles_spark.functions.morton import morton_key
+        from osm_data_3d_tiles_spark.functions.morton import morton_sql
 
         # the 2x2 block z pattern: (0,0) (1,0) (0,1) (1,1) -> 0 1 2 3
         df = spark.createDataFrame(
             [(0, 0), (1, 0), (0, 1), (1, 1)], "x long, y long"
         )
-        got = {(r.x, r.y): r.k for r in df.select("x", "y", morton_key("x", "y").alias("k")).collect()}
+        got = {(r.x, r.y): r.k for r in df.select("x", "y", F.expr(morton_sql("x", "y")).alias("k")).collect()}
         assert got == {(0, 0): 0, (1, 0): 1, (0, 1): 2, (1, 1): 3}
 
     def test_sql_fragment_matches_duckdb(self, spark):
@@ -1246,13 +1155,6 @@ class TestMorton:
 
 class TestReviewFixes:
     """Regression pins for the round-3 self-review findings."""
-
-    def test_morton_out_of_range_raises(self, spark):
-        from osm_data_3d_tiles_spark.functions.morton import morton_key
-
-        df = spark.createDataFrame([(1 << 31, 0)], "x long, y long")
-        with pytest.raises(Exception, match="out of"):
-            df.select(morton_key("x", "y")).collect()
 
     def test_interval_outer_join_refused(self, spark):
         from osm_data_3d_tiles_spark.operators.interval import bucketed_range_join
@@ -1590,26 +1492,6 @@ class TestRound4AdviceFixes:
             df, "group", "item", k=1, capacity=64, max_groups=10
         ).toPandas()
         assert len(got) == 10
-
-    def test_windowed_counts_value_col_param(self, spark):
-        from osm_data_3d_tiles_spark.streaming.events import (
-            sessionize,
-            sliding_counts,
-            tumbling_counts,
-        )
-
-        df = spark.createDataFrame(
-            [("2024-01-01 00:01:00", "view", "u1", 7), ("2024-01-01 00:02:00", "view", "u1", 5)],
-            "ts_s string, event_type string, user_id string, amount long",
-        ).withColumn("ts", F.col("ts_s").cast("timestamp"))
-        # schema has no column named 'value' — parameterized value_col works
-        t = tumbling_counts(df, value_col="amount").toPandas()
-        assert t["value_sum"].sum() == 12
-        s = sliding_counts(df, value_col="amount").toPandas()
-        assert set(s["value_sum"]) <= {12, 7, 5}
-        sess = sessionize(df, value_col="amount").toPandas()
-        assert sess["value_sum"].sum() == 12
-
 
 class TestAnnTwoPhaseTopkPlans:
     """Round-4 plan pins: no reducer may materialize a whole probe set — a

@@ -2,14 +2,17 @@
 
 `scripts/reach.py` walks the source with `ast` from the program's roots (the
 driver contract, the CLI, `bench.py`, `perfbench/` and `scripts/`) and lists
-each top-level `def`/`class` of the package they do not reach.
-`scripts/reach_allowlist.txt` must classify every listed definition, and
-every entry there must still be listed, so unreached code cannot come back,
-or linger, unnoticed."""
+each top-level `def`/`class` and module-level constant of the package they
+do not reach.
+`scripts/reach_allowlist.txt` must name every listed definition as
+`reference`, and every entry there must still be listed, so unreached code
+cannot come back, or linger, unnoticed."""
 
 import importlib.util
 import shutil
 from pathlib import Path
+
+import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 _spec = importlib.util.spec_from_file_location("reach", ROOT / "scripts" / "reach.py")
@@ -24,13 +27,37 @@ def test_unreached_definitions_match_the_allowlist():
     assert not stale, f"on {reach.ALLOWLIST} but reached or gone: {stale}"
 
 
-def test_a_planted_unreached_function_is_caught(tmp_path):
+def _plant(tmp_path, source: str) -> list[str]:
+    """Copy the repo's sources to `tmp_path`, append `source` to
+    `operators/ownership.py` and return what the audit then misses."""
     for part in ("osm_data_3d_tiles_spark", "tests", "perfbench", "scripts"):
         shutil.copytree(ROOT / part, tmp_path / part, ignore=shutil.ignore_patterns("__pycache__"))
     for name in ("bench.py", "__spark_entry__.py"):
         shutil.copy(ROOT / name, tmp_path / name)
     with open(tmp_path / "osm_data_3d_tiles_spark" / "operators" / "ownership.py", "a") as f:
-        f.write("\n\ndef planted_unreached():\n    return owner_tiles\n")
+        f.write(source)
     _, missing, stale = reach.check(tmp_path)
-    assert missing == ["osm_data_3d_tiles_spark.operators.ownership.planted_unreached"]
     assert not stale
+    return missing
+
+
+def test_a_planted_unreached_function_is_caught(tmp_path):
+    missing = _plant(tmp_path, "\n\ndef planted_unreached():\n    return owner_tiles\n")
+    assert missing == ["osm_data_3d_tiles_spark.operators.ownership.planted_unreached"]
+
+
+def test_a_planted_unreached_constant_is_caught(tmp_path):
+    # the assignment runs on import and reads a reached name; binding
+    # PLANTED_LIMIT still reaches nothing, so the audit must list it
+    missing = _plant(tmp_path, "\n\nPLANTED_LIMIT: int = len(owner_tiles.__name__)\n")
+    assert missing == ["osm_data_3d_tiles_spark.operators.ownership.PLANTED_LIMIT"]
+
+
+def test_only_reference_entries_are_admitted(tmp_path):
+    assert reach.CLASSES == ("reference",)
+    (tmp_path / "scripts").mkdir()
+    (tmp_path / reach.ALLOWLIST).write_text(
+        "osm_data_3d_tiles_spark.functions.morton.morton_decode | dead: queued | a later change\n"
+    )
+    with pytest.raises(ValueError, match="reach_allowlist.txt:1"):
+        reach.read_allowlist(tmp_path)

@@ -5,7 +5,6 @@ import pytest
 
 from osm_data_3d_tiles_spark.functions.simplify import (
     densify_ring,
-    eps_for_zoom,
     rdp_open,
     rdp_ring,
     simplify_buildings,
@@ -77,12 +76,6 @@ class TestKernel:
     def test_degenerate_all_equal(self):
         r = np.zeros((5, 2))
         assert np.array_equal(rdp_ring(r, 0.1), r)
-
-    def test_eps_for_zoom_doubles(self):
-        assert eps_for_zoom(16) == 0.05
-        assert eps_for_zoom(14) == 0.2
-        assert eps_for_zoom(20) == 0.05  # below leaf clamps
-
 
 class TestSimplifyBuildings:
     def test_fixture_rings_simplify(self, spark):

@@ -1,269 +1,17 @@
-"""Structured Streaming tests: file-source micro-batches through the stateful
-first-claimer ownership operator (state persists across batches), plus the
-watermarked tumbling/session shapes on a real stream."""
+"""Structured Streaming tests: each streaming shape in streaming/events.py,
+run on a real file-source stream, matches its batch form (the one the
+contract oracle checks)."""
 
 from __future__ import annotations
 
 import os
-import time
 
 import pandas as pd
 import pytest
 
 
-def _write_batch(path: str, n: int, rows: list[tuple[int, str]]):
-    pd.DataFrame(rows, columns=["osm_id", "tile_key"]).to_parquet(
-        os.path.join(path, f"batch{n}.parquet")
-    )
-
-
 @pytest.mark.usefixtures("spark")
 class TestStreamingOwnership:
-    def test_state_across_microbatches(self, spark, tmp_path):
-        from osm_data_3d_tiles_spark.streaming.events import streaming_ownership
-
-        src_dir = str(tmp_path / "claims")
-        os.makedirs(src_dir)
-        # batch 1: building 1 claimed by tile B, building 2 by tile C.
-        # Engine keys are UNPADDED ("16_1000_5") — chosen here so numeric and
-        # lexicographic order disagree ("16_999_5" > "16_1000_5" as strings).
-        _write_batch(src_dir, 1, [(1, "16_1000_5"), (2, "16_300_100")])
-
-        stream = (
-            spark.readStream.schema("osm_id long, tile_key string").parquet(src_dir)
-        )
-        out = streaming_ownership(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("ownership_test")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            r1 = {r.osm_id: r.tile_key for r in spark.sql("select * from ownership_test").collect()}
-            assert r1 == {1: "16_1000_5", 2: "16_300_100"}
-
-            # batch 2: numerically-earlier claim for building 1 (wins — a string
-            # comparison would wrongly keep 16_1000_5), later claim for 2 (ignored)
-            _write_batch(src_dir, 2, [(1, "16_999_5"), (2, "16_900_900")])
-            q.processAllAvailable()
-            rows = spark.sql("select * from ownership_test").collect()
-            latest = {}
-            for r in rows:  # memory sink appends updates; last write wins
-                latest[r.osm_id] = (r.tile_key, r.changed)
-            assert latest[1] == ("16_999_5", True)  # ownership transferred
-            assert latest[2] == ("16_300_100", False)  # first claim kept
-        finally:
-            q.stop()
-
-    def test_agrees_with_batch_owner_window(self, spark, tmp_path):
-        """Streaming ownership over the engine's own claims must equal the batch
-        owner_tiles window — the docstring's incremental-form claim."""
-        from osm_data_3d_tiles_spark.functions import mercator as m
-        from osm_data_3d_tiles_spark.operators.ownership import owner_tiles
-        from osm_data_3d_tiles_spark.streaming.events import streaming_ownership
-        from pyspark.sql import functions as F
-
-        # claims that straddle z12-subtile boundaries and digit-count changes
-        cells = [
-            (1, 1000, 5), (1, 999, 5), (1, 999, 4),
-            (2, 15, 16), (2, 16, 15),          # different subtile rows/cols
-            (3, 31, 31), (3, 32, 0),           # (1,1,31,31) vs (2,0,32,0)
-        ]
-        batch_df = spark.createDataFrame(cells, "osm_id long, tile_x long, tile_y long")
-        want = {
-            r.osm_id: r.tile_key
-            for r in owner_tiles(batch_df).select("osm_id", "tile_key").collect()
-        }
-
-        src_dir = str(tmp_path / "claims2")
-        os.makedirs(src_dir)
-        keys = [
-            (oid, f"16_{x}_{y}") for oid, x, y in cells
-        ]
-        _write_batch(src_dir, 1, keys)
-        stream = spark.readStream.schema("osm_id long, tile_key string").parquet(src_dir)
-        q = (
-            streaming_ownership(stream)
-            .writeStream.format("memory")
-            .queryName("ownership_batch_parity")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt2"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                r.osm_id: r.tile_key
-                for r in spark.sql("select * from ownership_batch_parity").collect()
-            }
-            assert got == want
-        finally:
-            q.stop()
-
-    def test_tumbling_counts_streaming(self, spark, tmp_path):
-        from osm_data_3d_tiles_spark.streaming.events import tumbling_counts
-
-        src_dir = str(tmp_path / "events")
-        os.makedirs(src_dir)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def write_events(fname, rows):
-            df = pd.DataFrame(rows)
-            # Spark cannot read TIMESTAMP(NANOS) — write microsecond timestamps
-            pq.write_table(
-                pa.Table.from_pandas(df, preserve_index=False),
-                os.path.join(src_dir, fname),
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-
-        ts = pd.Timestamp("2024-01-01 00:01:00")
-        write_events("b1.parquet", {
-            "ts": [ts, ts + pd.Timedelta(minutes=1), ts + pd.Timedelta(minutes=7)],
-            "event_type": ["a", "a", "a"],
-            "value": [1.0, 2.0, 3.0],
-        })
-
-        stream = spark.readStream.schema(
-            "ts timestamp, event_type string, value double"
-        ).parquet(src_dir)
-        out = tumbling_counts(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tumbling_test")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt2"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # append mode only emits closed windows — push the watermark forward
-            write_events("b2.parquet", {
-                "ts": [ts + pd.Timedelta(hours=1)],
-                "event_type": ["a"], "value": [0.0],
-            })
-            q.processAllAvailable()
-            rows = spark.sql("select * from tumbling_test order by window_start").collect()
-            assert len(rows) >= 2
-            assert rows[0].n == 2 and rows[0].value_sum == 3.0  # first 5-min window
-        finally:
-            q.stop()
-
-    def test_sessionize_streaming_matches_batch_window(self, spark, tmp_path):
-        """session_window on a real stream produces the same sessions as the
-        batch lag/cumsum formulation (contract events_sessionize) for gaps
-        strictly inside/outside the threshold. (Exactly-at-gap events are a
-        known semantic edge: session_window closes at prev+gap, the batch
-        formulation keeps `diff == gap` in-session — avoided here.)"""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from osm_data_3d_tiles_spark.streaming.events import sessionize
-
-        base = pd.Timestamp("2024-01-01 00:00:00")
-        rows = {
-            "ts": [base, base + pd.Timedelta(minutes=10),          # session 1 (u1)
-                   base + pd.Timedelta(minutes=50),                # session 2 (u1)
-                   base, base + pd.Timedelta(minutes=29)],         # session 1 (u2)
-            "user_id": [1, 1, 1, 2, 2],
-            "value": [1.0, 2.0, 3.0, 4.0, 5.0],
-        }
-        src_dir = str(tmp_path / "sess_events")
-        os.makedirs(src_dir)
-        pq.write_table(
-            pa.Table.from_pandas(pd.DataFrame(rows), preserve_index=False),
-            os.path.join(src_dir, "b1.parquet"),
-            coerce_timestamps="us", allow_truncated_timestamps=True,
-        )
-        stream = spark.readStream.schema("ts timestamp, user_id long, value double").parquet(src_dir)
-        q = (
-            sessionize(stream)
-            .writeStream.format("memory").queryName("sess_parity")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # close all sessions past the watermark
-            pq.write_table(
-                pa.Table.from_pandas(
-                    pd.DataFrame({"ts": [base + pd.Timedelta(hours=3)],
-                                  "user_id": [9], "value": [0.0]}),
-                    preserve_index=False),
-                os.path.join(src_dir, "b2.parquet"),
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-            q.processAllAvailable()
-            got = {
-                (r.user_id, r.session_start): r.n_events
-                for r in spark.sql("select * from sess_parity").collect()
-                if r.user_id in (1, 2)
-            }
-            want = {
-                (1, base): 2,
-                (1, base + pd.Timedelta(minutes=50)): 1,
-                (2, base): 2,
-            }
-            assert got == want
-        finally:
-            q.stop()
-
-    def test_sliding_counts_streaming(self, spark, tmp_path):
-        """10m/5m hopping windows on a real stream: each event lands in exactly
-        two windows; closed windows emit in append mode after the watermark."""
-        from osm_data_3d_tiles_spark.streaming.events import sliding_counts
-
-        src_dir = str(tmp_path / "events_sl")
-        os.makedirs(src_dir)
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        def write_events(fname, rows):
-            pq.write_table(
-                pa.Table.from_pandas(pd.DataFrame(rows), preserve_index=False),
-                os.path.join(src_dir, fname),
-                coerce_timestamps="us", allow_truncated_timestamps=True,
-            )
-
-        ts = pd.Timestamp("2024-01-01 00:01:00")
-        write_events("b1.parquet", {
-            "ts": [ts, ts + pd.Timedelta(minutes=6)],
-            "event_type": ["a", "a"],
-            "value": [1.0, 2.0],
-        })
-        stream = spark.readStream.schema(
-            "ts timestamp, event_type string, value double"
-        ).parquet(src_dir)
-        q = (
-            sliding_counts(stream)
-            .writeStream.format("memory")
-            .queryName("sliding_test")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_sl"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            write_events("b2.parquet", {
-                "ts": [ts + pd.Timedelta(hours=1)], "event_type": ["a"], "value": [0.0],
-            })
-            q.processAllAvailable()
-            rows = {
-                r.window_start.strftime("%H:%M"): (r.n, r.value_sum)
-                for r in spark.sql("select * from sliding_test").collect()
-                if r.window_start < pd.Timestamp("2024-01-01 00:30:00")
-            }
-            # event@00:01 → windows 23:55 & 00:00; event@00:07 → 00:00 & 00:05
-            assert rows["23:55"] == (1, 1.0)
-            assert rows["00:00"] == (2, 3.0)
-            assert rows["00:05"] == (1, 2.0)
-        finally:
-            q.stop()
-
     def test_dedup_within_watermark_streaming(self, spark, tmp_path):
         """A redelivered event inside the watermark horizon dedups; the batch
         path keeps the earliest row per key (the oracle-checked equivalence)."""
@@ -458,94 +206,6 @@ class TestStreamStreamAttribution:
             (r.user_id, r.click_id, r.purchase_id, r.gap_s) for r in batch.collect()
         }
         assert got == want == {(1, 11, 20, 600), (2, 12, 21, 600)}
-
-
-class TestStreamingFrequentItems:
-    def test_state_accumulates_and_matches_exact(self, spark, tmp_path):
-        """Two micro-batches; capacity above the distinct-item count, so the
-        MG summary IS the exact counter and the final emission must equal a
-        plain Counter over both batches, with miss_bound 0."""
-        import collections
-
-        from osm_data_3d_tiles_spark.streaming.events import streaming_frequent_items
-
-        b1 = [("en", w) for w in ["a"] * 5 + ["b"] * 3 + ["c"] * 1]
-        b2 = [("en", w) for w in ["b"] * 4 + ["c"] * 1] + [("fr", "x")] * 2
-        src = str(tmp_path / "toks")
-        os.makedirs(src)
-        pd.DataFrame(b1, columns=["group", "item"]).to_parquet(f"{src}/b1.parquet")
-
-        stream = spark.readStream.schema("group string, item string").parquet(src)
-        out = streaming_frequent_items(stream, capacity=64, k=3)
-        q = (
-            out.writeStream.format("memory").queryName("freq_items")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_freq"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            pd.DataFrame(b2, columns=["group", "item"]).to_parquet(f"{src}/b2.parquet")
-            q.processAllAvailable()
-            rows = spark.sql("select * from freq_items").collect()
-        finally:
-            q.stop()
-
-        # the memory sink in update mode accumulates EVERY emission (rows
-        # carry no batch id), so assertions below check (a) the exact final
-        # counts are present and (b) no emission ever OVERcounts — the MG
-        # lower bound is monotone, so overshoot would be a real bug
-        latest = {}
-        for r in rows:
-            latest.setdefault(r.group, []).append(r)
-        # the final 'en' snapshot must equal the exact two-batch counter
-        exact = collections.Counter(w for g, w in b1 + b2 if g == "en")
-        want = {(w, c) for w, c in exact.most_common(3)}
-        assert want <= {(r.item, r.lower_count) for r in latest["en"]}
-        assert all(r.lower_count <= exact[r.item] for r in latest["en"])
-        assert all(r.miss_bound == 0 for r in rows)
-        assert {r.item for r in latest["fr"]} == {"x"}
-
-
-class TestIdempotentSink:
-    def test_replayed_batch_does_not_duplicate(self, spark, tmp_path):
-        from osm_data_3d_tiles_spark.streaming.events import idempotent_batch_sink
-
-        out = str(tmp_path / "sink")
-        sink = idempotent_batch_sink(out)
-        b0 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-        b1 = spark.createDataFrame([(3, "c")], "id long, v string")
-        sink(b0, 0)
-        sink(b1, 1)
-        sink(b0, 0)  # recovery replay of batch 0
-        got = spark.read.parquet(out)
-        assert got.count() == 3
-        assert {r.id for r in got.collect()} == {1, 2, 3}
-
-    def test_real_stream_through_sink(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from osm_data_3d_tiles_spark.streaming.events import idempotent_batch_sink
-
-        src = str(tmp_path / "src")
-        out = str(tmp_path / "out")
-        os.makedirs(src)
-        pq.write_table(
-            pa.Table.from_pandas(pd.DataFrame({"id": [1, 2, 3]}), preserve_index=False),
-            f"{src}/b1.parquet",
-        )
-        stream = spark.readStream.schema("id long").parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(idempotent_batch_sink(out))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        assert spark.read.parquet(out).count() == 3
 
 
 class TestStreamingTileCounts:
