@@ -83,10 +83,12 @@ class Module:
                 self.defs[s.name] = s
             elif isinstance(s, (ast.Assign, ast.AnnAssign)):
                 targets = s.targets if isinstance(s, ast.Assign) else [s.target]
-                for t in targets:
-                    for n in ast.walk(t):
-                        if isinstance(n, ast.Name) and not n.id.startswith("__"):
-                            self.defs[n.id] = s
+                # `X = …` and `X, Y = …` bind X and Y; `a.b = …` and `a[0] = …`
+                # bind nothing
+                names = (n for t in targets for n in ast.walk(t) if isinstance(n, ast.Name))
+                for n in names:
+                    if isinstance(n.ctx, ast.Store) and not n.id.startswith("__"):
+                        self.defs[n.id] = s
         # alias -> (module, name); name None when the alias is the module itself
         self.aliases: dict[str, tuple[str, str | None]] = {}
 
