@@ -128,19 +128,14 @@ def warm_up(spark, cores: int) -> None:
     )
 
 
-def run_flagship(
-    spark, sf: float, replicate: int = 1, refine: str = "broadcast"
-) -> tuple[float, int, int]:
+def run_flagship(spark, sf: float, replicate: int = 1) -> tuple[float, int, int]:
     """Returns (seconds, docs_processed, join_rows).
 
     replicate > 1 expands the pages input k-fold *inside Spark* (crossJoin with a
     range, distinct urls) — same deterministic input at every parallelism level,
     generated on executors. The scaling runs use this so the parallel compute
     dominates fixed driver/broadcast overheads (which amortize to nothing at the
-    real 10^12-doc scale but would swamp a 200k-doc measurement).
-
-    refine='cogroup' measures the planet-scale PIP-refine path (unbounded
-    building dimension, no driver-side geometry broadcast)."""
+    real 10^12-doc scale but would swamp a 200k-doc measurement)."""
     from pyspark.sql import functions as F
 
     from osm_data_3d_tiles_spark.plans.pipeline import flagship
@@ -158,7 +153,7 @@ def run_flagship(
     n_docs = pages.count()
 
     t0 = time.perf_counter()
-    out = flagship(pages, buildings, refine=refine)
+    out = flagship(pages, buildings)
     assignment = F.broadcast(out["owners"].select("osm_id", "tile_key"))
     n_rows = out["join_rows"].join(assignment, "osm_id").count()
     secs = time.perf_counter() - t0
@@ -349,12 +344,6 @@ def main() -> None:
         result["flagship_all_secs"] = [round(r[0], 3) for r in runs]
         result["flagship_docs"] = n_docs
         result["flagship_join_rows"] = n_rows
-
-        # the planet-scale refine path gets its own recorded number (regression
-        # guard: must stay within ~2x of the broadcast path at sandbox scale)
-        cg_secs, _, cg_rows = run_flagship(spark, sf, refine="cogroup")
-        result["flagship_cogroup_secs"] = round(cg_secs, 3)
-        result["flagship_cogroup_join_rows"] = cg_rows
 
         # per-query best-of-R + adaptive resampling (same rationale as the
         # flagship: one contended sample otherwise lands on the official

@@ -118,10 +118,6 @@ def tile_y_col(y: Column, z: int = Z_LEAF) -> Column:
     return F.floor((F.lit(HALF_SIZE) - y) / F.lit(tile_span(z)))
 
 
-def cell_id_col(tx: Column, ty: Column, z: int = Z_LEAF) -> Column:
-    return F.lit(int(z) << 58).cast("long") + tx.cast("long") * F.lit(1 << 29).cast("long") + ty.cast("long")
-
-
 def tile_key_col(tx: Column, ty: Column, z: int = Z_LEAF) -> Column:
     return F.concat_ws("_", F.lit(str(z)), tx.cast("string"), ty.cast("string"))
 

@@ -19,7 +19,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geometry as g
@@ -90,6 +89,3 @@ def building_cells(buildings: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
     one row per covering z-level cell, sorted per building."""
     return building_cells_multi(buildings, (z,)).select("osm_id", "tile_x", "tile_y")
 
-
-def with_cell_id(df: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
-    return df.withColumn("cell", m.cell_id_col(F.col("tile_x"), F.col("tile_y"), z))

@@ -6,24 +6,20 @@ buildings (dimension) without ever shuffling the fact table —
 1. build side: buildings exploded to covering z20 cells (operators.cells); a
    cell is the coarse prefilter, exactly the role MVT tile membership plays in
    the reference (b3dmGenerator.ts:109-113);
-2. broadcast probe (a bounded dimension): the driver packs the cells into a CSR
-   cell index (the cell ids sorted, with the osm_id of each) and the rings
-   into a CSR edge table (`geometry.ring_edge_table`: sorted osm_ids, edge
-   offsets, flat edges), and broadcasts the pair once. The points meet it in
-   one Arrow `mapInArrow` stage with no JVM join: each batch is one numpy pass
+2. broadcast probe: the driver packs the cells into a CSR cell index (the
+   cell ids sorted, with the osm_id of each) and the rings into a CSR edge
+   table (`geometry.ring_edge_table`: sorted osm_ids, edge offsets, flat
+   edges), and broadcasts the pair once. The points meet it in one Arrow
+   `mapInArrow` stage with no JVM join: each batch is one numpy pass
    (`_probe`) — the cell of each point by `mercator.tile_xy`, the IEEE floor
    formula of `mercator.tile_x_col`/`tile_y_col`, two `searchsorted` calls
    for its run of candidate buildings, then `geometry.points_in_edge_table`,
    whose keep mask is bit-identical to `points_in_polygon`
    (src/math/utils.ts:29-46 semantics). Only the matches leave Python. The
    flagship's `geotag_join` runs the same pass over (lat, lon), with the
-   EPSG:3857 projection folded in;
-3. cogroup refine (planet scale): the points get their cell as native Column
-   math, equi-join the broadcast (cell, osm_id) table in the JVM, and the
-   candidates cogroup with the geometry on osm_id. The refine builds the same
-   edge table from its one-building group and calls the same kernel.
+   EPSG:3857 projection folded in.
 
-Skew: dense cities produce hot cells. Neither probe has a shuffle to skew on
+Skew: dense cities produce hot cells. The probe has no shuffle to skew on
 the fact side; downstream aggregations over cell/tile keys use `salted_count`
 (two-phase agg) or AQE skew-join handling (enabled in session.py).
 """
@@ -33,36 +29,16 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import geometry as g
 from ..functions import mercator as m
-from .cells import building_cells, with_cell_id
+from .cells import building_cells
 
 # The prefilter's cell level (~38 m cells; see `spatial_join`).
 Z_JOIN = 20
-
-
-def pages_with_cell(pages_pts: DataFrame, z: int = m.Z_LEAF) -> DataFrame:
-    """Attach tile/cell columns to a point table (x, y in EPSG:3857) using native
-    Column math only — stays in whole-stage codegen.
-
-    A point off the z grid gets a null cell, as in `_grid_cells`: no cell
-    there holds a building, and the packed id of, say, lat -90 (y = -inf)
-    would overflow a long. Spark sorts NaN above every double, so a NaN
-    coordinate fails the `< 2^z` test."""
-    span, n = m.tile_span(z), 1 << z
-    gx = (F.col("x") + F.lit(m.HALF_SIZE)) / F.lit(span)
-    gy = (F.lit(m.HALF_SIZE) - F.col("y")) / F.lit(span)
-    on_grid = (gx >= 0) & (gx < n) & (gy >= 0) & (gy < n)
-    return (
-        pages_pts.withColumn("tile_x", m.tile_x_col(F.col("x"), z))
-        .withColumn("tile_y", m.tile_y_col(F.col("y"), z))
-        .withColumn("cell", F.when(on_grid, m.cell_id_col(F.col("tile_x"), F.col("tile_y"), z)))
-    )
 
 
 class _ProbeIndex(NamedTuple):
@@ -160,19 +136,12 @@ def geotag_join(points: DataFrame, buildings: DataFrame, cells: DataFrame) -> Da
     return _broadcast_probe(points, buildings, cells, Z_JOIN, ("url",), lonlat=True)
 
 
-# Above this many buildings the geometry dimension no longer belongs in a
-# driver-materialized Python broadcast (unbounded driver memory + one fat
-# pickle to every worker): the refine switches to the cogrouped path.
-BROADCAST_GEOM_MAX_BUILDINGS = 200_000
-
-
 def spatial_join(
     pages_pts: DataFrame,
     buildings: DataFrame,
     z: int = Z_JOIN,
     page_cols: tuple[str, ...] = ("url",),
     precomputed_cells: DataFrame | None = None,
-    refine: str = "auto",
 ) -> DataFrame:
     """pages_pts(url, x, y, …) ⋈ buildings(osm_id, geometry, ring_types, …) →
     (page_cols…, osm_id), one row per (page, containing building). Exact
@@ -187,71 +156,16 @@ def spatial_join(
     prefilter selectivity against covering-cell count — results are identical.
 
     Geometry never rides a join: attaching the nested geometry arrays as a
-    join column would duplicate them onto every candidate row and melt the
-    Arrow transfer + JVM heap exactly where candidates are densest (hot
-    cells). Two strategies deliver the rings instead (`refine=`):
+    join column would duplicate them onto every candidate row exactly where
+    candidates are densest (hot cells). The cell index and the CSR edge table
+    go out as one Spark broadcast variable instead, probed in one `mapInArrow`
+    pass (no JVM join, no shuffle): the pass of `geotag_join`, over x/y.
 
-    - ``"broadcast"`` — the cell index and the CSR edge table as one Spark
-      broadcast variable, probed in one `mapInArrow` pass (no JVM join, no
-      shuffle). Requires materializing the dimension on the driver, so it is
-      bounded by `BROADCAST_GEOM_MAX_BUILDINGS`.
-    - ``"cogroup"`` — a JVM cell equi-join against the broadcast (cell,
-      osm_id) table, then the candidates cogrouped with the deduped geometry
-      table on osm_id (`applyInPandas` over the cogroup): geometry crosses the
-      wire once per building, never per candidate, nothing touches the
-      driver. Costs one shuffle of the CANDIDATE set (≈ small multiple of the
-      true matches at z20, orders of magnitude below the fact table) — the
-      planet-scale path.
-    - ``"auto"`` — broadcast below the threshold, cogroup above.
-    """
-    base_cells = (
-        precomputed_cells if precomputed_cells is not None else building_cells(buildings, z)
-    )
-
-    if refine == "auto":
-        # decision probe bounded by the threshold itself: limit(k+1).count()
-        # short-circuits once k+1 rows are found instead of scanning (and
-        # fully aggregating) the whole dimension — a full count() here was a
-        # wasted job per call on planet-sized building tables
-        probe_n = (
-            buildings.select("osm_id").limit(BROADCAST_GEOM_MAX_BUILDINGS + 1).count()
-        )
-        refine = "broadcast" if probe_n <= BROADCAST_GEOM_MAX_BUILDINGS else "cogroup"
-
-    if refine == "broadcast":
-        return _broadcast_probe(pages_pts, buildings, base_cells, z, page_cols, lonlat=False)
-
-    from ..session import with_min_parallelism
-
-    cells = with_cell_id(base_cells, z).select("osm_id", "cell")
-    probe = pages_with_cell(with_min_parallelism(pages_pts), z)
-    cand = probe.join(F.broadcast(cells), "cell")
-    out_fields = [cand.schema[c] for c in page_cols] + [cand.schema["osm_id"]]
-    schema = T.StructType(out_fields)
-    names = [f.name for f in out_fields]
-
-    def _refine_cogrouped(cand_pdf: pd.DataFrame, geom_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0 or len(geom_pdf) == 0:
-            return pd.DataFrame({n: [] for n in names})
-        table = g.ring_edge_table(
-            [(geom_pdf["osm_id"].iloc[0], geom_pdf["geometry"].iloc[0])]
-        )
-        keep = g.points_in_edge_table(
-            cand_pdf["x"].to_numpy(dtype=np.float64),
-            cand_pdf["y"].to_numpy(dtype=np.float64),
-            cand_pdf["osm_id"].to_numpy(dtype=np.int64),
-            table,
-        )
-        return cand_pdf.loc[keep, names]
-
-    geom = buildings.select("osm_id", "geometry")
-    needed = list(dict.fromkeys([*page_cols, "x", "y", "osm_id"]))
-    return (
-        cand.select(*needed)
-        .groupBy("osm_id")
-        .cogroup(geom.groupBy("osm_id"))
-        .applyInPandas(lambda _k, c, b: _refine_cogrouped(c, b), schema=schema)
-    )
+    Not bounded: the geometry and covering cells of every building are
+    collected on the driver at any building count, as `geotag_join` does for
+    the flagship."""
+    cells = precomputed_cells if precomputed_cells is not None else building_cells(buildings, z)
+    return _broadcast_probe(pages_pts, buildings, cells, z, page_cols, lonlat=False)
 
 
 def salted_count(df: DataFrame, key_cols: list[str], n_salt: int = 32) -> DataFrame:

@@ -14,7 +14,8 @@ one through `checkpoint()`.
 
 Scale shape:
 - pages never shuffle until the final per-tile aggregation: the geotag parse is
-  JVM regex, and the join's building side is one broadcast value;
+  JVM regex, and the join's building side is one broadcast value (collected
+  on the driver, at any building count);
 - Python sees each geotagged page once, as (url, lat, lon) in the join's
   `mapInArrow` pass (`spatial_join.geotag_join`: the numpy EPSG:3857
   projection, bit-exact, the z20 cell probe and the CSR-table PIP refine),
@@ -43,7 +44,7 @@ from ..functions import mercator as m
 from ..functions import text as tx
 from ..operators.cells import building_cells_multi
 from ..operators.ownership import owner_tiles
-from ..operators.spatial_join import Z_JOIN, geotag_join, spatial_join
+from ..operators.spatial_join import Z_JOIN, geotag_join
 
 # a StructType, not a DDL string: parsing DDL needs a session at import
 @F.pandas_udf(T.StructType([T.StructField(c, T.DoubleType()) for c in ("x", "y")]))
@@ -56,9 +57,8 @@ def _to_3857(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
 
 
 # Marked nondeterministic only so the optimizer keeps filters on x/y above it:
-# the cogroup join infers isnotnull(cell(x, y)), and pushing that below the
-# UDF would evaluate the UDF a second time, in a filter below the fan-out
-# exchange that `geotagged_points` and the cogroup flagship put under it.
+# a filter such as `x > 0` pushed below the fan-out exchange that
+# `geotagged_points` puts under the UDF would evaluate the UDF a second time.
 _to_3857 = _to_3857.asNondeterministic()
 
 
@@ -234,20 +234,7 @@ def _doc_counts(out: dict[str, DataFrame]) -> DataFrame:
     )
 
 
-def _join_rows(out: dict[str, DataFrame], blds: DataFrame, refine: str) -> DataFrame:
-    from ..session import with_min_parallelism
-
-    cells = _cells_at(out, Z_JOIN)
-    if refine == "cogroup":
-        # fanned out before the projection UDF, as in `geotagged_points`
-        points = _projected(with_min_parallelism(out["points"]))
-        return spatial_join(points, blds, precomputed_cells=cells, refine="cogroup")
-    return geotag_join(out["points"], blds, cells)
-
-
-def flagship_stages(
-    pages: DataFrame, buildings: DataFrame, refine: str = "broadcast"
-) -> tuple[Stage, ...]:
+def flagship_stages(pages: DataFrame, buildings: DataFrame) -> tuple[Stage, ...]:
     """The flagship's ordered stage table over `pages` and the `buildings`
     layer of `buildings`:
 
@@ -256,14 +243,10 @@ def flagship_stages(
       cell levels, z16 for ownership and z20 for the join prefilter; it feeds
       two stages, so the in-memory runner caches it;
     - owners(osm_id, tile_x, tile_y, tile_key): first-claimer ownership;
-    - join_rows(url, osm_id): the exact PIP join;
-    - tile_doc_counts(tile_key, docs).
-
-    `refine` picks the join. 'broadcast' is `geotag_join`: one `mapInArrow`
-    pass projects, probes the broadcast z20 cell index and refines, with no
-    shuffle and no decision job as `spatial_join`'s 'auto' would spend;
-    'cogroup' projects with `_to_3857` and runs `spatial_join`'s
-    planet-scale path, benched as flagship_cogroup_secs."""
+    - join_rows(url, osm_id): the exact PIP join, `geotag_join`: one
+      `mapInArrow` pass projects, probes the broadcast z20 cell index and
+      refines, with no shuffle;
+    - tile_doc_counts(tile_key, docs)."""
     blds = buildings.filter(F.col("layer") == "buildings")
     return (
         # required_cols: an older workdir's (url, x, y) snapshot rebuilds
@@ -274,18 +257,17 @@ def flagship_stages(
         Stage("cells_multi", "cells", lambda out: building_cells_multi(blds, (m.Z_LEAF, Z_JOIN)),
               required_cols=("z", "osm_id", "tile_x", "tile_y"), cache=True),
         Stage("owners", "owners", lambda out: owner_tiles(_cells_at(out, m.Z_LEAF))),
-        Stage("join_rows", "join", lambda out: _join_rows(out, blds, refine)),
+        Stage("join_rows", "join",
+              lambda out: geotag_join(out["points"], blds, _cells_at(out, Z_JOIN))),
         Stage("tile_doc_counts", "counts", _doc_counts),
     )
 
 
-def flagship(
-    pages: DataFrame, buildings: DataFrame, refine: str = "broadcast"
-) -> dict[str, DataFrame]:
+def flagship(pages: DataFrame, buildings: DataFrame) -> dict[str, DataFrame]:
     """The flagship in memory: every stage output by its stage name. The
     cached `cells_multi` stays cached until the caller unpersists it."""
     out: dict[str, DataFrame] = {}
-    for stage in flagship_stages(pages, buildings, refine):
+    for stage in flagship_stages(pages, buildings):
         df = stage.build(out)
         out[stage.name] = df.persist() if stage.cache else df
     return out

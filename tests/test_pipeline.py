@@ -13,6 +13,7 @@ from osm_data_3d_tiles_spark.operators.batch_table import batch_tables
 from osm_data_3d_tiles_spark.operators.cells import building_cells, covered_cells_for_building
 from osm_data_3d_tiles_spark.operators.knn import building_centroids, knn_bruteforce, knn_kring
 from osm_data_3d_tiles_spark.operators.ownership import owner_tiles
+from osm_data_3d_tiles_spark.operators.spatial_join import spatial_join
 from osm_data_3d_tiles_spark.operators.zonal import zonal_stats
 from osm_data_3d_tiles_spark.plans.pipeline import (
     flagship,
@@ -174,16 +175,19 @@ class TestSpatialJoin:
         got_set = set(zip(got["url"], got["osm_id"].astype(int)))
         assert got_set == oracle_join(pages_pdf, buildings_pdf)
 
-    def test_cogroup_refine_equals_broadcast(self, spark, pages, buildings):
-        """The no-driver-materialization cogrouped refine (the >200k-building
-        scale path) must produce the identical join."""
-        from osm_data_3d_tiles_spark.operators.spatial_join import spatial_join
-        from osm_data_3d_tiles_spark.plans.pipeline import geotagged_points
-
-        pts = geotagged_points(pages)
+    def test_xy_probe_equals_flagship(self, spark, pages, buildings):
+        """`spatial_join` over projected x/y columns (the layer table's join)
+        gives the flagship's lat/lon `geotag_join` rows."""
         blds = buildings.filter(F.col("layer") == "buildings")
-        a = spatial_join(pts, blds, refine="broadcast").toPandas()
-        b = spatial_join(pts, blds, refine="cogroup").toPandas()
+        out = flagship(pages, buildings)
+        a = out["join_rows"].toPandas()
+        out["cells_multi"].unpersist()
+        joined = spatial_join(geotagged_points(pages), blds)
+        # the projection UDF runs once: no filter evaluates it a second time
+        for df in (joined, geotagged_points(pages).filter(F.col("x") > 0)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("ArrowEvalPython") == 1
+        b = joined.toPandas()
         key = lambda df: sorted(zip(df["url"], df["osm_id"]))
         assert key(a) == key(b)
         assert len(a) > 0
@@ -224,9 +228,9 @@ def _square(x0, y0, x1, y1) -> list[list[float]]:
 
 class TestGeotagJoinEdges:
     """The flagship's fused join (`geotag_join`) at the edges of its cell
-    probe, against the brute-force `oracle_join` and the cogroup refine,
-    which keeps the JVM cell prefilter. Buildings sit at the EPSG:3857 origin,
-    where x = 0 (lon 0) is exactly a z20 cell edge."""
+    probe, against the brute-force `oracle_join` and `spatial_join` over the
+    projected x/y columns of `geotagged_points`. Buildings sit at the
+    EPSG:3857 origin, where x = 0 (lon 0) is exactly a z20 cell edge."""
 
     # url -> geotag; None: a page without one
     TAGS = {
@@ -275,16 +279,17 @@ class TestGeotagJoinEdges:
         return pages, buildings, oracle_join(pages_pdf, buildings_pdf)
 
     @staticmethod
-    def _join(pages, buildings, refine="broadcast") -> set[tuple[str, int]]:
-        out = flagship(pages, buildings, refine=refine)
+    def _join(pages, buildings) -> set[tuple[str, int]]:
+        out = flagship(pages, buildings)
         rows = out["join_rows"].collect()
         out["cells_multi"].unpersist()
         return {(r["url"], r["osm_id"]) for r in rows}
 
-    def test_equals_oracle_and_cogroup(self, frames):
+    def test_equals_oracle_and_xy_probe(self, frames):
         pages, buildings, expected = frames
         assert self._join(pages, buildings) == expected
-        assert self._join(pages, buildings, "cogroup") == expected
+        xy = spatial_join(geotagged_points(pages), buildings).collect()
+        assert {(r["url"], r["osm_id"]) for r in xy} == expected
         assert {("corner", 1), ("x_edge", 1), ("b1_far_corner", 1), ("b1_other_cell", 1),
                 ("b2", 2), ("b3", 3)} <= expected
         assert {url for url, _ in expected} == {
