@@ -51,25 +51,26 @@ FRAME_XY: dict[int, tuple[int, int]] = {
 }
 
 
-def tile_uv_transform(
-    x: float,
-    y: float,
-    atlas_size: int = 2580,
-    tile_size: int = 512,
-    padding: int = 2,
-    cols: int = 5,
-) -> tuple[float, float, float, float]:
+# getTileUVTransform's layout: atlas and tile edge in pixels, padding
+# around each tile, tiles per row
+ATLAS_SIZE = 2580
+TILE_SIZE = 512
+PADDING = 2
+COLS = 5
+
+
+def tile_uv_transform(x: float, y: float) -> tuple[float, float, float, float]:
     """(offset_x, offset_y, scale_x, scale_y) — building_textures.ts:305-340."""
-    cell = tile_size + padding * 2
-    col = math.floor(x / tile_size)
-    row = (cols - 1) - math.floor(y / tile_size)
-    px = padding + col * cell
-    py = padding + row * cell
-    u_offset = px / atlas_size
-    v_offset = py / atlas_size
-    u_scale = tile_size / atlas_size
-    v_scale = tile_size / atlas_size
-    eps = 2 / atlas_size
+    cell = TILE_SIZE + PADDING * 2
+    col = math.floor(x / TILE_SIZE)
+    row = (COLS - 1) - math.floor(y / TILE_SIZE)
+    px = PADDING + col * cell
+    py = PADDING + row * cell
+    u_offset = px / ATLAS_SIZE
+    v_offset = py / ATLAS_SIZE
+    u_scale = TILE_SIZE / ATLAS_SIZE
+    v_scale = TILE_SIZE / ATLAS_SIZE
+    eps = 2 / ATLAS_SIZE
     return (u_offset + eps, v_offset + eps, u_scale - 2 * eps, v_scale - 2 * eps)
 
 
@@ -189,22 +190,22 @@ def _frame_pattern(texture_id: int, h: int, w: int):
     return out
 
 
-def render_atlas(atlas_size: int = 2580, tile_size: int = 512):
+def render_atlas():
     """All FRAME_XY frames rendered into one RGBA atlas array (background
     transparent black, frames at their packed pixel origins)."""
     import numpy as np
 
-    img = np.zeros((atlas_size, atlas_size, 4), dtype=np.uint8)
+    img = np.zeros((ATLAS_SIZE, ATLAS_SIZE, 4), dtype=np.uint8)
     for tid, (fx, fy) in FRAME_XY.items():
-        img[fy : fy + tile_size, fx : fx + tile_size] = _frame_pattern(
-            tid, tile_size, tile_size
+        img[fy : fy + TILE_SIZE, fx : fx + TILE_SIZE] = _frame_pattern(
+            tid, TILE_SIZE, TILE_SIZE
         )
     return img
 
 
-def write_atlas_png(path: str, atlas_size: int = 2580, tile_size: int = 512) -> str:
+def write_atlas_png(path: str) -> str:
     """Render + write the packed diffuse atlas PNG; returns the path."""
-    write_png(path, render_atlas(atlas_size, tile_size))
+    write_png(path, render_atlas())
     return path
 
 

@@ -118,8 +118,8 @@ def tile_y_col(y: Column, z: int = Z_LEAF) -> Column:
     return F.floor((F.lit(HALF_SIZE) - y) / F.lit(tile_span(z)))
 
 
-def tile_key_col(tx: Column, ty: Column, z: int = Z_LEAF) -> Column:
-    return F.concat_ws("_", F.lit(str(z)), tx.cast("string"), ty.cast("string"))
+def tile_key_col(tx: Column, ty: Column) -> Column:
+    return F.concat_ws("_", F.lit(str(Z_LEAF)), tx.cast("string"), ty.cast("string"))
 
 
 def lon_col_from_merc(x: Column) -> Column:

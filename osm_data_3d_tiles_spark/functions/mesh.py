@@ -196,11 +196,11 @@ def calculate_normal(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     return n / ln if ln > 0 else n
 
 
-def calculate_roof_normals(positions: np.ndarray, flip: bool = False) -> np.ndarray:
+def calculate_roof_normals(positions: np.ndarray) -> np.ndarray:
     """Per-face normal copied to each vertex (roof/utils.ts:43-62), vectorized."""
     p = np.asarray(positions, dtype=np.float64).reshape(-1, 3, 3)
     a, b, c = p[:, 0], p[:, 1], p[:, 2]
-    n = np.cross(c - a, b - a) if flip else np.cross(b - a, c - a)
+    n = np.cross(b - a, c - a)
     ln = np.linalg.norm(n, axis=1, keepdims=True)
     ln[ln == 0] = 1.0
     n = n / ln

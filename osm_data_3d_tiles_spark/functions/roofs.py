@@ -127,10 +127,11 @@ def multipolygon_ombb(rings: list[np.ndarray], ring_types: list[str]) -> np.ndar
     return g.compute_ombb(g.convex_hull(pts))
 
 
-def pole_of_inaccessibility(ring: np.ndarray, precision: float = 1.0) -> tuple[float, float, float]:
+def pole_of_inaccessibility(ring: np.ndarray) -> tuple[float, float, float]:
     """Polylabel (quadtree pole of inaccessibility) over a single outer ring,
-    matching the `polylabel([ring], 1)` call sites (curved-roof-builder.ts:246-257,
-    tile3d-multipolygon.ts:332-355). Returns (x, y, distance)."""
+    at precision 1, matching the `polylabel([ring], 1)` call sites
+    (curved-roof-builder.ts:246-257, tile3d-multipolygon.ts:332-355). Returns
+    (x, y, distance)."""
     r = np.asarray(ring, dtype=np.float64)
     if len(r) > 1 and np.array_equal(r[0], r[-1]):
         r = r[:-1]
@@ -183,7 +184,7 @@ def pole_of_inaccessibility(ring: np.ndarray, precision: float = 1.0) -> tuple[f
         c = heapq.heappop(queue)
         if c[1] > best[1]:
             best = c
-        if -c[0] - best[1] <= precision:
+        if -c[0] - best[1] <= 1.0:
             continue
         _, _, ccx, ccy, chh = c
         nh = chh / 2
@@ -403,7 +404,7 @@ def _curved_center(ring_vertices: np.ndarray) -> np.ndarray:
     c = np.array(g.polygon_centroid(closed))
     if g.points_in_ring(c.reshape(1, 2), closed)[0]:
         return c
-    px, py, _ = pole_of_inaccessibility(ring_vertices, 1.0)
+    px, py, _ = pole_of_inaccessibility(ring_vertices)
     return np.array([px, py])
 
 

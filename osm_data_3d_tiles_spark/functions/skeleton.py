@@ -132,7 +132,7 @@ def _ring_self_intersects(pts: np.ndarray) -> bool:
     return False
 
 
-def straight_skeleton(ring: np.ndarray, max_iter: int = 10000, holes=None):
+def straight_skeleton(ring: np.ndarray, holes=None):
     """Compute the straight skeleton of a simple polygon, optionally with holes.
 
     ring: (n,2) array, closing vertex optional, any winding (outer is
@@ -165,7 +165,7 @@ def straight_skeleton(ring: np.ndarray, max_iter: int = 10000, holes=None):
     silent-wrong-tiling mode — bad states fall back instead.
     """
     holes = [np.asarray(h, dtype=np.float64) for h in (holes or [])]
-    faces = _straight_skeleton_once(ring, max_iter, holes=holes)
+    faces = _straight_skeleton_once(ring, holes=holes)
     if faces is not None:
         return faces
 
@@ -189,7 +189,7 @@ def straight_skeleton(ring: np.ndarray, max_iter: int = 10000, holes=None):
     rot = np.array([[math.cos(theta), -math.sin(theta)],
                     [math.sin(theta), math.cos(theta)]])
     rotated = [(r - c) @ rot.T + c for r in all_rings]
-    faces = _straight_skeleton_once(rotated[0], max_iter, holes=rotated[1:])
+    faces = _straight_skeleton_once(rotated[0], holes=rotated[1:])
     if faces is not None:
         out = []
         for face in faces:
@@ -212,7 +212,6 @@ def straight_skeleton(ring: np.ndarray, max_iter: int = 10000, holes=None):
         jits = [(jrng.rand(*r.shape) - 0.5) * (eps * scale) for r in all_rings]
         faces = _straight_skeleton_once(
             all_rings[0] + jits[0],
-            max_iter,
             holes=[r + j for r, j in zip(all_rings[1:], jits[1:])],
         )
         if faces is not None:
@@ -236,7 +235,7 @@ def _dedup_ring(r: np.ndarray):
     return pts if len(pts) >= 3 else None
 
 
-def _straight_skeleton_once(ring: np.ndarray, max_iter: int = 10000, holes=None):
+def _straight_skeleton_once(ring: np.ndarray, holes=None):
     # SLAV: one wavefront loop per ring. The outer ring is normalized to CCW,
     # each hole to CW — the polygon interior is then on the LEFT of every
     # traversal, so `_bisector_for`'s rot90 inward normals and the reflex test
@@ -416,7 +415,7 @@ def _straight_skeleton_once(ring: np.ndarray, max_iter: int = 10000, holes=None)
 
     iterations = 0
     recoveries = 0
-    while alive and iterations < max_iter:
+    while alive and iterations < 10_000:
         if not queue:
             # Recovery: a split candidate can be filtered at pop time against a
             # LAV state that later changes (coincident multi-reflex events) and

@@ -347,6 +347,6 @@ def skeleton_roof(params: dict, rtype: str) -> dict | None:
         return None
     buf = verts_to_buffers(rows)
     # per-face flat normals (hipped-roof-builder.ts calculateNormals, flip=False)
-    buf["normal"] = calculate_roof_normals(buf["position"], flip=False)
+    buf["normal"] = calculate_roof_normals(buf["position"])
     return {**buf, "add_skirt": skirt is not None and len(skirt) > 0, "skirt": skirt,
             "facade_height_override": facade_height_override}

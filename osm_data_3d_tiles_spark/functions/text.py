@@ -118,23 +118,23 @@ def quality_score(text: pd.Series) -> pd.DataFrame:
     )
 
 
-def rolling_fingerprint(text: pd.Series, window: int = 8) -> pd.Series:
-    """Document fingerprint: min of rolling polynomial hashes over byte windows
-    (winnowing-style), in uint64 wraparound arithmetic (deterministic on every
+def rolling_fingerprint(text: pd.Series) -> pd.Series:
+    """Document fingerprint: min of rolling polynomial hashes over 8-byte
+    windows (winnowing-style), in uint64 wraparound arithmetic (deterministic on every
     platform); short docs fall back to crc32. Fully vectorized in numpy."""
     base = np.uint64(257)
 
     def _one(s: str) -> int:
         b = s.encode("utf-8")
-        if len(b) < window:
+        if len(b) < 8:
             return zlib.crc32(b)
         arr = np.frombuffer(b, dtype=np.uint8).astype(np.uint64)
-        n = len(arr) - window + 1
+        n = len(arr) - 7
         with np.errstate(over="ignore"):
-            # h[i] = sum(arr[i+j] * base^(window-1-j)) (mod 2^64), vectorized as a
+            # h[i] = sum(arr[i+j] * base^(7-j)) (mod 2^64), vectorized as a
             # strided matmul-free accumulation
             h = np.zeros(n, dtype=np.uint64)
-            for j in range(window):
+            for j in range(8):
                 h = h * base + arr[j : j + n]
         return int(np.int64(h.min().view(np.int64)))
 
@@ -157,12 +157,12 @@ def _hash64(tokens: list[str]) -> np.ndarray:
     return out
 
 
-def shingles(text: str, k: int = 3) -> list[str]:
-    """k-word shingles over lowercased word tokens."""
+def shingles(text: str) -> list[str]:
+    """3-word shingles over lowercased word tokens."""
     words = [w.lower() for w in TOKEN_RE.findall(text) if w.isalnum()]
-    if len(words) < k:
+    if len(words) < 3:
         return [" ".join(words)] if words else []
-    return [" ".join(words[i : i + k]) for i in range(len(words) - k + 1)]
+    return [" ".join(words[i : i + 3]) for i in range(len(words) - 2)]
 
 
 _MIX_MUL = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant
@@ -173,16 +173,16 @@ def _perm_seeds(num_perm: int, seed: int) -> np.ndarray:
     return rng.randint(1, 1 << 62, size=num_perm, dtype=np.int64).astype(np.uint64) | np.uint64(1)
 
 
-def minhash_signature(text: str, num_perm: int = 64, k: int = 3, seed: int = 42) -> np.ndarray:
-    """MinHash signature over FNV shingle hashes using num_perm xorshift-multiply
+def minhash_signature(text: str) -> np.ndarray:
+    """MinHash signature over FNV shingle hashes using 64 xorshift-multiply
     permutations h_i(x) = mix((x ^ s_i) · M) in uint64 wraparound arithmetic —
-    fully vectorized as one (num_perm, n_shingles) numpy broadcast (no Python-int
+    fully vectorized as one (64, n_shingles) numpy broadcast (no Python-int
     modular loop; wraparound multiply is a bijection so each h_i permutes u64)."""
-    sh = shingles(text, k)
+    sh = shingles(text)
     if not sh:
-        return np.zeros(num_perm, dtype=np.int64)
+        return np.zeros(64, dtype=np.int64)
     base = _hash64(sh)  # (n,)
-    seeds = _perm_seeds(num_perm, seed)  # (p,)
+    seeds = _perm_seeds(64, 42)  # (p,)
     with np.errstate(over="ignore"):
         h = (base[None, :] ^ seeds[:, None]) * _MIX_MUL
         h ^= h >> np.uint64(33)
@@ -191,12 +191,12 @@ def minhash_signature(text: str, num_perm: int = 64, k: int = 3, seed: int = 42)
     return h.min(axis=1).view(np.int64)
 
 
-def minhash_bands(sig: np.ndarray, bands: int = 16) -> list[int]:
-    """LSH banding: split the signature into `bands` rows-per-band groups and hash
+def minhash_bands(sig: np.ndarray) -> list[int]:
+    """LSH banding: split the signature into 16 bands of equal rows and hash
     each band (band index mixed in) for bucket joining."""
-    rows = len(sig) // bands
+    rows = len(sig) // 16
     out = []
-    for b in range(bands):
+    for b in range(16):
         h = np.uint64(0xCBF29CE484222325) ^ np.uint64(b + 1)
         for v in sig[b * rows : (b + 1) * rows]:
             h ^= np.uint64(np.int64(v).view(np.uint64))
@@ -205,9 +205,9 @@ def minhash_bands(sig: np.ndarray, bands: int = 16) -> list[int]:
     return out
 
 
-def simhash(text: str, k: int = 3) -> int:
+def simhash(text: str) -> int:
     """64-bit SimHash over shingle FNV hashes (unweighted)."""
-    sh = shingles(text, k)
+    sh = shingles(text)
     if not sh:
         return 0
     hs = _hash64(sh)

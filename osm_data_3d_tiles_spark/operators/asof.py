@@ -35,7 +35,6 @@ def asof_join(
     facts: DataFrame,
     snapshots: DataFrame,
     key: str,
-    ts_col: str = "ts",
     value_cols: tuple[str, ...] = ("value",),
 ) -> DataFrame:
     """All `facts` columns plus, for each v in `value_cols`, `asof_<v>` = that
@@ -48,25 +47,25 @@ def asof_join(
 
     snap = snapshots.select(
         F.col(key),
-        F.col(ts_col),
+        F.col("ts"),
         F.lit(0).alias("_side"),
         *[F.col(c).alias(f"asof_{c}") for c in value_cols],
         *[
             F.lit(None).cast(facts.schema[c].dataType).alias(f"_f_{c}")
             for c in fact_cols
-            if c not in (key, ts_col)
+            if c not in (key, "ts")
         ],
     )
     fact = facts.select(
         F.col(key),
-        F.col(ts_col),
+        F.col("ts"),
         F.lit(1).alias("_side"),
         *[F.lit(None).cast(snapshots.schema[c].dataType).alias(f"asof_{c}") for c in value_cols],
-        *[F.col(c).alias(f"_f_{c}") for c in fact_cols if c not in (key, ts_col)],
+        *[F.col(c).alias(f"_f_{c}") for c in fact_cols if c not in (key, "ts")],
     )
     w = (
         Window.partitionBy(key)
-        .orderBy(F.col(ts_col), F.col("_side"))
+        .orderBy(F.col("ts"), F.col("_side"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = snap.unionByName(fact).select(
@@ -74,8 +73,8 @@ def asof_join(
     )
     out = filled.filter(F.col("_side") == 1).select(
         F.col(key),
-        F.col(ts_col),
-        *[F.col(f"_f_{c}").alias(c) for c in fact_cols if c not in (key, ts_col)],
+        F.col("ts"),
+        *[F.col(f"_f_{c}").alias(c) for c in fact_cols if c not in (key, "ts")],
         *[F.col(f"_a_{c}").alias(f"asof_{c}") for c in value_cols],
     )
     # keep the caller's column order for the fact side

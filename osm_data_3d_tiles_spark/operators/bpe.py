@@ -47,14 +47,14 @@ from .dedup import _register_persist
 END_OF_WORD = "</w>"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """Distinct whitespace-delimited words with corpus frequencies.
 
     Whitespace is ASCII only: Spark's split uses Java's `\\s`, which is
     `[ \\t\\n\\x0B\\f\\r]`, so U+00A0, U+2003, U+3000 and other Unicode
     spaces stay inside words (unlike Python's `str.split()`)."""
     return (
-        docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("word"))
+        docs.select(F.explode(F.split(F.col("text"), r"\s+")).alias("word"))
         .where(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
@@ -77,9 +77,6 @@ def _merge_pair(toks: list, left: str, right: str, merged: str) -> list:
 def learn_bpe(
     docs: DataFrame,
     num_merges: int = 16,
-    text_col: str = "text",
-    min_pair_count: int = 2,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Learn `num_merges` BPE merge rules; returns the merge table
     (rank, left, right, pair_count) with rank 0 = first merge learned.
@@ -88,13 +85,14 @@ def learn_bpe(
     symbol (the Sennrich et al. convention, so learned units can't cross word
     boundaries). Ties on pair count break lexicographically on (left, right) —
     fully deterministic. Stops early when the best pair's weighted count
-    drops below `min_pair_count` (merging singletons learns nothing).
+    drops below 2 (merging singletons learns nothing). Every 4th round's
+    table is checkpointed.
     """
     if num_merges < 1:
         raise ValueError(f"num_merges must be >= 1, got {num_merges}")
     spark = docs.sparkSession
 
-    syms = word_counts(docs, text_col).select(
+    syms = word_counts(docs).select(
         F.concat(
             F.expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
             F.array(F.lit(END_OF_WORD)),
@@ -130,7 +128,7 @@ def learn_bpe(
             .limit(1)
             .collect()
         )
-        if not best or best[0]["n"] < min_pair_count:
+        if not best or best[0]["n"] < 2:
             break
         left, right, n = best[0]["l"], best[0]["r"], int(best[0]["n"])
         merges.append((rank, left, right, n))
@@ -165,7 +163,7 @@ def learn_bpe(
 
         changed = syms.where(has_pair).mapInPandas(_apply, schema=out_schema)
         new_syms = changed.unionByName(syms.where(~has_pair)).coalesce(n_parts)
-        if checkpoint_every and (rank + 1) % checkpoint_every == 0:
+        if (rank + 1) % 4 == 0:
             # truncate lineage — each round's plan otherwise references every
             # prior round's union (same hygiene as connected_components)
             new_syms = _register_persist(new_syms.localCheckpoint(eager=True))

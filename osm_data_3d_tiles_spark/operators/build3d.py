@@ -324,7 +324,7 @@ def building_labels(buildings_with_params: DataFrame) -> DataFrame:
                 ]
                 if not outers:
                     continue
-                px, py, dist = pole_of_inaccessibility(outers[0], 1.0)
+                px, py, dist = pole_of_inaccessibility(outers[0])
                 ids.append(row.osm_id)
                 labels.append(row.label)
                 xs.append(px)

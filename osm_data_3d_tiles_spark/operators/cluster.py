@@ -46,21 +46,15 @@ from pyspark.sql import functions as F
 from .components import connected_components
 
 
-def eps_neighbor_pairs(
-    points: DataFrame,
-    eps: float,
-    pid: str = "pid",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+def eps_neighbor_pairs(points: DataFrame, eps: float) -> DataFrame:
     """Edge list (a, b), a < b: unordered point pairs with euclidean
     distance <= eps. Exact (grid prune + refine), each pair emitted once."""
     if eps <= 0:
         raise ValueError(f"eps must be > 0, got {eps}")
-    cx = F.floor(F.col(x) / eps)
-    cy = F.floor(F.col(y) / eps)
+    cx = F.floor(F.col("x") / eps)
+    cy = F.floor(F.col("y") / eps)
     left = points.select(
-        F.col(pid).alias("_la"), F.col(x).alias("_lx"), F.col(y).alias("_ly"),
+        F.col("pid").alias("_la"), F.col("x").alias("_lx"), F.col("y").alias("_ly"),
         cx.alias("_cx"), cy.alias("_cy"),
     )
     offsets = F.array(*[
@@ -69,7 +63,7 @@ def eps_neighbor_pairs(
     ])
     right = (
         points.select(
-            F.col(pid).alias("_rb"), F.col(x).alias("_rx"), F.col(y).alias("_ry"),
+            F.col("pid").alias("_rb"), F.col("x").alias("_rx"), F.col("y").alias("_ry"),
             cx.alias("_bx"), cy.alias("_by"),
         )
         .withColumn("_o", F.explode(offsets))
@@ -91,23 +85,17 @@ def eps_neighbor_pairs(
     )
 
 
-def spatial_clusters(
-    points: DataFrame,
-    eps: float,
-    pid: str = "pid",
-    x: str = "x",
-    y: str = "y",
-) -> DataFrame:
+def spatial_clusters(points: DataFrame, eps: float) -> DataFrame:
     """(pid, cluster_id) for EVERY input point: cluster_id = min pid in the
     point's eps-connectivity component; isolated points are their own
     cluster. Total over the input (unlike raw connected_components)."""
-    edges = eps_neighbor_pairs(points, eps, pid, x, y)
+    edges = eps_neighbor_pairs(points, eps)
     cc = connected_components(edges)
     return (
-        points.select(F.col(pid).cast("long").alias(pid))
-        .join(cc.withColumnRenamed("node", pid), pid, "left")
+        points.select(F.col("pid").cast("long").alias("pid"))
+        .join(cc.withColumnRenamed("node", "pid"), "pid", "left")
         .select(
-            F.col(pid),
-            F.coalesce(F.col("cluster_id"), F.col(pid)).alias("cluster_id"),
+            F.col("pid"),
+            F.coalesce(F.col("cluster_id"), F.col("pid")).alias("cluster_id"),
         )
     )

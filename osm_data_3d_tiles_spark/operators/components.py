@@ -154,13 +154,8 @@ def connected_components(
     return labels.select("node", F.col("label").alias("cluster_id"))
 
 
-def shared_ngram_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-) -> DataFrame:
-    """Edge list (a, b), a < b: documents sharing ≥1 word n-gram.
+def shared_ngram_pairs(docs: DataFrame) -> DataFrame:
+    """Edge list (a, b), a < b: documents sharing ≥1 word 5-gram.
 
     The Dolma/Gopher-style contamination edge rule (share one long shingle ⇒
     duplicate content), and the natural input to `connected_components`. Plan:
@@ -168,12 +163,12 @@ def shared_ngram_pairs(
     → explode → self-equi-join on the gram key → distinct pairs. The join is
     the candidate generator — only documents sharing a gram ever meet, so the
     cost is Σ bucket² over gram buckets, not |docs|²; at planet scale run
-    `exact_dedup` first and pick n large enough (13 in Dolma) that only true
-    near-dups share a gram.
+    `exact_dedup` first (Dolma uses 13-grams, so that only true near-dups
+    share a gram).
     """
     grams = docs.select(
-        F.col(id_col).cast("long").alias("_id"),
-        F.explode(_gram_hash_col(text_col, n)).alias("_g"),
+        F.col("doc_id").cast("long").alias("_id"),
+        F.explode(_gram_hash_col("text", 5)).alias("_g"),
     )
     left = grams.select(F.col("_id").alias("a"), "_g")
     right = grams.select(F.col("_id").alias("b"), "_g")

@@ -75,23 +75,18 @@ def _bloom_probes(h: np.ndarray, k: int, m: int):
 def contaminated_docs(
     docs: DataFrame,
     reference: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ref_text_col: str = "text",
-    n: int = 3,
-    fpp: float = 0.001,
     use_bloom: bool = True,
 ) -> DataFrame:
-    """(id_col, n_hits) for every document sharing ≥ 1 word n-gram with the
+    """(doc_id, n_hits) for every document sharing ≥ 1 word 3-gram with the
     reference corpus. Exact — the Bloom stage only prunes; the equi-join on
     the exact reference gram hashes decides."""
     spark = docs.sparkSession
     ref_grams = reference.select(
-        F.explode(_gram_hash_col(ref_text_col, n)).alias("gh")
+        F.explode(_gram_hash_col("text", 3)).alias("gh")
     ).distinct()
 
     doc_grams = docs.select(
-        F.col(id_col).alias("id"), F.explode(_gram_hash_col(text_col, n)).alias("gh")
+        F.col("doc_id").alias("id"), F.explode(_gram_hash_col("text", 3)).alias("gh")
     )
 
     if use_bloom:
@@ -100,10 +95,10 @@ def contaminated_docs(
         )
         if len(ref_hashes) == 0:
             return (
-                docs.select(F.col(id_col)).limit(0)
+                docs.select(F.col("doc_id")).limit(0)
                 .withColumn("n_hits", F.lit(0).cast("long"))
             )
-        bits, m, k = _bloom_build(ref_hashes, fpp)
+        bits, m, k = _bloom_build(ref_hashes, 0.001)
         bc = spark.sparkContext.broadcast((bits, m, k))
 
         schema = T.StructType(
@@ -131,5 +126,5 @@ def contaminated_docs(
     return (
         exact.groupBy("id")
         .agg(F.count("*").alias("n_hits"))
-        .select(F.col("id").alias(id_col), "n_hits")
+        .select(F.col("id").alias("doc_id"), "n_hits")
     )

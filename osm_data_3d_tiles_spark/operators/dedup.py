@@ -38,7 +38,7 @@ def _register_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def unpersist_all(blocking: bool = False) -> int:
+def unpersist_all() -> int:
     """Release every intermediate this module has persisted; returns the count.
     Call between dedup runs in a long-lived session (or `spark.catalog.clearCache`
     for a blunter hammer)."""
@@ -46,7 +46,7 @@ def unpersist_all(blocking: bool = False) -> int:
     while _PERSISTED:
         df = _PERSISTED.pop()
         try:
-            df.unpersist(blocking)
+            df.unpersist()
             n += 1
         except Exception:
             pass
@@ -58,12 +58,12 @@ def unpersist_all(blocking: bool = False) -> int:
 # ---------------------------------------------------------------------------
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """One row per distinct text: (text_hash, keep_id = min id, dup_count)."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
+        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("text_hash"))
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_count"))
     )
 
 
@@ -72,39 +72,26 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    shingle_k: int = 3,
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("signature", T.ArrayType(T.LongType())),
         ]
     )
 
     def _sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            sigs = [
-                tx.minhash_signature(t, num_perm=num_perm, k=shingle_k).tolist()
-                for t in pdf[text_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "signature": sigs})
+            sigs = [tx.minhash_signature(t).tolist() for t in pdf["text"]]
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "signature": sigs})
 
     from ..session import with_min_parallelism
 
-    return with_min_parallelism(docs.select(id_col, text_col)).mapInPandas(_sig, schema=schema)
+    return with_min_parallelism(docs.select("doc_id", "text")).mapInPandas(_sig, schema=schema)
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_perm: int = 64,
-    bands: int = 16,
     threshold: float = 0.8,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -112,7 +99,7 @@ def minhash_lsh_pairs(
     Jaccard estimate ≥ threshold. Output: (a, b, est_jaccard) with a < b.
 
     Shuffle shape: band rows carry (id, band, band_hash) ONLY — the 64-long
-    signature does not ride the ×bands explode through the shuffle; it is
+    signature does not ride the ×16 bands explode through the shuffle; it is
     re-joined once per pair side for the verify (pairs ≪ band rows).
 
     `max_bucket` drops band buckets with more than that many members before
@@ -123,17 +110,17 @@ def minhash_lsh_pairs(
     # persisted (registered for `unpersist_all`): the signature stage (the
     # dominant Python CPU cost) feeds three plan branches — banding plus one
     # verify join per pair side — and would otherwise recompute per branch
-    sigs = _register_persist(minhash_signatures(docs, id_col, text_col, num_perm).persist())
+    sigs = _register_persist(minhash_signatures(docs).persist())
 
-    banded = _banded_rows(sigs, bands, id_col)
+    banded = _banded_rows(sigs)
     if max_bucket is not None:
         from pyspark.sql import Window
 
         n_in_bucket = F.count("*").over(Window.partitionBy("band", "band_hash"))
         banded = banded.withColumn("_n", n_in_bucket).filter(F.col("_n") <= max_bucket).drop("_n")
 
-    left = banded.select(F.col(id_col).alias("a"), "band", "band_hash")
-    right = banded.select(F.col(id_col).alias("b"), "band", "band_hash")
+    left = banded.select(F.col("doc_id").alias("a"), "band", "band_hash")
+    right = banded.select(F.col("doc_id").alias("b"), "band", "band_hash")
     pairs = (
         left.join(right, ["band", "band_hash"])
         .filter(F.col("a") < F.col("b"))
@@ -141,8 +128,8 @@ def minhash_lsh_pairs(
         .dropDuplicates(["a", "b"])
     )
     cand = pairs.join(
-        sigs.select(F.col(id_col).alias("a"), F.col("signature").alias("sig_a")), "a"
-    ).join(sigs.select(F.col(id_col).alias("b"), F.col("signature").alias("sig_b")), "b")
+        sigs.select(F.col("doc_id").alias("a"), F.col("signature").alias("sig_a")), "a"
+    ).join(sigs.select(F.col("doc_id").alias("b"), F.col("signature").alias("sig_b")), "b")
     # exact signature agreement ratio (unbiased Jaccard estimate)
     num_perm_lit = F.size("sig_a").cast("double")
     est = (
@@ -160,12 +147,12 @@ def minhash_lsh_pairs(
     )
 
 
-def _banded_rows(sigs: DataFrame, bands: int, id_col: str) -> DataFrame:
-    """(id, band, band_hash) rows — the LSH banding shared by the pair join and
+def _banded_rows(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_hash) rows, 16 bands — the LSH banding shared by the pair join and
     the bucket-stats diagnostic."""
     band_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("band", T.IntegerType()),
             T.StructField("band_hash", T.LongType()),
         ]
@@ -174,13 +161,13 @@ def _banded_rows(sigs: DataFrame, bands: int, id_col: str) -> DataFrame:
     def _bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, bd, bh = [], [], []
-            for i, sig in zip(pdf[id_col], pdf["signature"]):
-                hashes = tx.minhash_bands(np.asarray(sig, dtype=np.int64), bands)
+            for i, sig in zip(pdf["doc_id"], pdf["signature"]):
+                hashes = tx.minhash_bands(np.asarray(sig, dtype=np.int64))
                 for b, h in enumerate(hashes):
                     ids.append(i)
                     bd.append(b)
                     bh.append(h)
-            yield pd.DataFrame({id_col: ids, "band": bd, "band_hash": bh})
+            yield pd.DataFrame({"doc_id": ids, "band": bd, "band_hash": bh})
 
     return sigs.mapInPandas(_bands, schema=band_schema)
 
@@ -219,8 +206,6 @@ def _simhash_block_combos(max_hamming: int, n_blocks: int | None) -> tuple[int, 
 def simhash_pairs_from_signatures(
     sims: DataFrame,
     max_hamming: int = 3,
-    id_col: str = "doc_id",
-    sim_col: str = "simhash",
     n_blocks: int | None = None,
 ) -> DataFrame:
     """Pairs with Hamming distance ≤ max_hamming from a (id, simhash) table.
@@ -232,7 +217,7 @@ def simhash_pairs_from_signatures(
     offsets = [sum(widths[:i]) for i in range(n_blocks)]
 
     def _block(i: int) -> F.Column:
-        shifted = F.shiftrightunsigned(F.col(sim_col), offsets[i])
+        shifted = F.shiftrightunsigned(F.col("simhash"), offsets[i])
         if widths[i] >= 64:  # n_blocks=1 (max_hamming=0): the full-width mask
             return shifted   # literal (1<<64)-1 overflows LongType — and is a no-op
         return shifted.bitwiseAND(F.lit((1 << widths[i]) - 1))
@@ -240,8 +225,8 @@ def simhash_pairs_from_signatures(
     # key = stable hash of the combo's block values; hash collisions only add
     # candidates (killed by the exact Hamming verify), never lose recall
     keys = sims.select(
-        id_col,
-        sim_col,
+        "doc_id",
+        "simhash",
         F.explode(
             F.array(
                 *[
@@ -253,10 +238,14 @@ def simhash_pairs_from_signatures(
                 ]
             )
         ).alias("c"),
-    ).select(id_col, sim_col, "c.combo", "c.key")
+    ).select("doc_id", "simhash", "c.combo", "c.key")
 
-    left = keys.select(F.col(id_col).alias("a"), F.col(sim_col).alias("sim_a"), "combo", "key")
-    right = keys.select(F.col(id_col).alias("b"), F.col(sim_col).alias("sim_b"), "combo", "key")
+    left = keys.select(
+        F.col("doc_id").alias("a"), F.col("simhash").alias("sim_a"), "combo", "key"
+    )
+    right = keys.select(
+        F.col("doc_id").alias("b"), F.col("simhash").alias("sim_b"), "combo", "key"
+    )
     cand = (
         left.join(right, ["combo", "key"])
         .filter(F.col("a") < F.col("b"))
@@ -273,28 +262,23 @@ def simhash_pairs_from_signatures(
 
 def simhash_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 3,
-    n_blocks: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs with Hamming distance ≤ max_hamming over 64-bit SimHash."""
     schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("simhash", T.LongType())]
+        [T.StructField("doc_id", T.LongType()), T.StructField("simhash", T.LongType())]
     )
 
     def _sim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
-                {id_col: pdf[id_col], "simhash": [tx.simhash(t) for t in pdf[text_col]]}
+                {"doc_id": pdf["doc_id"], "simhash": [tx.simhash(t) for t in pdf["text"]]}
             )
 
     from ..session import with_min_parallelism
 
-    sims = with_min_parallelism(docs.select(id_col, text_col)).mapInPandas(_sim, schema=schema)
-    return simhash_pairs_from_signatures(
-        sims, max_hamming=max_hamming, id_col=id_col, n_blocks=n_blocks
-    )
+    sims = with_min_parallelism(docs.select("doc_id", "text")).mapInPandas(_sim, schema=schema)
+    return simhash_pairs_from_signatures(sims, max_hamming=max_hamming)
 
 
 # ---------------------------------------------------------------------------
@@ -304,8 +288,6 @@ def simhash_pairs(
 
 def ngram_jaccard_exact(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 3,
     threshold_num: int = 3,
     threshold_den: int = 5,
@@ -341,7 +323,7 @@ def ngram_jaccard_exact(
       prefix, and both sides of the intersection join — and were measured
       recomputing the text-scan→explode→distinct shuffle per branch.
     """
-    words = F.split(F.col(text_col), " ", -1)
+    words = F.split(F.col("text"), " ", -1)
     # guard: Spark sequence(1, k) with k < 1 yields a DESCENDING sequence
     grams_arr = F.when(
         F.size(words) >= n,
@@ -355,7 +337,7 @@ def ngram_jaccard_exact(
     # |distinct grams| likewise falls out narrow as size(array)
     gharr = F.array_distinct(grams_arr)
     base = docs.select(
-        F.col(id_col).alias("id"), gharr.alias("_gh"), F.size(gharr).alias("sz")
+        F.col("doc_id").alias("id"), gharr.alias("_gh"), F.size(gharr).alias("sz")
     )
     grams = _register_persist(
         base.select("id", F.explode("_gh").alias("gh")).persist()
@@ -411,33 +393,28 @@ def ngram_jaccard_exact(
 
 def embedding_neardup_pairs(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_tables: int = 8,
-    bits_per_table: int = 8,
     threshold: float = 0.95,
-    seed: int = 42,
 ) -> DataFrame:
     """Banded multi-table random-hyperplane LSH + exact cosine verification.
     Output: (a, b, cosine) with a < b and cosine ≥ threshold.
 
     Recall shape: a pair at angle θ agrees on one hyperplane bit with
-    p = 1 − θ/π, on one table's full key with p^bits, and is MISSED only if all
-    n_tables keys disagree: (1 − p^bits)^n_tables. At cosine 0.95 (θ≈18°,
-    p≈0.90) the defaults give ≥ 0.97 recall; a single 16-bit table (the old
+    p = 1 − θ/π, on one table's full key with p^8, and is MISSED only if all
+    8 table keys of 8 bits disagree: (1 − p^8)^8. At cosine 0.95 (θ≈18°,
+    p≈0.90) that is ≥ 0.97 recall; a single 16-bit table (the old
     shape) is ≈ 0.12 there — recall collapses near the threshold. Candidates
-    ride an equi-join on (table, bucket); only ids shuffle with the ×n_tables
+    ride an equi-join on (table, bucket); only ids shuffle with the ×8
     explode, units are re-joined per pair side for the verify."""
     bucket_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("vec_id", T.LongType()),
             T.StructField("table", T.IntegerType()),
             T.StructField("bucket", T.LongType()),
         ]
     )
     unit_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("vec_id", T.LongType()),
             T.StructField("unit", T.ArrayType(T.DoubleType())),
         ]
     )
@@ -446,41 +423,42 @@ def embedding_neardup_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            mat = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             norms = np.linalg.norm(mat, axis=1, keepdims=True)
             norms[norms == 0] = 1.0
             unit = mat / norms
-            yield pd.DataFrame({id_col: pdf[id_col], "unit": [u.tolist() for u in unit]})
+            yield pd.DataFrame({"vec_id": pdf["vec_id"], "unit": [u.tolist() for u in unit]})
 
     def _buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes: np.ndarray | None = None
-        weights = 1 << np.arange(bits_per_table, dtype=np.int64)
+        # 8 tables of 8 hyperplane bits each
+        weights = 1 << np.arange(8, dtype=np.int64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             unit = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["unit"]])
             if planes is None:
-                rng = np.random.RandomState(seed)
-                planes = rng.randn(unit.shape[1], n_tables * bits_per_table)
+                rng = np.random.RandomState(42)
+                planes = rng.randn(unit.shape[1], 64)
             bits = (unit @ planes > 0).astype(np.int64)
             ids, tables, buckets = [], [], []
-            for t in range(n_tables):
-                chunk = bits[:, t * bits_per_table : (t + 1) * bits_per_table]
-                ids.extend(pdf[id_col])
+            for t in range(8):
+                chunk = bits[:, t * 8 : (t + 1) * 8]
+                ids.extend(pdf["vec_id"])
                 tables.extend([t] * len(pdf))
                 buckets.extend((chunk @ weights).tolist())
-            yield pd.DataFrame({id_col: ids, "table": tables, "bucket": buckets})
+            yield pd.DataFrame({"vec_id": ids, "table": tables, "bucket": buckets})
 
     from ..session import with_min_parallelism
 
     # normalize ONCE: units is persisted (registered for `unpersist_all`) and
     # feeds bucketing plus both verify joins (otherwise the embedding scan +
     # normalization runs up to 4x)
-    src = with_min_parallelism(embeddings.select(id_col, vec_col))
+    src = with_min_parallelism(embeddings.select("vec_id", "embedding"))
     units = _register_persist(src.mapInPandas(_units, schema=unit_schema).persist())
     bucketed = units.mapInPandas(_buckets, schema=bucket_schema)
-    left = bucketed.select(F.col(id_col).alias("a"), "table", "bucket")
-    right = bucketed.select(F.col(id_col).alias("b"), "table", "bucket")
+    left = bucketed.select(F.col("vec_id").alias("a"), "table", "bucket")
+    right = bucketed.select(F.col("vec_id").alias("b"), "table", "bucket")
     pairs = (
         left.join(right, ["table", "bucket"])
         .filter(F.col("a") < F.col("b"))
@@ -488,8 +466,8 @@ def embedding_neardup_pairs(
         .dropDuplicates(["a", "b"])
     )
     cand = pairs.join(
-        units.select(F.col(id_col).alias("a"), F.col("unit").alias("ua")), "a"
-    ).join(units.select(F.col(id_col).alias("b"), F.col("unit").alias("ub")), "b")
+        units.select(F.col("vec_id").alias("a"), F.col("unit").alias("ua")), "a"
+    ).join(units.select(F.col("vec_id").alias("b"), F.col("unit").alias("ub")), "b")
     cosine = F.aggregate(
         F.zip_with("ua", "ub", lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -507,9 +485,6 @@ def embedding_neardup_pairs(
 
 def exact_substring_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    window: int = 40,
     sample_hex_prefix: str = "0",
 ) -> DataFrame:
     """Cross-document exact duplicated substrings, per Lee et al. 2021
@@ -519,13 +494,13 @@ def exact_substring_spans(
     The published method builds one suffix array over the whole corpus and
     reports substrings >= L that occur twice; a global suffix array is the
     wrong shape for a distributed engine (single sorted structure over 100 TB
-    of text). The scale-safe re-expression: slide a length-`window` character
+    of text). The scale-safe re-expression: slide a 40-character
     window over each document, keep windows by a CONTENT-DEFINED sample (md5
     hex prefix match — 1/16 per prefix nibble; winnowing-style, so identical
     text selects identical windows regardless of document offset), and group
     sampled windows by their md5 across the corpus. A window whose content
     appears in >= 2 distinct documents is a duplicated span anchor; any
-    cross-document duplicated run of length >= window + 4·len(prefix) chars
+    cross-document duplicated run of length >= 40 + 4·len(prefix) chars
     contains at least one sampled anchor in expectation, and the anchors it
     contains are found EXACTLY (no false positives modulo md5 collision —
     documented, cryptographically negligible, and identical in the oracle).
@@ -544,7 +519,7 @@ def exact_substring_spans(
       repartition of the big side.
 
     Returns one row per document that contains at least one duplicated
-    anchor: (id_col, n_dup_windows = distinct duplicated anchor contents in
+    anchor: (doc_id, n_dup_windows = distinct duplicated anchor contents in
     the doc, n_dup_occurrences = total anchor occurrences in the doc).
 
     Reference scope note: the reference engine has no corpus dedup at all
@@ -559,20 +534,20 @@ def exact_substring_spans(
     keys_expr = (
         f"transform("
         f"  filter("
-        f"    transform(sequence(1, length({text_col}) - {window - 1}),"
-        f"              i -> substring({text_col}, i, {window})),"
+        f"    transform(sequence(1, length(text) - 39),"
+        f"              i -> substring(text, i, 40)),"
         f"    w -> substring(md5(w), 1, {plen}) = '{sample_hex_prefix}'),"
         f"  w -> md5(w))"
     )
     sampled = (
-        docs.where(F.length(text_col) >= window)
-        .select(F.col(id_col), F.explode(F.expr(keys_expr)).alias("wkey"))
+        docs.where(F.length("text") >= 40)
+        .select(F.col("doc_id"), F.explode(F.expr(keys_expr)).alias("wkey"))
     )
     # persisted: per_doc feeds BOTH the anchor aggregate and the final join —
     # without the persist Catalyst re-derives each branch from its own scan
     # and the (expensive) window-extraction pass runs twice over the corpus
     per_doc = _register_persist(
-        sampled.groupBy(id_col, "wkey").agg(F.count("*").alias("n_occ")).persist()
+        sampled.groupBy("doc_id", "wkey").agg(F.count("*").alias("n_occ")).persist()
     )
     # distinct-doc count per anchor, computed over the per-doc aggregate: the
     # re-shuffle onto wkey moves one row per (doc, anchor), not one per window
@@ -585,7 +560,7 @@ def exact_substring_spans(
     )
     return (
         per_doc.join(anchors, "wkey")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_dup_windows"),
             F.sum("n_occ").alias("n_dup_occurrences"),

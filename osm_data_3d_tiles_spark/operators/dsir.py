@@ -42,13 +42,13 @@ from pyspark.sql import functions as F
 from ..operators.similarity import _local_topk, _global_topk
 
 
-def hashed_ngram_buckets(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Per-document hashed-n-gram bucket counts: (id_col, bucket, cnt).
+# hashed n-gram feature buckets: the default of hashed_ngram_buckets and
+# the model size of dsir_select
+N_BUCKETS = 256
+
+
+def hashed_ngram_buckets(docs: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
+    """Per-document hashed-n-gram bucket counts: (doc_id, bucket, cnt).
 
     Grams are whitespace unigrams plus adjacent-word bigrams (the DSIR
     paper's featurization); bucket = md5(gram) taken as a hex integer mod
@@ -61,8 +61,8 @@ def hashed_ngram_buckets(
     if not 1 <= n_buckets <= 65536:
         raise ValueError(f"n_buckets must be in [1, 65536], got {n_buckets}")
     words = docs.select(
-        F.col(id_col),
-        F.expr(f"filter(split({text_col}, '\\\\s+'), w -> w != '')").alias("ws"),
+        F.col("doc_id"),
+        F.expr("filter(split(text, '\\\\s+'), w -> w != '')").alias("ws"),
     )
     buckets_expr = (
         "transform("
@@ -77,39 +77,32 @@ def hashed_ngram_buckets(
         f"  g -> cast(conv(substring(md5(g), 1, 4), 16, 10) as int) % {n_buckets})"
     )
     return (
-        words.select(F.col(id_col), F.explode(F.expr(buckets_expr)).alias("bucket"))
-        .groupBy(id_col, "bucket")
+        words.select(F.col("doc_id"), F.explode(F.expr(buckets_expr)).alias("bucket"))
+        .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
 
 
-def dsir_select(
-    docs: DataFrame,
-    is_target,
-    k: int = 100,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 256,
-) -> DataFrame:
+def dsir_select(docs: DataFrame, is_target, k: int = 100) -> DataFrame:
     """Top-k raw documents by DSIR importance log-weight.
 
     `is_target` is a boolean Column marking the target-distribution examples
     (they define p and are excluded from selection); every other document is
     raw (defines q, eligible for selection). Models are add-one smoothed over
-    n_buckets. Returns (id_col, log_weight, rank) with rank 1 = best;
+    N_BUCKETS. Returns (doc_id, log_weight, rank) with rank 1 = best;
     ties break on ascending id via the shared top-k kernels.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     from .dedup import _register_persist
 
-    flagged = docs.select(F.col(id_col), F.col(text_col), is_target.alias("is_target"))
-    counts = hashed_ngram_buckets(flagged, id_col, text_col, n_buckets)
+    flagged = docs.select(F.col("doc_id"), F.col("text"), is_target.alias("is_target"))
+    counts = hashed_ngram_buckets(flagged)
     # persist: the featurization (whole-corpus HOF gram extraction + explode +
     # aggregation) feeds BOTH the totals collect and the weighted-scoring join
     # below — without the cache the dominant stage executes twice.
     counts = _register_persist(
-        counts.join(flagged.select(id_col, "is_target"), id_col).persist()
+        counts.join(flagged.select("doc_id", "is_target"), "doc_id").persist()
     )
 
     totals = (
@@ -128,10 +121,10 @@ def dsir_select(
     scores = [
         (
             b,
-            math.log((by_bucket.get(b, (0, 0))[0] + 1) / (t_total + n_buckets))
-            - math.log((by_bucket.get(b, (0, 0))[1] + 1) / (r_total + n_buckets)),
+            math.log((by_bucket.get(b, (0, 0))[0] + 1) / (t_total + N_BUCKETS))
+            - math.log((by_bucket.get(b, (0, 0))[1] + 1) / (r_total + N_BUCKETS)),
         )
-        for b in range(n_buckets)
+        for b in range(N_BUCKETS)
     ]
     spark = docs.sparkSession
     score_df = spark.createDataFrame(scores, ["bucket", "score"])
@@ -139,13 +132,13 @@ def dsir_select(
     weighted = (
         counts.where(~F.col("is_target"))
         .join(F.broadcast(score_df), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum(F.col("cnt") * F.col("score")).alias("log_weight"))
     )
     # two-phase top-k (same kernels as the ANN family): per-partition
     # pre-aggregation, then the bounded global pass
     pruned = _local_topk(
-        weighted.select(F.lit(0).alias("_q"), id_col, "log_weight"),
-        "_q", id_col, "log_weight", k,
+        weighted.select(F.lit(0).alias("_q"), "doc_id", "log_weight"),
+        "_q", "doc_id", "log_weight", k,
     )
-    return _global_topk(pruned, "_q", id_col, "log_weight", k).drop("_q")
+    return _global_topk(pruned, "_q", "doc_id", "log_weight", k).drop("_q")

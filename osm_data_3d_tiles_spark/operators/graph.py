@@ -61,18 +61,14 @@ def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
     n_iter: int = 5,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
     damping: tuple[int, int] = (17, 20),
-    scale: int = 10**12,
 ) -> DataFrame:
     """Fixed-point PageRank after exactly `n_iter` power iterations.
 
-    `nodes` is the full node universe (one column `node_col`) — required
+    `nodes` is the full node universe (one column `node`) — required
     explicitly because rank mass belongs to every node, not only to nodes
-    that happen to appear in `edges`. Returns (node, rank_fp) with rank_fp
-    the BIGINT rank in 1/scale units (rank_fp/scale ≈ probability).
+    that happen to appear in `edges` (`src`, `dst`). Returns (node, rank_fp)
+    with rank_fp the BIGINT rank in 1e-12 units (rank_fp/1e12 ≈ probability).
     """
     num, den = damping
     if not (0 < num < den):
@@ -80,8 +76,10 @@ def pagerank(
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
 
-    nd = nodes.select(F.col(node_col).cast("long").alias("node"))
-    e = edges.select(F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst"))
+    nd = nodes.select(F.col("node").cast("long").alias("node"))
+    e = edges.select(
+        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
+    )
     n_nodes = nd.count()
     if n_nodes == 0:
         raise ValueError("empty node set")
@@ -95,9 +93,9 @@ def pagerank(
     ed = _register_persist(e.join(deg, "src").repartition("src").persist())
     nd = _register_persist(nd.repartition("node").persist())
 
-    base = ((den - num) * scale) // (den * n_nodes)
+    base = ((den - num) * 10**12) // (den * n_nodes)
     ranks = _register_persist(
-        nd.withColumn("rank_fp", F.lit(scale // n_nodes).cast("long")).persist()
+        nd.withColumn("rank_fp", F.lit(10**12 // n_nodes).cast("long")).persist()
     )
 
     contrib_expr = F.expr(f"({num} * rank_fp) div ({den} * od)")

@@ -23,14 +23,12 @@ from pyspark.sql import functions as F
 def bucketed_range_join(
     events: DataFrame,
     windows: DataFrame,
-    ts: str = "ts_epoch",
-    start: str = "start_epoch",
-    end: str = "end_epoch",
     bucket_s: int = 3600,
     how: str = "inner",
 ) -> DataFrame:
-    """Join rows of `events` to every window with start <= ts < end.
-    All three columns are epoch-second BIGINTs; `bucket_s` is the
+    """Join rows of `events` to every window with
+    start_epoch <= ts_epoch < end_epoch. All three columns are epoch-second
+    BIGINTs; `bucket_s` is the
     quantization (pick ~ the typical window length). Returns the full
     column set of both inputs.
 
@@ -51,22 +49,22 @@ def bucketed_range_join(
             f"how={how!r} unsupported: exploded windows make right/full "
             "outer joins emit unmatched windows once per bucket"
         )
-    wb = windows.filter(F.col(end) > F.col(start)).withColumn(
+    wb = windows.filter(F.col("end_epoch") > F.col("start_epoch")).withColumn(
         "_wbucket",
         F.explode(
             F.sequence(
-                F.expr(f"{start} div {bucket_s}"),
-                F.expr(f"({end} - 1) div {bucket_s}"),
+                F.expr(f"start_epoch div {bucket_s}"),
+                F.expr(f"(end_epoch - 1) div {bucket_s}"),
             )
         ),
     )
-    eb = events.withColumn("_ebucket", F.expr(f"{ts} div {bucket_s}"))
+    eb = events.withColumn("_ebucket", F.expr(f"ts_epoch div {bucket_s}"))
     joined = eb.join(
         wb,
         [
             F.col("_ebucket") == F.col("_wbucket"),
-            F.col(ts) >= F.col(start),
-            F.col(ts) < F.col(end),
+            F.col("ts_epoch") >= F.col("start_epoch"),
+            F.col("ts_epoch") < F.col("end_epoch"),
         ],
         how,
     )

@@ -21,7 +21,7 @@ broadcast onto the distributed centroid table and pre-aggregated per partition
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -62,13 +62,13 @@ def building_centroids(buildings: DataFrame) -> DataFrame:
     return buildings.select("osm_id", "geometry").mapInPandas(_cent, schema=schema)
 
 
-def _complete_pred(r: int, span: float) -> F.Column:
+def _complete_pred(r: float, span: float) -> F.Column:
     """Completion predicate for a ranked candidate: the k-th best distance must be
-    STRICTLY inside the explored disc. Non-strict `<=` is unsound at the boundary:
-    a k-th candidate at exactly r·span can be tied (after fp rounding of dist2) by
-    a centroid in an unexplored ring-(r+1) cell whose smaller osm_id wins the
-    tie-break — the exactness guarantee needs `<`; equality just expands one more
-    ring."""
+    STRICTLY inside the explored disc of radius r·span. Non-strict `<=` is
+    unsound at the boundary: a k-th candidate at exactly r·span can be tied
+    (after fp rounding of dist2) by a centroid in an unexplored ring-(r+1) cell
+    whose smaller osm_id wins the tie-break — the exactness guarantee needs `<`;
+    equality just expands one more ring."""
     return (F.col("rank") == F.col("k")) & (
         F.sqrt(F.col("dist2")) < F.lit(float(r) * span)
     )
@@ -136,30 +136,93 @@ def knn_bruteforce_scan(queries: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
+def _expand_rings(
+    remaining: DataFrame,
+    idx: DataFrame,
+    centroids: DataFrame,
+    cells: tuple[str, str],
+    disc: Callable[[int], list[tuple[int, int]]],
+    complete: Callable[[int], F.Column],
+    r: int,
+    max_ring: int,
+) -> DataFrame:
+    """The ring-expansion loop of `knn_kring` and `knn_hex_kring`.
+
+    `remaining` holds the queries (query_id, x, y, k) and `idx` the centroids
+    (osm_id, cx, cy), each with its grid cell in the two `cells` columns. Each
+    round crosses the offsets `disc(r)` of radius r with the query cells,
+    joins them to the index and ranks the candidates; a query is done when
+    its k-th candidate meets `complete(r)`. Only the unfinished queries go on,
+    with r growing ×4 per round up to `max_ring`; past it they fall back to
+    `knn_bruteforce_scan`. Each round's output and remaining set are eagerly
+    localCheckpoint-ed so the plan lineage stays flat (no cross-round union
+    growth)."""
+    spark = remaining.sparkSession
+    c0, c1 = cells
+    parts: list[DataFrame] = []
+    while remaining.count() > 0:
+        off_df = spark.createDataFrame(disc(r), ["d0", "d1"])
+        near = remaining.crossJoin(F.broadcast(off_df)).select(
+            "query_id",
+            "x",
+            "y",
+            "k",
+            (F.col(c0) + F.col("d0")).alias(c0),
+            (F.col(c1) + F.col("d1")).alias(c1),
+        )
+        cand = near.join(idx, [c0, c1]).select(
+            "query_id", "x", "y", "k", "osm_id", "cx", "cy"
+        )
+        ranked = _with_dist_rank(cand)
+        done_ids = ranked.filter(complete(r)).select("query_id").localCheckpoint(eager=True)
+        finished = (
+            ranked.join(done_ids, "query_id")
+            .filter(F.col("rank") <= F.col("k"))
+            .select("query_id", "rank", "osm_id", "dist2")
+            .localCheckpoint(eager=True)
+        )
+        parts.append(finished)  # empty parts union harmlessly
+        remaining = remaining.join(done_ids, "query_id", "left_anti").localCheckpoint(
+            eager=True
+        )
+        if r >= max_ring:
+            break
+        r = min(r * 4, max_ring)
+
+    if remaining.count() > 0:
+        parts.append(
+            knn_bruteforce_scan(remaining.select("query_id", "x", "y", "k"), centroids)
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def knn_kring(
     queries: DataFrame,
     centroids: DataFrame,
-    z: int = m.Z_LEAF,
     initial_ring: int = 2,
     max_ring: int = 32,
 ) -> DataFrame:
-    """Exact kNN by expanding-radius disc search. Same output as knn_bruteforce.
+    """Exact kNN by expanding-radius disc search on the z16 grid. Same output
+    as knn_bruteforce.
 
     Each round runs over the still-unfinished queries only, with radius r growing
     ×4 per round (2, 8, 32, …, max_ring) — the cost of each round is dominated by
     Spark job latency, not candidate volume, so fewer/fatter rounds beat the
-    classic doubling. Outputs and the remaining set are eagerly
-    localCheckpoint-ed so the plan lineage stays flat (no cross-round union
-    growth). Unfinished queries past max_ring (probes in empty regions) fall
-    back to knn_bruteforce_scan (query-side broadcast; centroid table stays
-    distributed).
+    classic doubling. A query is complete when its k-th best distance is
+    STRICTLY within r·span: every unexplored cell is at least that far away
+    (see `_complete_pred`). Unfinished queries past max_ring (probes in empty
+    regions) fall back to knn_bruteforce_scan (query-side broadcast; centroid
+    table stays distributed).
     """
-    spark = queries.sparkSession
-    span = m.tile_span(z)
+    span = m.tile_span(m.Z_LEAF)
 
-    idx = (
-        centroids.withColumn("tile_x", m.tile_x_col(F.col("cx"), z))
-        .withColumn("tile_y", m.tile_y_col(F.col("cy"), z))
+    # persisted (registered for `dedup.unpersist_all`): every round joins it
+    idx = _register_persist(
+        centroids.withColumn("tile_x", m.tile_x_col(F.col("cx"), m.Z_LEAF))
+        .withColumn("tile_y", m.tile_y_col(F.col("cy"), m.Z_LEAF))
         .persist()
     )
     # density-derived starting radius: size the first disc so an average-density
@@ -188,62 +251,21 @@ def knn_kring(
         )
 
     remaining = (
-        queries.withColumn("qtx", m.tile_x_col(F.col("x"), z))
-        .withColumn("qty", m.tile_y_col(F.col("y"), z))
-        .select("query_id", "x", "y", "k", "qtx", "qty")
+        queries.withColumn("tile_x", m.tile_x_col(F.col("x"), m.Z_LEAF))
+        .withColumn("tile_y", m.tile_y_col(F.col("y"), m.Z_LEAF))
+        .select("query_id", "x", "y", "k", "tile_x", "tile_y")
         .localCheckpoint(eager=True)
     )
-
-    finished_parts: list[DataFrame] = []
-    r = initial_ring
-    while remaining.count() > 0:
-        offsets = [
-            (dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)
-        ]
-        off_df = spark.createDataFrame(offsets, ["dx", "dy"])
-        disc = remaining.crossJoin(F.broadcast(off_df)).select(
-            "query_id",
-            "x",
-            "y",
-            "k",
-            (F.col("qtx") + F.col("dx")).alias("tile_x"),
-            (F.col("qty") + F.col("dy")).alias("tile_y"),
-        )
-        cand = disc.join(idx, ["tile_x", "tile_y"]).select(
-            "query_id", "x", "y", "k", "osm_id", "cx", "cy"
-        )
-        ranked = _with_dist_rank(cand)
-        # completion: k-th best distance STRICTLY within the explored disc — every
-        # unexplored cell is at least r·span away, so the top-k is final (see
-        # _complete_pred for why the inequality must be strict).
-        done_ids = (
-            ranked.filter(_complete_pred(r, span))
-            .select("query_id")
-            .localCheckpoint(eager=True)
-        )
-        finished = (
-            ranked.join(done_ids, "query_id")
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "osm_id", "dist2")
-            .localCheckpoint(eager=True)
-        )
-        finished_parts.append(finished)  # empty parts union harmlessly
-        remaining = remaining.join(done_ids, "query_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if r >= max_ring:
-            break
-        r = min(r * 4, max_ring)
-
-    out_parts = list(finished_parts)
-    if remaining.count() > 0:
-        out_parts.append(
-            knn_bruteforce_scan(remaining.select("query_id", "x", "y", "k"), centroids)
-        )
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _expand_rings(
+        remaining,
+        idx,
+        centroids,
+        ("tile_x", "tile_y"),
+        lambda r: [(dx, dy) for dx in range(-r, r + 1) for dy in range(-r, r + 1)],
+        lambda r: _complete_pred(r, span),
+        initial_ring,
+        max_ring,
+    )
 
 
 def _with_hex(df: DataFrame, x: str, y: str, size: float) -> DataFrame:
@@ -282,7 +304,6 @@ def knn_hex_kring(
     """
     from ..functions.hexgrid import hex_disk
 
-    spark = queries.sparkSession
     if size is None:
         size = m.tile_span(m.Z_LEAF)
 
@@ -291,52 +312,14 @@ def knn_hex_kring(
         _with_hex(queries.select("query_id", "x", "y", "k"), "x", "y", size)
         .localCheckpoint(eager=True)
     )
-
-    finished_parts: list[DataFrame] = []
-    r = initial_ring
-    while remaining.count() > 0:
-        offsets = [(int(dq), int(dr)) for dq, dr in hex_disk(0, 0, r)]
-        off_df = spark.createDataFrame(offsets, ["dq", "dr"])
-        disc = remaining.crossJoin(F.broadcast(off_df)).select(
-            "query_id",
-            "x",
-            "y",
-            "k",
-            (F.col("hq") + F.col("dq")).alias("hq"),
-            (F.col("hr") + F.col("dr")).alias("hr"),
-        )
-        cand = disc.join(idx, ["hq", "hr"]).select(
-            "query_id", "x", "y", "k", "osm_id", "cx", "cy"
-        )
-        ranked = _with_dist_rank(cand)
-        bound = size * (1.5 * (r + 1) - 2.0)
-        done_ids = (
-            ranked.filter(
-                (F.col("rank") == F.col("k")) & (F.sqrt(F.col("dist2")) < F.lit(bound))
-            )
-            .select("query_id")
-            .localCheckpoint(eager=True)
-        )
-        finished = (
-            ranked.join(done_ids, "query_id")
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "osm_id", "dist2")
-            .localCheckpoint(eager=True)
-        )
-        finished_parts.append(finished)
-        remaining = remaining.join(done_ids, "query_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if r >= max_ring:
-            break
-        r = min(r * 4, max_ring)
-
-    out_parts = list(finished_parts)
-    if remaining.count() > 0:
-        out_parts.append(
-            knn_bruteforce_scan(remaining.select("query_id", "x", "y", "k"), centroids)
-        )
-    out = out_parts[0]
-    for p in out_parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _expand_rings(
+        remaining,
+        idx,
+        centroids,
+        ("hq", "hr"),
+        lambda r: [(int(dq), int(dr)) for dq, dr in hex_disk(0, 0, r)],
+        # explored radius 1.5·size·(r+1) − 2·size (see the docstring)
+        lambda r: _complete_pred(1.5 * (r + 1) - 2.0, size),
+        initial_ring,
+        max_ring,
+    )

@@ -36,12 +36,7 @@ from pyspark.sql import functions as F
 _POS_BITS = 20
 
 
-def dedup_text_chunks(
-    docs: DataFrame,
-    chunk_words: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_text_chunks(docs: DataFrame, chunk_words: int = 20) -> DataFrame:
     """Remove corpus-wide duplicate word-chunks, keeping first occurrence.
 
     Returns one row per input document:
@@ -52,13 +47,13 @@ def dedup_text_chunks(
     if chunk_words < 1:
         raise ValueError(f"chunk_words must be >= 1, got {chunk_words}")
 
-    words = F.split(F.col(text_col), " ", -1)
+    words = F.split(F.col("text"), " ", -1)
     n_chunks = F.ceil(F.size(words) / F.lit(chunk_words)).cast("int")
     chunk_arr = F.transform(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.array_join(F.slice(words, i * chunk_words + 1, chunk_words), " "),
     )
-    base = docs.select(F.col(id_col).cast("long").alias("doc_id"), chunk_arr.alias("chunks"))
+    base = docs.select(F.col("doc_id").cast("long").alias("doc_id"), chunk_arr.alias("chunks"))
     ch = base.select("doc_id", F.posexplode("chunks").alias("pos", "chunk"))
 
     rank = F.shiftleft(F.col("doc_id"), _POS_BITS) + F.col("pos")

@@ -23,22 +23,14 @@ TILE_SIZE = m.tile_span(16)  # 611.4962158203125, the constant at :535
 RESOLUTION = 12
 
 
-def lod_thinning(
-    instances: DataFrame,
-    fraction: float,
-    id_col: str = "instance_id",
-    x_col: str = "local_x",
-    y_col: str = "local_y",
-    resolution: int = RESOLUTION,
-    tile_size: float = TILE_SIZE,
-) -> DataFrame:
+def lod_thinning(instances: DataFrame, fraction: float) -> DataFrame:
     """Keep max(round(n·fraction), 1) instances per heat-map cell, survivors =
-    lowest ids. Input coordinates are tile-local ([0, tile_size))."""
+    lowest ids. Input coordinates are tile-local ([0, TILE_SIZE))."""
     cell = (
-        F.floor(F.col(x_col) / tile_size * resolution)
-        + F.floor(F.col(y_col) / tile_size * resolution) * resolution
+        F.floor(F.col("local_x") / TILE_SIZE * RESOLUTION)
+        + F.floor(F.col("local_y") / TILE_SIZE * RESOLUTION) * RESOLUTION
     ).alias("heat_cell")
-    w = Window.partitionBy("heat_cell").orderBy(id_col)
+    w = Window.partitionBy("heat_cell").orderBy("instance_id")
     n = Window.partitionBy("heat_cell")
     return (
         instances.select("*", cell)

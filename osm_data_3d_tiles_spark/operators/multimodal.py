@@ -182,7 +182,7 @@ def make_jpeg_media_fixture(spark, n: int = 16) -> DataFrame:
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def make_webp_media_fixture(spark, n: int = 16) -> DataFrame:
+def make_webp_media_fixture(spark) -> DataFrame:
     """Media table whose image payloads are REAL lossless-WebP (VP8L)
     bitstreams (deterministic gradients + noise, encoded by the repo's own
     encoder — functions/webp.py). Rotates through the encoder's stream
@@ -192,7 +192,7 @@ def make_webp_media_fixture(spark, n: int = 16) -> DataFrame:
     from ..functions.webp import encode_webp
 
     rows = []
-    for i in range(n):
+    for i in range(16):
         w, h = 11 + (i % 5) * 7, 9 + (i % 4) * 5
         yy, xx = np.mgrid[0:h, 0:w]
         img = np.empty((h, w, 3), dtype=np.uint8)

@@ -37,14 +37,12 @@ def pyramid_rollup(
     points: DataFrame,
     z_leaf: int,
     z_min: int,
-    x_col: str = "tile_x",
-    y_col: str = "tile_y",
     measure_col: str | None = None,
 ) -> DataFrame:
     """Per-tile aggregates for every zoom in [z_min, z_leaf].
 
     `points` carries one row per point with leaf-level tile coordinates
-    (non-negative — web-mercator tiles). Output rows:
+    `tile_x`, `tile_y` (non-negative — web-mercator tiles). Output rows:
     (z INT, tile_x, tile_y, n) plus, when `measure_col` is given,
     (m_sum, m_min, m_max) over that column. Sums keep the input column's
     type — pass an integral measure when exact cross-engine equality
@@ -69,8 +67,8 @@ def pyramid_rollup(
 
     leaf = (
         points.groupBy(
-            F.col(x_col).cast("long").alias("tile_x"),
-            F.col(y_col).cast("long").alias("tile_y"),
+            F.col("tile_x").cast("long").alias("tile_x"),
+            F.col("tile_y").cast("long").alias("tile_y"),
         )
         .agg(*aggs)
     )

@@ -34,7 +34,11 @@ def row_hash40(*cols: Column) -> Column:
     )
 
 
-def table_digest(df: DataFrame, key_cols: list[str], n_buckets: int = 64) -> DataFrame:
+# digest buckets: the default of table_digest and the buckets of its oracle
+N_BUCKETS = 64
+
+
+def table_digest(df: DataFrame, key_cols: list[str], n_buckets: int = N_BUCKETS) -> DataFrame:
     """(bucket, n_rows, digest) — order-independent bucket digests."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
@@ -46,9 +50,7 @@ def table_digest(df: DataFrame, key_cols: list[str], n_buckets: int = 64) -> Dat
     )
 
 
-def digest_oracle_sql(
-    key_exprs: list[str], table: str, n_buckets: int = 64
-) -> str:
+def digest_oracle_sql(key_exprs: list[str], table: str) -> str:
     """The identical digest in DuckDB SQL (SUM of BIGINT widens to HUGEINT
     there — cast back)."""
     joined = " || '|' || ".join(f"CAST({e} AS VARCHAR)" for e in key_exprs)
@@ -56,7 +58,7 @@ def digest_oracle_sql(
     WITH hashed AS (
         SELECT ('0x' || substr(md5({joined}), 1, 10))::BIGINT AS h FROM {table}
     )
-    SELECT h % {n_buckets} AS bucket,
+    SELECT h % {N_BUCKETS} AS bucket,
            COUNT(*) AS n_rows,
            CAST(SUM(h) AS BIGINT) AS digest
     FROM hashed GROUP BY 1

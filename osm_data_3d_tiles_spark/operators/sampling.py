@@ -26,11 +26,9 @@ from pyspark.sql import functions as F
 
 def split_by_hash(
     docs: DataFrame,
-    id_col: str = "doc_id",
     val_permille: int = 10,
     test_permille: int = 10,
     seed: int = 0,
-    out_col: str = "split",
     bucket_expr: F.Column | None = None,
 ) -> DataFrame:
     """Assign 'train' / 'val' / 'test' deterministically from the id hash.
@@ -45,20 +43,18 @@ def split_by_hash(
     bucket = (
         bucket_expr
         if bucket_expr is not None
-        else F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1000))
+        else F.pmod(F.xxhash64(F.col("doc_id"), F.lit(seed)), F.lit(1000))
     )
     split = (
         F.when(bucket < val_permille, F.lit("val"))
         .when(bucket < val_permille + test_permille, F.lit("test"))
         .otherwise(F.lit("train"))
     )
-    return docs.withColumn(out_col, split)
+    return docs.withColumn("split", split)
 
 
 def cap_per_host(
     pages: DataFrame,
-    host_col: str = "host",
-    id_col: str = "doc_id",
     max_docs: int = 1000,
     rank_expr: F.Column | None = None,
 ) -> DataFrame:
@@ -66,10 +62,10 @@ def cap_per_host(
 
     Hash-ranked (not ts-ranked) so the kept subset is an unbiased,
     deterministic sample of the host's pages rather than the earliest crawl
-    slice; ``id_col`` breaks hash ties exactly. ``rank_expr`` overrides the
+    slice; ``doc_id`` breaks hash ties exactly. ``rank_expr`` overrides the
     hash for engine-portable ranking (see ``split_by_hash``)."""
-    rank = rank_expr if rank_expr is not None else F.xxhash64(F.col(id_col))
-    w = Window.partitionBy(host_col).orderBy(rank, F.col(id_col))
+    rank = rank_expr if rank_expr is not None else F.xxhash64(F.col("doc_id"))
+    w = Window.partitionBy("host").orderBy(rank, F.col("doc_id"))
     return (
         pages.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= max_docs)
@@ -214,8 +210,6 @@ def exact_quantiles_by_value(
 
 def mix_domains(
     docs: DataFrame,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
     target_total: int = 200,
     alpha: float = 0.5,
 ) -> DataFrame:
@@ -240,10 +234,10 @@ def mix_domains(
 
     Plan shape: the domain table is a tiny aggregate (|domains| rows)
     broadcast back onto the corpus; the only corpus-scale work is one
-    per-domain row_number window (single shuffle on domain_col; skewed
+    per-domain row_number window (single shuffle on source; skewed
     domains are bounded by the allocation itself).
 
-    Returns the selected rows: (id_col, domain_col).
+    Returns the selected rows: (doc_id, source).
     """
     if target_total < 1:
         raise ValueError(f"target_total must be >= 1, got {target_total}")
@@ -257,7 +251,7 @@ def mix_domains(
     scale = 1e12
     while scale > 1.0 and float(target_total) * math.sqrt(1e12 * scale) > 9.0e18:
         scale /= 100.0
-    n = docs.groupBy(domain_col).agg(F.count("*").alias("n_d"))
+    n = docs.groupBy("source").agg(F.count("*").alias("n_d"))
     if alpha == 0.5:
         s_col = F.floor(F.sqrt(F.col("n_d").cast("double") * F.lit(scale))).cast(
             "long"
@@ -282,17 +276,17 @@ def mix_domains(
     tgt = (
         s.crossJoin(F.broadcast(total))
         .withColumn("tgt", F.expr(f"({target_total} * s_d) div s_total"))
-        .select(domain_col, "tgt")
+        .select("source", "tgt")
     )
     rk = F.row_number().over(
-        Window.partitionBy(domain_col).orderBy(
-            F.md5(F.col(id_col).cast("string")), F.col(id_col)
+        Window.partitionBy("source").orderBy(
+            F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
         )
     )
     return (
-        docs.select(id_col, domain_col)
+        docs.select("doc_id", "source")
         .withColumn("_rk", rk)
-        .join(F.broadcast(tgt), domain_col)
+        .join(F.broadcast(tgt), "source")
         .filter(F.col("_rk") <= F.col("tgt"))
-        .select(id_col, domain_col)
+        .select("doc_id", "source")
     )

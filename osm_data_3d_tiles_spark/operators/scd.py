@@ -34,24 +34,18 @@ from pyspark.sql import functions as F
 OPEN_END_EPOCH = 253402300800
 
 
-def scd2_from_events(
-    events: DataFrame,
-    key: str = "user_id",
-    attr: str = "event_type",
-    ts: str = "ts_epoch",
-    tiebreak: str = "event_id",
-) -> DataFrame:
-    """(key, attr, ts, tiebreak) observations → SCD2 episode table
-    (key, attr, valid_from, valid_to, is_current).
+def scd2_from_events(events: DataFrame) -> DataFrame:
+    """(user_id, event_type, ts_epoch, event_id) observations → SCD2 episode
+    table (user_id, event_type, valid_from, valid_to, is_current).
 
     valid_from = first observation of a run of equal attrs; valid_to = the
     next run's start (exclusive) or OPEN_END_EPOCH; is_current ∈ {0, 1} as
     BIGINT (not boolean — keeps the driver's value hash engine-agnostic).
     """
-    w = Window.partitionBy(key).orderBy(ts, tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts_epoch", "event_id")
     changes = (
-        events.select(key, attr, ts, tiebreak)
-        .withColumn("_prev", F.lag(attr).over(w))
+        events.select("user_id", "event_type", "ts_epoch", "event_id")
+        .withColumn("_prev", F.lag("event_type").over(w))
         .withColumn("_rn", F.row_number().over(w))
         # null-safe change test (a NULL attr opens/closes episodes like any
         # other value; consecutive NULLs collapse); _rn disambiguates "first
@@ -59,15 +53,15 @@ def scd2_from_events(
         # OUTPUT break cross-engine pandas compares — oracle-checked callers
         # filter them upstream.
         .filter(
-            (F.col("_rn") == 1) | ~F.col("_prev").eqNullSafe(F.col(attr))
+            (F.col("_rn") == 1) | ~F.col("_prev").eqNullSafe(F.col("event_type"))
         )
     )
     return (
-        changes.withColumn("_next_ts", F.lead(ts).over(w))
+        changes.withColumn("_next_ts", F.lead("ts_epoch").over(w))
         .select(
-            F.col(key),
-            F.col(attr),
-            F.col(ts).alias("valid_from"),
+            F.col("user_id"),
+            F.col("event_type"),
+            F.col("ts_epoch").alias("valid_from"),
             F.coalesce(F.col("_next_ts"), F.lit(OPEN_END_EPOCH)).alias("valid_to"),
             F.when(F.col("_next_ts").isNull(), F.lit(1))
             .otherwise(F.lit(0))

@@ -98,7 +98,7 @@ def _local_topk(
 
 def _empty_topk(
     embeddings: DataFrame, queries: DataFrame,
-    id_col: str, query_id_col: str, score_col: str = "cosine",
+    id_col: str, query_id_col: str,
 ) -> DataFrame:
     """Empty result with the exact output schema of _global_topk — the
     degenerate-input path (no valid vectors / no valid queries after the
@@ -109,7 +109,7 @@ def _empty_topk(
         queries.schema[query_id_col],
         T.StructField("rank", T.IntegerType()),
         embeddings.schema[id_col],
-        T.StructField(score_col, T.DoubleType()),
+        T.StructField("cosine", T.DoubleType()),
     ])
     return spark.createDataFrame([], schema=schema)
 
@@ -129,34 +129,30 @@ def ann_bruteforce_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, rank, vec_id, cosine). Ties by vec_id.
     Zero vectors (base or query) are excluded — no defined cosine."""
     base = _drop_nan_units(
         embeddings.select(
-            F.col(id_col), _unit_col(F.col(vec_col).cast("array<double>")).alias("unit")
+            F.col("vec_id"), _unit_col(F.col("embedding").cast("array<double>")).alias("unit")
         ),
         "unit",
     )
     q = _drop_nan_units(
         queries.select(
-            F.col(query_id_col),
-            _unit_col(F.col(query_vec_col).cast("array<double>")).alias("q_unit"),
+            F.col("query_id"),
+            _unit_col(F.col("query_vec").cast("array<double>")).alias("q_unit"),
         ),
         "q_unit",
     )
     cand = base.crossJoin(F.broadcast(q))
     scored = (
         cand.withColumn("cosine", _cosine_col(F.col("unit"), F.col("q_unit")))
-        .select(query_id_col, id_col, "cosine")
+        .select("query_id", "vec_id", "cosine")
     )
     # two-phase top-k: per-partition pre-aggregation, then the tiny global window
-    pruned = _local_topk(scored, query_id_col, id_col, "cosine", k)
-    return _global_topk(pruned, query_id_col, id_col, "cosine", k)
+    pruned = _local_topk(scored, "query_id", "vec_id", "cosine", k)
+    return _global_topk(pruned, "query_id", "vec_id", "cosine", k)
 
 
 def _deterministic_centroids(mat: np.ndarray, ids: np.ndarray, n_list: int) -> np.ndarray:
@@ -219,10 +215,6 @@ def ann_ivf_topk(
     k: int = 10,
     n_list: int = 16,
     n_probe: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF-pruned approximate cosine top-k, same output schema as brute force.
 
@@ -244,29 +236,29 @@ def ann_ivf_topk(
     # stage at ~1e-7 component rounding, irrelevant to ranking; scoring
     # upcasts back to float64
     base = _register_persist(_drop_nan_units(embeddings.select(
-        F.col(id_col),
-        _unit_col(F.col(vec_col).cast("array<double>")).cast("array<float>").alias("unit"),
+        F.col("vec_id"),
+        _unit_col(F.col("embedding").cast("array<double>")).cast("array<float>").alias("unit"),
     ), "unit").persist())
 
     # deterministic, representative sample: TakeOrdered over a stable hash of
     # the id (no full shuffle) — unlike bare limit(), independent of partition
     # layout and unbiased w.r.t. insertion order
-    sample = base.orderBy(F.xxhash64(F.col(id_col).cast("string"))).limit(4096).toPandas()
+    sample = base.orderBy(F.xxhash64(F.col("vec_id").cast("string"))).limit(4096).toPandas()
     if not len(sample):  # corpus holds no valid (non-zero) vectors
-        return _empty_topk(embeddings, queries, id_col, query_id_col)
+        return _empty_topk(embeddings, queries, "vec_id", "query_id")
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in sample["unit"]])
-    cents = _deterministic_centroids(mat, sample[id_col].to_numpy(), n_list)
+    cents = _deterministic_centroids(mat, sample["vec_id"].to_numpy(), n_list)
     cent_rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)]
     cent_df = spark.createDataFrame(cent_rows, ["list_id", "centroid"])
 
     # assign each vector to its nearest centroid — zero-shuffle Arrow argmax
     # against the broadcast centroid matrix (see _assign_lists)
-    assigned = _assign_lists(base, cents, id_col)
+    assigned = _assign_lists(base, cents, "vec_id")
 
     q = _drop_nan_units(
         queries.select(
-            F.col(query_id_col),
-            _unit_col(F.col(query_vec_col).cast("array<double>")).alias("q_unit"),
+            F.col("query_id"),
+            _unit_col(F.col("query_vec").cast("array<double>")).alias("q_unit"),
         ),
         "q_unit",
     )
@@ -276,11 +268,11 @@ def ann_ivf_topk(
         .withColumn(
             "rn",
             F.row_number().over(
-                Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.col("list_id"))
+                Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("list_id"))
             ),
         )
         .filter(F.col("rn") <= n_probe)
-        .select(query_id_col, "q_unit", "list_id")
+        .select("query_id", "q_unit", "list_id")
     )
 
     # probes is |queries|×n_probe rows — tiny — but list_id has only n_list
@@ -293,11 +285,11 @@ def ann_ivf_topk(
             "cosine",
             _cosine_col(F.col("unit").cast("array<double>"), F.col("q_unit")),
         )
-        .select(query_id_col, id_col, "cosine")
+        .select("query_id", "vec_id", "cosine")
     )
     # two-phase top-k: the probe set never funnels into one reducer per query
-    pruned = _local_topk(scored, query_id_col, id_col, "cosine", k)
-    return _global_topk(pruned, query_id_col, id_col, "cosine", k)
+    pruned = _local_topk(scored, "query_id", "vec_id", "cosine", k)
+    return _global_topk(pruned, "query_id", "vec_id", "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -305,12 +297,12 @@ def ann_ivf_topk(
 # ---------------------------------------------------------------------------
 
 def _train_pq_codebooks(
-    mat: np.ndarray, m_sub: int, n_codes: int, n_iter: int = 5
+    mat: np.ndarray, m_sub: int, n_codes: int
 ) -> np.ndarray:
     """Deterministic per-subspace k-means codebooks (m_sub, n_codes, d_sub).
 
     Init = evenly spaced rows of the lexicographically sorted subvectors
-    (stable for a given sample), then `n_iter` Lloyd sweeps. All numpy ops are
+    (stable for a given sample), then 5 Lloyd sweeps. All numpy ops are
     order-stable, so the same sample always yields the same codebooks."""
     n, D = mat.shape
     if D % m_sub:
@@ -324,7 +316,7 @@ def _train_pq_codebooks(
         cb = sub[order][::step][:n_codes].copy()
         if len(cb) < n_codes:  # degenerate tiny corpus: pad by cycling
             cb = np.resize(cb, (n_codes, d))
-        for _ in range(n_iter):
+        for _ in range(5):
             d2 = ((sub[:, None, :] - cb[None, :, :]) ** 2).sum(-1)
             assign = np.argmin(d2, axis=1)
             for c in range(n_codes):
@@ -386,10 +378,6 @@ def ann_ivf_pq_topk(
     m_sub: int = 16,
     n_codes: int = 64,
     refine: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF + product quantization + exact rerank; output schema matches
     `ann_bruteforce_topk` (query_id, rank, vec_id, cosine — EXACT cosines,
@@ -417,47 +405,47 @@ def ann_ivf_pq_topk(
     # float32 unit storage, as in ann_ivf_topk — the rerank upcasts to
     # float64 before scoring
     base = _register_persist(_drop_nan_units(embeddings.select(
-        F.col(id_col),
-        _unit_col(F.col(vec_col).cast("array<double>")).cast("array<float>").alias("unit"),
+        F.col("vec_id"),
+        _unit_col(F.col("embedding").cast("array<double>")).cast("array<float>").alias("unit"),
     ), "unit").persist())
 
-    sample = base.orderBy(F.xxhash64(F.col(id_col).cast("string"))).limit(4096).toPandas()
+    sample = base.orderBy(F.xxhash64(F.col("vec_id").cast("string"))).limit(4096).toPandas()
     if not len(sample):  # corpus holds no valid (non-zero) vectors
-        return _empty_topk(embeddings, queries, id_col, query_id_col)
+        return _empty_topk(embeddings, queries, "vec_id", "query_id")
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in sample["unit"]])
-    cents = _deterministic_centroids(mat, sample[id_col].to_numpy(), n_list)
+    cents = _deterministic_centroids(mat, sample["vec_id"].to_numpy(), n_list)
     books = _train_pq_codebooks(mat, m_sub=m_sub, n_codes=n_codes)
 
-    codes = _assign_and_encode_pq(base, cents, books, id_col)
+    codes = _assign_and_encode_pq(base, cents, books, "vec_id")
 
     # tiny query set -> collect, unit-normalize, build per-query ADC tables
     # (NaN q_units excluded: a NaN LUT would make every ADC score NaN)
     qpdf = _drop_nan_units(
         queries.select(
-            F.col(query_id_col),
-            _unit_col(F.col(query_vec_col).cast("array<double>")).alias("q_unit"),
+            F.col("query_id"),
+            _unit_col(F.col("query_vec").cast("array<double>")).alias("q_unit"),
         ),
         "q_unit",
     ).toPandas()
     if not len(qpdf):  # no valid (non-zero) query vectors
-        return _empty_topk(embeddings, queries, id_col, query_id_col)
+        return _empty_topk(embeddings, queries, "vec_id", "query_id")
     qmat = np.vstack([np.asarray(v, dtype=np.float64) for v in qpdf["q_unit"]])
     d = books.shape[2]
     # luts[qi]: (m_sub, n_codes) of q_sub . codeword
     luts = np.einsum("qjd,jcd->qjc", qmat.reshape(len(qmat), m_sub, d), books)
-    qids = qpdf[query_id_col].to_numpy()
+    qids = qpdf["query_id"].to_numpy()
     probe_lists = np.argsort(-(qmat @ cents.T), axis=1, kind="stable")[:, :n_probe]
     probe_rows = [
         (int(q), int(l)) for qi, q in enumerate(qids) for l in probe_lists[qi]
     ]
-    probes = spark.createDataFrame(probe_rows, [query_id_col, "list_id"])
+    probes = spark.createDataFrame(probe_rows, ["query_id", "list_id"])
     bc_lut = spark.sparkContext.broadcast({int(q): luts[i] for i, q in enumerate(qids)})
 
     cand = codes.join(F.broadcast(probes), "list_id")
     adc_schema = T.StructType(
         [
-            base.schema[id_col],
-            T.StructField(query_id_col, T.LongType()),
+            base.schema["vec_id"],
+            T.StructField("query_id", T.LongType()),
             T.StructField("adc", T.DoubleType()),
         ]
     )
@@ -470,44 +458,44 @@ def ann_ivf_pq_topk(
                 continue
             cm = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
             scores = np.empty(len(pdf), dtype=np.float64)
-            qarr = pdf[query_id_col].to_numpy()
+            qarr = pdf["query_id"].to_numpy()
             for q in np.unique(qarr):
                 mask = qarr == q
                 scores[mask] = tables[int(q)][cols, cm[mask]].sum(axis=1)
             yield pd.DataFrame(
-                {id_col: pdf[id_col], query_id_col: qarr, "adc": scores}
+                {"vec_id": pdf["vec_id"], "query_id": qarr, "adc": scores}
             )
 
     scored = cand.mapInPandas(_adc, schema=adc_schema)
     # two-phase shortlist: per-partition top-(refine·k) before the global
     # window, so no reducer ever materializes a whole probe set of ADC rows
-    pruned = _local_topk(scored, query_id_col, id_col, "adc", refine * k)
-    w_short = Window.partitionBy(query_id_col).orderBy(F.desc("adc"), F.col(id_col))
+    pruned = _local_topk(scored, "query_id", "vec_id", "adc", refine * k)
+    w_short = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.col("vec_id"))
     shortlist = (
         pruned.withColumn("rn", F.row_number().over(w_short))
         .filter(F.col("rn") <= refine * k)
-        .select(query_id_col, id_col)
+        .select("query_id", "vec_id")
     )
 
     qrows = [(int(q), [float(x) for x in u]) for q, u in zip(qids, qmat)]
     qdf = spark.createDataFrame(qrows, schema=T.StructType([
-        T.StructField(query_id_col, T.LongType()),
+        T.StructField("query_id", T.LongType()),
         T.StructField("q_unit", T.ArrayType(T.DoubleType())),
     ]))
     # broadcast the |queries|·refine·k shortlist explicitly — the plan is
     # pinned, not left to AQE's runtime size estimate (the base side is the
     # full corpus; a sort-merge fallback here would shuffle it)
     rerank = (
-        base.join(F.broadcast(shortlist), id_col)
-        .join(F.broadcast(qdf), query_id_col)
+        base.join(F.broadcast(shortlist), "vec_id")
+        .join(F.broadcast(qdf), "query_id")
         .withColumn(
             "cosine",
             _cosine_col(F.col("unit").cast("array<double>"), F.col("q_unit")),
         )
-        .select(query_id_col, id_col, "cosine")
+        .select("query_id", "vec_id", "cosine")
     )
     # rerank input is ≤ refine·k rows per query, so the window input is tiny
-    return _global_topk(rerank, query_id_col, id_col, "cosine", k)
+    return _global_topk(rerank, "query_id", "vec_id", "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -519,8 +507,6 @@ def semdedup(
     embeddings: DataFrame,
     threshold: float = 0.9,
     n_clusters: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cluster: int = 1_000_000,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -548,30 +534,30 @@ def semdedup(
       letting one hot cluster run quadratic and OOM a 100-TB job.
 
     Returns one row per input vector (NaN/zero vectors excluded at source,
-    as everywhere on the ANN path): (id_col, list_id, cent_sim, is_kept).
+    as everywhere on the ANN path): (vec_id, list_id, cent_sim, is_kept).
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     spark = embeddings.sparkSession
     base = _register_persist(_drop_nan_units(embeddings.select(
-        F.col(id_col),
-        _unit_col(F.col(vec_col).cast("array<double>")).cast("array<float>").alias("unit"),
+        F.col("vec_id"),
+        _unit_col(F.col("embedding").cast("array<double>")).cast("array<float>").alias("unit"),
     ), "unit").persist())
-    sample = base.orderBy(F.xxhash64(F.col(id_col).cast("string"))).limit(4096).toPandas()
+    sample = base.orderBy(F.xxhash64(F.col("vec_id").cast("string"))).limit(4096).toPandas()
     if not len(sample):
         return spark.createDataFrame([], schema=T.StructType([
-            base.schema[id_col],
+            base.schema["vec_id"],
             T.StructField("list_id", T.IntegerType()),
             T.StructField("cent_sim", T.DoubleType()),
             T.StructField("is_kept", T.BooleanType()),
         ]))
     mat = np.vstack([np.asarray(v, dtype=np.float64) for v in sample["unit"]])
-    cents = _deterministic_centroids(mat, sample[id_col].to_numpy(), n_clusters)
-    assigned = _assign_lists(base, cents, id_col)
+    cents = _deterministic_centroids(mat, sample["vec_id"].to_numpy(), n_clusters)
+    assigned = _assign_lists(base, cents, "vec_id")
     bc_cents = spark.sparkContext.broadcast(np.ascontiguousarray(cents, dtype=np.float64))
 
     out_schema = T.StructType([
-        base.schema[id_col],
+        base.schema["vec_id"],
         T.StructField("list_id", T.IntegerType()),
         T.StructField("cent_sim", T.DoubleType()),
         T.StructField("is_kept", T.BooleanType()),
@@ -588,7 +574,7 @@ def semdedup(
         u = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf["unit"]])
         cent = bc_cents.value[int(pdf["list_id"].iloc[0])]
         cent_sim = u @ cent
-        order = np.lexsort((pdf[id_col].to_numpy(), cent_sim))  # cent_sim asc, id asc
+        order = np.lexsort((pdf["vec_id"].to_numpy(), cent_sim))  # cent_sim asc, id asc
         u = u[order]
         removed = np.zeros(n, dtype=bool)
         # blocked upper-triangular max: tile i compares against ALL prior rows
@@ -602,7 +588,7 @@ def semdedup(
                 if tile[r, :i].size and tile[r, :i].max() >= threshold:
                     removed[i] = True
         res = pd.DataFrame({
-            id_col: pdf[id_col].to_numpy()[order],
+            "vec_id": pdf["vec_id"].to_numpy()[order],
             "list_id": pdf["list_id"].to_numpy()[order],
             "cent_sim": cent_sim[order],
             "is_kept": ~removed,

@@ -42,6 +42,8 @@ from pyspark.sql import functions as F
 # test scale (the estimator tolerates them anyway).
 KMV_HASH_BITS = 40
 _KMV_SPACE = 1 << KMV_HASH_BITS
+# sketch size: the default of kmv_distinct and the k of its oracle
+KMV_K = 64
 
 
 def kmv_hash(col) -> F.Column:
@@ -53,9 +55,7 @@ def kmv_hash(col) -> F.Column:
     )
 
 
-def kmv_distinct(
-    df: DataFrame, key: str, group: str, k: int = 64
-) -> DataFrame:
+def kmv_distinct(df: DataFrame, key: str, group: str, k: int = KMV_K) -> DataFrame:
     """Estimate distinct `key` values per `group` with a bottom-k sketch.
 
     Returns (group, n_kept, est) where est is the integer KMV estimate
@@ -85,7 +85,7 @@ def kmv_distinct(
     )
 
 
-def kmv_oracle_sql(key_expr: str, group: str, table: str, k: int = 64) -> str:
+def kmv_oracle_sql(key_expr: str, group: str, table: str) -> str:
     """ANSI-SQL statement of the same integer estimator for DuckDB."""
     return f"""
     WITH hashes AS (
@@ -99,18 +99,18 @@ def kmv_oracle_sql(key_expr: str, group: str, table: str, k: int = 64) -> str:
     ),
     bottom AS (
         SELECT g, COUNT(*) AS n_kept, MAX(h) AS h_k
-        FROM ranked WHERE rk <= {k} GROUP BY g
+        FROM ranked WHERE rk <= {KMV_K} GROUP BY g
     )
     SELECT g AS {group},
            CAST(n_kept AS BIGINT) AS n_kept,
-           CAST(CASE WHEN n_kept < {k} THEN n_kept
-                     ELSE ({k - 1} * CAST({_KMV_SPACE} AS BIGINT)) // h_k
+           CAST(CASE WHEN n_kept < {KMV_K} THEN n_kept
+                     ELSE ({KMV_K - 1} * CAST({_KMV_SPACE} AS BIGINT)) // h_k
                 END AS BIGINT) AS est
     FROM bottom
     """
 
 
-def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected graph given as a (possibly
     directed / duplicated / self-looped) edge list.
 
@@ -122,8 +122,8 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     Returns (node, n_triangles) for every node in >=1 triangle.
     """
     e = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("a"),
-        F.greatest(F.col(src), F.col(dst)).alias("b"),
+        F.least(F.col("src"), F.col("dst")).alias("a"),
+        F.greatest(F.col("src"), F.col("dst")).alias("b"),
     ).filter(F.col("a") < F.col("b")).distinct()
 
     ab = e.select(F.col("a"), F.col("b"))
@@ -290,7 +290,6 @@ def heavy_hitters(
 
 def heavy_hitters_by_group(
     items: DataFrame,
-    group: str = "group",
     col: str = "item",
     k: int = 10,
     capacity: int = 4096,
@@ -329,11 +328,11 @@ def heavy_hitters_by_group(
     import pandas as pd
 
     items = items.select(
-        F.col(group).cast("string").alias(group),
+        F.col("group").cast("string").alias("group"),
         F.col(col).cast("string").alias(col),
     )
     out_schema = (
-        f"{group} string, {col} string, lower_count long, "
+        f"group string, {col} string, lower_count long, "
         "n_nulls long, decremented long"
     )
 
@@ -343,43 +342,43 @@ def heavy_hitters_by_group(
         dec: dict = {}
         null_group_rows = 0
         for pdf in batches:
-            gna = pdf[group].isna()
+            gna = pdf["group"].isna()
             null_group_rows += int(gna.sum())
             pdf = pdf.loc[~gna]
             na = pdf[col].isna()
-            for g, n in pdf.loc[na, group].value_counts().items():
+            for g, n in pdf.loc[na, "group"].value_counts().items():
                 nulls[g] = nulls.get(g, 0) + int(n)
-            for g, sub in pdf.loc[~na].groupby(group, sort=False):
+            for g, sub in pdf.loc[~na].groupby("group", sort=False):
                 counters = per_group.setdefault(g, {})
                 dec[g] = dec.get(g, 0) + mg_merge(
                     counters, sub[col].value_counts(), capacity
                 )
-        rows = {group: [], col: [], "lower_count": [],
+        rows = {"group": [], col: [], "lower_count": [],
                 "n_nulls": [], "decremented": []}
         if null_group_rows:
             # surfaced as a NULL-group marker so the driver raises loudly
             # (pandas groupby drops NaN keys; without this a NULL group
             # would silently vanish instead of failing like NULL items do)
-            rows[group].append(None); rows[col].append(None)
+            rows["group"].append(None); rows[col].append(None)
             rows["lower_count"].append(None)
             rows["n_nulls"].append(null_group_rows)
             rows["decremented"].append(None)
         seen = set(per_group) | set(nulls) | set(dec)
         for g in seen:
             for item, c in per_group.get(g, {}).items():
-                rows[group].append(g); rows[col].append(item)
+                rows["group"].append(g); rows[col].append(item)
                 rows["lower_count"].append(c)
                 rows["n_nulls"].append(None); rows["decremented"].append(None)
-            rows[group].append(g); rows[col].append(None)
+            rows["group"].append(g); rows[col].append(None)
             rows["lower_count"].append(None)
             rows["n_nulls"].append(nulls.get(g, 0))
             rows["decremented"].append(dec.get(g, 0))
-        if rows[group]:
+        if rows["group"]:
             yield pd.DataFrame(rows)
 
     summ = items.mapInPandas(summarize, schema=out_schema).persist()
     try:
-        n_groups = summ.filter(F.col(col).isNull()).select(group).distinct().count()
+        n_groups = summ.filter(F.col(col).isNull()).select("group").distinct().count()
         if n_groups > max_groups:
             raise ValueError(
                 f"heavy_hitters_by_group: {n_groups} distinct groups exceeds "
@@ -388,9 +387,9 @@ def heavy_hitters_by_group(
                 f"raise max_groups explicitly if the driver can take it"
             )
         meta = {
-            r[group]: (r.miss_bound or 0, r.n_nulls or 0)
+            r["group"]: (r.miss_bound or 0, r.n_nulls or 0)
             for r in summ.filter(F.col(col).isNull())
-            .groupBy(group)
+            .groupBy("group")
             .agg(
                 F.sum("decremented").alias("miss_bound"),
                 F.sum("n_nulls").alias("n_nulls"),
@@ -408,13 +407,13 @@ def heavy_hitters_by_group(
                 f"heavy_hitters_by_group: NULL items in groups "
                 f"{sorted(bad_nulls)[:5]}; filter them out before ranking"
             )
-        cands = summ.filter(F.col(col).isNotNull()).select(group, col).distinct()
+        cands = summ.filter(F.col(col).isNotNull()).select("group", col).distinct()
         counts = (
-            items.join(F.broadcast(cands), [group, col], "left_semi")
-            .groupBy(group, col)
+            items.join(F.broadcast(cands), ["group", col], "left_semi")
+            .groupBy("group", col)
             .agg(F.count("*").alias("cnt"))
         )
-        w = Window.partitionBy(group).orderBy(F.desc("cnt"), F.asc(col))
+        w = Window.partitionBy("group").orderBy(F.desc("cnt"), F.asc(col))
         top = (
             counts.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
@@ -425,7 +424,7 @@ def heavy_hitters_by_group(
 
     by_group: dict = {}
     for r in rows:
-        by_group.setdefault(r[group], []).append(r)
+        by_group.setdefault(r["group"], []).append(r)
     not_exact = []
     # iterate the MARKER groups, not the result groups: a group whose
     # candidates were all decremented away has no result rows at all and

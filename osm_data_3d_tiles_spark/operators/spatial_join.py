@@ -103,26 +103,19 @@ def _probe_batches(batches, index_bc, page_cols: list[str], point_cols: tuple[st
 
 
 def _broadcast_probe(
-    points: DataFrame,
-    buildings: DataFrame,
-    cells: DataFrame,
-    z: int,
-    page_cols: tuple[str, ...],
-    lonlat: bool,
+    points: DataFrame, buildings: DataFrame, cells: DataFrame, lonlat: bool
 ) -> DataFrame:
+    """(url, osm_id) of every point inside a building, on the `Z_JOIN` grid."""
     from ..session import with_min_parallelism
 
     spark = buildings.sparkSession
-    index_bc = spark.sparkContext.broadcast(_probe_index(cells, buildings, z))
+    index_bc = spark.sparkContext.broadcast(_probe_index(cells, buildings, Z_JOIN))
     point_cols = ("lat", "lon") if lonlat else ("x", "y")
-    page_cols = list(page_cols)
-    schema = T.StructType(
-        [points.schema[c] for c in page_cols] + [T.StructField("osm_id", T.LongType())]
-    )
+    schema = T.StructType([points.schema["url"], T.StructField("osm_id", T.LongType())])
     # the local-mode round-robin, on the narrow columns the probe reads
-    narrow = with_min_parallelism(points.select(*dict.fromkeys(page_cols + list(point_cols))))
+    narrow = with_min_parallelism(points.select("url", *point_cols))
     return narrow.mapInArrow(
-        lambda batches: _probe_batches(batches, index_bc, page_cols, point_cols, lonlat), schema
+        lambda batches: _probe_batches(batches, index_bc, ["url"], point_cols, lonlat), schema
     )
 
 
@@ -133,27 +126,27 @@ def geotag_join(points: DataFrame, buildings: DataFrame, cells: DataFrame) -> Da
     EPSG:3857 projection in the same pass, so the points cross into Python
     once and only the matches come back. The projection is `lonlat_to_3857`,
     bit-identical to the Python reference."""
-    return _broadcast_probe(points, buildings, cells, Z_JOIN, ("url",), lonlat=True)
+    return _broadcast_probe(points, buildings, cells, lonlat=True)
 
 
 def spatial_join(
     pages_pts: DataFrame,
     buildings: DataFrame,
-    z: int = Z_JOIN,
-    page_cols: tuple[str, ...] = ("url",),
     precomputed_cells: DataFrame | None = None,
 ) -> DataFrame:
     """pages_pts(url, x, y, …) ⋈ buildings(osm_id, geometry, ring_types, …) →
-    (page_cols…, osm_id), one row per (page, containing building). Exact
-    ray-cast semantics after the cell prefilter.
+    (url, osm_id), one row per (page, containing building). Exact ray-cast
+    semantics after the cell prefilter. `precomputed_cells` must be the
+    buildings' `Z_JOIN` cells.
 
     Prefilter granularity: z=20 cells (~38 m) — building-sized, so the candidate
     set stays within a small factor of the true matches. The z16 tile grid the
     reference rides (611 m) is the *tile-assignment* unit, not a selective PIP
     prefilter: at z16 a dense-city cell holds hundreds of buildings and the
     candidate blow-up was measured at ~560× the final rows (9.6 M candidates for
-    17 k matches on the sf0.1 fixture). The refine is exact, so z only trades
-    prefilter selectivity against covering-cell count — results are identical.
+    17 k matches on the sf0.1 fixture). The refine is exact, so the level only
+    trades prefilter selectivity against covering-cell count — results are
+    identical.
 
     Geometry never rides a join: attaching the nested geometry arrays as a
     join column would duplicate them onto every candidate row exactly where
@@ -164,8 +157,10 @@ def spatial_join(
     Not bounded: the geometry and covering cells of every building are
     collected on the driver at any building count, as `geotag_join` does for
     the flagship."""
-    cells = precomputed_cells if precomputed_cells is not None else building_cells(buildings, z)
-    return _broadcast_probe(pages_pts, buildings, cells, z, page_cols, lonlat=False)
+    cells = (
+        precomputed_cells if precomputed_cells is not None else building_cells(buildings, Z_JOIN)
+    )
+    return _broadcast_probe(pages_pts, buildings, cells, lonlat=False)
 
 
 def salted_count(df: DataFrame, key_cols: list[str], n_salt: int = 32) -> DataFrame:

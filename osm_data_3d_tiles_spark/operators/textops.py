@@ -49,23 +49,23 @@ def quality_udf(text: pd.Series) -> pd.DataFrame:
     return tx.quality_score(text)
 
 
-def with_lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_lang_id(docs: DataFrame) -> DataFrame:
     from ..session import with_min_parallelism
 
-    return with_min_parallelism(docs).withColumn("predicted_lang", lang_id_udf(F.col(text_col)))
+    return with_min_parallelism(docs).withColumn("predicted_lang", lang_id_udf(F.col("text")))
 
 
-def with_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality(docs: DataFrame) -> DataFrame:
     from ..session import with_min_parallelism
 
     docs = with_min_parallelism(docs)
-    return docs.withColumn("q", quality_udf(F.col(text_col))).select("*", "q.*").drop("q")
+    return docs.withColumn("q", quality_udf(F.col("text"))).select("*", "q.*").drop("q")
 
 
-def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_fingerprint(docs: DataFrame) -> DataFrame:
     from ..session import with_min_parallelism
 
-    return with_min_parallelism(docs).withColumn("fingerprint", fingerprint_udf(F.col(text_col)))
+    return with_min_parallelism(docs).withColumn("fingerprint", fingerprint_udf(F.col("text")))
 
 
 # GPT-2-style pre-tokenizer pattern, restricted (like PII_PATTERNS below) to
@@ -78,12 +78,12 @@ def with_fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_ISH_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+|\s+"
 
 
-def with_bpe_token_count(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_bpe_token_count(docs: DataFrame) -> DataFrame:
     """Sub-word-ish token count via the BPE pre-tokenizer regex — the second
     counting mode the brief names next to whitespace counting. Native
     `regexp_extract_all` + `size`: per-row inside codegen, zero shuffle,
     zero Python."""
-    n = F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), F.lit(0)))
+    n = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_PATTERN), F.lit(0)))
     return docs.withColumn("n_tokens_bpe", n.cast("long"))
 
 
@@ -99,27 +99,22 @@ PII_PATTERNS = {
 
 def redact_pii(
     docs: DataFrame,
-    text_col: str = "text",
-    out_col: str = "text_redacted",
-    kinds: tuple[str, ...] = ("email", "ipv4", "phone"),
 ) -> DataFrame:
     """Scrub PII before training: replace emails / IPv4s / intl phone numbers
     with typed placeholders and count each kind. All native `regexp_replace` /
     `regexp_count` — per-row inside codegen, zero shuffle, zero Python; at
     corpus scale this is a map-only rewrite of the text column."""
     out = docs
-    col = F.col(text_col)
-    for kind in kinds:
-        pat, rep = PII_PATTERNS[kind]
+    col = F.col("text")
+    for kind, (pat, _) in PII_PATTERNS.items():
         out = out.withColumn(f"n_{kind}", F.regexp_count(col, F.lit(pat)).cast("long"))
     red = col
-    for kind in kinds:
-        pat, rep = PII_PATTERNS[kind]
+    for pat, rep in PII_PATTERNS.values():
         red = F.regexp_replace(red, pat, rep)
-    return out.withColumn(out_col, red)
+    return out.withColumn("text_redacted", red)
 
 
-def with_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def with_repetition(docs: DataFrame) -> DataFrame:
     """Within-document repetition: the fraction of word bigrams that are
     duplicates (Gopher's duplicate-n-gram rule; high values flag boilerplate
     and generated spam). Pure native higher-order functions — the whole
@@ -128,7 +123,7 @@ def with_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     Adds ``n_bigrams``, ``n_distinct_bigrams`` (int64) and
     ``dup_bigram_ratio`` (double in [0, 1]; 0.0 for texts under two words)."""
-    toks = F.split(F.col(text_col), " ", -1)
+    toks = F.split(F.col("text"), " ", -1)
     n = F.size(toks)
     bigrams = F.when(n < 2, F.array().cast("array<string>")).otherwise(
         F.transform(
@@ -153,8 +148,6 @@ def with_repetition(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def top_terms_tfidf(
     docs: DataFrame,
     k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Top-k distinguishing terms per document by a rarity-weighted score.
 
@@ -178,8 +171,8 @@ def top_terms_tfidf(
 
     n_docs = docs.count()
     terms = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), " ", -1)).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), " ", -1)).alias("term"),
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))

@@ -74,16 +74,13 @@ def canonical_url_col(url: F.Column) -> F.Column:
     return F.when(scheme == "", fallback).otherwise(canonical)
 
 
-def canonicalize_url(
-    pages: DataFrame, url_col: str = "url", out_col: str = "canonical_url"
-) -> DataFrame:
+def canonicalize_url(pages: DataFrame) -> DataFrame:
     """Add the canonical-URL column; narrow projection, no shuffle."""
-    return pages.withColumn(out_col, canonical_url_col(F.col(url_col)))
+    return pages.withColumn("canonical_url", canonical_url_col(F.col("url")))
 
 
 def url_dedup_latest(
     pages: DataFrame,
-    url_col: str = "canonical_url",
     ts_col: str = "warc_ts",
 ) -> DataFrame:
     """Keep the newest capture per canonical URL, counting the replicas.
@@ -93,9 +90,9 @@ def url_dedup_latest(
     ``n_dups``. Single shuffle on the canonical URL with map-side combine —
     see the module docstring for why this beats a `row_number` window at
     crawl scale."""
-    rest = [c for c in pages.columns if c != url_col and c != ts_col]
-    kept = pages.groupBy(url_col).agg(
+    rest = [c for c in pages.columns if c != "canonical_url" and c != ts_col]
+    kept = pages.groupBy("canonical_url").agg(
         F.max(F.struct(ts_col, *rest)).alias("_kept"),
         F.count("*").alias("n_dups"),
     )
-    return kept.select(url_col, "_kept.*", "n_dups")
+    return kept.select("canonical_url", "_kept.*", "n_dups")

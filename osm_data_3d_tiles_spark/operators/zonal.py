@@ -17,10 +17,11 @@ from pyspark.sql import functions as F
 from .cells import building_cells
 
 
-def zonal_stats(buildings: DataFrame, raster: DataFrame, z: int = 16) -> DataFrame:
-    """buildings(osm_id, geometry, ring_types) × raster(cell_x, cell_y, value) →
-    (osm_id, cell_count, value_sum, value_avg, value_min, value_max)."""
-    cells = building_cells(buildings, z)
+def zonal_stats(buildings: DataFrame, raster: DataFrame) -> DataFrame:
+    """buildings(osm_id, geometry, ring_types) × raster(cell_x, cell_y, value)
+    on the z16 grid → (osm_id, cell_count, value_sum, value_avg, value_min,
+    value_max)."""
+    cells = building_cells(buildings, 16)
     joined = cells.join(
         raster.select(
             F.col("cell_x").alias("tile_x"), F.col("cell_y").alias("tile_y"), "value"

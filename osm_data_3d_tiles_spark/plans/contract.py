@@ -414,7 +414,7 @@ def build_queries() -> dict:
     def pip_join(spark, sf_dir):
         pts = doc_points(spark, sf_dir).withColumnRenamed("doc_id", "url")
         rects = rect_buildings(spark, sf_dir)
-        out = spatial_join(pts, rects, page_cols=("url",))
+        out = spatial_join(pts, rects)
         return out.select(F.col("url").alias("doc_id"), "osm_id")
 
     q["pip_join_docs_rects"] = (
@@ -508,7 +508,7 @@ def build_queries() -> dict:
     def batch_pivot(spark, sf_dir):
         pts = doc_points(spark, sf_dir).withColumnRenamed("doc_id", "url")
         rects = rect_buildings(spark, sf_dir)
-        joined = spatial_join(pts, rects, page_cols=("url",))
+        joined = spatial_join(pts, rects)
         owners = owner_tiles(building_cells(rects)).select("osm_id", "tile_key")
         return (
             joined.join(owners, "osm_id")
@@ -1129,7 +1129,7 @@ def build_relational_queries() -> dict:
         redelivered = ev.filter(F.col("event_id") % 10 == 0).withColumn(
             "ts", F.col("ts") + F.expr("INTERVAL 3 MINUTES")
         )
-        out = dedup_within_watermark(ev.unionByName(redelivered), key_cols=("event_id",))
+        out = dedup_within_watermark(ev.unionByName(redelivered))
         return out.select(
             "event_id",
             F.col("ts").cast("long").alias("ts_epoch"),
@@ -1243,7 +1243,7 @@ def build_relational_queries() -> dict:
 
     q["distinct_kmv_users"] = (
         kmv_q,
-        kmv_oracle_sql("user_id", "event_type", "events", k=64),
+        kmv_oracle_sql("user_id", "event_type", "events"),
     )
 
     def digest_q(spark, sf_dir):
@@ -1372,7 +1372,7 @@ def build_relational_queries() -> dict:
             point_x_expr("event_id").alias("x"),
             point_y_expr("event_id").alias("y"),
         )
-        out = streaming_tile_counts(ev, window="5 minutes")
+        out = streaming_tile_counts(ev)
         return out.select(
             F.expr("cast(window_start as long)").alias("window_epoch"),
             "tile_x",
@@ -1912,7 +1912,7 @@ def build_relational_queries() -> dict:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         clicks = ev.filter(F.col("event_type") == "click")
         purchases = ev.filter(F.col("event_type") == "purchase")
-        return click_purchase_attribution(clicks, purchases, max_gap="30 minutes")
+        return click_purchase_attribution(clicks, purchases)
 
     q["click_attribution"] = (
         attribution_q,
@@ -1967,7 +1967,7 @@ def build_webtext_queries() -> dict:
         from ..operators.components import connected_components, shared_ngram_pairs
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        pairs = shared_ngram_pairs(docs, n=5)
+        pairs = shared_ngram_pairs(docs)
         cc = connected_components(pairs)
         return cc.select(
             F.col("node").cast("long").alias("doc_id"),
@@ -2062,7 +2062,7 @@ def build_webtext_queries() -> dict:
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         ref = docs.filter(F.col("doc_id") % 50 == 0)
-        out = contaminated_docs(docs, ref, n=3)
+        out = contaminated_docs(docs, ref)
         return out.select("doc_id", F.col("n_hits").cast("long").alias("n_hits"))
 
     q["decontaminate_ngram"] = (
@@ -2790,7 +2790,7 @@ def build_webtext_queries() -> dict:
         from ..operators.dedup import exact_substring_spans
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return exact_substring_spans(docs, window=40, sample_hex_prefix="0")
+        return exact_substring_spans(docs, sample_hex_prefix="0")
 
     q["dedup_exact_substring"] = (
         substring_spans,
@@ -3276,7 +3276,7 @@ def build_webtext_queries() -> dict:
             F.col("lang").alias("group"),
             F.explode(F.split(F.lower("text"), "[^a-z0-9]+")).alias("token"),
         ).filter(F.col("token") != "")
-        out = heavy_hitters_by_group(toks, "group", "token", k=5, capacity=1024)
+        out = heavy_hitters_by_group(toks, "token", k=5, capacity=1024)
         return out.select(
             F.col("group").alias("lang"), "token", "cnt",
             F.col("rank").cast("long").alias("rank"),
@@ -3733,7 +3733,7 @@ def build_rows_only_queries() -> dict:
         prefix codes + transforms + LZ77)."""
         from ..operators.multimodal import make_webp_media_fixture
 
-        return _image_decode_stats(make_webp_media_fixture(spark, 16))
+        return _image_decode_stats(make_webp_media_fixture(spark))
 
     q["webp_decode_stats"] = webp_decode_stats
 

@@ -224,7 +224,7 @@ def build_subtile_json(extent, mode: str = "mercator") -> dict:
     return {"asset": {"version": "1.0"}, "geometricError": GEOMETRIC_ERROR, "root": root["content"]}
 
 
-def build_root_tileset(extent, mode: str = "mercator", subtiles_path: str = "subtiles/") -> tuple[dict, dict[str, dict]]:
+def build_root_tileset(extent, mode: str = "mercator") -> tuple[dict, dict[str, dict]]:
     """Returns (root tileset json, {subtile filename: subtile json})."""
     root = _MODE_BUILDERS[mode][0](extent)
     root["content"]["transform"] = _identity16()  # generate-tileset.ts:31 overwrite
@@ -242,7 +242,7 @@ def build_root_tileset(extent, mode: str = "mercator", subtiles_path: str = "sub
             {
                 "geometricError": GEOMETRIC_ERROR,
                 "refine": "ADD",
-                "content": {"uri": subtiles_path + name},
+                "content": {"uri": "subtiles/" + name},
             }
         )
     return tileset, subtiles

@@ -5,8 +5,8 @@ down for local[N] testing:
 
 - AQE on (runtime coalescing + skew-join splitting for hot H3/z16 cells),
 - Arrow on (all Python stages are Arrow-batched pandas UDFs),
-- shuffle partitions sized to the local core count (cluster deployments override
-  via spark-submit conf),
+- `local[N]` and N shuffle partitions, N the local core count (`local_cores`;
+  cluster deployments override via spark-submit conf),
 - broadcast threshold raised: the buildings-by-cell dimension table is the broadcast
   side of the flagship join.
 
@@ -48,13 +48,18 @@ def _daemon_conf(master: str) -> dict[str, str]:
     return {}
 
 
+def local_cores() -> int:
+    """`SPARK_GRAFT_CPUS` when set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "osm-data-3d-tiles-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cores()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus

@@ -280,14 +280,14 @@ def make_raster() -> pd.DataFrame:
     return pd.DataFrame({"cell_z": 16, "cell_x": xs, "cell_y": ys, "value": value})
 
 
-def make_knn_queries(n: int = 60) -> pd.DataFrame:
+def make_knn_queries() -> pd.DataFrame:
     rng = np.random.RandomState(SEED + 2)
     min_x, min_y, max_x, max_y = FIXTURE_EXTENT
     # include probes just outside the extent to force k-ring expansion
-    x = min_x + (max_x - min_x) * (rng.rand(n) * 1.2 - 0.1)
-    y = min_y + (max_y - min_y) * (rng.rand(n) * 1.2 - 0.1)
-    k = np.array([1, 5, 10])[rng.randint(0, 3, size=n)]
-    return pd.DataFrame({"query_id": np.arange(n, dtype=np.int64), "x": x, "y": y, "k": k})
+    x = min_x + (max_x - min_x) * (rng.rand(60) * 1.2 - 0.1)
+    y = min_y + (max_y - min_y) * (rng.rand(60) * 1.2 - 0.1)
+    k = np.array([1, 5, 10])[rng.randint(0, 3, size=60)]
+    return pd.DataFrame({"query_id": np.arange(60, dtype=np.int64), "x": x, "y": y, "k": k})
 
 
 # ---------------------------------------------------------------------------

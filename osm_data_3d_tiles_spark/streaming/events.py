@@ -23,18 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dedup_within_watermark(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_cols: tuple[str, ...] = ("event_id",),
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup on `key_cols` with BOUNDED state: Spark's
-    `dropDuplicatesWithinWatermark` keeps a key only until the watermark passes
-    its first-seen event time, so state size tracks the duplicate horizon, not
-    the stream length — the shape an at-least-once crawl ingest needs (a
-    redelivered page within the horizon dedups; unbounded `dropDuplicates`
-    state would OOM a 10¹²-event stream).
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup on `event_id` with BOUNDED state: Spark's
+    `dropDuplicatesWithinWatermark` keeps a key only until the 10-minute
+    watermark on `ts` passes its first-seen event time, so state size tracks
+    the duplicate horizon, not the stream length — the shape an
+    at-least-once crawl ingest needs (a redelivered page within the horizon
+    dedups; unbounded `dropDuplicates` state would OOM a 10¹²-event stream).
 
     Batch equivalence (what the oracle checks): with all data in one batch,
     keeping the first row per key equals `dropDuplicates` — the watermark only
@@ -44,13 +39,13 @@ def dedup_within_watermark(
     on (key, ts) but differing elsewhere pick a deterministic winner on both
     the Spark and oracle side."""
     if events.isStreaming:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-            list(key_cols)
+        return events.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
+            ["event_id"]
         )
     from pyspark.sql import Window
 
-    rest = [c for c in events.columns if c not in key_cols and c != ts_col]
-    w = Window.partitionBy(*key_cols).orderBy(F.col(ts_col), *[F.col(c) for c in rest])
+    rest = [c for c in events.columns if c not in ("event_id", "ts")]
+    w = Window.partitionBy("event_id").orderBy(F.col("ts"), *[F.col(c) for c in rest])
     return (
         events.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -61,18 +56,14 @@ def dedup_within_watermark(
 def enriched_tumbling_counts(
     events: DataFrame,
     dim: DataFrame,
-    on: tuple[str, str] = ("user_id", "c_custkey"),
-    attr_col: str = "c_nationkey",
-    ts_col: str = "ts",
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
     value_expr: F.Column | None = None,
 ) -> DataFrame:
     """Stream-static enrichment join + watermarked tumbling rollup.
 
     The canonical streaming-ingest enrichment: each micro-batch of the event
-    stream inner-joins a STATIC dimension (here: events.user_id →
-    customer.c_custkey, rolled up by nation) before the windowed aggregate.
+    stream inner-joins a STATIC dimension (events.user_id →
+    customer.c_custkey, rolled up by c_nationkey) before the 5-minute
+    windowed aggregate, watermarked at 10 minutes.
     Structured Streaming permits stream-static equi-joins before stateful
     aggs; the static side is broadcast, so the stream never shuffles for the
     join — per micro-batch the only stateful exchange is the windowed groupBy,
@@ -81,12 +72,12 @@ def enriched_tumbling_counts(
     Works batch-or-streaming like the other shapes here (the contract oracle
     states the batch equivalence in plain SQL; streaming parity is pinned in
     tests/test_streaming.py)."""
-    src = events.withWatermark(ts_col, watermark) if events.isStreaming else events
-    d = dim.select(F.col(on[1]).alias(on[0]), F.col(attr_col).alias("dim_attr"))
+    src = events.withWatermark("ts", "10 minutes") if events.isStreaming else events
+    d = dim.select(F.col("c_custkey").alias("user_id"), F.col("c_nationkey").alias("dim_attr"))
     val = value_expr if value_expr is not None else F.col("value")
     return (
-        src.join(F.broadcast(d), on[0])
-        .groupBy(F.window(F.col(ts_col), window).alias("win"), F.col("dim_attr"))
+        src.join(F.broadcast(d), "user_id")
+        .groupBy(F.window(F.col("ts"), "5 minutes").alias("win"), F.col("dim_attr"))
         .agg(F.count("*").alias("n"), F.sum(val).alias("value_sum"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -97,15 +88,10 @@ def enriched_tumbling_counts(
     )
 
 
-def click_purchase_attribution(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    max_gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def click_purchase_attribution(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream (or batch-batch) time-bounded attribution join: every
     (click, purchase) pair of the same user where the purchase lands in
-    [click_ts, click_ts + max_gap).
+    [click_ts, click_ts + 30 minutes).
 
     clicks(user_id, event_id, ts) × purchases(user_id, event_id, ts, value)
     → (user_id, click_id, purchase_id, gap_s).
@@ -114,10 +100,9 @@ def click_purchase_attribution(
     stream-static shape is `enriched_tumbling_counts`). Both sides get a
     watermark and the join carries an explicit event-time range condition —
     that pair is what lets the engine expire buffered rows (a click older
-    than watermark+max_gap can never match a future purchase, so its state
-    is dropped). Without the time bound the join state grows without limit;
-    this function therefore refuses to be called without one (max_gap is
-    required).
+    than the 2-hour watermark plus the 30-minute gap can never match a
+    future purchase, so its state is dropped). Without the time bound the
+    join state grows without limit.
 
     Batch inputs take the identical plan minus the state machinery, which
     is what the contract oracle checks; streaming parity is pinned in
@@ -134,14 +119,14 @@ def click_purchase_attribution(
         F.col("ts").alias("purchase_ts"),
     )
     if c.isStreaming:
-        c = c.withWatermark("click_ts", watermark)
+        c = c.withWatermark("click_ts", "2 hours")
     if p.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
+        p = p.withWatermark("purchase_ts", "2 hours")
     joined = c.join(
         p,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
-        & F.expr(f"purchase_ts < click_ts + INTERVAL {max_gap}"),
+        & F.expr("purchase_ts < click_ts + INTERVAL 30 minutes"),
     )
     return joined.select(
         "user_id",
@@ -154,32 +139,24 @@ def click_purchase_attribution(
     )
 
 
-def streaming_tile_counts(
-    points: DataFrame,
-    x_col: str = "x",
-    y_col: str = "y",
-    ts_col: str = "ts",
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    z: int = 16,
-) -> DataFrame:
+def streaming_tile_counts(points: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """The flagship's geo kernel on a STREAM: ingest (ts, x, y) mercator
     points (geotagged pages as they are crawled), assign each to its z16
     tile with the same native-Column math the batch engine uses
     (functions/mercator.tile_x_col — whole-stage codegen, no Python), and
-    roll up watermarked tumbling per-tile counts.
+    roll up watermarked 5-minute tumbling per-tile counts.
 
     The live-ops view of tile activity: which map tiles are receiving new
     documents right now. Batch inputs run the identical plan minus the
     watermark (batch↔streaming parity is pinned in tests)."""
     from ..functions.mercator import tile_x_col, tile_y_col
 
-    src = points.withWatermark(ts_col, watermark) if points.isStreaming else points
+    src = points.withWatermark("ts", watermark) if points.isStreaming else points
     return (
-        src.withColumn("tile_x", tile_x_col(F.col(x_col), z))
-        .withColumn("tile_y", tile_y_col(F.col(y_col), z))
+        src.withColumn("tile_x", tile_x_col(F.col("x"), 16))
+        .withColumn("tile_y", tile_y_col(F.col("y"), 16))
         .groupBy(
-            F.window(F.col(ts_col), window).alias("win"), "tile_x", "tile_y"
+            F.window(F.col("ts"), "5 minutes").alias("win"), "tile_x", "tile_y"
         )
         .agg(F.count("*").alias("n_docs"))
         .select(F.col("win.start").alias("window_start"), "tile_x", "tile_y", "n_docs")

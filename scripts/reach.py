@@ -1,5 +1,5 @@
 """Reachability audit: which top-level package definitions no real entry point
-reaches.
+reaches, and which options no call varies.
 
 Roots, the program's real entry points:
 - `__spark_entry__.py`: `entry`, `queries` and `oracle_sql`, the driver
@@ -35,11 +35,20 @@ reached code against it, or it serves such reference code. There is no
 other class; code that nothing reaches and no test compares against is
 deleted, not queued.
 
+Options: a parameter with a default, on a package top-level function or on
+a method of a top-level class, must be set by some call in the package,
+`bench.py`, `__spark_entry__.py`, `perfbench/`, `scripts/` or `tests/` to a
+value other than its default: by keyword, by position, through `*`/`**`
+unpacking or through `functools.partial`. An option with one value in use is
+a constant, so the function uses that value itself. Passing the default
+again does not count. Calls are matched by name, like the walk, and err
+towards "set". Definitions on the allowlist are exempt.
+
     python scripts/reach.py
 
-prints every listed definition and exits 1 when one is not on the allowlist
-or an allowlist entry is no longer listed (`tests/test_reach.py` asserts the
-same).
+prints every listed definition and exits 1 when one is not on the allowlist,
+an allowlist entry is no longer listed, or an option is unset
+(`tests/test_reach.py` asserts the same).
 """
 
 from __future__ import annotations
@@ -266,6 +275,93 @@ class Audit:
         return {f"{m}.{d}": (m, d) in tests for m, d in sorted(package - prod)}
 
 
+def _defaults(fn: ast.FunctionDef) -> list[tuple[str, int | None, ast.expr]]:
+    """(name, position or None when keyword-only, default) of each parameter
+    of `fn` that has a default."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    pad = [None] * (len(positional) - len(a.defaults))
+    out = [(p.arg, i, d) for i, (p, d) in enumerate(zip(positional, pad + a.defaults)) if d]
+    return out + [(p.arg, None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+
+
+def _is_default(value: ast.expr, default: ast.expr) -> bool:
+    """Whether a call passes the parameter's default again: the same
+    expression, or a literal of the same type and value."""
+    if ast.dump(value) == ast.dump(default):
+        return True
+    try:
+        v, d = ast.literal_eval(value), ast.literal_eval(default)
+    except (ValueError, TypeError, SyntaxError):
+        return False
+    return type(v) is type(d) and v == d
+
+
+def _called(call: ast.Call) -> tuple[ast.expr, list[ast.expr]]:
+    """(callee, positional arguments) of a call; `partial(f, …)` and
+    `functools.partial(f, …)` count as a call of `f`."""
+    func, args = call.func, call.args
+    if getattr(func, "id", getattr(func, "attr", None)) == "partial" and args:
+        func, args = args[0], args[1:]
+    return func, args
+
+
+def _callables(stmt: ast.stmt):
+    """(called name, qualified name, implicit leading arguments, def) of a
+    top-level function, or of each method of a top-level class: calling the
+    class calls its `__init__`, and a method bound to an instance or class
+    gets its first argument implicitly unless it is a staticmethod."""
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    if isinstance(stmt, defs):
+        yield stmt.name, stmt.name, 0, stmt
+    elif isinstance(stmt, ast.ClassDef):
+        for m in (m for m in stmt.body if isinstance(m, defs)):
+            static = any(getattr(d, "id", "") == "staticmethod" for d in m.decorator_list)
+            called = stmt.name if m.name == "__init__" else m.name
+            yield called, f"{stmt.name}.{m.name}", 0 if static else 1, m
+
+
+def unset_options(root: Path = ROOT) -> list[str]:
+    """`module.function(parameter)`, or `module.Class.method(parameter)`, of
+    every parameter with a default, on a package top-level function or on a
+    method of a top-level class, that no call in the audited code sets to a
+    value other than its default. Calls are matched by name: `f(…)` and
+    `x.f(…)` call every function or method `f`, `C(…)` calls `C.__init__`. A
+    call sets a parameter by keyword, by position or through `*`/`**`
+    unpacking (which sets every parameter it could reach). Functions and
+    classes on the allowlist are exempt."""
+    audit, exempt = Audit(root), read_allowlist(root)
+    # called name -> [(qualname, implicit first argument, parameters)]
+    targets: dict[str, list] = {}
+    for name, mod in audit.modules.items():
+        if not (name == PKG or name.startswith(PKG + ".")):
+            continue
+        for s in mod.tree.body:
+            if f"{name}.{getattr(s, 'name', '')}" in exempt:
+                continue
+            for called, qual, bound, fn in _callables(s):
+                if params := _defaults(fn):
+                    targets.setdefault(called, []).append((f"{name}.{qual}", bound, params))
+    unset = {(q, p) for ts in targets.values() for q, _, params in ts for p, _, _ in params}
+    for mod in audit.modules.values():
+        for call in (n for n in ast.walk(mod.tree) if isinstance(n, ast.Call)):
+            func, args = _called(call)
+            name = getattr(func, "id", getattr(func, "attr", None))
+            star = next((i for i, a in enumerate(args) if isinstance(a, ast.Starred)), len(args))
+            for qual, bound, params in targets.get(name, ()):
+                # a plain name calls a function, or a class (its __init__)
+                skip = bound if isinstance(func, ast.Attribute) or qual.endswith(".__init__") else 0
+                for p, pos, default in params:
+                    values = [k.value for k in call.keywords if k.arg == p]
+                    if pos is not None and skip <= pos < star + skip:
+                        values += args[pos - skip : pos - skip + 1]
+                    unpacked = any(k.arg is None for k in call.keywords) or (
+                        pos is not None and star < len(args) and pos >= star + skip)
+                    if unpacked or any(not _is_default(v, default) for v in values):
+                        unset.discard((qual, p))
+    return [f"{q}({p})" for q, p in sorted(unset)]
+
+
 def read_allowlist(root: Path = ROOT) -> dict[str, tuple[str, str]]:
     """`module.name` -> (class, reason)."""
     out = {}
@@ -297,7 +393,10 @@ def main() -> int:
         print(f"not on {ALLOWLIST}: {name}", file=sys.stderr)
     for name in stale:
         print(f"stale entry in {ALLOWLIST} (reached or gone): {name}", file=sys.stderr)
-    return 1 if missing or stale else 0
+    options = unset_options()
+    for name in options:
+        print(f"option no call sets: {name}", file=sys.stderr)
+    return 1 if missing or stale or options else 0
 
 
 if __name__ == "__main__":

@@ -73,7 +73,7 @@ class TestSharedNgramPairs:
         df = spark.createDataFrame(docs, ["doc_id", "text"])
         got = {
             tuple(r)
-            for r in shared_ngram_pairs(df, n=5).select("a", "b").toPandas().values.tolist()
+            for r in shared_ngram_pairs(df).select("a", "b").toPandas().values.tolist()
         }
 
         def grams(t, n=5):
@@ -91,7 +91,7 @@ class TestSharedNgramPairs:
 
     def test_short_docs_produce_no_grams(self, spark):
         df = spark.createDataFrame([(0, "too short"), (1, "too short")], ["doc_id", "text"])
-        assert shared_ngram_pairs(df, n=5).count() == 0
+        assert shared_ngram_pairs(df).count() == 0
 
 
 class TestIterativeEdgePlans:

@@ -191,7 +191,7 @@ class TestDecontaminate:
         from osm_data_3d_tiles_spark.operators.decontaminate import contaminated_docs
 
         docs, ref = corpus
-        out = contaminated_docs(docs, ref, n=3).toPandas().set_index("doc_id")
+        out = contaminated_docs(docs, ref).toPandas().set_index("doc_id")
         # doc 1 shares 'alpha beta gamma' + 'beta gamma delta'; doc 3 shares 1
         assert sorted(out.index) == [1, 3]
         assert out.loc[1, "n_hits"] == 2
@@ -201,8 +201,8 @@ class TestDecontaminate:
         from osm_data_3d_tiles_spark.operators.decontaminate import contaminated_docs
 
         docs, ref = corpus
-        a = contaminated_docs(docs, ref, n=3, use_bloom=True).toPandas()
-        b = contaminated_docs(docs, ref, n=3, use_bloom=False).toPandas()
+        a = contaminated_docs(docs, ref, use_bloom=True).toPandas()
+        b = contaminated_docs(docs, ref, use_bloom=False).toPandas()
         key = lambda df: sorted(zip(df["doc_id"], df["n_hits"]))
         assert key(a) == key(b)
 
@@ -211,7 +211,7 @@ class TestDecontaminate:
 
         docs, _ = corpus
         empty = spark.createDataFrame([], "doc_id long, text string")
-        assert contaminated_docs(docs, empty, n=3).count() == 0
+        assert contaminated_docs(docs, empty).count() == 0
 
 
 class TestSimilarity:
@@ -1269,7 +1269,7 @@ class TestHeavyHittersByGroup:
                 rows += [(g, f"{g}_w{i:02d}")] * reps
         rng.shuffle(rows)
         df = spark.createDataFrame(rows, "group string, item string").repartition(8)
-        got = heavy_hitters_by_group(df, "group", "item", k=5, capacity=64).toPandas()
+        got = heavy_hitters_by_group(df, "item", k=5, capacity=64).toPandas()
         for g in ("en", "fr"):
             exact = sorted(
                 collections.Counter(w for gg, w in rows if gg == g).items(),
@@ -1284,7 +1284,7 @@ class TestHeavyHittersByGroup:
         rows = [("hot", "x")] * 500 + [("flat", f"u{i}") for i in range(400)]
         df = spark.createDataFrame(rows, "group string, item string").repartition(4)
         with pytest.raises(ValueError, match="flat"):
-            heavy_hitters_by_group(df, "group", "item", k=3, capacity=4)
+            heavy_hitters_by_group(df, "item", k=3, capacity=4)
 
     def test_null_items_named_group(self, spark):
         from osm_data_3d_tiles_spark.operators.sketches import heavy_hitters_by_group
@@ -1293,7 +1293,7 @@ class TestHeavyHittersByGroup:
             [("en", "a"), ("en", None), ("fr", "b")], "group string, item string"
         )
         with pytest.raises(ValueError, match="NULL items in groups"):
-            heavy_hitters_by_group(df, "group", "item", k=2, capacity=8)
+            heavy_hitters_by_group(df, "item", k=2, capacity=8)
 
 
 class TestReviewFixesRound2:
@@ -1304,7 +1304,7 @@ class TestReviewFixesRound2:
             [(None, "x")] * 5 + [("en", "a")] * 3, "group string, item string"
         )
         with pytest.raises(ValueError, match="NULL group key"):
-            heavy_hitters_by_group(df, "group", "item", k=1, capacity=8)
+            heavy_hitters_by_group(df, "item", k=1, capacity=8)
 
     def test_quantiles_by_value_null_values_refused(self, spark):
         from osm_data_3d_tiles_spark.operators.sampling import exact_quantiles_by_value
@@ -1477,7 +1477,7 @@ class TestRound4AdviceFixes:
 
         df = spark.createDataFrame([("en", "a")] * 3, "group string, item string")
         with pytest.raises(ValueError, match="k must be >= 1"):
-            heavy_hitters_by_group(df, "group", "item", k=0, capacity=64)
+            heavy_hitters_by_group(df, "item", k=0, capacity=64)
 
     def test_grouped_hh_max_groups_refused(self, spark):
         from osm_data_3d_tiles_spark.operators.sketches import heavy_hitters_by_group
@@ -1486,10 +1486,10 @@ class TestRound4AdviceFixes:
             [(f"g{i}", "a") for i in range(10)], "group string, item string"
         )
         with pytest.raises(ValueError, match="exceeds max_groups"):
-            heavy_hitters_by_group(df, "group", "item", k=1, capacity=64, max_groups=5)
+            heavy_hitters_by_group(df, "item", k=1, capacity=64, max_groups=5)
         # at the bound it runs fine
         got = heavy_hitters_by_group(
-            df, "group", "item", k=1, capacity=64, max_groups=10
+            df, "item", k=1, capacity=64, max_groups=10
         ).toPandas()
         assert len(got) == 10
 

@@ -468,6 +468,18 @@ class TestKNN:
         assert key(brute) == key(kring)
         assert len(brute) > 0
 
+    def test_kring_index_is_released_by_unpersist_all(self, spark, buildings):
+        # the persisted centroid cell index is registered like every other
+        # operator cache, so a long-lived session does not keep one per call
+        from osm_data_3d_tiles_spark.operators.dedup import unpersist_all
+
+        spark.catalog.clearCache()
+        queries = spark.read.parquet(fx.ensure_fixture("knn_queries"))
+        cents = building_centroids(buildings.filter(F.col("layer") == "buildings"))
+        assert knn_kring(queries, cents).count() > 0
+        unpersist_all()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
     def test_completion_bound_is_strict(self, spark):
         # A candidate whose k-th distance is EXACTLY r·span must NOT finalize:
         # an unexplored ring-(r+1) cell can hold an fp-tied centroid with a

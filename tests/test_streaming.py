@@ -36,7 +36,7 @@ class TestStreamingOwnership:
         )
 
         stream = spark.readStream.schema("event_id long, ts timestamp, user_id long").parquet(src_dir)
-        out = dedup_within_watermark(stream, key_cols=("event_id",))
+        out = dedup_within_watermark(stream)
         q = (
             out.writeStream.format("memory").queryName("dd_test")
             .outputMode("append")
@@ -64,7 +64,7 @@ class TestStreamingOwnership:
 
         # batch path: earliest row per key
         batch = dedup_within_watermark(
-            spark.createDataFrame(df), key_cols=("event_id",)
+            spark.createDataFrame(df)
         ).toPandas().sort_values("event_id")
         assert list(batch["event_id"]) == [1, 2, 3]
         assert batch.set_index("event_id").loc[1, "ts"] == ts  # earliest kept
@@ -180,7 +180,7 @@ class TestStreamStreamAttribution:
         schema = "user_id long, event_id long, ts timestamp"
         cs = spark.readStream.schema(schema).parquet(cdir)
         ps = spark.readStream.schema(schema).parquet(pdir)
-        out = click_purchase_attribution(cs, ps, max_gap="30 minutes")
+        out = click_purchase_attribution(cs, ps)
         q = (
             out.writeStream.format("memory").queryName("attr_parity")
             .outputMode("append")
@@ -200,7 +200,6 @@ class TestStreamStreamAttribution:
 
         batch = click_purchase_attribution(
             spark.createDataFrame(clicks), spark.createDataFrame(purchases),
-            max_gap="30 minutes",
         )
         want = {
             (r.user_id, r.click_id, r.purchase_id, r.gap_s) for r in batch.collect()
